@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import sys
 import time
 from pathlib import Path
@@ -107,6 +108,31 @@ def main() -> None:
     if args.build and args.layout and args.layout not in ("brute", args.build):
         ap.error(f"--build {args.build} cannot serve --layout {args.layout}")
 
+    # literal vectors are validated before any Spark work: a malformed
+    # component would otherwise surface as a traceback, and a wrong
+    # dimension only as an executor-side numpy broadcast error
+    vectors: list[list[float]] = []
+    for v in args.vector or []:
+        try:
+            vec = [float(x) for x in v.split(",")]
+        except ValueError:
+            vec = []
+        if not vec or not all(math.isfinite(x) for x in vec):
+            ap.error(f"--vector {v!r}: expected comma-separated finite "
+                     "numbers")
+        vectors.append(vec)
+    if vectors:
+        import pyarrow.dataset as pads
+
+        head = pads.dataset(args.emb, format="parquet").head(
+            1, columns=["embedding"])
+        if head.num_rows:
+            dim = len(head.column(0)[0].as_py())
+            for v, vec in zip(args.vector, vectors):
+                if len(vec) != dim:
+                    ap.error(f"--vector {v!r} has {len(vec)} components; "
+                             f"the --emb embeddings have {dim}")
+
     from searchengine_spark.session import get_spark
 
     spark = get_spark("ann", cores=args.cores)
@@ -138,8 +164,8 @@ def main() -> None:
         # (ONE filtered collect for all ids — they are a handful of rows)
         queries: dict[str, list[float]] = {}
         exclude: dict[str, int] = {}
-        for i, v in enumerate(args.vector or []):
-            queries[f"vec:{i}"] = [float(x) for x in v.split(",")]
+        for i, vec in enumerate(vectors):
+            queries[f"vec:{i}"] = vec
         if args.query_id:
             from pyspark.sql import functions as F
 

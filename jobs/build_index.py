@@ -3,7 +3,7 @@
 
     spark-submit --py-files dist/searchengine_spark.zip jobs/build_index.py \
         --input /path/to/docs_parquet --out /path/to/index \
-        --segments 64 --salt 16 --buckets 256
+        --segments 64 --buckets 256
 
 ``--input`` must have the BASELINE.json input_hint shape
 (repo, path, commit, lang, content); ``--synthetic N`` generates the
@@ -28,7 +28,11 @@ def main() -> None:
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic docs")
     ap.add_argument("--out", required=True)
     ap.add_argument("--segments", type=int, default=8)
-    ap.add_argument("--salt", type=int, default=8)
+    ap.add_argument("--salt", type=int, default=8,
+                    help="compatibility only: recorded in meta.json, no "
+                         "effect on the build (posting runs are bounded "
+                         "by the Arrow batch, merge groups by (segment, "
+                         "bucket))")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--block-size", type=int, default=128)
     # arrow is the BASELINE.json input_hint shape (vectorized pandas/Arrow

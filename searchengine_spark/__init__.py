@@ -16,7 +16,7 @@ Layout
                  search, scoring (Σtf parity + BM25), proximity, snippets,
                  statistics, dedup, ANN similarity.
 - ``index``      physical index: delta+varbyte posting-list codec with
-                 block-max directories, salted-shuffle merge builder,
+                 block-max directories, sorted-run merge builder,
                  block-max WAND top-k reader, checkpoint/resume manifests.
 - ``functions``  scalar/text/similarity column functions (JVM-side where
                  possible, pandas UDFs elsewhere).

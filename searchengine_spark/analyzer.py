@@ -39,11 +39,10 @@ Two executions of the SAME pinned definition:
 ``tests/test_analyzer.py`` asserts the two agree row-for-row.
 
 MAINTENANCE: the per-batch tokenize preamble (steps 1-5 + expansion) is
-additionally materialized in three fused Arrow kernels whose value each
-parity test pins back to this definition — ``doc_term_stats_arrow`` /
-``doc_term_stats_pandas`` (below), ``index/positions.py``
-``_positions_kernel`` and ``doc_stats_and_positions_arrow``.  A change to
-the pinned shape must land in ALL of them; the agreement tests
+additionally materialized once as pyarrow kernels (``_analyze_arrow_batch``,
+behind ``doc_term_stats_arrow`` and the build's run kernel
+``doc_term_runs_arrow``) and once as pandas ops (``doc_term_stats_pandas``).
+A change to the pinned shape must land in both; the agreement tests
 (test_analyzer.py, test_phrase_positions.py, test_fused_build.py) fail on
 any drift.
 """
@@ -539,52 +538,105 @@ def _stem_arrow(tokens, stem_fn, pa, pc):
     return out.combine_chunks() if isinstance(out, pa.ChunkedArray) else out
 
 
+def _normalizer_fns(normalizer: str,
+                    forms: dict[str, tuple[str, ...]] | None):
+    """(exception table, stemmer or None) for the Arrow kernels.  EVERY
+    normalizer runs in them: table-driven ones ('pinned'/'dict') as pure
+    arrow-kernel work; the stemmer family ('porter'/'stem', and
+    'dict_porter' for its dictionary MISSES) adds one dictionary-encode
+    per batch (:func:`_stem_arrow`) — Python touches only the batch's
+    UNIQUE tokens, and the O(corpus tokens) stream never leaves its
+    partition."""
+    if normalizer in ("porter", "dict_porter"):
+        from .functions.porter import porter_stem
+
+        table = dict_porter_table(forms) if normalizer == "dict_porter" else {}
+        return table, porter_stem
+    if normalizer == "stem":
+        return {}, stem_token
+    return _forms_table(normalizer, forms), None
+
+
+def _analyze_arrow_batch(content, table, stem_fn, stop_set, exc_set, pa, pc):
+    """Steps 1-6 of the pinned definition over one Arrow text column, as
+    pyarrow compute kernels (RE2 regex) over CONTIGUOUS buffers — tokens
+    never become per-string Python objects.  Returns ``(par, lemmas,
+    pos)`` per lemma occurrence: ``par`` the row in the batch, ``pos`` the
+    rank of the surviving source token in its doc (a multi-lemma token
+    emits every form at ONE position, as in :func:`analyze_positions`).
+    None when no token survives."""
+    import numpy as np
+
+    x = pc.fill_null(content, "")
+    x = pc.replace_substring_regex(x, pattern=_CAMEL_1[0], replacement=r"\1 \2")
+    x = pc.replace_substring_regex(x, pattern=_CAMEL_2[0], replacement=r"\1 \2")
+    x = pc.utf8_lower(x)
+    x = pc.replace_substring_regex(x, pattern=_STRIP_PY, replacement=" ")
+    lists = pc.split_pattern_regex(x, pattern=r"\s+")
+    toks = pc.list_flatten(lists)
+    par = pc.list_parent_indices(lists)
+    # split_pattern_regex emits '' for leading/trailing whitespace;
+    # MIN_TOKEN_LEN drops them with the short tokens
+    keep = pc.and_(
+        pc.greater_equal(pc.utf8_length(toks), MIN_TOKEN_LEN),
+        pc.invert(pc.is_in(toks, value_set=stop_set)),
+    )
+    toks = pc.filter(toks, keep)
+    if len(toks) == 0:
+        return None
+    par = pc.filter(par, keep).to_numpy(zero_copy_only=False).astype(np.int64)
+    # position over SURVIVING tokens, per doc: arange minus each doc-run's
+    # first index (par is non-decreasing in token order)
+    new_doc = np.ones(par.size, dtype=bool)
+    new_doc[1:] = par[1:] != par[:-1]
+    starts = np.flatnonzero(new_doc)
+    pos = np.arange(par.size, dtype=np.int64) - np.repeat(
+        starts, np.diff(np.append(starts, par.size)))
+    # multi-lemma expansion: exception tokens are rare, so only THAT subset
+    # round-trips through Python (same pos, every form)
+    exc = pc.is_in(toks, value_set=exc_set)
+    if (pc.sum(exc).as_py() or 0) > 0:
+        exc_np = exc.to_numpy(zero_copy_only=False)
+        bt = pc.filter(toks, pc.invert(exc))
+        xt: list[str] = []
+        xi: list[int] = []
+        for tkn, i in zip(pc.filter(toks, exc).to_pylist(),
+                          np.flatnonzero(exc_np).tolist()):
+            for form in table[tkn]:
+                xt.append(form)
+                xi.append(i)
+        # dictionary expansions are FINAL lemmas; only the base (raw)
+        # subset goes through the stemmer
+        if stem_fn is not None and len(bt):
+            bt = _stem_arrow(bt, stem_fn, pa, pc)
+        toks = pa.concat_arrays([pc.cast(bt, pa.string()),
+                                 pa.array(xt, type=pa.string())])
+        take = np.concatenate([np.flatnonzero(~exc_np),
+                               np.asarray(xi, dtype=np.int64)])
+        par, pos = par[take], pos[take]
+    elif stem_fn is not None:
+        toks = _stem_arrow(toks, stem_fn, pa, pc)
+    return par, pc.cast(toks, pa.string()), pos
+
+
 def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
                          normalizer: str = "pinned",
                          forms: dict[str, tuple[str, ...]] | None = None,
                          ) -> DataFrame:
-    """(repo, doc_id, text) -> (repo, doc_id, lemma, tf, dl) with ZERO
-    shuffle: a document's tokens all live in its own input row, so per-doc
-    term frequencies and the doc length are computable entirely map-side
-    inside one Arrow batch — where explode+groupBy would exchange every
-    posting.  This is the index build's preferred analyzer stage: the first
-    shuffle in the whole build is then the salted posting merge itself.
+    """(repo, doc_id, text) -> FLAT (repo, doc_id, lemma, tf, dl) with
+    ZERO shuffle: a document's tokens all live in its own input row, so
+    per-doc term frequencies and the doc length are computable entirely
+    map-side inside one Arrow batch.  The index build consumes the same
+    analysis as sorted runs (:func:`doc_term_runs_arrow`); this flat view
+    is the equivalence-test contract.
 
-    Executed via ``mapInArrow`` + pyarrow compute kernels (RE2 regex, C++
-    hash aggregation) over CONTIGUOUS Arrow buffers: tokens never become
-    per-string Python objects.  Measured ~2.4x the pandas-object path per
-    core and markedly less DRAM traffic — on the oversubscribed sandbox
-    host the pandas path's object materialization was the phase that capped
-    multi-core scaling (isolated 1->4-core probe: pandas 1.3x vs
-    CPU-bound python work 3.4x).  :func:`doc_term_stats_pandas` keeps the
-    pandas execution for the equivalence test.
+    Executed via ``mapInArrow`` + pyarrow compute kernels (C++ hash
+    aggregation).  Measured ~2.4x the pandas-object path per core
+    (:func:`doc_term_stats_pandas` keeps that execution for the test).
     """
-    from pyspark.sql import functions as F  # noqa: F401
-
     schema = "repo string, doc_id long, lemma string, tf int, dl long"
     narrowed = docs.select("repo", "doc_id", text_col)
-    # EVERY normalizer runs through this fused stage (r5): table-driven
-    # ones ('pinned'/'dict') as pure arrow-kernel work; the stemmer family
-    # ('porter'/'stem', and 'dict_porter' for its dictionary MISSES) adds
-    # one dictionary-encode per batch — Python touches only the batch's
-    # UNIQUE tokens, and the O(corpus tokens) stream still never leaves
-    # its partition.  Before r5 the stemmer normalizers fell back to the
-    # unfused tokenize path, paying a full per-occurrence shuffle: a
-    # 40k-doc dict_porter build measured 46 s vs 17 s pinned; fused it is
-    # back in the pinned cost class.
-    if normalizer == "dict_porter":
-        from .functions.porter import porter_stem as _stem_fn
-
-        table = dict_porter_table(forms)
-    elif normalizer in ("porter", "stem"):
-        if normalizer == "porter":
-            from .functions.porter import porter_stem as _stem_fn
-        else:
-            _stem_fn = stem_token
-        table = {}
-    else:
-        table = _forms_table(normalizer, forms)
-        _stem_fn = None
+    table, stem_fn = _normalizer_fns(normalizer, forms)
 
     def _batches(it):
         import pyarrow as pa
@@ -595,43 +647,11 @@ def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            content = batch.column(batch.schema.get_field_index(text_col))
-            x = pc.fill_null(content, "")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_1[0], replacement=r"\1 \2")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_2[0], replacement=r"\1 \2")
-            x = pc.utf8_lower(x)
-            x = pc.replace_substring_regex(x, pattern=_STRIP_PY, replacement=" ")
-            lists = pc.split_pattern_regex(x, pattern=r"\s+")
-            toks = pc.list_flatten(lists)
-            par = pc.list_parent_indices(lists)
-            keep = pc.and_(
-                pc.greater_equal(pc.utf8_length(toks), MIN_TOKEN_LEN),
-                pc.invert(pc.is_in(toks, value_set=stop_set)),
-            )
-            toks = pc.filter(toks, keep)
-            par = pc.filter(par, keep)
-            # multi-lemma expansion: the exception rows are rare, so only
-            # THAT subset round-trips through Python
-            exc_mask = pc.is_in(toks, value_set=exc_set)
-            if (pc.sum(exc_mask).as_py() or 0) > 0:
-                base_mask = pc.invert(exc_mask)
-                bt, bp = pc.filter(toks, base_mask), pc.filter(par, base_mask)
-                et = pc.filter(toks, exc_mask).to_pylist()
-                ep = pc.filter(par, exc_mask).to_pylist()
-                xt: list[str] = []
-                xp: list[int] = []
-                for tkn, p in zip(et, ep):
-                    for form in table[tkn]:
-                        xt.append(form)
-                        xp.append(p)
-                if _stem_fn is not None and len(bt):
-                    bt = _stem_arrow(bt, _stem_fn, pa, pc)
-                toks = pa.concat_arrays([bt, pa.array(xt, type=pa.string())])
-                par = pa.concat_arrays([bp, pa.array(xp, type=bp.type)])
-            elif _stem_fn is not None and len(toks):
-                toks = _stem_arrow(toks, _stem_fn, pa, pc)
-            if len(toks) == 0:
+            got = _analyze_arrow_batch(batch.column(2), table, stem_fn,
+                                       stop_set, exc_set, pa, pc)
+            if got is None:
                 continue
+            par, toks, _ = got
             tf_t = (
                 pa.table({"i": par, "lemma": toks})
                 .group_by(["i", "lemma"], use_threads=False)
@@ -643,12 +663,10 @@ def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
             )
             out = tf_t.join(dl_t, keys="i", use_threads=False)
             i = out["i"].combine_chunks()
-            repo_idx = batch.schema.get_field_index("repo")
-            id_idx = batch.schema.get_field_index("doc_id")
             yield pa.record_batch(
                 [
-                    pc.cast(pc.take(batch.column(repo_idx), i), pa.string()),
-                    pc.cast(pc.take(batch.column(id_idx), i), pa.int64()),
+                    pc.cast(pc.take(batch.column(0), i), pa.string()),
+                    pc.cast(pc.take(batch.column(1), i), pa.int64()),
                     pc.cast(out["lemma"].combine_chunks(), pa.string()),
                     pc.cast(out["count_all"].combine_chunks(), pa.int32()),
                     pc.cast(out["count_all_sum"].combine_chunks(), pa.int64()),
@@ -657,6 +675,50 @@ def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
             )
 
     return narrowed.mapInArrow(_batches, schema=schema)
+
+
+def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
+                        text_col: str = "content",
+                        normalizer: str = "pinned",
+                        forms: dict[str, tuple[str, ...]] | None = None,
+                        positions: bool = False) -> DataFrame:
+    """THE build's analysis kernel: (doc_id, text) -> sorted posting runs,
+    one row per (segment, lemma) per Arrow batch (``index/runs.py``
+    schema), with ZERO shuffle.  The batch is analyzed once
+    (:func:`_analyze_arrow_batch`), then one numpy lexsort forms the runs
+    in the same Python pass — tf is a lemma's occurrence count per doc,
+    dl the doc's occurrence total (multi-lemma expansions count once per
+    form), ``sum_tf`` the run's Σ tf.  ``positions=True`` adds each run's
+    occurrence positions, so ONE scan feeds both the posting and the
+    positional merge (the fused single-scan build)."""
+    from .index.runs import POS_RUN_DDL, STAT_RUN_DDL, form_runs
+
+    table, stem_fn = _normalizer_fns(normalizer, forms)
+    narrowed = docs.select("doc_id", text_col)
+
+    def _batches(it):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        stop_set = pa.array(sorted(STOP_WORDS))
+        exc_set = pa.array(list(table), type=pa.string())
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            got = _analyze_arrow_batch(batch.column(1), table, stem_fn,
+                                       stop_set, exc_set, pa, pc)
+            if got is None:
+                continue
+            par, lemmas, pos = got
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
+            dl = np.bincount(par, minlength=batch.num_rows)
+            yield form_runs(ids.astype(np.int64)[par], lemmas, dl[par],
+                            seg_size, n_buckets,
+                            pos=pos if positions else None)
+
+    return narrowed.mapInArrow(
+        _batches, schema=POS_RUN_DDL if positions else STAT_RUN_DDL)
 
 
 def doc_term_stats_pandas(docs: DataFrame, text_col: str = "content",

@@ -1,30 +1,32 @@
-"""Physical index builder: salted-shuffle merge -> compressed posting lists.
+"""Physical index builder: sorted posting runs -> compressed posting lists.
 
 SURVEY.md §3.2 (build lifecycle) + §4 items 1/3/4/5.  Pipeline (ONE pass
 over all segments that still need building):
 
   docs (ingested: doc_id, sha256)                       [narrow scan]
-    -> fused Arrow analyzer: (repo, doc_id, lemma, tf, dl) computed
-       entirely MAP-SIDE in one mapInPandas — a doc's tokens never leave
-       its partition, so tf/dl need NO shuffle           [narrow]
-    -> SALTED partial runs: groupBy(segment, lemma, salt=doc_id % S),
-       runs sorted by doc_id, shipped as aligned
-       primitive arrays (struct-field extraction)        [shuffle 1, bounded keys]
-    -> final merge: groupBy(segment, BUCKET), per-lemma k-way merge of
-       <= S sorted runs in numpy, delta+varbyte encode +
-       block-max directory                               [shuffle 2, coarse groups]
-    -> ONE write, partitionBy(segment, bucket(lemma)), dynamic partition
-       overwrite (already-done segments untouched)       [partition-pruned reads]
+    -> fused Arrow analyzer + run former: each batch is tokenized,
+       normalized and lexsorted into one sorted run per (segment, lemma)
+       — aligned doc/tf/dl lists, Σtf, hash bucket — in ONE mapInArrow;
+       a doc's tokens never leave its partition   [narrow, localCheckpoint]
+    -> merge: groupBy(segment, BUCKET), per-lemma merge of the lemma's
+       runs in numpy, delta+varbyte encode + block-max directory
+                                                        [the ONE shuffle]
+    -> write as the groups leave the merge, partitionBy(segment,
+       bucket(lemma)), dynamic partition overwrite (already-done segments
+       untouched, no repartition)                [partition-pruned reads]
 
 (``analyzer_impl='jvm'`` swaps the first stage for the pure-Catalyst
-tokenizer + two hash-agg shuffles — same output, tested equal.)
+tokenizer + two hash-agg shuffles, whose flat rows go through the same
+run former — same output, tested equal.)
 
-Why salted two-level merge (SURVEY.md §4 item 3): lemma frequency is Zipf —
-a plain ``groupBy(lemma).collect_list`` sends the hottest term's entire
-posting list through one reducer.  Salting bounds shuffle-3 key size (every
-(lemma, salt) holds ~1/S of a hot term) and shuffle 4 only moves S
-pre-sorted runs per lemma.  AQE skew handling fixes joins, not wide
-aggregates, so this is explicit.
+What bounds Zipf skew (SURVEY.md §4 item 3): a plain
+``groupBy(lemma).collect_list`` sends the hottest term's entire posting
+list through one reducer key.  Here no reducer key is a lemma: a run holds
+at most one Arrow batch of postings (``maxRecordsPerBatch`` docs, formed
+map-side), and the merge groups by (segment, bucket), so a hot term shares
+its group with every other lemma of its bucket and its doc range is cut by
+the segments.  ``salt`` is kept only for layout compatibility — accepted,
+pinned and recorded in meta.json, with no effect on the build.
 
 Doc-range SEGMENTS are the 10^12-file story: doc_id space is range-cut into
 ``n_segments``; each segment owns complete posting lists for its doc range,
@@ -130,20 +132,68 @@ def seg_ranges_filter(missing: list[int], seg_size: int):
 
 
 def hash_bucket(lemma: str, n_buckets: int) -> int:
-    """Deterministic, Python/JVM-agreeing bucket: first 4 bytes of md5, big
-    endian (not Python's salted builtin hash).  The JVM twin is
-    :func:`hash_bucket_col`; tests assert they agree."""
+    """Deterministic bucket: first 4 bytes of md5, big endian (not Python's
+    salted builtin hash).  The build's run former and every bucket-pruned
+    read compute it the same way."""
     import hashlib
 
     return int.from_bytes(hashlib.md5(lemma.encode()).digest()[:4], "big") % n_buckets
 
 
-def hash_bucket_col(lemma_col, n_buckets: int):
-    """JVM column expression computing exactly :func:`hash_bucket`."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(lemma_col), 1, 8), 16, 10).cast("long"),
-        F.lit(n_buckets),
-    ).cast("int")
+def encode_index_runs(runs: DataFrame, avgdl: float,
+                      block_size: int) -> DataFrame:
+    """Sorted runs -> encoded posting rows (:data:`INDEX_OUT_SCHEMA`), in
+    ONE exchange: runs group by (segment, BUCKET) — n_segments x n_buckets
+    well-sized groups (grouping by (segment, lemma) would mean one
+    applyInPandas invocation per term, measured to dominate the build) —
+    and the per-lemma merge + delta/varbyte encode + block-max directory
+    runs vectorized inside each group."""
+
+    def _merge(pdf):
+        import numpy as np
+        import pandas as pd
+
+        from .codec import encode_postings_many
+
+        cols = ["segment", "lemma", "df", "postings", "tfs", "dls", "blocks", "bucket"]
+        if pdf.empty:
+            return pd.DataFrame([], columns=cols)
+        # Concatenate EVERY lemma's runs into flat arrays, sort once by
+        # (lemma, doc_id) (a lemma's runs come from different batches, so
+        # their docs are disjoint and ids stay strict), and batch-encode
+        # all lemmas in a single vectorized codec pass.
+        seg = int(pdf["segment"].iloc[0])
+        bucket = int(pdf["bucket"].iloc[0])
+        lens = np.fromiter((len(a) for a in pdf["docs"]), dtype=np.int64,
+                           count=len(pdf))
+        codes, lemmas = pd.factorize(pdf["lemma"], sort=True)
+        rid = np.repeat(codes, lens)
+        docs = np.concatenate(pdf["docs"].to_list()).astype(np.int64)
+        tfs = np.concatenate(pdf["tfs"].to_list()).astype(np.int64)
+        dls = np.concatenate(pdf["dls"].to_list()).astype(np.int64)
+        order = np.lexsort((docs, rid))
+        docs, tfs, dls, rid = docs[order], tfs[order], dls[order], rid[order]
+        counts = np.bincount(rid, minlength=len(lemmas))
+        offsets = np.concatenate([[0], np.cumsum(counts)])
+        encs = encode_postings_many(docs, tfs, dls, offsets, avgdl, K1, B, block_size)
+        out = [
+            {
+                "segment": seg,
+                "lemma": lemmas[t],
+                "df": int(counts[t]),
+                "postings": enc.docs,
+                "tfs": enc.tfs,
+                "dls": enc.dls,
+                "blocks": [tuple(b) for b in enc.blocks],
+                "bucket": bucket,
+            }
+            for t, enc in enumerate(encs)
+        ]
+        return pd.DataFrame(out, columns=cols)
+
+    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls")
+            .groupBy("segment", "bucket")
+            .applyInPandas(_merge, schema=INDEX_OUT_SCHEMA))
 
 
 _ANALYZER_CACHE: dict[tuple[str, str],
@@ -207,14 +257,14 @@ def build_index(
     LemmaFinderImpl.java:25-31 singleton).
 
     ``positions=True`` builds the positional sidecar IN THE SAME corpus
-    scan (fused union kernel, ``positions.doc_stats_and_positions_arrow``):
+    scan (the run kernel with positions, ``analyzer.doc_term_runs_arrow``):
     the two-pass route (build_index + build_positions) tokenizes and
     normalizes every document twice — at 100 TB the second full analysis
     pass is the largest avoidable cost in a positional build.  Output is
     byte-identical to the two-pass route (parity-tested)."""
     import shutil
 
-    from .checkpoint import segment_done, write_manifest
+    from .checkpoint import segment_done, write_json_atomic, write_manifest
 
     spark = docs_ingested.sparkSession
     narrow = docs_ingested.select("repo", "doc_id", "content", "sha256")
@@ -222,8 +272,9 @@ def build_index(
     # seg_size is a PINNED index property: once an index exists, its doc-range
     # boundaries must never move under non-rebuilt segments (doc_ids are
     # global ranks; a grown corpus ADDS segments, it never resizes them).
-    # salt/n_buckets/block_size are pinned with it — codec layout must agree
-    # across segments.  The n_segments argument only shapes a FRESH build.
+    # n_buckets/block_size are pinned with it — codec layout must agree
+    # across segments (salt too, for layout compatibility only).  The
+    # n_segments argument only shapes a FRESH build.
     old_meta: dict | None = None
     if resume and os.path.exists(f"{out_dir}/meta.json"):
         with open(f"{out_dir}/meta.json") as fh:
@@ -360,53 +411,42 @@ def build_index(
         analyzed = analyzed.filter(seg_ranges_filter(missing, seg_size))
 
     if analyzer_impl == "arrow":
-        # fused Arrow analyzer: (tf, dl) computed entirely map-side in one
-        # mapInArrow (a doc's tokens never leave its partition) — the first
-        # shuffle of the whole build is the salted posting merge itself.
-        # EVERY normalizer routes here (r5): the stemmer family stems the
-        # batch's UNIQUE tokens via dictionary-encode inside the same
-        # kernel, so 'porter'/'dict_porter' builds no longer pay the
-        # unfused tokenize path's full per-occurrence shuffle (40k docs:
-        # 46 s -> pinned-class).
-        # MATERIALIZE stats once (localCheckpoint, not .cache()): both the
-        # avgdl action and the merge pipeline consume it, and the SQL
-        # cache's compressed-columnar form measured ~3x slower to re-scan
-        # into Arrow batches than checkpointed rows on this host.  At
-        # cluster scale this materialization is a staging write to durable
-        # storage.
-        if positions:
-            # fused single-scan build: ONE analysis pass yields both the
-            # (tf, dl) stat rows and the positional occurrence stream as a
-            # union; both merges below consume filtered views of one
-            # checkpoint (pos IS NULL <=> stat row)
-            from .positions import doc_stats_and_positions_arrow
+        # fused Arrow analyzer: each batch is tokenized, normalized and
+        # formed into sorted (segment, lemma) runs in ONE Python pass — a
+        # doc's tokens never leave its partition, and the first shuffle of
+        # the whole build is the (segment, bucket) merge itself.  EVERY
+        # normalizer routes here (the stemmer family stems the batch's
+        # UNIQUE tokens inside the same kernel).  positions=True adds the
+        # runs' occurrence positions: ONE analysis pass feeds both the
+        # posting and the positional merge (the two-pass route tokenizes
+        # every document twice).
+        from ..analyzer import doc_term_runs_arrow
 
-            combined = doc_stats_and_positions_arrow(
-                analyzed, normalizer=normalizer, forms=forms,
-            ).localCheckpoint()
-            stats = combined.filter(F.col("pos").isNull()).drop("pos")
-            posflat = combined.filter(F.col("pos").isNotNull()).select(
-                "doc_id", "lemma", "pos")
-        else:
-            from ..analyzer import doc_term_stats_arrow
-
-            stats = doc_term_stats_arrow(analyzed, normalizer=normalizer,
-                                         forms=forms).localCheckpoint()
+        runs = doc_term_runs_arrow(analyzed, seg_size, n_buckets,
+                                   normalizer=normalizer, forms=forms,
+                                   positions=positions)
     else:
+        from .runs import flat_runs
+
         tf = term_frequencies(analyzed, impl=analyzer_impl,
                               normalizer=normalizer, forms=forms)
         dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        stats = tf.join(dl, "doc_id").localCheckpoint()
+        runs = flat_runs(tf.join(dl, "doc_id"), seg_size, n_buckets)
+    # MATERIALIZE the runs once (localCheckpoint, not .cache()): the avgdl
+    # action and every merge consume them, and the SQL cache's
+    # compressed-columnar form measured ~3x slower to re-scan into Arrow
+    # batches than checkpointed rows on this host.  At cluster scale this
+    # materialization is a staging write to durable storage.
+    runs = runs.localCheckpoint()
     timings["analyze_plan_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
 
     if avgdl is None:
         # avgdl over ALL docs (zero-lemma docs included) — matches the oracle.
-        # Σ tf over every (doc, lemma) row == Σ dl over docs, so this is a
-        # pure map-side partial aggregation of the persisted stats — no
-        # distinct shuffle of the full posting stream (which at 160k docs
-        # was a measurable slice of the build).
-        total_dl = stats.agg(F.sum("tf")).collect()[0][0] or 0
+        # Σ tf over every (doc, lemma) == Σ dl over docs, and each run
+        # carries its Σ tf: a plain sum of one long column (map-side partial
+        # aggregation, no lambda over the run arrays).
+        total_dl = runs.agg(F.sum("sum_tf")).collect()[0][0] or 0
         avgdl = float(total_dl) / n_docs if n_docs else 1.0
     timings["avgdl_s"] = round(__import__("time").perf_counter() - _t, 2)
     _t = __import__("time").perf_counter()
@@ -441,8 +481,7 @@ def build_index(
                 "token string, forms array<string>")
              .coalesce(1).write.mode("overwrite")
              .parquet(f"{out_dir}/dict_forms"))
-    with open(f"{out_dir}/meta.json", "w") as fh:
-        json.dump(meta, fh, indent=1)
+    write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
 
     if not missing:
         if positions:
@@ -456,80 +495,11 @@ def build_index(
             trust = bool(old_meta and old_meta.get("has_positions"))
             return build_positions(docs_ingested, out_dir,
                                    segments=[] if trust else None)
-        # (no unpersist: stats is localCheckpoint()'d, not persist()'d — its
+        # (no unpersist: runs are localCheckpoint()'d, not persist()'d — their
         # blocks are freed when the checkpointed RDD is driver-GC'd)
         return meta
 
-    postings = (
-        stats.withColumn("segment", seg_col)
-        .filter(F.col("segment").isin(missing))
-        .select("segment", "lemma", "doc_id", "tf", "dl")
-    )
-
-    # ---- stage 1: salted partial runs (bounded reducer keys) --------------
-    # Runs travel as three ALIGNED primitive arrays (struct-field extraction
-    # after sort_array, JVM-side): Arrow then hands numpy arrays to the
-    # merge UDF directly — no per-posting Python dict handling.
-    runs = (
-        postings.withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(salt)).cast("int"))
-        .groupBy("segment", "lemma", "_salt")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("run"))
-        .select(
-            "segment",
-            "lemma",
-            hash_bucket_col(F.col("lemma"), n_buckets).alias("bucket"),
-            F.col("run.doc_id").alias("r_docs"),
-            F.col("run.tf").alias("r_tfs"),
-            F.col("run.dl").alias("r_dls"),
-        )
-    )
-
-    # ---- stage 2: k-way merge + encode, grouped by (segment, BUCKET) ------
-    # Grouping by (segment, lemma) would mean one applyInPandas invocation
-    # per term (tens of thousands of tiny Arrow batches — measured to
-    # dominate the build); (segment, bucket) gives n_segments x n_buckets
-    # well-sized groups and the per-lemma loop runs in pandas inside.
-    def _merge(pdf):
-        import numpy as np
-        import pandas as pd
-
-        from .codec import encode_postings_many
-
-        cols = ["segment", "lemma", "df", "postings", "tfs", "dls", "blocks", "bucket"]
-        if pdf.empty:
-            return pd.DataFrame([], columns=cols)
-        # One group == one (segment, bucket).  Instead of a per-lemma Python
-        # loop, concatenate EVERY lemma's runs into flat arrays, sort once by
-        # (lemma, doc_id) (runs are disjoint by salt so ids stay strict), and
-        # batch-encode all lemmas in a single vectorized codec pass.
-        seg = int(pdf["segment"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        lens = np.fromiter((len(a) for a in pdf["r_docs"]), dtype=np.int64,
-                           count=len(pdf))
-        codes, lemmas = pd.factorize(pdf["lemma"], sort=True)
-        rid = np.repeat(codes, lens)
-        docs = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["r_docs"]])
-        tfs = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["r_tfs"]])
-        dls = np.concatenate([np.asarray(a, dtype=np.int64) for a in pdf["r_dls"]])
-        order = np.lexsort((docs, rid))
-        docs, tfs, dls, rid = docs[order], tfs[order], dls[order], rid[order]
-        counts = np.bincount(rid, minlength=len(lemmas))
-        offsets = np.concatenate([[0], np.cumsum(counts)])
-        encs = encode_postings_many(docs, tfs, dls, offsets, avgdl, K1, B, block_size)
-        out = [
-            {
-                "segment": seg,
-                "lemma": lemmas[t],
-                "df": int(counts[t]),
-                "postings": enc.docs,
-                "tfs": enc.tfs,
-                "dls": enc.dls,
-                "blocks": [tuple(b) for b in enc.blocks],
-                "bucket": bucket,
-            }
-            for t, enc in enumerate(encs)
-        ]
-        return pd.DataFrame(out, columns=cols)
+    runs = runs.filter(F.col("segment").isin(missing))
 
     # Drop the rebuilt segments' directories wholesale BEFORE the write:
     # dynamic partition overwrite only replaces (segment, bucket) partitions
@@ -545,9 +515,11 @@ def build_index(
         # build_positions(segs) refreshes both (rebuild_segments wires it)
         shutil.rmtree(f"{out_dir}/positions/segment={s}", ignore_errors=True)
 
-    index_df = runs.groupBy("segment", "bucket").applyInPandas(_merge, schema=INDEX_OUT_SCHEMA)
+    # ONE exchange: the runs go straight into their (segment, bucket) merge
+    # group, and the merge output is written as it leaves the group (each
+    # group lands in its partition dir from one task — no repartition)
     (
-        index_df.repartition("segment", "bucket")
+        encode_index_runs(runs, avgdl, block_size)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")  # done segments untouched
         .partitionBy("segment", "bucket")
@@ -696,17 +668,17 @@ def build_index(
         # fetch-before-guard hole for exactly the big indexes it protects.
         if complete:
             meta["posting_bytes"] = int(tot_b)
-        with open(f"{out_dir}/meta.json", "w") as fh:
-            json.dump(meta, fh, indent=1)
+        write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
     timings["manifests_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
 
-    if positions and has_data:
+    if positions:
         # positional sidecar from the SAME analysis pass (no second corpus
-        # scan): merge-encode the fused occurrence stream for the rebuilt
-        # segments.  Runs after the manifests exist — the positional stats
-        # ride them (estimate-before-fetch discipline).
-        from .positions import _merge_write_positions, build_positions
+        # scan): merge-encode the runs' occurrence positions for the
+        # rebuilt segments.  Runs after the manifests exist — the
+        # positional stats ride them (estimate-before-fetch discipline).
+        from .positions import (_merge_write_positions,
+                                _positions_bookkeeping, build_positions)
 
         # A partially-resumed build over an index whose flag was OFF
         # leaves the untouched segments without a trustworthy sidecar
@@ -718,12 +690,18 @@ def build_index(
         # fused merge runs LAST so its bookkeeping flips has_positions
         # only once every segment is covered (the flip itself also
         # requires all dirs present — positions._positions_bookkeeping).
-        trust = bool(old_meta and old_meta.get("has_positions"))
-        rest = ([] if trust
-                else [s for s in range(n_segments) if s not in set(missing)])
-        if rest:
-            build_positions(docs_ingested, out_dir, segments=rest)
-        meta = _merge_write_positions(posflat, out_dir, meta, missing)
+        # An emptied index (no data dir at all) has nothing to merge but
+        # still runs the bookkeeping: every segment is vacuously covered,
+        # so the flag stays on and a later regrow keeps the sidecar.
+        if has_data:
+            trust = bool(old_meta and old_meta.get("has_positions"))
+            rest = ([] if trust
+                    else [s for s in range(n_segments) if s not in missing])
+            if rest:
+                build_positions(docs_ingested, out_dir, segments=rest)
+            meta = _merge_write_positions(runs, out_dir, missing)
+        else:
+            meta = _positions_bookkeeping(None, out_dir, [])
         timings["positions_s"] = round(_time.perf_counter() - _t, 2)
 
     meta["timings"] = timings

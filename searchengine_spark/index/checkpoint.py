@@ -19,12 +19,26 @@ def _manifest_path(out_dir: str, segment: int) -> str:
     return f"{out_dir}/manifests/segment={segment}.json"
 
 
+def write_json_atomic(path: str, obj: dict, **dump_kw) -> None:
+    """Publish ``obj`` as JSON at ``path`` atomically: dump to a sibling
+    tmp file, then ``os.replace`` it over the target.  Readers ``json.load``
+    these files unguarded, so a crash (or a failing dump) mid-write must
+    leave the previous version in place, never a truncated file."""
+    tmp = f"{path}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh, **dump_kw)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    os.replace(tmp, path)
+
+
 def write_manifest(out_dir: str, segment: int, stats: dict) -> None:
     os.makedirs(f"{out_dir}/manifests", exist_ok=True)
-    tmp = _manifest_path(out_dir, segment) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir, segment))  # atomic publish
+    write_json_atomic(_manifest_path(out_dir, segment), stats, indent=1,
+                      sort_keys=True)
 
 
 def read_manifest(out_dir: str, segment: int) -> dict | None:

@@ -31,6 +31,13 @@ O(postings of the query terms) — the same class as conjunctive search —
 regardless of how common the words are; no store scan, no per-row Python
 re-analysis.
 
+Build: the analysis kernel (``analyzer.doc_term_runs_arrow(positions=
+True)``) forms each Arrow batch's occurrences into sorted (segment, lemma)
+runs map-side (``index/runs.py``); the merge is ONE exchange of those runs
+into coarse (segment, bucket) groups, written without a repartition.  A
+run is bounded by its batch and no reducer key is a lemma, so a hot term
+never funnels through one reducer.
+
 Lifecycle: ``build_index`` rewrites ``meta.json`` WITHOUT the
 ``has_positions`` flag, so any data rebuild atomically disables the
 positional path (stale positions are never served); ``build_positions``
@@ -53,7 +60,7 @@ from typing import TYPE_CHECKING
 import numpy as np
 
 from ..analyzer import analyze_positions
-from .codec import varbyte_decode, varbyte_encode
+from .codec import varbyte_decode, varbyte_encode_with_ends
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -123,323 +130,20 @@ def decode_term_positions(pdocs: bytes, pcounts: bytes, pstream: bytes
     return docs, counts, flat
 
 
-def doc_lemma_positions(docs: DataFrame, text_col: str = "content",
-                        normalizer: str = "pinned",
-                        forms: dict[str, tuple[str, ...]] | None = None,
-                        ) -> DataFrame:
-    """(repo?, doc_id, text) -> FLAT (doc_id, lemma, pos) rows, one per
-    occurrence, with ZERO shuffle — a doc's positional stream is computed
-    entirely map-side, mirroring the pinned ``analyze_positions`` exactly:
-    position = rank of the surviving source token, multi-lemma tokens emit
-    every form at ONE position.
-
-    Executed via ``mapInArrow`` + pyarrow compute kernels over contiguous
-    buffers (the same shape as analyzer.doc_term_stats_arrow — the first
-    positional cut used pandas object lists per (doc, lemma) and measured
-    ~3x the main build; flat primitive rows let the JVM assemble the runs
-    and the merge stay pure numpy).  Only the rare exception-table tokens
-    round-trip through Python."""
-    from ..analyzer import _forms_table
-
-    return _positions_kernel(docs, text_col,
-                             _forms_table(normalizer, forms), False)
-
-
-def doc_lemma_positions_stemmed(docs: DataFrame, text_col: str,
-                                normalizer: str,
-                                forms: dict[str, tuple[str, ...]] | None,
-                                ) -> DataFrame:
-    """The stemmer-family positional analyzer ('porter'/'stem'/
-    'dict_porter'): the Arrow kernel emits surviving tokens with a
-    ``raw`` provenance flag (dictionary expansions are FINAL lemmas, raw
-    tokens still need stemming), then the raw subset is normalized by the
-    same O(vocabulary) join the main build uses — stem each DISTINCT
-    surface token once, map back onto its positions.  Provenance matters:
-    an expanded form and a raw surface token can collide as strings
-    ("leave" from leaves -> leave must stay "leave" while a raw "leave"
-    porters to "leav")."""
-    from pyspark.sql import functions as F
-
-    from ..analyzer import dict_porter_table, stem_series, stem_vocab_map
-    from ..functions.porter import porter_series
-
-    table = dict_porter_table(forms) if normalizer == "dict_porter" else {}
-    series = stem_series if normalizer == "stem" else porter_series
-    # materialize the kernel output ONCE: done, raw and the vocab distinct
-    # would otherwise each re-run the (expensive) positional analyzer
-    tp = _positions_kernel(docs, text_col, table, True).localCheckpoint()
-    done = tp.filter(~F.col("raw")).select("doc_id", "lemma", "pos")
-    raw = tp.filter(F.col("raw")).select(
-        "doc_id", F.col("lemma").alias("token"), "pos")
-    vocab = stem_vocab_map(raw, series)
-    return done.unionByName(
-        raw.join(vocab, "token").select("doc_id", "lemma", "pos"))
-
-
-def doc_stats_and_positions_arrow(docs: DataFrame, text_col: str = "content",
-                                  normalizer: str = "pinned",
-                                  forms: dict[str, tuple[str, ...]] | None = None,
-                                  ) -> DataFrame:
-    """ONE analysis pass emitting BOTH build inputs as a union stream:
-
-      - stat rows       (doc_id, lemma, tf, dl, pos=NULL)   — what
-        ``analyzer.doc_term_stats_arrow`` yields (value-identical,
-        parity-tested), feeding the main posting merge;
-      - occurrence rows (doc_id, lemma, tf=NULL, dl=NULL, pos) — what
-        ``doc_lemma_positions`` / ``doc_lemma_positions_stemmed`` yield
-        (value-identical), feeding the positional merge.
-
-    This is the fused single-scan build's analyzer stage
-    (``builder.build_index(positions=True)``): a positional index built
-    the two-pass way tokenizes + normalizes every document TWICE — at
-    100 TB the second full corpus scan is the single largest avoidable
-    cost in the whole pipeline.  Everything per-doc is computed map-side
-    in the same Arrow batch (zero shuffle, like both parent kernels);
-    the stemmer family normalizes in-kernel over the batch's UNIQUE
-    tokens (``analyzer._stem_arrow``, per-worker memo), which for the
-    positional half replaces ``doc_lemma_positions_stemmed``'s
-    O(vocabulary) join — same values, one stage earlier."""
-    from ..analyzer import (_CAMEL_1, _CAMEL_2, _STRIP_PY, MIN_TOKEN_LEN,
-                            STOP_WORDS, _forms_table, _stem_arrow,
-                            dict_porter_table, stem_token)
-
-    if normalizer == "dict_porter":
-        from ..functions.porter import porter_stem as _stem_fn
-
-        table = dict_porter_table(forms)
-    elif normalizer in ("porter", "stem"):
-        if normalizer == "porter":
-            from ..functions.porter import porter_stem as _stem_fn
-        else:
-            _stem_fn = stem_token
-        table = {}
-    else:
-        table = _forms_table(normalizer, forms)
-        _stem_fn = None
-
-    schema = "doc_id long, lemma string, tf int, dl long, pos int"
-    narrowed = docs.select("doc_id", text_col)
-
-    def _batches(it):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        stop_set = pa.array(sorted(STOP_WORDS))
-        exc_set = pa.array(list(table), type=pa.string())
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            content = batch.column(batch.schema.get_field_index(text_col))
-            x = pc.fill_null(content, "")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_1[0],
-                                           replacement=r"\1 \2")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_2[0],
-                                           replacement=r"\1 \2")
-            x = pc.utf8_lower(x)
-            x = pc.replace_substring_regex(x, pattern=_STRIP_PY,
-                                           replacement=" ")
-            lists = pc.split_pattern_regex(x, pattern=r"\s+")
-            toks = pc.list_flatten(lists)
-            par = pc.list_parent_indices(lists)
-            keep = pc.and_(
-                pc.greater_equal(pc.utf8_length(toks), MIN_TOKEN_LEN),
-                pc.invert(pc.is_in(toks, value_set=stop_set)),
-            )
-            toks = pc.filter(toks, keep)
-            par = pc.filter(par, keep)
-            if len(toks) == 0:
-                continue
-            # position = rank of the surviving source token per doc,
-            # BEFORE multi-lemma expansion (expanded forms share ONE
-            # position) — identical to _positions_kernel
-            parn = par.to_numpy(zero_copy_only=False).astype(np.int64)
-            new_doc = np.empty(parn.size, dtype=bool)
-            new_doc[0] = True
-            new_doc[1:] = parn[1:] != parn[:-1]
-            starts = np.flatnonzero(new_doc)
-            run_len = np.diff(np.concatenate([starts, [parn.size]]))
-            pos = np.arange(parn.size, dtype=np.int64) - np.repeat(
-                starts, run_len)
-            pos_arr = pa.array(pos, type=pa.int32())
-            exc_mask = pc.is_in(toks, value_set=exc_set)
-            if (pc.sum(exc_mask).as_py() or 0) > 0:
-                base_mask = pc.invert(exc_mask)
-                bt = pc.filter(toks, base_mask)
-                bp = pc.filter(par, base_mask)
-                bpos = pc.filter(pos_arr, base_mask)
-                et = pc.filter(toks, exc_mask).to_pylist()
-                ep = pc.filter(par, exc_mask).to_pylist()
-                epos = pc.filter(pos_arr, exc_mask).to_pylist()
-                xt: list[str] = []
-                xp: list[int] = []
-                xpos: list[int] = []
-                for tkn, p_, q_ in zip(et, ep, epos):
-                    for form in table[tkn]:
-                        xt.append(form)
-                        xp.append(p_)
-                        xpos.append(q_)
-                # dictionary expansions are FINAL lemmas; only the base
-                # (raw) subset goes through the stemmer — the same
-                # provenance rule as doc_lemma_positions_stemmed
-                if _stem_fn is not None and len(bt):
-                    bt = _stem_arrow(bt, _stem_fn, pa, pc)
-                toks = pa.concat_arrays([bt, pa.array(xt, type=pa.string())])
-                par = pa.concat_arrays([bp, pa.array(xp, type=bp.type)])
-                pos_arr = pa.concat_arrays(
-                    [bpos, pa.array(xpos, type=pa.int32())])
-            elif _stem_fn is not None:
-                toks = _stem_arrow(toks, _stem_fn, pa, pc)
-            id_idx = batch.schema.get_field_index("doc_id")
-            ids = pc.cast(pc.take(batch.column(id_idx), par), pa.int64())
-            lemmas = pc.cast(toks, pa.string())
-            n_occ = len(lemmas)
-            yield pa.record_batch(
-                [ids, lemmas, pa.nulls(n_occ, pa.int32()),
-                 pa.nulls(n_occ, pa.int64()), pos_arr],
-                names=["doc_id", "lemma", "tf", "dl", "pos"],
-            )
-            # stat rows off the SAME normalized arrays (tf per (doc,
-            # lemma), dl = Σ tf per doc — multi-lemma expansions count
-            # once per form, matching doc_term_stats_arrow)
-            tf_t = (
-                pa.table({"i": par, "lemma": lemmas})
-                .group_by(["i", "lemma"], use_threads=False)
-                .aggregate([([], "count_all")])
-            )
-            dl_t = (
-                tf_t.group_by(["i"], use_threads=False)
-                .aggregate([("count_all", "sum")])
-            )
-            out = tf_t.join(dl_t, keys="i", use_threads=False)
-            i = out["i"].combine_chunks()
-            n_st = len(i)
-            yield pa.record_batch(
-                [
-                    pc.cast(pc.take(batch.column(id_idx), i), pa.int64()),
-                    pc.cast(out["lemma"].combine_chunks(), pa.string()),
-                    pc.cast(out["count_all"].combine_chunks(), pa.int32()),
-                    pc.cast(out["count_all_sum"].combine_chunks(),
-                            pa.int64()),
-                    pa.nulls(n_st, pa.int32()),
-                ],
-                names=["doc_id", "lemma", "tf", "dl", "pos"],
-            )
-
-    return narrowed.mapInArrow(_batches, schema=schema)
-
-
-def _positions_kernel(docs: DataFrame, text_col: str,
-                      table: dict[str, tuple[str, ...]],
-                      mark_raw: bool) -> DataFrame:
-    from ..analyzer import _CAMEL_1, _CAMEL_2, _STRIP_PY
-    from ..analyzer import MIN_TOKEN_LEN, STOP_WORDS
-
-    schema = ("doc_id long, lemma string, pos int, raw boolean"
-              if mark_raw else "doc_id long, lemma string, pos int")
-    narrowed = docs.select("doc_id", text_col)
-
-    def _batches(it):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        stop_set = pa.array(sorted(STOP_WORDS))
-        exc_set = pa.array(list(table), type=pa.string())
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            content = batch.column(batch.schema.get_field_index(text_col))
-            x = pc.fill_null(content, "")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_1[0],
-                                           replacement=r"\1 \2")
-            x = pc.replace_substring_regex(x, pattern=_CAMEL_2[0],
-                                           replacement=r"\1 \2")
-            x = pc.utf8_lower(x)
-            x = pc.replace_substring_regex(x, pattern=_STRIP_PY,
-                                           replacement=" ")
-            lists = pc.split_pattern_regex(x, pattern=r"\s+")
-            toks = pc.list_flatten(lists)
-            par = pc.list_parent_indices(lists)
-            keep = pc.and_(
-                pc.greater_equal(pc.utf8_length(toks), MIN_TOKEN_LEN),
-                pc.invert(pc.is_in(toks, value_set=stop_set)),
-            )
-            # split_pattern_regex emits '' for leading/trailing whitespace;
-            # MIN_TOKEN_LEN drops them with the short tokens
-            toks = pc.filter(toks, keep)
-            par = pc.filter(par, keep)
-            if len(toks) == 0:
-                continue
-            # position over SURVIVING tokens, per doc: arange minus each
-            # doc-run's first index (par is non-decreasing in token order)
-            parn = par.to_numpy(zero_copy_only=False).astype(np.int64)
-            new_doc = np.empty(parn.size, dtype=bool)
-            new_doc[0] = True
-            new_doc[1:] = parn[1:] != parn[:-1]
-            starts = np.flatnonzero(new_doc)
-            run_len = np.diff(np.concatenate([starts, [parn.size]]))
-            pos = np.arange(parn.size, dtype=np.int64) - np.repeat(
-                starts, run_len)
-            pos_arr = pa.array(pos, type=pa.int32())
-            # multi-lemma expansion: exception tokens are rare, so only
-            # THAT subset round-trips through Python (same pos, every form)
-            raw_arr = None
-            exc_mask = pc.is_in(toks, value_set=exc_set)
-            if (pc.sum(exc_mask).as_py() or 0) > 0:
-                base_mask = pc.invert(exc_mask)
-                bt = pc.filter(toks, base_mask)
-                bp = pc.filter(par, base_mask)
-                bpos = pc.filter(pos_arr, base_mask)
-                et = pc.filter(toks, exc_mask).to_pylist()
-                ep = pc.filter(par, exc_mask).to_pylist()
-                epos = pc.filter(pos_arr, exc_mask).to_pylist()
-                xt: list[str] = []
-                xp: list[int] = []
-                xpos: list[int] = []
-                for tkn, p_, q_ in zip(et, ep, epos):
-                    for form in table[tkn]:
-                        xt.append(form)
-                        xp.append(p_)
-                        xpos.append(q_)
-                if mark_raw:
-                    # provenance: base tokens still need the stemmer,
-                    # dictionary expansions are final lemmas
-                    raw_arr = pa.concat_arrays([
-                        pa.array(np.ones(len(bt), dtype=bool)),
-                        pa.array(np.zeros(len(xt), dtype=bool)),
-                    ])
-                toks = pa.concat_arrays([bt, pa.array(xt, type=bt.type)])
-                par = pa.concat_arrays([bp, pa.array(xp, type=bp.type)])
-                pos_arr = pa.concat_arrays(
-                    [bpos, pa.array(xpos, type=pa.int32())])
-            elif mark_raw:
-                raw_arr = pa.array(np.ones(len(toks), dtype=bool))
-            id_idx = batch.schema.get_field_index("doc_id")
-            cols = [
-                pc.cast(pc.take(batch.column(id_idx), par), pa.int64()),
-                pc.cast(toks, pa.string()),
-                pos_arr,
-            ]
-            names = ["doc_id", "lemma", "pos"]
-            if mark_raw:
-                cols.append(raw_arr)
-                names.append("raw")
-            yield pa.record_batch(cols, names=names)
-
-    return narrowed.mapInArrow(_batches, schema=schema)
-
-
 def build_positions(docs_ingested: DataFrame, index_dir: str,
                     segments: list[int] | None = None) -> dict:
     """Build (or refresh) the positional sidecar for ``segments`` (None =
     every segment of the existing index) and set ``meta.has_positions``.
 
-    Same at-scale shape as the main build: map-side positional analyzer
-    (no shuffle), salted bounded-key partial runs, coarse (segment, bucket)
-    merge-encode groups, dynamic partition overwrite with stale-dir
-    deletion.  MUST run against the same corpus state as the index data
-    (the caller's contract — rebuild_segments wires it for incremental
-    flows)."""
-    from .builder import seg_ranges_filter
+    Same at-scale shape as the main build, for every normalizer: the run
+    kernel (``analyzer.doc_term_runs_arrow(positions=True)``, no shuffle)
+    forms sorted occurrence runs map-side, ONE exchange groups them by
+    (segment, bucket) for the merge-encode, dynamic partition overwrite
+    with stale-dir deletion.  MUST run against the same corpus state as
+    the index data (the caller's contract — rebuild_segments wires it for
+    incremental flows)."""
+    from ..analyzer import doc_term_runs_arrow
+    from .builder import index_analyzer, seg_ranges_filter
 
     spark = docs_ingested.sparkSession
     with open(f"{index_dir}/meta.json") as fh:
@@ -451,60 +155,21 @@ def build_positions(docs_ingested: DataFrame, index_dir: str,
         # nothing to (re)build — run the manifest/meta bookkeeping only
         # (restores has_positions after a data rebuild that touched no
         # sidecar dirs)
-        return _merge_write_positions(None, index_dir, meta, [])
+        return _positions_bookkeeping(None, index_dir, [])
 
     docs = docs_ingested.select("doc_id", "content")
     if segments is not None:
         docs = docs.filter(seg_ranges_filter(target, seg_size))
-    from .builder import index_analyzer
-
     norm, forms = index_analyzer(spark, index_dir, meta)
-    if norm in ("pinned", "dict"):
-        pos = doc_lemma_positions(docs, normalizer=norm, forms=forms)
-    else:
-        # stemmer family: raw-token kernel + O(vocabulary) stem join
-        pos = doc_lemma_positions_stemmed(docs, "content", norm, forms)
-    return _merge_write_positions(pos, index_dir, meta, target)
+    runs = doc_term_runs_arrow(docs, seg_size, int(meta["n_buckets"]),
+                               normalizer=norm, forms=forms, positions=True)
+    return _merge_write_positions(runs, index_dir, target)
 
 
-def _merge_write_positions(pos: DataFrame, index_dir: str, meta: dict,
-                           target: list[int]) -> dict:
-    """Shared back half of the positional build: salted partial runs ->
-    (segment, bucket) merge-encode -> dynamic overwrite -> manifest /
-    meta positional stats.  ``pos`` is the FLAT (doc_id, lemma, pos)
-    occurrence stream covering (at least) the ``target`` segments'
-    doc-id ranges — either freshly analyzed (:func:`build_positions`) or
-    the positional half of the fused single-scan build
-    (``builder.build_index(positions=True)``)."""
-    from pyspark.sql import functions as F
-
-    from .builder import hash_bucket_col
-
-    if not target:
-        return _positions_bookkeeping(None, index_dir, [])
-    spark = pos.sparkSession
-    seg_size = int(meta["seg_size"])
-    n_buckets = int(meta["n_buckets"])
-    salt = int(meta["salt"])
-    seg_col = (F.col("doc_id") / seg_size).cast("int")
-    # salted runs travel as two ALIGNED primitive arrays — one entry per
-    # OCCURRENCE (struct-field extraction after sort_array, JVM-side);
-    # sort_array over struct(doc_id, pos) yields (doc, pos) order, so the
-    # merge below is pure numpy over flat buffers (no object lists)
-    runs = (
-        pos.withColumn("segment", seg_col)
-        .filter(F.col("segment").isin(target))
-        .withColumn("_salt", F.pmod(F.col("doc_id"), F.lit(salt)).cast("int"))
-        .groupBy("segment", "lemma", "_salt")
-        .agg(F.sort_array(
-            F.collect_list(F.struct("doc_id", "pos"))).alias("run"))
-        .select(
-            "segment", "lemma",
-            hash_bucket_col(F.col("lemma"), n_buckets).alias("bucket"),
-            F.col("run.doc_id").alias("r_docs"),
-            F.col("run.pos").alias("r_pos"),
-        )
-    )
+def encode_position_runs(runs: DataFrame) -> DataFrame:
+    """Sorted occurrence runs -> encoded sidecar rows (:data:`POS_SCHEMA_DDL`)
+    in ONE exchange into coarse (segment, bucket) groups, the per-lemma
+    merge + encode pure numpy over flat buffers inside each group."""
 
     def _merge(pdf):
         import pandas as pd
@@ -513,70 +178,78 @@ def _merge_write_positions(pos: DataFrame, index_dir: str, meta: dict,
                 "nbytes", "bucket"]
         if pdf.empty:
             return pd.DataFrame([], columns=cols)
-        seg = int(pdf["segment"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        run_lens = np.fromiter((len(a) for a in pdf["r_docs"]),
-                               dtype=np.int64, count=len(pdf))
+        lens = np.fromiter((len(a) for a in pdf["docs"]), dtype=np.int64,
+                           count=len(pdf))
         codes, lemmas = pd.factorize(pdf["lemma"], sort=True)
-        rid = np.repeat(codes, run_lens)
-        docs = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in pdf["r_docs"]])
-        flat = np.concatenate(
-            [np.asarray(a, dtype=np.int64) for a in pdf["r_pos"]])
-        # runs are disjoint by salt and each is (doc, pos)-sorted, so the
-        # lexsort yields strictly increasing (doc, pos) per lemma
-        order = np.lexsort((flat, docs, rid))
-        docs, rid, flat = docs[order], rid[order], flat[order]
-        # boundaries: new (lemma, doc) pair / new lemma
-        nd = np.empty(docs.size, dtype=bool)
-        nd[0] = True
-        nd[1:] = (rid[1:] != rid[:-1]) | (docs[1:] != docs[:-1])
-        nl = np.empty(docs.size, dtype=bool)
-        nl[0] = True
-        nl[1:] = rid[1:] != rid[:-1]
-        doc_rows = np.flatnonzero(nd)          # one row per (lemma, doc)
-        counts = np.diff(np.concatenate([doc_rows, [docs.size]]))
-        lem_docs = docs[doc_rows]              # per-(lemma,doc) doc ids
-        lem_of_doc = rid[doc_rows]
-        first_doc = nl[doc_rows]               # lemma start in doc list
-        n_per_lemma = np.bincount(lem_of_doc, minlength=len(lemmas))
-        doc_off = np.concatenate([[0], np.cumsum(n_per_lemma)])
-        pos_off = doc_rows                     # flat start per (lemma,doc)
-        dgaps = _delta_encode(lem_docs, first_doc)
-        pgaps = _delta_encode(flat, nd)        # absolute at each doc start
-        out = []
-        for t in range(len(lemmas)):
-            s, e = int(doc_off[t]), int(doc_off[t + 1])
-            ps = int(pos_off[s]) if s < e else 0
-            pe = (int(pos_off[e - 1] + counts[e - 1]) if s < e else 0)
-            b_docs = varbyte_encode(dgaps[s:e]).tobytes()
-            b_counts = varbyte_encode(counts[s:e].astype(np.uint64)).tobytes()
-            b_stream = varbyte_encode(pgaps[ps:pe]).tobytes()
-            out.append({
-                "segment": seg,
-                "lemma": lemmas[t],
-                "df": int(e - s),
-                "pdocs": b_docs,
-                "pcounts": b_counts,
-                "pstream": b_stream,
-                "nbytes": len(b_docs) + len(b_counts) + len(b_stream),
-                "bucket": bucket,
-            })
-        return pd.DataFrame(out, columns=cols)
+        rid = np.repeat(codes, lens)
+        docs = np.concatenate(pdf["docs"].to_list()).astype(np.int64)
+        tfs = np.concatenate(pdf["tfs"].to_list()).astype(np.int64)
+        pos = np.concatenate(pdf["pos"].to_list()).astype(np.int64)
+        src = np.cumsum(tfs) - tfs             # entry's first pos, as shipped
+        # sort the (lemma, doc) entries: a doc lives in ONE Arrow batch, so
+        # a lemma's runs hold disjoint docs and each entry's (ascending)
+        # positions move as one block
+        order = np.lexsort((docs, rid))
+        docs, tfs, rid, src = docs[order], tfs[order], rid[order], src[order]
+        dst = np.cumsum(tfs) - tfs             # entry's first pos, merged
+        flat = pos[np.arange(int(dst[-1] + tfs[-1]))
+                   + np.repeat(src - dst, tfs)]
+        first_doc = np.ones(docs.size, dtype=bool)
+        first_doc[1:] = rid[1:] != rid[:-1]
+        first_pos = np.zeros(flat.size, dtype=bool)
+        first_pos[dst] = True
+        # one vectorized varbyte pass per stream; a lemma's bytes are the
+        # slice between its first and last value's byte ends
+        n_docs = np.bincount(rid, minlength=len(lemmas))
+        doc_cut = np.concatenate([[0], np.cumsum(n_docs)])
+        occ_cut = np.append(dst, flat.size)[doc_cut]
+
+        def _split(vals, cut):
+            buf, ends = varbyte_encode_with_ends(vals)
+            at = np.append(0, ends)[cut]
+            return [buf[i:j].tobytes() for i, j in zip(at[:-1], at[1:])], \
+                np.diff(at)
+
+        pdocs, nb_d = _split(_delta_encode(docs, first_doc), doc_cut)
+        pcounts, nb_c = _split(tfs.astype(np.uint64), doc_cut)
+        pstream, nb_p = _split(_delta_encode(flat, first_pos), occ_cut)
+        return pd.DataFrame({
+            "segment": int(pdf["segment"].iloc[0]),
+            "lemma": np.asarray(lemmas, dtype=object),
+            "df": n_docs,
+            "pdocs": pdocs,
+            "pcounts": pcounts,
+            "pstream": pstream,
+            "nbytes": nb_d + nb_c + nb_p,
+            "bucket": int(pdf["bucket"].iloc[0]),
+        }, columns=cols)
+
+    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "pos")
+            .groupBy("segment", "bucket")
+            .applyInPandas(_merge, schema=POS_SCHEMA_DDL))
+
+
+def _merge_write_positions(runs: DataFrame, index_dir: str,
+                           target: list[int]) -> dict:
+    """Shared back half of the positional build: encode the ``target``
+    segments' occurrence runs (:func:`encode_position_runs`) -> dynamic
+    overwrite, no repartition -> manifest / meta positional stats.
+    ``runs`` come from the run kernel — freshly analyzed
+    (:func:`build_positions`) or the fused single-scan build's own
+    (``builder.build_index(positions=True)``)."""
+    from pyspark.sql import functions as F
 
     for s in target:
         shutil.rmtree(f"{index_dir}/positions/segment={s}",
                       ignore_errors=True)
     (
-        runs.groupBy("segment", "bucket")
-        .applyInPandas(_merge, schema=POS_SCHEMA_DDL)
-        .repartition("segment", "bucket")
+        encode_position_runs(runs.filter(F.col("segment").isin(target)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("segment", "bucket")
         .parquet(f"{index_dir}/positions")
     )
-    return _positions_bookkeeping(spark, index_dir, target)
+    return _positions_bookkeeping(runs.sparkSession, index_dir, target)
 
 
 def _positions_bookkeeping(spark, index_dir: str, target: list[int]) -> dict:
@@ -592,7 +265,8 @@ def _positions_bookkeeping(spark, index_dir: str, target: list[int]) -> dict:
     an empty ``target`` this is a pure bookkeeping repair (no Spark job)."""
     from pyspark.sql import functions as _F
 
-    from .checkpoint import all_manifests, read_manifest, write_manifest
+    from .checkpoint import (all_manifests, read_manifest, write_json_atomic,
+                             write_manifest)
 
     stats = {
         int(r["segment"]): r
@@ -647,8 +321,7 @@ def _positions_bookkeeping(spark, index_dir: str, target: list[int]) -> dict:
         os.path.isdir(f"{index_dir}/positions/segment={s}")
         or not os.path.isdir(f"{index_dir}/data/segment={s}")
         for s in range(int(meta["n_segments"])))
-    with open(f"{index_dir}/meta.json", "w") as fh:
-        json.dump(meta, fh, indent=1)
+    write_json_atomic(f"{index_dir}/meta.json", meta, indent=1)
     return meta
 
 

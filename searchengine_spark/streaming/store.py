@@ -94,9 +94,10 @@ def store_meta(store_dir: str) -> dict | None:
 
 
 def _write_meta(store_dir: str, meta: dict) -> None:
+    from ..index.checkpoint import write_json_atomic
+
     os.makedirs(store_dir, exist_ok=True)
-    with open(f"{store_dir}/store_meta.json", "w") as fh:
-        json.dump(meta, fh, indent=1)
+    write_json_atomic(f"{store_dir}/store_meta.json", meta, indent=1)
 
 
 STORE_SCHEMA = ("repo string, path string, commit string, lang string, "

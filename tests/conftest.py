@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -15,6 +16,11 @@ N_SMOKE = 200  # FIXTURES.md t1 scale
 
 @pytest.fixture(scope="session")
 def spark():
+    # the whole suite shares one Spark JVM; with the session factory's 16g
+    # default heap it grows lazily, and on a host with less memory than
+    # that the kernel OOM-kills it mid-suite.  The test data fits a 4g
+    # heap (the benchmark runs with the same cap).
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
 

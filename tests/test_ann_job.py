@@ -97,3 +97,26 @@ def test_arg_validation(spark, monkeypatch, capsys, argv):
     monkeypatch.setattr("sys.argv", ["ann.py"] + argv + ["--cores", "8"])
     with pytest.raises(SystemExit):
         job.main()
+
+
+@pytest.mark.parametrize("vector,msg", [
+    ("0.1,abc,0.3", "finite numbers"),      # malformed component
+    ("0.1,,0.3", "finite numbers"),         # empty component
+    ("0.1,nan", "finite numbers"),          # non-finite component
+    ("0.1,0.2,0.3", "components"),          # wrong dimension
+])
+def test_vector_validated_before_spark(monkeypatch, capsys, vector, msg):
+    """A bad --vector is an argparse error raised before any Spark work:
+    the session factory must never be reached."""
+    import jobs.ann as job
+
+    def _no_spark(*a, **k):
+        raise AssertionError("Spark started before --vector validation")
+
+    monkeypatch.setattr("searchengine_spark.session.get_spark", _no_spark)
+    monkeypatch.setattr("sys.argv", ["ann.py", "--emb", EMB,
+                                     f"--vector={vector}"])
+    with pytest.raises(SystemExit) as exc:
+        job.main()
+    assert exc.value.code == 2
+    assert msg in capsys.readouterr().err

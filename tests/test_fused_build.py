@@ -3,12 +3,13 @@
 The two-pass route (build_index + build_positions) tokenizes and normalizes
 every document TWICE — at 100 TB the second full analysis pass is the
 largest avoidable cost in a positional build.  The fused route analyzes
-once (positions.doc_stats_and_positions_arrow, a union kernel emitting both
-the (tf, dl) stat rows and the positional occurrence stream) and must be
-BYTE-IDENTICAL in every artifact: postings, dictionary, sites, manifests,
-positional sidecar, meta.  These tests pin that contract, the kernel's
-value-parity with both parent kernels under every normalizer, and the
-resume/flag edge cases."""
+once (analyzer.doc_term_runs_arrow(positions=True), a kernel emitting
+sorted (segment, lemma) runs carrying both the (tf, dl) stats and the
+occurrence positions) and must be BYTE-IDENTICAL in every artifact:
+postings, dictionary, sites, manifests, positional sidecar, meta.  These
+tests pin that contract, the runs' value-parity with the flat analyzer
+contracts under every normalizer, the run invariants, the merge plans,
+and the resume/flag edge cases."""
 
 from __future__ import annotations
 
@@ -17,17 +18,25 @@ import os
 
 import pytest
 
-from searchengine_spark.analyzer import doc_term_stats_arrow
+from searchengine_spark.analyzer import (
+    analyze_positions,
+    doc_term_runs_arrow,
+    doc_term_stats_arrow,
+)
 from searchengine_spark.corpus import gen_corpus_local
-from searchengine_spark.index.builder import build_index, read_index
+from searchengine_spark.index.builder import (
+    build_index,
+    encode_index_runs,
+    hash_bucket,
+    read_index,
+)
 from searchengine_spark.index.phrase import phrase_topk
 from searchengine_spark.index.positions import (
     build_positions,
-    doc_lemma_positions,
-    doc_lemma_positions_stemmed,
-    doc_stats_and_positions_arrow,
+    encode_position_runs,
     read_positions,
 )
+from searchengine_spark.index.runs import flat_runs
 from searchengine_spark.schema import DOCS_SCHEMA
 from searchengine_spark.streaming.store import init_store, read_store
 
@@ -62,30 +71,48 @@ def _texts_df(spark):
         rows, "repo string, doc_id long, content string")
 
 
+def _explode(runs):
+    """Runs -> (flat stat rows, flat occurrence rows), asserting on the way
+    that every run is strictly ascending in doc (in (doc, pos) for its
+    occurrences) and aligned: len(docs) == len(tfs) == len(dls), len(pos)
+    == Σ tfs == sum_tf."""
+    stats, occ = [], []
+    for r in runs:
+        docs, tfs, dls = r["docs"], r["tfs"], r["dls"]
+        assert len(docs) == len(tfs) == len(dls) >= 1
+        assert all(a < b for a, b in zip(docs, docs[1:]))
+        assert r["sum_tf"] == sum(tfs)
+        stats += [(d, r["lemma"], tf, dl) for d, tf, dl in zip(docs, tfs, dls)]
+        if "pos" in r:
+            pos = r["pos"]
+            assert len(pos) == sum(tfs)
+            pairs = list(zip([d for d, n in zip(docs, tfs)
+                              for _ in range(n)], pos))
+            assert all(a < b for a, b in zip(pairs, pairs[1:]))
+            occ += [(d, r["lemma"], p) for d, p in pairs]
+    return sorted(stats), sorted(occ)
+
+
 @pytest.mark.parametrize("norm,forms", NORMALIZERS,
                          ids=[n for n, _ in NORMALIZERS])
 def test_fused_kernel_parity(spark, norm, forms):
-    """The union kernel's two halves must be value-identical to the kernels
-    they fuse: stat rows == doc_term_stats_arrow, occurrence rows ==
-    doc_lemma_positions(_stemmed) — per normalizer family."""
+    """Exploded, the fused kernel's runs must be exactly the flat rows they
+    summarize: stat rows == doc_term_stats_arrow, occurrence rows == the
+    pure-Python analyze_positions oracle — per normalizer family."""
     docs = _texts_df(spark)
-    combined = doc_stats_and_positions_arrow(
-        docs, normalizer=norm, forms=forms).collect()
-    stats = sorted((r["doc_id"], r["lemma"], r["tf"], r["dl"])
-                   for r in combined if r["pos"] is None)
-    occ = sorted((r["doc_id"], r["lemma"], r["pos"])
-                 for r in combined if r["pos"] is not None)
+    runs = [r.asDict() for r in doc_term_runs_arrow(
+        docs, 1000, 8, normalizer=norm, forms=forms,
+        positions=True).collect()]
+    stats, occ = _explode(runs)
 
     want_stats = sorted(
         (r["doc_id"], r["lemma"], r["tf"], r["dl"])
         for r in doc_term_stats_arrow(docs, normalizer=norm,
                                       forms=forms).collect())
-    if norm in ("pinned", "dict"):
-        ref_pos = doc_lemma_positions(docs, normalizer=norm, forms=forms)
-    else:
-        ref_pos = doc_lemma_positions_stemmed(docs, "content", norm, forms)
-    want_occ = sorted((r["doc_id"], r["lemma"], r["pos"])
-                      for r in ref_pos.collect())
+    want_occ = sorted(
+        (i, f, p) for i, t in enumerate(TEXTS)
+        for p, fs in enumerate(analyze_positions(t, norm, forms))
+        for f in fs)
     assert stats == want_stats
     assert occ == want_occ
     # internal consistency: tf per (doc, lemma) == its occurrence count,
@@ -94,6 +121,62 @@ def test_fused_kernel_parity(spark, norm, forms):
 
     occ_tf = Counter((d, lm) for d, lm, _ in occ)
     assert {(d, lm): tf for d, lm, tf, _ in stats} == dict(occ_tf)
+    dl = Counter(d for d, _, _ in occ)
+    assert all(dl[d] == x for d, _, _, x in stats)
+
+
+@pytest.mark.parametrize("norm,forms", NORMALIZERS,
+                         ids=[n for n, _ in NORMALIZERS])
+def test_run_former_invariants(spark, norm, forms):
+    """One batch spanning several segments: runs split at every segment
+    boundary, one run per (segment, lemma), bucket == hash_bucket(lemma);
+    the stat-only kernel and the flat-stream former (the analyzer_impl=
+    'jvm' route) yield exactly the fused kernel's stat runs."""
+    seg_size, n_buckets = 3, 4
+    docs = _texts_df(spark).coalesce(1)  # ONE partition, ONE Arrow batch
+    fused = [r.asDict() for r in doc_term_runs_arrow(
+        docs, seg_size, n_buckets, normalizer=norm, forms=forms,
+        positions=True).collect()]
+    keys = [(r["segment"], r["lemma"]) for r in fused]
+    assert len(keys) == len(set(keys))  # one run per (segment, lemma)
+    for r in fused:
+        assert r["bucket"] == hash_bucket(r["lemma"], n_buckets)
+        assert {d // seg_size for d in r["docs"]} == {r["segment"]}
+    segs_of = {}
+    for s, lm in keys:
+        segs_of.setdefault(lm, set()).add(s)
+    assert max(len(v) for v in segs_of.values()) >= 2  # a split happened
+
+    stat_cols = ("segment", "bucket", "lemma", "docs", "tfs", "dls", "sum_tf")
+
+    def _stat_runs(rows):
+        return sorted(tuple(tuple(r[c]) if isinstance(r[c], list) else r[c]
+                            for c in stat_cols) for r in rows)
+
+    plain = doc_term_runs_arrow(docs, seg_size, n_buckets, normalizer=norm,
+                                forms=forms).collect()
+    assert "pos" not in plain[0].asDict()
+    assert _stat_runs(r.asDict() for r in plain) == _stat_runs(fused)
+    flat = doc_term_stats_arrow(docs, normalizer=norm,
+                                forms=forms).coalesce(1)
+    assert (_stat_runs(r.asDict() for r in
+                       flat_runs(flat, seg_size, n_buckets).collect())
+            == _stat_runs(fused))
+
+
+def test_merge_plans_one_exchange_no_collect_list(spark):
+    """Each fused merge is ONE exchange of pre-sorted runs into its
+    (segment, bucket) encoder: no salted hash-aggregate, no collect_list,
+    no second shuffle."""
+    runs = doc_term_runs_arrow(_texts_df(spark), 4, 8,
+                               positions=True).localCheckpoint()
+    for df in (encode_index_runs(runs, 3.0, 128),
+               encode_position_runs(runs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "ObjectHashAggregate" not in plan
+        assert "HashAggregate" not in plan
+        assert "collect_list" not in plan
 
 
 def _artifact_snapshot(spark, idx):
@@ -275,3 +358,49 @@ def test_interrupted_sidecar_not_trusted(spark, tmp_path):
 
     m = _positions_bookkeeping(None, idx, [])
     assert m["has_positions"] is False
+
+
+def test_emptied_positional_index_keeps_sidecar_contract(spark, tmp_path):
+    """Deleting every document and rebuilding leaves an index with no data
+    dirs: its sidecar is vacuously complete, so has_positions must stay on.
+    Otherwise a later regrow through rebuild_segments (which keys
+    positions= on the flag) would stop maintaining the sidecar and phrase
+    serving would silently fall back to the store-verify path."""
+    from searchengine_spark.index.wand import QueryEngine
+    from searchengine_spark.streaming.incremental import rebuild_segments
+    from searchengine_spark.streaming.store import delete_keys, merge_batch
+
+    rows = gen_corpus_local(40)
+    store = str(tmp_path / "store")
+    init_store(spark.createDataFrame(rows, DOCS_SCHEMA), store)
+    idx = str(tmp_path / "idx")
+    build_index(read_store(spark, store), idx, n_segments=2, salt=4,
+                n_buckets=4, resume=False, positions=True)
+    with open(f"{idx}/meta.json") as fh:
+        seg_size = json.load(fh)["seg_size"]
+
+    gone = delete_keys(read_store(spark, store).select("repo", "path"),
+                       store, seg_size=seg_size)
+    assert gone["n_removed"] == 40
+    rebuild_segments(read_store(spark, store), idx, gone["dirty_segments"])
+    with open(f"{idx}/meta.json") as fh:
+        assert json.load(fh)["has_positions"] is True
+
+    grown = merge_batch(spark.createDataFrame(rows, DOCS_SCHEMA), store,
+                        seg_size=seg_size)
+    docs = read_store(spark, store).localCheckpoint()
+    rebuild_segments(docs, idx, grown["dirty_segments"])
+    with open(f"{idx}/meta.json") as fh:
+        meta = json.load(fh)
+    assert meta["has_positions"] is True
+    data_segs = sorted(os.listdir(f"{idx}/data"))
+    assert data_segs and data_segs == sorted(os.listdir(f"{idx}/positions"))
+
+    fresh = str(tmp_path / "fresh")
+    build_index(docs, fresh, n_segments=2, salt=4, n_buckets=4,
+                resume=False, positions=True)
+    first = analyze_positions(rows[0][4])  # a phrase the corpus holds
+    phrase = f"{first[0][0]} {first[1][0]}"
+    got = QueryEngine(spark, idx).phrase_rows(phrase, k=10)
+    assert got  # served from the maintained sidecar
+    assert got == QueryEngine(spark, fresh).phrase_rows(phrase, k=10)

@@ -540,3 +540,32 @@ def test_resumed_build_sha_check_scoped_to_rebuilt_ranges(spark, docs, tmp_path)
     os.unlink(f"{out}/manifests/segment=0.json")  # dirty OTHER segment
     meta3 = build_index(bad, out, resume=True)    # bad row is in seg 1: ok
     assert meta3["n_docs"] == meta["n_docs"]
+
+
+def test_meta_write_is_atomic(index_dir, monkeypatch):
+    """Every meta.json / manifest writer publishes through one tmp +
+    os.replace helper: a dump that raises mid-write leaves the previous
+    meta.json loadable and unchanged, with no tmp file behind."""
+    import json
+    import os
+
+    from searchengine_spark.index import checkpoint
+    from searchengine_spark.index.positions import _positions_bookkeeping
+
+    with open(f"{index_dir}/meta.json") as fh:
+        before = fh.read()
+    real_dump = json.dump
+
+    def _torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj, **kw)[:20])  # half a document, then die
+        raise OSError("disk full")
+
+    monkeypatch.setattr(checkpoint.json, "dump", _torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        _positions_bookkeeping(None, index_dir, [])
+    monkeypatch.setattr(checkpoint.json, "dump", real_dump)
+
+    with open(f"{index_dir}/meta.json") as fh:
+        assert fh.read() == before
+    assert json.loads(before)["n_docs"] > 0
+    assert not os.path.exists(f"{index_dir}/meta.json.tmp")
