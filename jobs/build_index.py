@@ -35,10 +35,6 @@ def main() -> None:
                          "bucket))")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--block-size", type=int, default=128)
-    # arrow is the BASELINE.json input_hint shape (vectorized pandas/Arrow
-    # UDFs) and the faster path measured at every core count; jvm is the
-    # pure-Catalyst twin (tested equal)
-    ap.add_argument("--analyzer", choices=["jvm", "arrow"], default="arrow")
     ap.add_argument("--store", default=None,
                     help="also init the kb-partitioned docs store here and "
                          "build the index FROM it (ids guaranteed "
@@ -115,24 +111,14 @@ def main() -> None:
 
     from searchengine_spark.index.builder import build_index
 
-    # --positions rides the SAME corpus scan as the index data (fused union
-    # kernel) when the arrow analyzer is in play — the jvm analyzer keeps
-    # the standalone second pass
-    fused = args.positions and args.analyzer == "arrow"
+    # --positions rides the SAME corpus scan as the index data (fused
+    # single-scan build)
     meta = build_index(
         docs, args.out, n_segments=args.segments, salt=args.salt,
         n_buckets=args.buckets, block_size=args.block_size,
-        analyzer_impl=args.analyzer, resume=not args.no_resume,
-        normalizer=normalizer, forms=forms, positions=fused,
+        resume=not args.no_resume, normalizer=normalizer, forms=forms,
+        positions=args.positions,
     )
-    if args.positions and not fused:
-        from searchengine_spark.index.positions import build_positions
-
-        t_pos = time.perf_counter()
-        build_positions(docs, args.out)
-        meta.setdefault("timings", {})["positions_s"] = round(
-            time.perf_counter() - t_pos, 2)
-        meta["has_positions"] = True
     dt = time.perf_counter() - t0
     meta.setdefault("timings", {})["ingest_s"] = round(ingest_s, 2)
     print(json.dumps({

@@ -30,7 +30,9 @@ Two executions of the SAME pinned definition:
 
 - ``tokenize_jvm``    pure Catalyst expressions (regexp_replace / split /
   explode / broadcast-join for the exception table).  Whole-stage codegen,
-  zero Python in the hot path.  This is the default build path.
+  zero Python in the hot path.  The logical index (``operators/tf_df``)
+  and the gate's logical path run on it; the physical build runs the
+  Arrow run kernel ``doc_term_runs_arrow``.
 - ``tokenize_arrow``  ``mapInPandas`` over Arrow batches, vectorized pandas
   string ops (no per-row Python).  The shape mandated by BASELINE.json
   ``input_hint``; also the extension point where a real morphology /
@@ -681,20 +683,33 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
                         text_col: str = "content",
                         normalizer: str = "pinned",
                         forms: dict[str, tuple[str, ...]] | None = None,
-                        positions: bool = False) -> DataFrame:
+                        positions: bool = False, stats=None) -> DataFrame:
     """THE build's analysis kernel: (doc_id, text) -> sorted posting runs,
     one row per (segment, lemma) per Arrow batch (``index/runs.py``
     schema), with ZERO shuffle.  The batch is analyzed once
     (:func:`_analyze_arrow_batch`), then one numpy lexsort forms the runs
     in the same Python pass — tf is a lemma's occurrence count per doc,
     dl the doc's occurrence total (multi-lemma expansions count once per
-    form), ``sum_tf`` the run's Σ tf.  ``positions=True`` adds each run's
-    occurrence positions, so ONE scan feeds both the posting and the
-    positional merge (the fused single-scan build)."""
-    from .index.runs import POS_RUN_DDL, STAT_RUN_DDL, form_runs
+    form).  ``positions=True`` adds each run's occurrence positions, so
+    ONE scan feeds both the posting and the positional merge (the fused
+    single-scan build).
+
+    ``stats`` (an accumulator over :class:`session.MergeDicts` with
+    ``xor=("sha_xor",)``) also receives every batch's per-segment doc
+    statistics (``runs.doc_stats``: docs, sha256 lineage XOR, Σ dl, repo
+    id runs — zero-lemma docs included); ``docs`` then needs ``repo``
+    and ``sha256`` too.  Read it after an action that consumes the runs
+    in its result stage (``localCheckpoint``)."""
+    from .index.runs import (POS_RUN_DDL, SHA_PREFIX, STAT_RUN_DDL,
+                             doc_stats, form_runs)
 
     table, stem_fn = _normalizer_fns(normalizer, forms)
-    narrowed = docs.select("doc_id", text_col)
+    cols = ["doc_id", text_col]
+    if stats is not None:
+        from pyspark.sql import functions as F
+
+        cols += ["repo", F.expr(SHA_PREFIX)]
+    narrowed = docs.select(*cols)
 
     def _batches(it):
         import numpy as np
@@ -706,15 +721,18 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
         for batch in it:
             if batch.num_rows == 0:
                 continue
+            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             got = _analyze_arrow_batch(batch.column(1), table, stem_fn,
                                        stop_set, exc_set, pa, pc)
+            par = got[0] if got is not None else np.empty(0, dtype=np.int64)
+            dl = np.bincount(par, minlength=batch.num_rows)
+            if stats is not None:
+                stats.add(doc_stats(ids, dl, batch.column(2), batch.column(3),
+                                    seg_size))
             if got is None:
                 continue
-            par, lemmas, pos = got
-            ids = batch.column(0).to_numpy(zero_copy_only=False)
-            dl = np.bincount(par, minlength=batch.num_rows)
-            yield form_runs(ids.astype(np.int64)[par], lemmas, dl[par],
-                            seg_size, n_buckets,
+            _, lemmas, pos = got
+            yield form_runs(ids[par], lemmas, dl[par], seg_size, n_buckets,
                             pos=pos if positions else None)
 
     return narrowed.mapInArrow(

@@ -28,6 +28,7 @@ from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from .schema import DOCS_SCHEMA
+from .session import MergeDicts
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -180,18 +181,6 @@ def corpus_df(spark: SparkSession, n_docs: int, seed: int = SEED,
 # --- ingest: deterministic doc_id + sha256 ----------------------------------
 
 
-class _PartCounts(object):
-    """AccumulatorParam for {partition_id: row_count} (lazy-imported base)."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = a.get(k, 0) + v
-        return a
-
-
 def ingest(docs: DataFrame, key_partitions: int | None = None) -> DataFrame:
     """Add ``doc_id`` (global rank of (repo, path, commit)) and ``sha256``.
 
@@ -231,7 +220,7 @@ def ingest(docs: DataFrame, key_partitions: int | None = None) -> DataFrame:
         f"{f.name} {f.dataType.simpleString()}" for f in ranged.schema.fields
     )
 
-    counts_acc = sc.accumulator({}, _PartCounts())
+    counts_acc = sc.accumulator({}, MergeDicts())
 
     def _position(batches):
         import pyarrow as pa

@@ -4,10 +4,11 @@ SURVEY.md §3.2 (build lifecycle) + §4 items 1/3/4/5.  Pipeline (ONE pass
 over all segments that still need building):
 
   docs (ingested: doc_id, sha256)                       [narrow scan]
+    -> count / max(doc_id) / sha256 check       [one agg; aborts on a bad row]
     -> fused Arrow analyzer + run former: each batch is tokenized,
        normalized and lexsorted into one sorted run per (segment, lemma)
-       — aligned doc/tf/dl lists, Σtf, hash bucket — in ONE mapInArrow;
-       a doc's tokens never leave its partition   [narrow, localCheckpoint]
+       — aligned doc/tf/dl lists, hash bucket — in ONE mapInArrow; a
+       doc's tokens never leave its partition    [narrow, localCheckpoint]
     -> merge: groupBy(segment, BUCKET), per-lemma merge of the lemma's
        runs in numpy, delta+varbyte encode + block-max directory
                                                         [the ONE shuffle]
@@ -15,9 +16,12 @@ over all segments that still need building):
        bucket(lemma)), dynamic partition overwrite (already-done segments
        untouched, no repartition)                [partition-pruned reads]
 
-(``analyzer_impl='jvm'`` swaps the first stage for the pure-Catalyst
-tokenizer + two hash-agg shuffles, whose flat rows go through the same
-run former — same output, tested equal.)
+Build statistics ride those jobs instead of re-reading what they just
+computed: the analysis kernel tallies each segment's docs, sha256 lineage,
+Σ dl and repo id runs, and the merge encoders tally what they write, into
+accumulators (``session.MergeDicts``) read back after each job.  avgdl,
+the manifests, the sites sidecar and the positional stats come from those
+tallies on the driver — no aggregation over the docs or the written files.
 
 What bounds Zipf skew (SURVEY.md §4 item 3): a plain
 ``groupBy(lemma).collect_list`` sends the hottest term's entire posting
@@ -46,12 +50,13 @@ from __future__ import annotations
 import json
 import math
 import os
+import time as _time
 from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.tf_df import term_frequencies
+from .runs import merge_sites
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -140,14 +145,20 @@ def hash_bucket(lemma: str, n_buckets: int) -> int:
     return int.from_bytes(hashlib.md5(lemma.encode()).digest()[:4], "big") % n_buckets
 
 
-def encode_index_runs(runs: DataFrame, avgdl: float,
-                      block_size: int) -> DataFrame:
+def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
+                      stats=None) -> DataFrame:
     """Sorted runs -> encoded posting rows (:data:`INDEX_OUT_SCHEMA`), in
     ONE exchange: runs group by (segment, BUCKET) — n_segments x n_buckets
     well-sized groups (grouping by (segment, lemma) would mean one
     applyInPandas invocation per term, measured to dominate the build) —
     and the per-lemma merge + delta/varbyte encode + block-max directory
-    runs vectorized inside each group."""
+    runs vectorized inside each group.
+
+    ``stats`` (an accumulator over :class:`session.MergeDicts`) receives
+    each segment's ``{"terms", "postings", "bytes"}`` — its manifest's
+    written counts — from the groups as they encode.  The encoder runs in
+    the result stage of the job that writes its output, so the counts are
+    complete once that write returns."""
 
     def _merge(pdf):
         import numpy as np
@@ -189,6 +200,11 @@ def encode_index_runs(runs: DataFrame, avgdl: float,
             }
             for t, enc in enumerate(encs)
         ]
+        if stats is not None:
+            stats.add({seg: {
+                "terms": len(encs), "postings": int(counts.sum()),
+                "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
+                             for e in encs)}})
         return pd.DataFrame(out, columns=cols)
 
     return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls")
@@ -232,7 +248,6 @@ def build_index(
     salt: int = 8,
     n_buckets: int = 16,
     block_size: int = 128,
-    analyzer_impl: str = "arrow",
     resume: bool = True,
     fixed_avgdl: float | None = None,
     normalizer: str = "pinned",
@@ -289,13 +304,6 @@ def build_index(
         raise ValueError(
             "build_index supports normalizer in ('pinned', 'dict', "
             f"'dict_porter', 'porter', 'stem'), got {normalizer!r}")
-    if normalizer == "dict" and analyzer_impl != "arrow":
-        raise ValueError("normalizer='dict' requires analyzer_impl='arrow'")
-    if positions and analyzer_impl != "arrow":
-        raise ValueError(
-            "positions=True (fused single-scan sidecar) requires "
-            "analyzer_impl='arrow'; build with arrow or run "
-            "build_positions separately")
     if normalizer in ("dict", "dict_porter") and forms is None:
         raise ValueError(f"normalizer={normalizer!r} needs a forms mapping")
     if normalizer in ("dict", "dict_porter") and old_meta is None:
@@ -327,7 +335,10 @@ def build_index(
     # verified when their segment was built, and any content change flows
     # through the dirty-segment discipline (manifest dropped), so a 1-doc
     # micro-batch pays O(batch) hashing, not O(corpus).  The count/max
-    # still scan every row (they are global statistics regardless).
+    # still scan every row (they are global statistics regardless), and
+    # the scan must run before anything else: seg_size needs max(doc_id),
+    # and a bad sha aborts before any write.
+    _t = _time.perf_counter()
     _bad = (F.sha2(F.col("content"), 256) != F.col("sha256")).cast("int")
     if resume and old_meta is not None:
         _ss = int(old_meta["seg_size"])
@@ -347,6 +358,7 @@ def build_index(
             f"sha256 per-row invariant violated on {_c['bad_sha']} rows")
     n_docs = int(_c["n"])
     id_span = (int(_c["mx"]) + 1) if _c["mx"] is not None else 0
+    scan_s = round(_time.perf_counter() - _t, 2)
     if old_meta is not None:
         seg_size = int(old_meta["seg_size"])
         salt = int(old_meta["salt"])
@@ -355,7 +367,6 @@ def build_index(
         n_segments = max(1, math.ceil(id_span / seg_size))
     else:
         seg_size = max(1, math.ceil(id_span / n_segments))
-    seg_col = (F.col("doc_id") / seg_size).cast("int")
 
     # corpus shrank: doc ranges beyond the new segment count are stale
     # everywhere (data, dict, manifest)
@@ -388,9 +399,7 @@ def build_index(
             return build_positions(docs_ingested, out_dir)
         return old_meta
 
-    import time as _time
-
-    timings: dict[str, float] = {}
+    timings: dict[str, float] = {"scan_s": scan_s}
     _t = _time.perf_counter()
 
     missing = [s for s in range(n_segments) if not (resume and segment_done(out_dir, s))]
@@ -404,52 +413,46 @@ def build_index(
     if avgdl is None and old_meta is not None and 0 < len(missing) < n_segments:
         avgdl = float(old_meta["avgdl"])
 
-    analyzed = narrow.select("repo", "doc_id", "content")
+    analyzed = narrow
     if avgdl is not None and len(missing) < n_segments:
         # doc_id-range form of seg.isin(missing): pushed to the parquet scan
         # (row-group pruning against doc_id-sorted store files)
         analyzed = analyzed.filter(seg_ranges_filter(missing, seg_size))
 
-    if analyzer_impl == "arrow":
-        # fused Arrow analyzer: each batch is tokenized, normalized and
-        # formed into sorted (segment, lemma) runs in ONE Python pass — a
-        # doc's tokens never leave its partition, and the first shuffle of
-        # the whole build is the (segment, bucket) merge itself.  EVERY
-        # normalizer routes here (the stemmer family stems the batch's
-        # UNIQUE tokens inside the same kernel).  positions=True adds the
-        # runs' occurrence positions: ONE analysis pass feeds both the
-        # posting and the positional merge (the two-pass route tokenizes
-        # every document twice).
-        from ..analyzer import doc_term_runs_arrow
+    # fused Arrow analyzer: each batch is tokenized, normalized and formed
+    # into sorted (segment, lemma) runs in ONE Python pass — a doc's tokens
+    # never leave its partition, and the first shuffle of the whole build
+    # is the (segment, bucket) merge itself.  EVERY normalizer routes here
+    # (the stemmer family stems the batch's UNIQUE tokens inside the same
+    # kernel).  positions=True adds the runs' occurrence positions: ONE
+    # analysis pass feeds both the posting and the positional merge.  The
+    # same pass tallies each segment's docs, sha lineage, Σ dl and repo id
+    # runs into `stats` — the build's statistics never re-read the corpus.
+    from ..analyzer import doc_term_runs_arrow
+    from ..session import MergeDicts
 
-        runs = doc_term_runs_arrow(analyzed, seg_size, n_buckets,
-                                   normalizer=normalizer, forms=forms,
-                                   positions=positions)
-    else:
-        from .runs import flat_runs
-
-        tf = term_frequencies(analyzed, impl=analyzer_impl,
-                              normalizer=normalizer, forms=forms)
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        runs = flat_runs(tf.join(dl, "doc_id"), seg_size, n_buckets)
-    # MATERIALIZE the runs once (localCheckpoint, not .cache()): the avgdl
-    # action and every merge consume them, and the SQL cache's
-    # compressed-columnar form measured ~3x slower to re-scan into Arrow
-    # batches than checkpointed rows on this host.  At cluster scale this
-    # materialization is a staging write to durable storage.
+    stats = spark.sparkContext.accumulator({}, MergeDicts(xor=("sha_xor",)))
+    runs = doc_term_runs_arrow(analyzed, seg_size, n_buckets,
+                               normalizer=normalizer, forms=forms,
+                               positions=positions, stats=stats)
+    # MATERIALIZE the runs once (localCheckpoint, not .cache()): every
+    # merge consumes them, and the SQL cache's compressed-columnar form
+    # measured ~3x slower to re-scan into Arrow batches than checkpointed
+    # rows on this host.  The checkpoint job's result stage runs the
+    # kernel, so `stats` holds each analyzed doc exactly once afterwards.
+    # At cluster scale this materialization is a staging write to durable
+    # storage.
     runs = runs.localCheckpoint()
     timings["analyze_plan_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
 
     if avgdl is None:
-        # avgdl over ALL docs (zero-lemma docs included) — matches the oracle.
-        # Σ tf over every (doc, lemma) == Σ dl over docs, and each run
-        # carries its Σ tf: a plain sum of one long column (map-side partial
-        # aggregation, no lambda over the run arrays).
-        total_dl = runs.agg(F.sum("sum_tf")).collect()[0][0] or 0
+        # avgdl over ALL docs (zero-lemma docs included) — matches the
+        # oracle.  The analysis above was not range-filtered on this path.
+        total_dl = sum(st["dl"] for st in stats.value.values())
         avgdl = float(total_dl) / n_docs if n_docs else 1.0
-    timings["avgdl_s"] = round(__import__("time").perf_counter() - _t, 2)
-    _t = __import__("time").perf_counter()
+    timings["avgdl_s"] = round(_time.perf_counter() - _t, 2)
+    _t = _time.perf_counter()
 
     meta = {
         "n_docs": n_docs,
@@ -517,19 +520,21 @@ def build_index(
 
     # ONE exchange: the runs go straight into their (segment, bucket) merge
     # group, and the merge output is written as it leaves the group (each
-    # group lands in its partition dir from one task — no repartition)
+    # group lands in its partition dir from one task — no repartition).
+    # The encoder adds each segment's written counts to `stats`.
     (
-        encode_index_runs(runs, avgdl, block_size)
+        encode_index_runs(runs, avgdl, block_size, stats)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")  # done segments untouched
         .partitionBy("segment", "bucket")
         .parquet(f"{out_dir}/data")
     )
-    timings["merge_write_s"] = round(__import__("time").perf_counter() - _t, 2)
-    _t = __import__("time").perf_counter()
+    timings["merge_write_s"] = round(_time.perf_counter() - _t, 2)
+    _t = _time.perf_counter()
+    seg_stats = stats.value
 
     # An emptied corpus (store-level deletes removed everything) writes no
-    # partitions at all: skip the read-backs that would fail inference
+    # partitions at all: skip the read-back that would find no files
     import glob as _glob
 
     has_data = bool(_glob.glob(f"{out_dir}/data/segment=*"))
@@ -559,8 +564,8 @@ def build_index(
             .partitionBy("segment", "bucket")
             .parquet(f"{out_dir}/dict")
         )
-    timings["dict_s"] = round(__import__("time").perf_counter() - _t, 2)
-    _t = __import__("time").perf_counter()
+    timings["dict_s"] = round(_time.perf_counter() - _t, 2)
+    _t = _time.perf_counter()
 
     # ---- sites sidecar: per-segment (repo, lo, hi) doc_id islands ---------
     # Because ingest ranks doc_ids by (repo, path, commit), a repo's docs are
@@ -568,76 +573,42 @@ def build_index(
     # repo; each streaming append adds at most one tail run per repo per
     # batch) — so the reference's `site=` search filter becomes an interval
     # mask on candidate doc_ids at query time (wand.py), with NO join
-    # against a docs table.  Gaps-and-islands per (segment, repo):
-    # doc_id - row_number is constant exactly on a contiguous run.  Same
-    # O(rebuilt segments) dynamic-overwrite discipline as data/dict.
-    from pyspark.sql import Window as _W
+    # against a docs table.  The kernel tallied each batch's runs of
+    # consecutive ids per (segment, repo); rejoining the runs that touch
+    # across batches gives the islands.  The table is O(repos + append
+    # batches) rows, written from the driver as ONE Arrow-backed local
+    # frame under the same O(rebuilt segments) dynamic-overwrite discipline
+    # as data/dict.
+    sites = [(s, repo, lo, hi) for s in missing for repo, lo, hi
+             in merge_sites(seg_stats.get(s, {}).get("sites", []))]
+    if sites:
+        import pandas as pd
 
-    sites = (
-        narrow.filter(seg_ranges_filter(missing, seg_size))
-        .withColumn("segment", seg_col)
-        .select("segment", "repo", "doc_id")
-        .withColumn(
-            "island",
-            F.col("doc_id") - F.row_number().over(
-                _W.partitionBy("segment", "repo").orderBy("doc_id")),
+        (
+            spark.createDataFrame(
+                pd.DataFrame(sites, columns=SITES_SCHEMA.names), SITES_SCHEMA)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("segment")
+            .parquet(f"{out_dir}/sites")
         )
-        .groupBy("segment", "repo", "island")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .select("segment", "repo", "lo", "hi")
-    )
-    (
-        sites.repartition("segment")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("segment")
-        .parquet(f"{out_dir}/sites")
-    )
-    timings["sites_s"] = round(__import__("time").perf_counter() - _t, 2)
-    _t = __import__("time").perf_counter()
+    timings["sites_s"] = round(_time.perf_counter() - _t, 2)
+    _t = _time.perf_counter()
 
-    # ---- manifests: one grouped agg per side, single job each -------------
-    lineage = {
-        r["segment"]: r
-        for r in narrow.filter(seg_ranges_filter(missing, seg_size))
-        .withColumn("segment", seg_col)
-        .groupBy("segment")
-        .agg(
-            F.count("*").alias("docs"),
-            F.expr(
-                "bit_xor(cast(conv(substring(sha256, 1, 15), 16, 10) as bigint))"
-            ).alias("sha_xor"),
-        )
-        .collect()
-    }
-    written = {
-        r["segment"]: r
-        for r in (
-            spark.read.parquet(f"{out_dir}/data")
-            .filter(F.col("segment").isin(missing))
-            .groupBy("segment")
-            .agg(
-                F.count("*").alias("terms"), F.sum("df").alias("postings"),
-                F.sum(
-                    F.length("postings") + F.length("tfs") + F.length("dls")
-                ).alias("bytes"),
-            )
-            .collect()
-        )
-    } if has_data else {}
+    # ---- manifests: the kernel's doc tallies + the encoder's written counts
     for seg in missing:
-        lin = lineage.get(seg)
-        wrt = written.get(seg)
+        st = seg_stats.get(seg, {})
         write_manifest(
             out_dir,
             seg,
             {
                 "segment": seg,
-                "doc_count": int(lin["docs"]) if lin else 0,
-                "term_count": int(wrt["terms"]) if wrt else 0,
-                "posting_count": int(wrt["postings"]) if wrt else 0,
-                "posting_bytes": int(wrt["bytes"]) if wrt else 0,
-                "input_sha_xor": int(lin["sha_xor"]) if lin and lin["sha_xor"] is not None else 0,
+                "doc_count": st.get("docs", 0),
+                "term_count": st.get("terms", 0),
+                "posting_count": st.get("postings", 0),
+                "posting_bytes": st.get("bytes", 0),
+                "input_sha_xor": st.get("sha_xor", 0),
                 "status": "done",
             },
         )
@@ -745,10 +716,6 @@ def read_site_ranges(spark: SparkSession, out_dir: str,
         .select("lo", "hi")
         .collect()
     )
-    merged: list[tuple[int, int]] = []
-    for lo, hi in sorted((int(r["lo"]), int(r["hi"])) for r in rows):
-        if merged and lo == merged[-1][1] + 1:  # runs split only by the
-            merged[-1] = (merged[-1][0], hi)    # segment boundary: rejoin
-        else:
-            merged.append((lo, hi))
-    return merged
+    # runs split only by a segment boundary rejoin
+    return [(lo, hi) for _, lo, hi in
+            merge_sites((site, int(r["lo"]), int(r["hi"])) for r in rows)]

@@ -67,10 +67,8 @@ if TYPE_CHECKING:
 
 POS_SCHEMA_DDL = ("segment int, lemma string, df long, pdocs binary, "
                   "pcounts binary, pstream binary, nbytes long, bucket int")
-# nbytes = len(pdocs)+len(pcounts)+len(pstream), persisted so the build's
-# per-segment stats aggregation is a column-pruned scan of two int columns
-# (never re-reading the binary streams); sidecars written before the column
-# existed read it as null and simply don't contribute stats.
+# nbytes = len(pdocs)+len(pcounts)+len(pstream): a row's positional bytes
+# without touching the binary streams
 
 
 def has_positions(index_dir: str) -> bool:
@@ -166,10 +164,14 @@ def build_positions(docs_ingested: DataFrame, index_dir: str,
     return _merge_write_positions(runs, index_dir, target)
 
 
-def encode_position_runs(runs: DataFrame) -> DataFrame:
+def encode_position_runs(runs: DataFrame, stats=None) -> DataFrame:
     """Sorted occurrence runs -> encoded sidecar rows (:data:`POS_SCHEMA_DDL`)
     in ONE exchange into coarse (segment, bucket) groups, the per-lemma
-    merge + encode pure numpy over flat buffers inside each group."""
+    merge + encode pure numpy over flat buffers inside each group.
+
+    ``stats`` (an accumulator over :class:`session.MergeDicts`) receives
+    each segment's ``{"pos_postings", "pos_bytes"}`` (Σ df, Σ nbytes);
+    complete once the write of this output returns (result stage)."""
 
     def _merge(pdf):
         import pandas as pd
@@ -213,8 +215,12 @@ def encode_position_runs(runs: DataFrame) -> DataFrame:
         pdocs, nb_d = _split(_delta_encode(docs, first_doc), doc_cut)
         pcounts, nb_c = _split(tfs.astype(np.uint64), doc_cut)
         pstream, nb_p = _split(_delta_encode(flat, first_pos), occ_cut)
+        seg = int(pdf["segment"].iloc[0])
+        if stats is not None:
+            stats.add({seg: {"pos_postings": int(n_docs.sum()),
+                             "pos_bytes": int((nb_d + nb_c + nb_p).sum())}})
         return pd.DataFrame({
-            "segment": int(pdf["segment"].iloc[0]),
+            "segment": seg,
             "lemma": np.asarray(lemmas, dtype=object),
             "df": n_docs,
             "pdocs": pdocs,
@@ -233,58 +239,52 @@ def _merge_write_positions(runs: DataFrame, index_dir: str,
                            target: list[int]) -> dict:
     """Shared back half of the positional build: encode the ``target``
     segments' occurrence runs (:func:`encode_position_runs`) -> dynamic
-    overwrite, no repartition -> manifest / meta positional stats.
-    ``runs`` come from the run kernel — freshly analyzed
-    (:func:`build_positions`) or the fused single-scan build's own
-    (``builder.build_index(positions=True)``)."""
+    overwrite, no repartition -> manifest / meta positional stats, counted
+    by the encoder as it writes.  ``runs`` come from the run kernel —
+    freshly analyzed (:func:`build_positions`) or the fused single-scan
+    build's own (``builder.build_index(positions=True)``)."""
     from pyspark.sql import functions as F
+
+    from ..session import MergeDicts
 
     for s in target:
         shutil.rmtree(f"{index_dir}/positions/segment={s}",
                       ignore_errors=True)
+    stats = runs.sparkSession.sparkContext.accumulator({}, MergeDicts())
     (
-        encode_position_runs(runs.filter(F.col("segment").isin(target)))
+        encode_position_runs(runs.filter(F.col("segment").isin(target)),
+                             stats)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("segment", "bucket")
         .parquet(f"{index_dir}/positions")
     )
-    return _positions_bookkeeping(runs.sparkSession, index_dir, target)
+    return _positions_bookkeeping(stats.value, index_dir, target)
 
 
-def _positions_bookkeeping(spark, index_dir: str, target: list[int]) -> dict:
+def _positions_bookkeeping(stats: dict | None, index_dir: str,
+                           target: list[int]) -> dict:
     """Positional stats + ``has_positions`` flag maintenance.
 
     Per-segment positional stats ride the INDEX manifests (same lifecycle:
     a data rebuild rewrites its segments' manifests without pos keys, and
     the sidecar refresh re-adds them) so the serving broker can estimate a
     form's positional bytes from its dictionary df BEFORE any collect — the
-    same estimate-before-fetch discipline as BM25 warm serving.  The agg
-    scans only the TARGET segments (partition pruning) and only two int
-    columns (column pruning; nbytes was persisted for exactly this).  With
-    an empty ``target`` this is a pure bookkeeping repair (no Spark job)."""
-    from pyspark.sql import functions as _F
-
+    same estimate-before-fetch discipline as BM25 warm serving.  ``stats``
+    holds the ``target`` segments' counts as :func:`encode_position_runs`
+    tallied them while writing (a target segment without an entry wrote
+    no rows); no Spark job runs here.  With an empty ``target`` this is a
+    pure bookkeeping repair."""
     from .checkpoint import (all_manifests, read_manifest, write_json_atomic,
                              write_manifest)
 
-    stats = {
-        int(r["segment"]): r
-        for r in spark.read.schema(POS_SCHEMA_DDL)
-        .parquet(f"{index_dir}/positions")
-        .filter(_F.col("segment").isin(target))
-        .groupBy("segment")
-        .agg(_F.sum("df").alias("p"), _F.sum("nbytes").alias("b"))
-        .collect()
-    } if target else {}
     for s in target:
         m = read_manifest(index_dir, s)
         if m is None:
             continue
-        r = stats.get(s)
-        m["pos_posting_count"] = int(r["p"]) if r else 0
-        m["pos_posting_bytes"] = (
-            int(r["b"]) if r is not None and r["b"] is not None else 0)
+        st = (stats or {}).get(s, {})
+        m["pos_posting_count"] = st.get("pos_postings", 0)
+        m["pos_posting_bytes"] = st.get("pos_bytes", 0)
         write_manifest(index_dir, s, m)
     tot_b = tot_p = 0
     complete = True  # every done manifest contributed positional stats?

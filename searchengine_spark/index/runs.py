@@ -9,7 +9,6 @@ by doc_id, shipped as aligned primitive lists::
     dls   array<bigint>   per-doc length (Σ tf over the doc's lemmas)
     pos   array<int>      occurrence positions, (doc, pos)-ascending, aligned
                           with ``repeat(docs, tfs)`` — positional kernels only
-    sum_tf bigint         Σ tfs (avgdl is a plain sum of this column)
 
 The analysis kernel (``analyzer.doc_term_runs_arrow``) forms runs in the
 same Python pass that tokenized the batch — one numpy lexsort per batch —
@@ -18,38 +17,36 @@ so each merge-encode is ONE exchange of pre-sorted runs into its
 computed.  Skew is bounded twice: a run is at most one Arrow batch of
 postings (``spark.sql.execution.arrow.maxRecordsPerBatch`` docs), and a
 hot term's runs spread with every other lemma of its bucket over
-``n_segments x n_buckets`` groups.  Flat ``(doc_id, lemma, tf, dl)``
-streams that do not come from the kernel (``analyzer_impl='jvm'``) go
-through the same former as a ``mapInArrow`` (:func:`flat_runs`).
+``n_segments x n_buckets`` groups.
+
+The same pass also summarizes the batch's DOCS per segment
+(:func:`doc_stats`): doc count, the sha256 lineage XOR, Σ dl and the
+repo id runs.  The build reads them from an accumulator instead of
+querying the corpus again for avgdl, manifests and the sites sidecar
+(:func:`merge_sites` rejoins the runs that batches split).
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
 import numpy as np
 
-if TYPE_CHECKING:
-    from pyspark.sql import DataFrame
-
+# the manifest's ``input_sha_xor`` lineage is the XOR of this per-doc value
+# (the first 60 bits of the hex sha256), evaluated by the JVM
+SHA_PREFIX = "cast(conv(substring(sha256, 1, 15), 16, 10) as bigint)"
 STAT_RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
-                "tfs array<int>, dls array<bigint>, sum_tf bigint")
-POS_RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
-               "tfs array<int>, dls array<bigint>, pos array<int>, "
-               "sum_tf bigint")
+                "tfs array<int>, dls array<bigint>")
+POS_RUN_DDL = STAT_RUN_DDL + ", pos array<int>"
 
 
 def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
-              n_buckets: int, tf: np.ndarray | None = None,
-              pos: np.ndarray | None = None):
-    """Flat rows of one batch -> one run per ``(segment, lemma)``
+              n_buckets: int, pos: np.ndarray | None = None):
+    """Lemma occurrences of one batch -> one run per ``(segment, lemma)``
     (a ``pyarrow.RecordBatch`` in :data:`STAT_RUN_DDL` /
     :data:`POS_RUN_DDL` order).
 
-    ``doc``/``dl`` are int64 per row and ``lemma`` an Arrow string array.
-    Rows are OCCURRENCES (``tf`` None: a run's tf is the row count per
-    (doc, lemma); ``pos`` optional) or STAT rows (``tf`` given, one row per
-    (doc, lemma)).  ``pos`` requires occurrence rows."""
+    ``doc``/``dl`` are int64 per occurrence, ``lemma`` an Arrow string
+    array and ``pos`` (optional) the occurrence positions; a run's tf is
+    its occurrence count per doc."""
     import pyarrow as pa
 
     from .builder import hash_bucket
@@ -67,8 +64,7 @@ def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
     new_doc = new_run.copy()
     new_doc[1:] |= d[1:] != d[:-1]
     doc_at = np.flatnonzero(new_doc)
-    tfs = (np.diff(np.append(doc_at, n)) if tf is None
-           else tf[order][doc_at]).astype(np.int32)
+    tfs = np.diff(np.append(doc_at, n)).astype(np.int32)
     run_at = np.flatnonzero(new_run)
     run_doc_at = np.flatnonzero(new_run[doc_at])
     doc_off = pa.array(np.append(run_doc_at, doc_at.size).astype(np.int32))
@@ -91,28 +87,57 @@ def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
         cols.append(pa.ListArray.from_arrays(
             occ_off, pa.array(pos[order].astype(np.int32))))
         names.append("pos")
-    cols.append(pa.array(np.add.reduceat(tfs.astype(np.int64), run_doc_at)))
-    names.append("sum_tf")
     return pa.record_batch(cols, names=names)
 
 
-def flat_runs(stats: DataFrame, seg_size: int, n_buckets: int) -> DataFrame:
-    """Flat ``(doc_id, lemma, tf, dl)`` stat rows -> runs, one
-    :func:`form_runs` per Arrow batch (no exchange).  Each (doc, lemma)
-    is one row, so runs of a lemma from different batches hold disjoint
-    docs — the merge's per-group sort makes them one ascending list."""
+def doc_stats(doc: np.ndarray, dl: np.ndarray, repo, sha_prefix,
+              seg_size: int) -> dict:
+    """One batch's docs -> ``{segment: {"docs", "sha_xor", "dl",
+    "sites"}}``, in the shape :class:`session.MergeDicts` merges (with
+    ``xor=("sha_xor",)``).
 
-    def _batches(it):
-        for b in it:
-            if b.num_rows == 0:
-                continue
-            col = b.column
-            yield form_runs(
-                col(0).to_numpy(zero_copy_only=False).astype(np.int64),
-                col(1),
-                col(3).to_numpy(zero_copy_only=False).astype(np.int64),
-                seg_size, n_buckets,
-                tf=col(2).to_numpy(zero_copy_only=False).astype(np.int64))
+    Every doc counts, empty ones too.  ``doc``/``dl`` are int64 per doc,
+    ``repo`` an Arrow string array and ``sha_prefix`` the Arrow int64
+    values of :data:`SHA_PREFIX` (null contributes nothing, as in SQL
+    ``bit_xor``).  ``sites`` lists the batch's ``(repo, lo, hi)`` runs of
+    consecutive doc ids — the same repo's docs in another batch can
+    continue a run, which :func:`merge_sites` rejoins."""
+    import pyarrow.compute as pc
 
-    return (stats.select("doc_id", "lemma", "tf", "dl")
-            .mapInArrow(_batches, schema=STAT_RUN_DDL))
+    enc = repo.dictionary_encode()
+    code = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    names = enc.dictionary.to_pylist()
+    sha = pc.fill_null(sha_prefix, 0).to_numpy(zero_copy_only=False)
+    seg = doc // seg_size
+    order = np.lexsort((doc, code, seg))
+    d, c, s = doc[order], code[order], seg[order]
+    n = d.size
+    new_seg = np.ones(n, dtype=bool)
+    new_seg[1:] = s[1:] != s[:-1]
+    new_run = new_seg.copy()
+    new_run[1:] |= (c[1:] != c[:-1]) | (d[1:] != d[:-1] + 1)
+    seg_at = np.flatnonzero(new_seg)
+    docs = np.diff(np.append(seg_at, n))
+    xors = np.bitwise_xor.reduceat(sha.astype(np.int64)[order], seg_at)
+    dls = np.add.reduceat(dl[order], seg_at)
+    out = {int(s[a]): {"docs": int(k), "sha_xor": int(x), "dl": int(t),
+                       "sites": []}
+           for a, k, x, t in zip(seg_at, docs, xors, dls)}
+    run_at = np.flatnonzero(new_run)
+    for lo, hi in zip(run_at, np.append(run_at[1:], n) - 1):
+        out[int(s[lo])]["sites"].append((names[c[lo]], int(d[lo]), int(d[hi])))
+    return out
+
+
+def merge_sites(runs) -> list[tuple[str, int, int]]:
+    """``(repo, lo, hi)`` runs of consecutive doc ids -> each repo's
+    maximal runs, sorted.  Two runs of one repo join exactly when
+    ``lo == prev_hi + 1``, so over a segment's batch runs this is the
+    gaps-and-islands result (``doc_id - row_number`` per repo)."""
+    out: list[tuple[str, int, int]] = []
+    for repo, lo, hi in sorted(runs):
+        if out and out[-1][0] == repo and lo == out[-1][2] + 1:
+            out[-1] = (repo, out[-1][1], hi)
+        else:
+            out.append((repo, lo, hi))
+    return out

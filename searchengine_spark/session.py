@@ -5,6 +5,8 @@ thread per site (IndexingServiceImpl.java:311-313, :207-211); here parallelism
 is the Spark task scheduler: ``local[N]`` threads locally, executors on a
 cluster.  All engine jobs go through this factory so that Arrow, AQE and
 shuffle-partition sizing are consistent between tests, bench and spark-submit.
+:class:`MergeDicts` is the accumulator that statistics use to ride jobs that
+already run (ingest's partition counts, the build's per-segment stats).
 """
 
 from __future__ import annotations
@@ -12,6 +14,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for :func:`get_spark`: ``SPARK_DRIVER_MEM``
+    when set, else half the host's physical memory (``phys_bytes``),
+    capped at 16g, floor 512m.  In ``local[N]`` mode the driver heap is the
+    whole engine's heap, and a heap sized past the host's memory lets the
+    JVM grow until the kernel kills it."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mib = phys_bytes // (2 * 1024 * 1024)
+    return f"{max(512, min(16 * 1024, mib))}m"
 
 
 def get_spark(
@@ -46,7 +63,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
@@ -62,3 +79,32 @@ def stop_all() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+class MergeDicts(object):
+    """AccumulatorParam over nested dicts, merged key by key: numbers add
+    (keys named in ``xor`` combine with ``^`` instead), lists concatenate,
+    dicts merge recursively.  Executors fill one such dict per task and
+    the driver merges them; read the value after a RESULT stage, where
+    Spark applies each partition's update exactly once.  Counts and XORs
+    are independent of task order; list order is not."""
+
+    def __init__(self, xor: tuple[str, ...] = ()):
+        self.xor = frozenset(xor)
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for k, v in b.items():
+            if isinstance(v, dict):
+                self.addInPlace(a.setdefault(k, {}), v)
+            elif isinstance(v, list):
+                a.setdefault(k, []).extend(v)
+            elif k not in a:
+                a[k] = v
+            elif k in self.xor:
+                a[k] ^= v
+            else:
+                a[k] += v
+        return a

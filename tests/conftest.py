@@ -16,10 +16,9 @@ N_SMOKE = 200  # FIXTURES.md t1 scale
 
 @pytest.fixture(scope="session")
 def spark():
-    # the whole suite shares one Spark JVM; with the session factory's 16g
-    # default heap it grows lazily, and on a host with less memory than
-    # that the kernel OOM-kills it mid-suite.  The test data fits a 4g
-    # heap (the benchmark runs with the same cap).
+    # the whole suite shares one Spark JVM whose heap grows lazily; the
+    # test data fits a 4g heap (the benchmark runs with the same cap), which
+    # leaves the rest of a shared host to everything else.
     os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s

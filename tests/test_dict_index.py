@@ -161,10 +161,6 @@ def test_validation_errors(spark, tmp_path):
     with pytest.raises(ValueError, match="forms"):
         build_index(docs, str(tmp_path / "x1"), resume=False,
                     normalizer="dict")
-    with pytest.raises(ValueError, match="arrow"):
-        build_index(docs, str(tmp_path / "x2"), resume=False,
-                    normalizer="dict", forms=ENGLISH_FORMS,
-                    analyzer_impl="jvm")
     with pytest.raises(ValueError, match="normalizer"):
         build_index(docs, str(tmp_path / "x3"), resume=False,
                     normalizer="lancaster")
@@ -189,9 +185,9 @@ def test_pinned_default_unchanged(spark, tmp_path):
 
 def test_porter_index_end_to_end(spark, tmp_path):
     """normalizer='porter' on the physical path: regular inflections meet
-    at the stem on both sides (build via the O(vocabulary) normalization
-    join, queries stemmed by index_analyzer), and the positional sidecar
-    serves phrases across inflections."""
+    at the stem on both sides (build stems inside the Arrow run kernel,
+    queries stemmed by index_analyzer), and the positional sidecar serves
+    phrases across inflections."""
     from searchengine_spark.index.positions import build_positions
 
     rows = [
@@ -205,7 +201,7 @@ def test_porter_index_end_to_end(spark, tmp_path):
     docs = ingest(spark.createDataFrame(rows, DOCS_SCHEMA))
     idx = str(tmp_path / "idx")
     build_index(docs, idx, n_segments=2, salt=2, n_buckets=4, resume=False,
-                normalizer="porter", analyzer_impl="jvm")
+                normalizer="porter")
     with open(f"{idx}/meta.json") as fh:
         assert json.load(fh)["normalizer"] == "porter"
     assert index_analyzer(spark, idx) == ("porter", None)

@@ -36,7 +36,6 @@ from searchengine_spark.index.positions import (
     encode_position_runs,
     read_positions,
 )
-from searchengine_spark.index.runs import flat_runs
 from searchengine_spark.schema import DOCS_SCHEMA
 from searchengine_spark.streaming.store import init_store, read_store
 
@@ -75,13 +74,12 @@ def _explode(runs):
     """Runs -> (flat stat rows, flat occurrence rows), asserting on the way
     that every run is strictly ascending in doc (in (doc, pos) for its
     occurrences) and aligned: len(docs) == len(tfs) == len(dls), len(pos)
-    == Σ tfs == sum_tf."""
+    == Σ tfs."""
     stats, occ = [], []
     for r in runs:
         docs, tfs, dls = r["docs"], r["tfs"], r["dls"]
         assert len(docs) == len(tfs) == len(dls) >= 1
         assert all(a < b for a, b in zip(docs, docs[1:]))
-        assert r["sum_tf"] == sum(tfs)
         stats += [(d, r["lemma"], tf, dl) for d, tf, dl in zip(docs, tfs, dls)]
         if "pos" in r:
             pos = r["pos"]
@@ -130,8 +128,7 @@ def test_fused_kernel_parity(spark, norm, forms):
 def test_run_former_invariants(spark, norm, forms):
     """One batch spanning several segments: runs split at every segment
     boundary, one run per (segment, lemma), bucket == hash_bucket(lemma);
-    the stat-only kernel and the flat-stream former (the analyzer_impl=
-    'jvm' route) yield exactly the fused kernel's stat runs."""
+    the stat-only kernel yields exactly the fused kernel's stat runs."""
     seg_size, n_buckets = 3, 4
     docs = _texts_df(spark).coalesce(1)  # ONE partition, ONE Arrow batch
     fused = [r.asDict() for r in doc_term_runs_arrow(
@@ -147,7 +144,7 @@ def test_run_former_invariants(spark, norm, forms):
         segs_of.setdefault(lm, set()).add(s)
     assert max(len(v) for v in segs_of.values()) >= 2  # a split happened
 
-    stat_cols = ("segment", "bucket", "lemma", "docs", "tfs", "dls", "sum_tf")
+    stat_cols = ("segment", "bucket", "lemma", "docs", "tfs", "dls")
 
     def _stat_runs(rows):
         return sorted(tuple(tuple(r[c]) if isinstance(r[c], list) else r[c]
@@ -157,11 +154,6 @@ def test_run_former_invariants(spark, norm, forms):
                                 forms=forms).collect()
     assert "pos" not in plain[0].asDict()
     assert _stat_runs(r.asDict() for r in plain) == _stat_runs(fused)
-    flat = doc_term_stats_arrow(docs, normalizer=norm,
-                                forms=forms).coalesce(1)
-    assert (_stat_runs(r.asDict() for r in
-                       flat_runs(flat, seg_size, n_buckets).collect())
-            == _stat_runs(fused))
 
 
 def test_merge_plans_one_exchange_no_collect_list(spark):
@@ -234,15 +226,6 @@ def test_fused_build_byte_identical(spark, tmp_path, norm, forms):
         for r in phrase_topk(spark, two, None,
                              "tamok velsor", k=10).collect())
     assert got == want
-
-
-def test_fused_requires_arrow(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    docs = _texts_df(spark).withColumn("sha256", F.sha2("content", 256))
-    with pytest.raises(ValueError, match="arrow"):
-        build_index(docs, str(tmp_path / "x"),
-                    analyzer_impl="jvm", positions=True)
 
 
 def test_positions_true_on_done_index_builds_sidecar(spark, tmp_path):
