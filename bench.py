@@ -169,7 +169,8 @@ def main() -> None:
             shutil.rmtree(out_dict, ignore_errors=True)
         t_additions = time.perf_counter() - t_add0
 
-        # 2b — positional sidecar (opt-in phrase scale path) + the high-df
+        # 2b — positions (opt-in phrase scale path: build_positions
+        # rebuilds every segment with positions on) + the high-df
         # phrase probe: a bigram of two COMMON terms, the regime where the
         # store-verify path degrades to near-full-corpus re-analysis; the
         # positional path must stay in the conjunctive-search cost class
@@ -184,8 +185,8 @@ def main() -> None:
         build_positions(docs, out)
         q_times["positions_build"] = round(time.perf_counter() - t0, 3)
 
-        # 2d — FUSED single-scan positional build (r5): index data + the
-        # positional sidecar from ONE analysis pass
+        # 2d — FUSED single-scan positional build (r5): postings and
+        # positions from ONE analysis pass and one merge
         # (build_index(positions=True)); compare against index_build +
         # positions_build, the two-pass total it replaces.  Byte-identical
         # output (tests/test_fused_build.py).

@@ -40,9 +40,9 @@ def main() -> None:
                          "build the index FROM it (ids guaranteed "
                          "consistent; enables jobs/query.py --store DTOs)")
     ap.add_argument("--positions", action="store_true",
-                    help="also build the positional sidecar (exact phrase "
-                         "search without store re-analysis; ~doubles index "
-                         "bytes, opt-in)")
+                    help="also store each posting row's positions (exact "
+                         "phrase search without store re-analysis; opt-in, "
+                         "adds the position stream to the index bytes)")
     ap.add_argument("--normalizer",
                     choices=["pinned", "english", "porter", "english-porter"],
                     default="pinned",
@@ -61,6 +61,14 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
+    # every check runs before the Spark session starts
+    if not (args.input or args.synthetic):
+        ap.error("need --input or --synthetic")
+    for flag, val in (("--segments", args.segments),
+                      ("--buckets", args.buckets),
+                      ("--block-size", args.block_size)):
+        if val < 1:
+            ap.error(f"{flag} must be >= 1, got {val}")
 
     normalizer, forms = "pinned", None
     if args.forms_json:
@@ -87,10 +95,8 @@ def main() -> None:
     spark = get_spark("build_index", cores=args.cores)
     if args.synthetic:
         raw = corpus_df(spark, args.synthetic)
-    elif args.input:
-        raw = spark.read.parquet(args.input)
     else:
-        ap.error("need --input or --synthetic")
+        raw = spark.read.parquet(args.input)
 
     t0 = time.perf_counter()
     # localCheckpoint, not .cache(): the SQL cache's compressed-columnar
@@ -104,15 +110,13 @@ def main() -> None:
         docs = read_store(spark, args.store).localCheckpoint()
     else:
         docs = ingest(raw)
-    n = docs.count()
-    # sha256 per-row invariant: enforced INSIDE build_index, fused into its
-    # first aggregation (no separate O(corpus) action)
+    # sha256 per-row invariant and the doc count: both come from
+    # build_index's first aggregation (no separate O(corpus) action)
     ingest_s = time.perf_counter() - t0
 
     from searchengine_spark.index.builder import build_index
 
-    # --positions rides the SAME corpus scan as the index data (fused
-    # single-scan build)
+    # --positions rides the SAME analysis pass and merge as the postings
     meta = build_index(
         docs, args.out, n_segments=args.segments, salt=args.salt,
         n_buckets=args.buckets, block_size=args.block_size,
@@ -120,6 +124,7 @@ def main() -> None:
         positions=args.positions,
     )
     dt = time.perf_counter() - t0
+    n = meta["n_docs"]
     meta.setdefault("timings", {})["ingest_s"] = round(ingest_s, 2)
     print(json.dumps({
         "n_docs": n, "seconds": round(dt, 2),

@@ -30,8 +30,6 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     """Compact ``store_dir`` to dense doc_ids and fully rebuild
     ``index_dir`` over it (codec params pinned from the old meta; segment
     count re-derived from the compacted corpus at the pinned seg_size)."""
-    import glob as _glob
-
     from searchengine_spark.index.builder import build_index, index_analyzer
     from searchengine_spark.streaming import store as dstore
 
@@ -42,8 +40,7 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     # (+ dict sidecar) BEFORE the resume=False rebuild, which would
     # otherwise default back to the pinned table
     normalizer, forms = index_analyzer(spark, index_dir, imeta)
-    had_positions = bool(imeta.get("has_positions")) or bool(
-        _glob.glob(f"{index_dir}/positions/segment=*"))
+    had_positions = bool(imeta.get("has_positions"))
 
     smeta = dstore.compact_store(spark, store_dir)
 
@@ -54,8 +51,8 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     n = docs.count()
     n_segments = max(1, -(-n // seg_size))
     # positions=had_positions: an index that served phrases before
-    # compaction keeps doing so after (every doc_id moved, so it's a full
-    # sidecar refresh) — fused into the rebuild's own analysis pass
+    # compaction keeps doing so after (every doc_id moved, so every row's
+    # positions are rebuilt) — in the rebuild's own analysis pass
     meta = build_index(
         docs, index_dir, n_segments=n_segments,
         salt=int(imeta["salt"]), n_buckets=int(imeta["n_buckets"]),

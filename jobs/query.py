@@ -71,7 +71,7 @@ def main() -> None:
                         or args.mode is not None):
         ap.error("--phrase does not support --offset/--conjunctive/--mode")
     if args.batch is not None and args.phrase and args.store is not None:
-        ap.error("--batch --phrase serves from the positional sidecar only; "
+        ap.error("--batch --phrase serves from the index's positions only; "
                  "--store (store-verify) is not supported on the batch "
                  "phrase path")
     mode = args.mode or "maxscore"
@@ -79,14 +79,14 @@ def main() -> None:
     spark = get_spark("query", cores=args.cores)
 
     if args.batch is not None and args.phrase:
-        # whole phrase workload in ONE job over the positional sidecar
+        # whole phrase workload in ONE job over the index's positions
         from searchengine_spark.index.positions import (
             has_positions,
             phrase_topk_batch,
         )
 
         if not has_positions(args.index):
-            ap.error("--batch --phrase needs the positional sidecar "
+            ap.error("--batch --phrase needs an index built with positions "
                      "(jobs/build_index.py --positions)")
         lines = [ln.strip() for ln in Path(args.batch).read_text().splitlines()]
         workload = {f"q{i}": q for i, q in enumerate(ln for ln in lines if ln)}
@@ -171,8 +171,8 @@ def main() -> None:
 
         if args.store is None and not has_positions(args.index):
             ap.error("--phrase requires --store (store-verify path "
-                     "re-reads candidate docs) unless the index has a "
-                     "positional sidecar (build_index.py --positions)")
+                     "re-reads candidate docs) unless the index has "
+                     "positions (build_index.py --positions)")
 
         for q in args.query:
             t0 = time.perf_counter()

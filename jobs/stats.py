@@ -9,9 +9,9 @@ StatisticsServiceImpl; dto/statistics/TotalStatistics {sites, pages,
 lemmas, indexing} + DetailedStatisticsItem {url, status, statusTime,
 pages, lemmas}): totals and per-site rows come from the index's own
 artifacts — meta.json, per-segment manifests (the site-status machine
-analog), the dict sidecar (distinct lemmas) and the sites sidecar
-(per-repo doc_id islands -> exact live page counts) — so the cheap form
-reads ZERO posting bytes.
+analog), the index's lemma column (distinct lemmas, read alone by column
+projection) and the sites sidecar (per-repo doc_id islands -> exact live
+page counts) — so the cheap form reads ZERO posting bytes.
 
 ``--detailed`` adds exact per-site lemma counts with one distributed pass:
 decode each index row's posting ids (numpy varbyte), map ids -> site via
@@ -85,7 +85,7 @@ def site_lemma_counts(spark, index_dir: str) -> dict[str, int]:
 def statistics(spark, index_dir: str, detailed_lemmas: bool = False) -> dict:
     from pyspark.sql import functions as F
 
-    from searchengine_spark.index.builder import DICT_SCHEMA, SITES_SCHEMA
+    from searchengine_spark.index.builder import SITES_SCHEMA, read_index
     from searchengine_spark.index.checkpoint import all_manifests
 
     with open(f"{index_dir}/meta.json") as fh:
@@ -110,12 +110,10 @@ def statistics(spark, index_dir: str, detailed_lemmas: bool = False) -> dict:
             .agg(F.sum(F.col("hi") - F.col("lo") + 1).alias("pages"))
             .collect()
         )
-    n_lemmas = 0
-    if _glob.glob(f"{index_dir}/dict/segment=*"):
-        n_lemmas = int(
-            spark.read.schema(DICT_SCHEMA).parquet(f"{index_dir}/dict")
-            .agg(F.countDistinct("lemma").alias("n")).collect()[0]["n"]
-        )
+    n_lemmas = int(
+        read_index(spark, index_dir, columns=("lemma",))
+        .agg(F.countDistinct("lemma").alias("n")).collect()[0]["n"]
+    )
     per_site_lemmas = (
         site_lemma_counts(spark, index_dir) if detailed_lemmas else {}
     )

@@ -43,8 +43,8 @@ Two executions of the SAME pinned definition:
 MAINTENANCE: the per-batch tokenize preamble (steps 1-5 + expansion) is
 additionally materialized once as pyarrow kernels (``_analyze_arrow_batch``,
 behind ``doc_term_stats_arrow`` and the build's run kernel
-``doc_term_runs_arrow``) and once as pandas ops (``doc_term_stats_pandas``).
-A change to the pinned shape must land in both; the agreement tests
+``doc_term_runs_arrow``).  A change to the pinned shape must land there
+and in the pure-Python oracle :func:`analyze`; the agreement tests
 (test_analyzer.py, test_phrase_positions.py, test_fused_build.py) fail on
 any drift.
 """
@@ -633,8 +633,7 @@ def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
     is the equivalence-test contract.
 
     Executed via ``mapInArrow`` + pyarrow compute kernels (C++ hash
-    aggregation).  Measured ~2.4x the pandas-object path per core
-    (:func:`doc_term_stats_pandas` keeps that execution for the test).
+    aggregation), measured ~2.4x a pandas-object execution per core.
     """
     schema = "repo string, doc_id long, lemma string, tf int, dl long"
     narrowed = docs.select("repo", "doc_id", text_col)
@@ -737,55 +736,3 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
 
     return narrowed.mapInArrow(
         _batches, schema=POS_RUN_DDL if positions else STAT_RUN_DDL)
-
-
-def doc_term_stats_pandas(docs: DataFrame, text_col: str = "content",
-                          normalizer: str = "pinned",
-                          forms: dict[str, tuple[str, ...]] | None = None,
-                          ) -> DataFrame:
-    """The pandas-object execution of :func:`doc_term_stats_arrow`'s
-    contract (mapInPandas) — kept as the equivalence-test twin and the
-    fallback if a pyarrow compute kernel is unavailable.
-    """
-    import pandas as pd  # noqa: F401
-
-    schema = "repo string, doc_id long, lemma string, tf int, dl long"
-    narrowed = docs.select("repo", "doc_id", text_col)
-    table = {k: list(v) for k, v in _forms_table(normalizer, forms).items()}
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        forms = table
-        for pdf in it:
-            if pdf.empty:
-                continue
-            s = pdf[text_col].fillna("")
-            s = s.str.replace(_CAMEL_1[0], r"\1 \2", regex=True)
-            s = s.str.replace(_CAMEL_2[0], r"\1 \2", regex=True)
-            s = s.str.lower().str.replace(_STRIP_PY, " ", regex=True)
-            flat = s.str.split().explode().dropna()
-            keep = (flat.str.len() >= MIN_TOKEN_LEN) & ~flat.isin(STOP_WORDS)
-            flat = flat[keep]
-            base = pdf[["repo", "doc_id"]].reindex(flat.index).assign(lemma=flat.values)
-            has_exc = base["lemma"].isin(forms.keys())
-            if has_exc.any():
-                exc_rows = base[has_exc].copy()
-                exc_rows["lemma"] = exc_rows["lemma"].map(forms)
-                base = pd.concat(
-                    [base[~has_exc], exc_rows.explode("lemma")], ignore_index=True
-                )
-            if base.empty:
-                continue
-            tf = (
-                base.groupby(["repo", "doc_id", "lemma"], sort=False)
-                .size()
-                .rename("tf")
-                .reset_index()
-            )
-            dl = tf.groupby("doc_id", sort=False)["tf"].transform("sum")
-            tf["tf"] = tf["tf"].astype("int32")
-            tf["dl"] = dl.astype("int64")
-            yield tf
-
-    return narrowed.mapInPandas(_batches, schema=schema)

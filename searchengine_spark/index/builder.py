@@ -10,15 +10,21 @@ over all segments that still need building):
        — aligned doc/tf/dl lists, hash bucket — in ONE mapInArrow; a
        doc's tokens never leave its partition    [narrow, localCheckpoint]
     -> merge: groupBy(segment, BUCKET), per-lemma merge of the lemma's
-       runs in numpy, delta+varbyte encode + block-max directory
-                                                        [the ONE shuffle]
+       runs in numpy, delta+varbyte encode + block-max directory (and,
+       with positions, the lemma's position stream)    [the ONE shuffle]
     -> write as the groups leave the merge, partitionBy(segment,
        bucket(lemma)), dynamic partition overwrite (already-done segments
        untouched, no repartition)                [partition-pruned reads]
 
+That merge writes the WHOLE index: one ``data/`` row per (segment, lemma)
+carries the dictionary (lemma, df), the postings and, opt-in, the
+positional stream (index/positions.py).  Readers take the columns they
+need by Parquet column projection, so no dictionary or positional
+dataset is written beside it (:func:`read_index`).
+
 Build statistics ride those jobs instead of re-reading what they just
 computed: the analysis kernel tallies each segment's docs, sha256 lineage,
-Σ dl and repo id runs, and the merge encoders tally what they write, into
+Σ dl and repo id runs, and the merge encoder tallies what it writes, into
 accumulators (``session.MergeDicts``) read back after each job.  avgdl,
 the manifests, the sites sidecar and the positional stats come from those
 tallies on the driver — no aggregation over the docs or the written files.
@@ -63,14 +69,10 @@ if TYPE_CHECKING:
 
 K1, B = 1.2, 0.75  # pinned BM25 params baked into block-max weights
 
-DICT_SCHEMA = T.StructType(
-    [
-        T.StructField("lemma", T.StringType(), False),
-        T.StructField("df", T.LongType(), False),
-        T.StructField("segment", T.IntegerType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-    ]
-)
+# meta["format"]: the layout this builder writes and reads — one data/
+# dataset whose rows also carry the positional streams.  Indexes without
+# it (dict/ and positions/ sidecars beside data/) are rebuilt on resume.
+INDEX_FORMAT = 2
 
 SITES_SCHEMA = T.StructType(
     [
@@ -106,9 +108,12 @@ INDEX_OUT_SCHEMA = T.StructType(
             ),
             False,
         ),
+        T.StructField("pstream", T.BinaryType(), True),  # positions=True only
         T.StructField("bucket", T.IntegerType(), False),
     ]
 )
+# what BM25 serving reads: every column but the positional stream
+POSTING_COLS = tuple(n for n in INDEX_OUT_SCHEMA.names if n != "pstream")
 
 
 def seg_ranges_filter(missing: list[int], seg_size: int):
@@ -146,7 +151,7 @@ def hash_bucket(lemma: str, n_buckets: int) -> int:
 
 
 def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
-                      stats=None) -> DataFrame:
+                      stats=None, positions: bool = False) -> DataFrame:
     """Sorted runs -> encoded posting rows (:data:`INDEX_OUT_SCHEMA`), in
     ONE exchange: runs group by (segment, BUCKET) — n_segments x n_buckets
     well-sized groups (grouping by (segment, lemma) would mean one
@@ -154,19 +159,26 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
     and the per-lemma merge + delta/varbyte encode + block-max directory
     runs vectorized inside each group.
 
+    ``positions=True`` takes the runs' ``pos`` too and fills each row's
+    ``pstream`` (:func:`positions.encode_pstream`) in the same group, so
+    the positional streams cost no second exchange; otherwise ``pstream``
+    is null.
+
     ``stats`` (an accumulator over :class:`session.MergeDicts`) receives
     each segment's ``{"terms", "postings", "bytes"}`` — its manifest's
-    written counts — from the groups as they encode.  The encoder runs in
-    the result stage of the job that writes its output, so the counts are
-    complete once that write returns."""
+    written counts — plus ``"pos_bytes"`` (postings + tfs + pstream: what a
+    positional fetch moves) with positions, from the groups as they
+    encode.  The encoder runs in the result stage of the job that writes
+    its output, so the counts are complete once that write returns."""
 
     def _merge(pdf):
         import numpy as np
         import pandas as pd
 
         from .codec import encode_postings_many
+        from .positions import encode_pstream
 
-        cols = ["segment", "lemma", "df", "postings", "tfs", "dls", "blocks", "bucket"]
+        cols = INDEX_OUT_SCHEMA.names
         if pdf.empty:
             return pd.DataFrame([], columns=cols)
         # Concatenate EVERY lemma's runs into flat arrays, sort once by
@@ -183,9 +195,12 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         tfs = np.concatenate(pdf["tfs"].to_list()).astype(np.int64)
         dls = np.concatenate(pdf["dls"].to_list()).astype(np.int64)
         order = np.lexsort((docs, rid))
-        docs, tfs, dls, rid = docs[order], tfs[order], dls[order], rid[order]
         counts = np.bincount(rid, minlength=len(lemmas))
         offsets = np.concatenate([[0], np.cumsum(counts)])
+        pstream = ([None] * len(lemmas) if not positions else encode_pstream(
+            np.concatenate(pdf["pos"].to_list()).astype(np.int64), tfs,
+            order, offsets))
+        docs, tfs, dls = docs[order], tfs[order], dls[order]
         encs = encode_postings_many(docs, tfs, dls, offsets, avgdl, K1, B, block_size)
         out = [
             {
@@ -196,18 +211,23 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
                 "tfs": enc.tfs,
                 "dls": enc.dls,
                 "blocks": [tuple(b) for b in enc.blocks],
+                "pstream": pstream[t],
                 "bucket": bucket,
             }
             for t, enc in enumerate(encs)
         ]
         if stats is not None:
-            stats.add({seg: {
-                "terms": len(encs), "postings": int(counts.sum()),
-                "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
-                             for e in encs)}})
+            st = {"terms": len(encs), "postings": int(counts.sum()),
+                  "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
+                               for e in encs)}
+            if positions:
+                st["pos_bytes"] = sum(len(e.docs) + len(e.tfs) + len(p)
+                                      for e, p in zip(encs, pstream))
+            stats.add({seg: st})
         return pd.DataFrame(out, columns=cols)
 
-    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls")
+    cols = ["segment", "bucket", "lemma", "docs", "tfs", "dls"]
+    return (runs.select(*cols, *(["pos"] if positions else []))
             .groupBy("segment", "bucket")
             .applyInPandas(_merge, schema=INDEX_OUT_SCHEMA))
 
@@ -259,7 +279,8 @@ def build_index(
     Layout:
       out_dir/meta.json
       out_dir/manifests/segment=K.json
-      out_dir/data/segment=K/bucket=B/*.parquet
+      out_dir/data/segment=K/bucket=B/*.parquet   (:data:`INDEX_OUT_SCHEMA`)
+      out_dir/sites/segment=K/*.parquet
       out_dir/dict_forms/  (normalizer='dict' only: the morphology table)
 
     ``normalizer``/``forms`` select the analyzer's normal-forms table
@@ -271,15 +292,16 @@ def build_index(
     reference ships its morphology inside the index the same way —
     LemmaFinderImpl.java:25-31 singleton).
 
-    ``positions=True`` builds the positional sidecar IN THE SAME corpus
-    scan (the run kernel with positions, ``analyzer.doc_term_runs_arrow``):
-    the two-pass route (build_index + build_positions) tokenizes and
-    normalizes every document twice — at 100 TB the second full analysis
-    pass is the largest avoidable cost in a positional build.  Output is
-    byte-identical to the two-pass route (parity-tested)."""
+    ``positions=True`` gives every written row its ``pstream`` from the
+    same analysis pass and the same merge (index/positions.py).  A segment
+    counts as done for a positional build only if its manifest records
+    positions, so a positional resume also rebuilds the segments that lack
+    them; ``meta.has_positions`` is on exactly when every segment's rows
+    carry positions."""
     import shutil
 
-    from .checkpoint import segment_done, write_json_atomic, write_manifest
+    from .checkpoint import (all_manifests, read_manifest, write_json_atomic,
+                             write_manifest)
 
     spark = docs_ingested.sparkSession
     narrow = docs_ingested.select("repo", "doc_id", "content", "sha256")
@@ -294,6 +316,13 @@ def build_index(
     if resume and os.path.exists(f"{out_dir}/meta.json"):
         with open(f"{out_dir}/meta.json") as fh:
             old_meta = json.load(fh)
+    # an index in the older layout (dict/ and positions/ sidecars beside
+    # data/, no format marker) is rebuilt whole rather than mixed with
+    # this one; its sidecars go now — nothing of this layout reads them
+    legacy = old_meta is not None and old_meta.get("format") != INDEX_FORMAT
+    if legacy:
+        for d in ("dict", "positions"):
+            shutil.rmtree(f"{out_dir}/{d}", ignore_errors=True)
     if old_meta is not None:
         # the normalizer is pinned with the index (postings encode ITS
         # lemmas); a resumed build must analyze with the stored table
@@ -309,7 +338,7 @@ def build_index(
     if normalizer in ("dict", "dict_porter") and old_meta is None:
         # validate user dictionaries ONCE, before the expensive build: a
         # duplicate form in a value tuple would crash the positional
-        # sidecar deep inside an executor (strictly-increasing delta
+        # encoder deep inside an executor (strictly-increasing delta
         # assert), and uppercase keys are silently dead (the analyzer
         # lowercases before lookup)
         for key, vals in forms.items():
@@ -322,6 +351,12 @@ def build_index(
                 raise ValueError(
                     f"forms key {key!r} is not lowercase — the analyzer "
                     "lowercases tokens before lookup, so it can never fire")
+
+    def done(s: int) -> bool:
+        """Segment ``s`` of the old index needs no rebuild."""
+        m = read_manifest(out_dir, s)
+        return bool(resume and not legacy and m and m.get("status") == "done"
+                    and (m.get("positions") or not positions))
 
     # n_docs (the BM25 idf/avgdl base) is the ROW count; the segment span
     # derives from max(doc_id)+1 — they differ once deletes leave id holes
@@ -340,10 +375,10 @@ def build_index(
     # and a bad sha aborts before any write.
     _t = _time.perf_counter()
     _bad = (F.sha2(F.col("content"), 256) != F.col("sha256")).cast("int")
-    if resume and old_meta is not None:
+    if old_meta is not None:
         _ss = int(old_meta["seg_size"])
         _old_n = int(old_meta["n_segments"])
-        _known = [s for s in range(_old_n) if not segment_done(out_dir, s)]
+        _known = [s for s in range(_old_n) if not done(s)]
         _bad = F.when(
             seg_ranges_filter(_known, _ss)
             | (F.col("doc_id") >= _old_n * _ss),
@@ -369,40 +404,30 @@ def build_index(
         seg_size = max(1, math.ceil(id_span / n_segments))
 
     # corpus shrank: doc ranges beyond the new segment count are stale
-    # everywhere (data, dict, manifest)
+    # everywhere (data, sites, manifest)
     if os.path.isdir(f"{out_dir}/data"):
         for name in os.listdir(f"{out_dir}/data"):
             if name.startswith("segment=") and int(name.split("=")[1]) >= n_segments:
                 shutil.rmtree(f"{out_dir}/data/{name}", ignore_errors=True)
-                shutil.rmtree(f"{out_dir}/dict/{name}", ignore_errors=True)
                 shutil.rmtree(f"{out_dir}/sites/{name}", ignore_errors=True)
-                shutil.rmtree(f"{out_dir}/positions/{name}", ignore_errors=True)
                 p = f"{out_dir}/manifests/{name}.json"
                 if os.path.exists(p):
                     os.unlink(p)
 
-    # resume short-circuit: same corpus size and every segment 'done'
-    if (
-        old_meta is not None
-        and int(old_meta.get("n_docs", -1)) == n_docs
-        and all(segment_done(out_dir, s) for s in range(n_segments))
-    ):
-        if positions and not old_meta.get("has_positions"):
-            # index data is current but the sidecar was never built (or a
-            # previous refresh was interrupted): FULL standalone pass — a
-            # cleared flag means leftover positions dirs are untrustworthy
-            # (a crash mid-write leaves a dir with a subset of its
-            # buckets), so the documented recovery is to rebuild them all
-            # (incremental.rebuild_segments docstring)
-            from .positions import build_positions
-
-            return build_positions(docs_ingested, out_dir)
+    missing = [s for s in range(n_segments) if not done(s)]
+    # resume short-circuit: same corpus size and every segment done.  The
+    # totals are re-derived from the manifests: a build that died between
+    # its last manifest and its final meta write left them unset
+    if (old_meta is not None and not missing
+            and int(old_meta.get("n_docs", -1)) == n_docs):
+        totals = _manifest_totals(all_manifests(out_dir), n_segments)
+        if any(old_meta.get(k) != v for k, v in totals.items()):
+            old_meta.update(totals)
+            write_json_atomic(f"{out_dir}/meta.json", old_meta, indent=1)
         return old_meta
 
     timings: dict[str, float] = {"scan_s": scan_s}
     _t = _time.perf_counter()
-
-    missing = [s for s in range(n_segments) if not (resume and segment_done(out_dir, s))]
 
     # The stored avgdl is reused on every PARTIAL rebuild: block-max upper
     # bounds must share one avgdl with the untouched segments (MaxScore
@@ -424,8 +449,7 @@ def build_index(
     # never leave its partition, and the first shuffle of the whole build
     # is the (segment, bucket) merge itself.  EVERY normalizer routes here
     # (the stemmer family stems the batch's UNIQUE tokens inside the same
-    # kernel).  positions=True adds the runs' occurrence positions: ONE
-    # analysis pass feeds both the posting and the positional merge.  The
+    # kernel).  positions=True adds the runs' occurrence positions.  The
     # same pass tallies each segment's docs, sha lineage, Σ dl and repo id
     # runs into `stats` — the build's statistics never re-read the corpus.
     from ..analyzer import doc_term_runs_arrow
@@ -435,12 +459,12 @@ def build_index(
     runs = doc_term_runs_arrow(analyzed, seg_size, n_buckets,
                                normalizer=normalizer, forms=forms,
                                positions=positions, stats=stats)
-    # MATERIALIZE the runs once (localCheckpoint, not .cache()): every
-    # merge consumes them, and the SQL cache's compressed-columnar form
-    # measured ~3x slower to re-scan into Arrow batches than checkpointed
-    # rows on this host.  The checkpoint job's result stage runs the
-    # kernel, so `stats` holds each analyzed doc exactly once afterwards.
-    # At cluster scale this materialization is a staging write to durable
+    # MATERIALIZE the runs once (localCheckpoint, not .cache()): the SQL
+    # cache's compressed-columnar form measured ~3x slower to re-scan into
+    # Arrow batches than checkpointed rows on this host.  The checkpoint
+    # job's result stage runs the kernel, so `stats` holds each analyzed
+    # doc exactly once afterwards (avgdl needs them before the merge).  At
+    # cluster scale this materialization is a staging write to durable
     # storage.
     runs = runs.localCheckpoint()
     timings["analyze_plan_s"] = round(_time.perf_counter() - _t, 2)
@@ -454,7 +478,21 @@ def build_index(
     timings["avgdl_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
 
+    # Drop the rebuilt segments' directories and manifests wholesale BEFORE
+    # the write: dynamic partition overwrite only replaces (segment, bucket)
+    # partitions that receive rows, so a rebuilt segment that no longer
+    # produces rows for a previously-populated bucket would silently keep
+    # serving the old parquet (deleted content's postings), and a crash
+    # before the new manifest lands must leave the segment not-done.
+    for s in missing:
+        shutil.rmtree(f"{out_dir}/data/segment={s}", ignore_errors=True)
+        shutil.rmtree(f"{out_dir}/sites/segment={s}", ignore_errors=True)
+        p = f"{out_dir}/manifests/segment={s}.json"
+        if os.path.exists(p):
+            os.unlink(p)
+
     meta = {
+        "format": INDEX_FORMAT,
         "n_docs": n_docs,
         "avgdl": avgdl,
         "n_segments": n_segments,
@@ -486,86 +524,25 @@ def build_index(
              .parquet(f"{out_dir}/dict_forms"))
     write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
 
-    if not missing:
-        if positions:
-            # the meta rewrite above cleared has_positions.  If the OLD
-            # flag was on, every untouched dir is part of a known-complete
-            # sidecar: segments=[] is a pure bookkeeping repair.  If it was
-            # off, leftover dirs are untrustworthy (interrupted write) —
-            # full rebuild, the documented recovery path.
-            from .positions import build_positions
-
-            trust = bool(old_meta and old_meta.get("has_positions"))
-            return build_positions(docs_ingested, out_dir,
-                                   segments=[] if trust else None)
-        # (no unpersist: runs are localCheckpoint()'d, not persist()'d — their
-        # blocks are freed when the checkpointed RDD is driver-GC'd)
-        return meta
-
-    runs = runs.filter(F.col("segment").isin(missing))
-
-    # Drop the rebuilt segments' directories wholesale BEFORE the write:
-    # dynamic partition overwrite only replaces (segment, bucket) partitions
-    # that receive rows, so a rebuilt segment that no longer produces rows
-    # for a previously-populated bucket would silently keep serving the old
-    # parquet (deleted content's postings).  Same for its dict partition.
-    for s in missing:
-        shutil.rmtree(f"{out_dir}/data/segment={s}", ignore_errors=True)
-        shutil.rmtree(f"{out_dir}/dict/segment={s}", ignore_errors=True)
-        shutil.rmtree(f"{out_dir}/sites/segment={s}", ignore_errors=True)
-        # rebuilt ranges' positions are stale the moment the data changes;
-        # meta.has_positions is also cleared by this build's meta rewrite —
-        # build_positions(segs) refreshes both (rebuild_segments wires it)
-        shutil.rmtree(f"{out_dir}/positions/segment={s}", ignore_errors=True)
-
-    # ONE exchange: the runs go straight into their (segment, bucket) merge
-    # group, and the merge output is written as it leaves the group (each
-    # group lands in its partition dir from one task — no repartition).
-    # The encoder adds each segment's written counts to `stats`.
-    (
-        encode_index_runs(runs, avgdl, block_size, stats)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")  # done segments untouched
-        .partitionBy("segment", "bucket")
-        .parquet(f"{out_dir}/data")
-    )
+    if missing:
+        # ONE exchange: the runs go straight into their (segment, bucket)
+        # merge group, and the merge output — postings and, with
+        # positions, pstream — is written as it leaves the group (each
+        # group lands in its partition dir from one task, no repartition).
+        # The encoder adds each segment's written counts to `stats`.
+        (
+            encode_index_runs(runs.filter(F.col("segment").isin(missing)),
+                              avgdl, block_size, stats, positions)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")  # done segments untouched
+            .partitionBy("segment", "bucket")
+            .parquet(f"{out_dir}/data")
+        )
+    # (no unpersist: runs are localCheckpoint()'d, not persist()'d — their
+    # blocks are freed when the checkpointed RDD is driver-GC'd)
     timings["merge_write_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
     seg_stats = stats.value
-
-    # An emptied corpus (store-level deletes removed everything) writes no
-    # partitions at all: skip the read-back that would find no files
-    import glob as _glob
-
-    has_data = bool(_glob.glob(f"{out_dir}/data/segment=*"))
-
-    # ---- dictionary: per-segment df per lemma, (segment, bucket)-partitioned
-    # ≙ the reference's `lemma` table as a physical artifact.  Query-time
-    # lookups read the term's bucket= dirs and sum df across segments (a few
-    # rows per term).  Storing it per segment makes the dict rebuild
-    # O(rebuilt segments) — a column-pruned read-back of the fresh index
-    # partitions (parquet never touches the postings bytes) under the same
-    # dynamic-overwrite discipline as the data itself.
-    # Direct segment-path read with the explicit schema: no root listing,
-    # no footer inference, scan restricted to the rebuilt dirs by PATH (the
-    # same O(touched) discipline as the store's read_store(kbs=...)).  No
-    # repartition either — scan tasks already align with (segment, bucket)
-    # dirs, so the write needs no shuffle stage.
-    seg_paths = [p for s in missing
-                 for p in _glob.glob(f"{out_dir}/data/segment={s}")]
-    if has_data and seg_paths:
-        (
-            spark.read.schema(INDEX_OUT_SCHEMA)
-            .option("basePath", f"{out_dir}/data")
-            .parquet(*seg_paths)
-            .select("lemma", "df", "segment", "bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("segment", "bucket")
-            .parquet(f"{out_dir}/dict")
-        )
-    timings["dict_s"] = round(_time.perf_counter() - _t, 2)
-    _t = _time.perf_counter()
 
     # ---- sites sidecar: per-segment (repo, lo, hi) doc_id islands ---------
     # Because ingest ranks doc_ids by (repo, path, commit), a repo's docs are
@@ -578,7 +555,7 @@ def build_index(
     # across batches gives the islands.  The table is O(repos + append
     # batches) rows, written from the driver as ONE Arrow-backed local
     # frame under the same O(rebuilt segments) dynamic-overwrite discipline
-    # as data/dict.
+    # as the data.
     sites = [(s, repo, lo, hi) for s in missing for repo, lo, hi
              in merge_sites(seg_stats.get(s, {}).get("sites", []))]
     if sites:
@@ -599,103 +576,81 @@ def build_index(
     # ---- manifests: the kernel's doc tallies + the encoder's written counts
     for seg in missing:
         st = seg_stats.get(seg, {})
-        write_manifest(
-            out_dir,
-            seg,
-            {
-                "segment": seg,
-                "doc_count": st.get("docs", 0),
-                "term_count": st.get("terms", 0),
-                "posting_count": st.get("postings", 0),
-                "posting_bytes": st.get("bytes", 0),
-                "input_sha_xor": st.get("sha_xor", 0),
-                "status": "done",
-            },
-        )
-    # bytes-per-posting estimate for the serving broker: with it, a term's
-    # driver-side working-set size is predictable from its dictionary df
-    # ALONE (est = gdf * bytes_per_posting), so QueryEngine can route an
-    # over-threshold term to the distributed path WITHOUT first collecting
-    # its posting bytes (the r3 fetch-before-guard hole).  Summed over every
-    # 'done' manifest so partial rebuilds keep the estimate index-wide;
-    # pre-r4 manifests without posting_bytes simply don't contribute.
-    from .checkpoint import all_manifests
-
-    tot_b = tot_p = 0
-    complete = True  # every done manifest contributed byte stats?
-    for m in all_manifests(out_dir):
-        if "posting_bytes" in m:
-            tot_b += int(m["posting_bytes"])
-            tot_p += int(m["posting_count"])
-        else:
-            complete = False  # pre-r4 manifest: its bytes are unknown
-    if tot_p:
-        # the RATIO is a sound estimate even from a subset of segments...
-        meta["bytes_per_posting"] = round(tot_b / tot_p, 3)
-        # ...but the whole-index byte TOTAL (QueryEngine's skip-the-guard
-        # short-circuit: index <= threshold => no term can exceed it) is
-        # only sound when EVERY manifest contributed — an undercounted
-        # total on a mixed-generation index would reopen the
-        # fetch-before-guard hole for exactly the big indexes it protects.
-        if complete:
-            meta["posting_bytes"] = int(tot_b)
-        write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
+        m = {
+            "segment": seg,
+            "doc_count": st.get("docs", 0),
+            "term_count": st.get("terms", 0),
+            "posting_count": st.get("postings", 0),
+            "posting_bytes": st.get("bytes", 0),
+            "input_sha_xor": st.get("sha_xor", 0),
+            "positions": positions,
+            "status": "done",
+        }
+        if positions:
+            m["pos_posting_bytes"] = st.get("pos_bytes", 0)
+        write_manifest(out_dir, seg, m)
+    meta.update(_manifest_totals(all_manifests(out_dir), n_segments))
+    write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
     timings["manifests_s"] = round(_time.perf_counter() - _t, 2)
-    _t = _time.perf_counter()
-
-    if positions:
-        # positional sidecar from the SAME analysis pass (no second corpus
-        # scan): merge-encode the runs' occurrence positions for the
-        # rebuilt segments.  Runs after the manifests exist — the
-        # positional stats ride them (estimate-before-fetch discipline).
-        from .positions import (_merge_write_positions,
-                                _positions_bookkeeping, build_positions)
-
-        # A partially-resumed build over an index whose flag was OFF
-        # leaves the untouched segments without a trustworthy sidecar
-        # (never built, or an interrupted write left partial dirs) — their
-        # text was not analyzed by this job, so cover them with the
-        # standalone pass first.  Indexes whose flag was ON don't hit
-        # this: only the rebuilt segments' dirs were cleared above, and
-        # the untouched ones belong to a known-complete sidecar.  The
-        # fused merge runs LAST so its bookkeeping flips has_positions
-        # only once every segment is covered (the flip itself also
-        # requires all dirs present — positions._positions_bookkeeping).
-        # An emptied index (no data dir at all) has nothing to merge but
-        # still runs the bookkeeping: every segment is vacuously covered,
-        # so the flag stays on and a later regrow keeps the sidecar.
-        if has_data:
-            trust = bool(old_meta and old_meta.get("has_positions"))
-            rest = ([] if trust
-                    else [s for s in range(n_segments) if s not in missing])
-            if rest:
-                build_positions(docs_ingested, out_dir, segments=rest)
-            meta = _merge_write_positions(runs, out_dir, missing)
-        else:
-            meta = _positions_bookkeeping(None, out_dir, [])
-        timings["positions_s"] = round(_time.perf_counter() - _t, 2)
 
     meta["timings"] = timings
     return meta
 
 
-def read_index(spark: SparkSession, out_dir: str, lemmas: list[str] | None = None) -> DataFrame:
-    """Read the index; with ``lemmas`` given, prune to their buckets
-    (partition pruning on bucket=) and filter exact terms.  An index built
-    over an emptied corpus (no segment= dirs) reads as empty."""
+def _manifest_totals(manifests: list[dict], n_segments: int) -> dict:
+    """Index-wide serving estimates from the per-segment manifests.
+
+    bytes-per-posting: with it, a term's driver-side working-set size is
+    predictable from its dictionary df ALONE (est = gdf * bytes_per_posting),
+    so QueryEngine can route an over-threshold term to the distributed path
+    WITHOUT first collecting its posting bytes (the r3 fetch-before-guard
+    hole); ``pos_bytes_per_posting`` prices a positional fetch (postings +
+    tfs + pstream) the same way.  The RATIOS are sound from any subset of
+    segments, so manifests without byte stats simply don't contribute; the
+    whole-index TOTALS (QueryEngine's skip-the-guard short-circuit: index
+    <= threshold => no term can exceed it) are only sound when EVERY
+    manifest contributed — an undercounted total would reopen the
+    fetch-before-guard hole for exactly the big indexes it protects.
+    ``has_positions`` is on exactly when every segment's rows carry
+    positions."""
+    out: dict = {}
+    for key, total, ratio in (("posting_bytes", "posting_bytes",
+                               "bytes_per_posting"),
+                              ("pos_posting_bytes", "pos_posting_bytes",
+                               "pos_bytes_per_posting")):
+        have = [m for m in manifests if key in m]
+        n = sum(int(m["posting_count"]) for m in have)
+        if n:
+            nb = sum(int(m[key]) for m in have)
+            out[ratio] = round(nb / n, 3)
+            if len(have) == len(manifests):
+                out[total] = nb
+    segs = {m["segment"] for m in manifests if m.get("positions")}
+    out["has_positions"] = segs >= set(range(n_segments))
+    return out
+
+
+def read_index(spark: SparkSession, out_dir: str,
+               lemmas: list[str] | None = None,
+               columns: tuple[str, ...] = POSTING_COLS) -> DataFrame:
+    """Read ``columns`` of the index (by default all but ``pstream``, so
+    parquet never touches the positional bytes); with ``lemmas`` given,
+    prune to their buckets (partition pruning on bucket=) and filter exact
+    terms.  An index built over an emptied corpus (no segment= dirs) reads
+    as empty."""
     import glob as _glob
 
     with open(f"{out_dir}/meta.json") as fh:
         meta = json.load(fh)
     if not _glob.glob(f"{out_dir}/data/segment=*"):
-        return spark.createDataFrame([], INDEX_OUT_SCHEMA)
+        return spark.createDataFrame([], INDEX_OUT_SCHEMA).select(*columns)
     # explicit schema: partition discovery still lists dirs, but no parquet
     # footer sampling for schema inference (O(1) planning per read)
     df = spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{out_dir}/data")
     if lemmas is not None:
         buckets = sorted({hash_bucket(x, meta["n_buckets"]) for x in lemmas})
         df = df.filter(F.col("bucket").isin(buckets)).filter(F.col("lemma").isin(lemmas))
-    return df
+    return df.select(*columns)
 
 
 def read_site_ranges(spark: SparkSession, out_dir: str,

@@ -49,11 +49,6 @@ def read_manifest(out_dir: str, segment: int) -> dict | None:
         return json.load(fh)
 
 
-def segment_done(out_dir: str, segment: int) -> bool:
-    m = read_manifest(out_dir, segment)
-    return bool(m and m.get("status") == "done")
-
-
 def all_manifests(out_dir: str) -> list[dict]:
     d = f"{out_dir}/manifests"
     if not os.path.isdir(d):

@@ -5,8 +5,8 @@ SearchServiceImpl.java:231-264 — a post-AND substring-distance rule,
 operators/proximity.py): phrase matching is the standard engine capability
 users expect next to it, implemented WITHOUT touching the index format.
 
-Two-stage shape (the index stores no positions, deliberately — positions
-triple posting bytes for a feature queries rarely use):
+Two-stage shape, for indexes built without positions (positions are
+opt-in; index/positions.py serves phrases from them when present):
 
 1. CANDIDATES from the index: a doc can contain the phrase only if it
    contains at least one form of EVERY pattern position, so per segment
@@ -69,8 +69,8 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
     stream, and a multi-lemma token accepts any of its forms at one
     position.  A phrase whose every word vanishes is unmatchable — empty.
 
-    ``impl``: 'auto' (default) serves from the positional sidecar when the
-    index has a FRESH one (positions.has_positions — the high-df scale
+    ``impl``: 'auto' (default) serves from the index's positions when every
+    segment carries them (positions.has_positions — the high-df scale
     path: O(query-term postings), no store scan, no Python re-analysis)
     and falls back to the store-verify path below otherwise; 'positions' /
     'store' force a path (the parity test runs both).  The store path
@@ -79,12 +79,12 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
     HIGH-DF GUARD (store path only): the store-verify cost class is the
     candidate count — every candidate doc is re-analyzed in Python.  A
     common-bigram phrase on a positionless index is correct but O(corpus);
-    the positional sidecar exists precisely for that regime.  Before any
-    posting decode, the candidate count is bounded from the PRUNED
-    DICTIONARY (the same ``gdf_lookup`` the warm-serving guard uses):
+    positions exist precisely for that regime.  Before any posting decode,
+    the candidate count is bounded from the PRUNED lemma/df read (the same
+    ``gdf_lookup`` the warm-serving guard uses):
     ``min over positions of Σ df(form)`` is an upper bound on the AND
     intersection.  Past ``max_candidate_df`` the call FAILS LOUDLY with a
-    "build the positional sidecar" hint instead of silently chugging;
+    "build the index with positions" hint instead of silently chugging;
     ``force=True`` downgrades the failure to a warning and proceeds
     (``max_candidate_df=None`` disables the estimate entirely)."""
     import numpy as np
@@ -100,7 +100,7 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
         return phrase_topk_positions(spark, index_dir, phrase, k, site=site)
     if store_dir is None:
         raise ValueError("store-verify phrase path needs store_dir "
-                         "(or build the positional sidecar)")
+                         "(or build the index with positions)")
 
     out_schema = "doc_id long, phrase_tf long"
     empty = spark.createDataFrame([], out_schema)
@@ -113,20 +113,16 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
     all_forms = sorted({f for fs in qforms for f in fs})
 
     if max_candidate_df is not None:
-        import json as _json
-
         from .wand import gdf_lookup
 
-        with open(f"{index_dir}/meta.json") as fh:
-            meta = _json.load(fh)
-        gdf = dict(gdf_lookup(spark, index_dir, all_forms, meta))
+        gdf = gdf_lookup(spark, index_dir, all_forms)
         if gdf:
             est = min(sum(gdf.get(f, 0) for f in fs) for fs in qforms)
             if est > max_candidate_df:
                 msg = (f"phrase {phrase!r}: store-verify path would touch "
                        f"up to ~{est} candidate docs (> max_candidate_df="
                        f"{max_candidate_df}) — every one re-analyzed in "
-                       f"Python.  Build the positional sidecar "
+                       f"Python.  Build the index with positions "
                        f"(jobs/build_index.py --positions / "
                        f"positions.build_positions) for the O(query-term "
                        f"postings) path, raise max_candidate_df, or pass "

@@ -344,30 +344,21 @@ def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
     return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
 
 
-def gdf_lookup(spark: SparkSession, index_dir: str, qlemmas: list[str],
-               meta: dict) -> list[tuple[str, int]]:
-    """Pruned dictionary lookup: read only the bucket= dirs of the query
-    terms and sum the per-segment df rows (the dict is (segment, bucket)-
-    partitioned so partial rebuilds stay O(segment) — builder.py).
-    Returns [] if the dict artifact doesn't exist."""
-    import glob as _glob
+def gdf_lookup(spark: SparkSession, index_dir: str,
+               qlemmas: list[str]) -> dict[str, int]:
+    """Global df of ``qlemmas``: read only their bucket= dirs of the index
+    and, by column projection, only ``lemma``/``df`` of its rows (no
+    posting or position bytes).  The per-segment rows (at most
+    ``n_segments`` per lemma) are summed on the driver, so the lookup is
+    one scan stage with no exchange.  Lemmas absent from the index (and
+    every lemma of an emptied index) are absent from the result."""
+    from .builder import read_index
 
-    from pyspark.sql import functions as F
-
-    from .builder import DICT_SCHEMA, hash_bucket
-
-    if not _glob.glob(f"{index_dir}/dict/segment=*"):
-        return []  # missing OR emptied-corpus dict
-    buckets = sorted({hash_bucket(x, meta["n_buckets"]) for x in qlemmas})
-    df = spark.read.schema(DICT_SCHEMA).parquet(f"{index_dir}/dict")
-    rows = (
-        df.filter(F.col("bucket").isin(buckets))
-        .filter(F.col("lemma").isin(qlemmas))
-        .groupBy("lemma")
-        .agg(F.sum("df").alias("gdf"))
-        .collect()
-    )
-    return [(r["lemma"], int(r["gdf"])) for r in rows]
+    gdf: dict[str, int] = {}
+    for r in read_index(spark, index_dir, qlemmas,
+                        columns=("lemma", "df")).collect():
+        gdf[r["lemma"]] = gdf.get(r["lemma"], 0) + int(r["df"])
+    return gdf
 
 
 def index_fingerprint(index_dir: str) -> tuple:
@@ -394,7 +385,7 @@ class QueryEngine:
 
     Defaults are the 10^12-file-safe ones: ``preload_dict=False`` (the full
     dictionary is O(vocabulary) — gdf comes free with the bucket-pruned term
-    rows, or from a pruned dict read on the distributed path); the term-row
+    rows, or from a pruned lemma/df read on the distributed path); the term-row
     cache is LRU-bounded.  Every query first checks
     :func:`index_fingerprint`: an incremental rebuild under a live engine
     invalidates the cached index DataFrame and warm term rows instead of
@@ -435,22 +426,25 @@ class QueryEngine:
         # no term can exceed it, so small indexes skip the dict job.
         self._bpp = float(self.meta.get("bytes_per_posting") or 8.0)
         self._index_bytes: int | None = self.meta.get("posting_bytes")
-        # LAZY cache: .cache() only marks the plan — bucket-pruned term reads
-        # warm exactly the partitions they touch.  An eager .count() here
-        # would materialize the WHOLE index (init cost + cluster cache
-        # pressure O(index)) — wrong default at 10^12 files.
+        # .cache() only marks the plan; the FIRST query that reads through
+        # it materializes the whole relation — every partition, whatever
+        # buckets the query's filter names (measured: one topk_rows on a
+        # fresh engine cached all 4 of 4 partitions of a 4,000-doc index).
+        # The cached relation holds the posting columns only (read_index's
+        # default projection): positional streams are fetched per form
+        # from disk and never enter the Spark cache.
         self.index_df = read_index(self.spark, self.index_dir).cache()
         self._term_cache: OrderedDict[str, list] = OrderedDict()
         self._cache_nb: dict[str, int] = {}   # lemma -> cached posting bytes
         self._cache_total = 0                 # Σ _cache_nb (LRU byte bound)
         # warm PHRASE serving: positional postings get their own LRU (same
-        # byte discipline; estimates use the sidecar's measured
-        # pos_bytes_per_posting — a form's positional df equals its index
-        # df, so the main dictionary prices both fetches)
-        # fallback mirrors _bpp's: a sidecar built before the stats existed
-        # must still ESTIMATE (conservatively) rather than skip the guard —
-        # skipping would collect a common form's full positional stream to
-        # the driver unguarded, the exact OOM the estimate exists to stop
+        # byte discipline; estimates use the build's measured
+        # pos_bytes_per_posting — postings + tfs + pstream per posting, so
+        # the index df prices both fetches)
+        # fallback mirrors _bpp's: an index without the stat must still
+        # ESTIMATE (conservatively) rather than skip the guard — skipping
+        # would collect a common form's full positional stream to the
+        # driver unguarded, the exact OOM the estimate exists to stop
         self._pos_bpp = float(
             self.meta.get("pos_bytes_per_posting") or 16.0)
         self._pos_bytes: int | None = self.meta.get("pos_posting_bytes")
@@ -461,19 +455,14 @@ class QueryEngine:
         self._site_cache: dict[str, list[tuple[int, int]]] = {}
         self._gdf: dict[str, int] | None = None
         if self._preload_dict:
-            import os
-
             from pyspark.sql import functions as F
 
-            if os.path.isdir(f"{self.index_dir}/dict"):
-                from .builder import DICT_SCHEMA
-
-                self._gdf = {
-                    r["lemma"]: int(r["gdf"])
-                    for r in self.spark.read.schema(DICT_SCHEMA)
-                    .parquet(f"{self.index_dir}/dict")
-                    .groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()
-                }
+            self._gdf = {
+                r["lemma"]: int(r["gdf"])
+                for r in read_index(self.spark, self.index_dir,
+                                    columns=("lemma", "df"))
+                .groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()
+            }
 
     def _check_fresh(self) -> None:
         if index_fingerprint(self.index_dir) != self._fp:
@@ -528,22 +517,16 @@ class QueryEngine:
                 self.spark, self.index_dir, site)
         return self._site_cache[site]
 
-    def _gdf_for(self, lemmas: list[str]) -> dict[str, int] | None:
+    def _gdf_for(self, lemmas: list[str]) -> dict[str, int]:
         """Global df per lemma WITHOUT touching posting bytes: preloaded
-        dict > per-engine gdf cache > one pruned dictionary read (cached for
-        the engine's lifetime — a term's df is a handful of longs).  Returns
-        ``None`` when the index has no dictionary artifact (legacy layout) —
-        no size estimate is possible there."""
+        dict > per-engine gdf cache > one pruned, lemma/df-projected index
+        read (:func:`gdf_lookup`, cached for the engine's lifetime — a
+        term's df is a handful of longs)."""
         if self._gdf is not None:
             return {t: self._gdf[t] for t in lemmas if t in self._gdf}
         missing = [t for t in lemmas if t not in self._gdf_cache]
         if missing:
-            import glob as _glob
-
-            if not _glob.glob(f"{self.index_dir}/dict/segment=*"):
-                return None
-            found = dict(gdf_lookup(self.spark, self.index_dir, missing,
-                                    self.meta))
+            found = gdf_lookup(self.spark, self.index_dir, missing)
             for t in missing:
                 self._gdf_cache[t] = int(found.get(t, 0))
         return {t: self._gdf_cache[t] for t in lemmas
@@ -653,6 +636,7 @@ class QueryEngine:
         from .positions import decode_term_positions, read_positions
 
         seg_size = int(self.meta["seg_size"])
+        block_size = int(self.meta["block_size"])
         rows = read_positions(self.spark, self.index_dir, fetch).collect()
         by_lemma: dict[str, list] = {t: [] for t in fetch}
         for r in rows:
@@ -661,13 +645,13 @@ class QueryEngine:
             entries = []
             for r in rs:
                 docs, counts, flat = decode_term_positions(
-                    r["pdocs"], r["pcounts"], r["pstream"])
+                    r["postings"], r["tfs"], r["pstream"], block_size)
                 base = int(r["segment"]) * seg_size
                 # per-OCCURRENCE local doc ids, aligned with flat positions —
                 # exactly the decoded shape _intersect_slots consumes
                 occ = np.repeat(docs - base, counts)
                 mx = int(flat.max()) if flat.size else 0
-                nb = len(r["pdocs"]) + len(r["pcounts"]) + len(r["pstream"])
+                nb = len(r["postings"]) + len(r["tfs"]) + len(r["pstream"])
                 entries.append((int(r["segment"]), occ, flat, mx, nb))
             self._pos_total -= self._pos_nb.pop(lemma, 0)
             self._pos_cache[lemma] = entries
@@ -679,7 +663,7 @@ class QueryEngine:
     def phrase_rows(self, phrase: str, k: int = 10, site: str | None = None,
                     local_threshold_bytes: int = 64 << 20,
                     ) -> list[tuple[int, int]]:
-        """Warm phrase serving over the positional sidecar: (doc_id,
+        """Warm phrase serving over the index's positions: (doc_id,
         phrase_tf) pairs, row-identical to
         :func:`positions.phrase_topk_positions` (parity-tested) — but a
         repeated phrase (or one whose forms an earlier phrase warmed) costs
@@ -689,10 +673,9 @@ class QueryEngine:
         Same routing discipline as :meth:`topk_rows`: a phrase whose
         dict-estimated positional postings exceed ``local_threshold_bytes``
         is served by the distributed path WITHOUT collecting them (est =
-        dictionary df × the sidecar's measured bytes-per-posting; a form's
-        positional df equals its index df), with the post-fetch actual-size
-        check as the backstop for under-estimates and for sidecars built
-        before the stats existed."""
+        index df × the build's measured positional bytes-per-posting), with
+        the post-fetch actual-size check as the backstop for
+        under-estimates."""
         from ..analyzer import analyze_positions
         from .positions import (
             _intersect_slots,
@@ -703,9 +686,9 @@ class QueryEngine:
         self._check_fresh()
         if not has_positions(self.index_dir):
             raise ValueError(
-                "positional sidecar missing or stale (a rebuild clears "
-                "meta.has_positions) — run build_positions first, or use "
-                "the store-verify path")
+                "index has no positions (a rebuild without positions "
+                "clears meta.has_positions) — run build_positions first, "
+                "or use the store-verify path")
         qpat = [frozenset(p) for p in analyze_positions(phrase, *self._ana)]
         if not qpat:
             return []
@@ -727,19 +710,18 @@ class QueryEngine:
             if (self._pos_bytes is None
                     or self._pos_bytes > local_threshold_bytes):
                 gdf = self._gdf_for(forms)
-                if gdf is not None:
-                    est = sum(
-                        self._pos_nb[t] if t in self._pos_cache
-                        else gdf.get(t, 0) * self._pos_bpp
-                        for t in forms
-                    )
-                    if est > local_threshold_bytes:
-                        return _distributed()
+                est = sum(
+                    self._pos_nb[t] if t in self._pos_cache
+                    else gdf.get(t, 0) * self._pos_bpp
+                    for t in forms
+                )
+                if est > local_threshold_bytes:
+                    return _distributed()
             self._fetch_positions(fetch, floor=len(forms))
         if sum(self._pos_nb.get(t, 0) for t in forms) > local_threshold_bytes:
-            # under-estimate / legacy-sidecar backstop: route distributed,
-            # and drop the just-fetched oversized entries so they don't sit
-            # floor-pinned past pos_cache_bytes until a later fetch evicts
+            # under-estimate backstop: route distributed, and drop the
+            # just-fetched oversized entries so they don't sit floor-pinned
+            # past pos_cache_bytes until a later fetch evicts
             if fetch:
                 self._drop_pos(fetch)
             return _distributed()
@@ -820,9 +802,10 @@ class QueryEngine:
         own (pre-checked) working set.  ``sites`` additionally warms the
         site-interval cache so site-scoped queries skip their sidecar read.
         ``phrases`` warms the POSITIONAL cache the same way (one extra
-        pruned collect over the sidecar, per-form byte estimates from the
-        sidecar's measured bytes-per-posting) so a phrase workload's first
-        queries are as warm as its repeats."""
+        pruned, column-projected collect of the forms' positional streams,
+        per-form byte estimates from the build's measured positional
+        bytes-per-posting) so a phrase workload's first queries are as
+        warm as its repeats."""
         self._check_fresh()
         for s in sites or ():
             self._site(s)
@@ -839,9 +822,8 @@ class QueryEngine:
             if (self._index_bytes is None
                     or self._index_bytes > local_threshold_bytes):
                 gdf = self._gdf_for(fetch)
-                if gdf is not None:
-                    fetch = [t for t in fetch if gdf.get(t, 0) * self._bpp
-                             <= local_threshold_bytes]
+                fetch = [t for t in fetch if gdf.get(t, 0) * self._bpp
+                         <= local_threshold_bytes]
             if fetch:
                 self._fetch_terms(fetch, floor=len(lemmas), gdf_hint=gdf)
             n_fetched += len(fetch)
@@ -864,10 +846,9 @@ class QueryEngine:
                         self._pos_bytes is None
                         or self._pos_bytes > local_threshold_bytes):
                     gdf = self._gdf_for(pfetch)
-                    if gdf is not None:
-                        pfetch = [t for t in pfetch
-                                  if gdf.get(t, 0) * self._pos_bpp
-                                  <= local_threshold_bytes]
+                    pfetch = [t for t in pfetch
+                              if gdf.get(t, 0) * self._pos_bpp
+                              <= local_threshold_bytes]
                 if pfetch:
                     self._fetch_positions(pfetch, floor=len(forms))
                 n_fetched += len(pfetch)
@@ -888,9 +869,8 @@ class QueryEngine:
         bytes-per-posting, so a common term at 10^12 docs (GBs of postings)
         is routed to the workers without ever being collected — the r3
         fetch-before-guard hole.  The post-fetch actual-size guard stays as
-        the backstop for under-estimates (and for legacy indexes without a
-        dictionary, where no estimate is possible).  Exactness is
-        identical: same segment_topk code."""
+        the backstop for under-estimates.  Exactness is identical: same
+        segment_topk code."""
         self._check_fresh()
         if offset < 0:
             raise ValueError("offset must be >= 0")
@@ -1058,10 +1038,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     if gdf_override is not None:
         gdf = gdf_override
     else:
-        gdf = dict(gdf_lookup(spark, index_dir, all_lemmas, meta))
-        if not gdf:
-            gdf = {r["lemma"]: r["gdf"] for r in
-                   idx.groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()}
+        gdf = gdf_lookup(spark, index_dir, all_lemmas)
     if not gdf:
         return empty
     n_docs, avgdl, k1, b = meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]
@@ -1163,27 +1140,22 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
         return empty  # unknown site owns no pages
 
     if index_df is not None:
-        base = index_df.filter(F.col("lemma").isin(qlemmas))
+        idx = index_df.filter(F.col("lemma").isin(qlemmas))
     else:
-        base = read_index(spark, index_dir, qlemmas)
-    idx = base
+        idx = read_index(spark, index_dir, qlemmas)
     if intervals:
         # partition pruning on segment=: a site's docs live only in the
         # segments its intervals overlap
         segs = sorted(_overlapping_segments(intervals, int(meta["seg_size"])))
         idx = idx.filter(F.col("segment").isin(segs))
-    # global df per lemma: preloaded dict (QueryEngine) > pruned read of the
-    # build-time dictionary artifact > aggregate over index rows (legacy).
-    # The legacy aggregate runs over the UNscoped rows: df (hence idf) is a
-    # corpus-global statistic — summing only the site's segments would score
-    # the same query differently per serving path.
+    # global df per lemma: preloaded dict (QueryEngine) > pruned lemma/df
+    # read of the index.  Never scoped to the site's segments: df (hence
+    # idf) is a corpus-global statistic — summing only the site's segments
+    # would score the same query differently per serving path.
     if gdf_override is not None:
         gdf = gdf_override
     else:
-        gdf = dict(gdf_lookup(spark, index_dir, qlemmas, meta))
-        if not gdf:
-            gdf = {r["lemma"]: r["gdf"] for r in
-                   base.groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()}
+        gdf = gdf_lookup(spark, index_dir, qlemmas)
     if not gdf:
         return empty
     n_docs, avgdl, k1, b = meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]

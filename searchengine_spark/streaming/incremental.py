@@ -104,38 +104,35 @@ def changed_segments(old_ingested: DataFrame, new_ingested: DataFrame,
 
 
 def rebuild_segments(docs_ingested: DataFrame, index_dir: str,
-                     segs: list[int]) -> list[int]:
+                     segs: list[int], positions: bool | None = None
+                     ) -> list[int]:
     """THE segment-rebuild primitive: invalidate the given segments'
     manifests and resume the build over them under the pinned seg_size /
     avgdl (MaxScore's block-max bounds and query scores must share one
     avgdl; a full rebuild refreshes it).  Every incremental path — doc-id
     upserts, streaming micro-batches, store deletes — funnels through
-    here so the rebuild contract lives in one place."""
+    here so the rebuild contract lives in one place.
+
+    ``positions`` (None = keep the index's ``has_positions``) decides
+    whether the rebuilt rows carry positions; they ride the SAME analysis
+    pass and merge as the postings.  With positions on, any other segment
+    whose rows lack them is rebuilt too, so the flag ends on."""
     from ..index.builder import build_index
 
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
-    # ONLY the meta flag is a sound re-enable signal: leftover positions/
-    # dirs with the flag cleared mean a previous rebuild disabled the
-    # sidecar (possibly with some segments' positions already deleted) —
-    # refreshing just THIS call's segments would re-enable an incomplete
-    # sidecar and silently drop phrase hits from the gap segments.  A
-    # full build_positions() is the recovery path for that state.
-    had_positions = bool(meta.get("has_positions"))
+    if positions is None:
+        positions = bool(meta.get("has_positions"))
     for s in segs:
         p = pathlib.Path(f"{index_dir}/manifests/segment={s}.json")
         if p.exists():
             p.unlink()
-    # positions=had_positions: the sidecar for the rebuilt segments rides
-    # the SAME analysis pass as their data (fused kernel — no second scan
-    # of the rebuilt ranges); stale positions are never served because the
-    # meta rewrite clears has_positions until the refresh lands
     build_index(
         docs_ingested,
         index_dir,
         resume=True,  # seg_size/salt/buckets/block_size/avgdl pinned from meta
         fixed_avgdl=meta["avgdl"],
-        positions=had_positions,
+        positions=positions,
     )
     return segs
 

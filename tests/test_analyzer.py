@@ -210,21 +210,34 @@ def test_porter_analyzer_three_way_agree(spark, corpus_rows):
     assert any(k[1] == "relat" for k in pure)  # porter actually fired
 
 
-def test_doc_term_stats_arrow_equals_pandas(spark, corpus_rows):
-    """The mapInArrow (pyarrow compute) and mapInPandas executions of the
-    fused tf/dl stage must agree exactly — including multi-lemma expansion
-    and zero-lemma docs."""
-    from searchengine_spark.analyzer import doc_term_stats_arrow, doc_term_stats_pandas
+def test_doc_term_stats_arrow_equals_oracle(spark, corpus_rows):
+    """The mapInArrow (pyarrow compute) fused tf/dl stage must equal the
+    pure-Python analyze() oracle exactly — including multi-lemma expansion
+    and zero-lemma docs (which emit no rows)."""
+    from collections import Counter
+
+    from searchengine_spark.analyzer import analyze, doc_term_stats_arrow
     from searchengine_spark.schema import DOCS_SCHEMA
 
-    df = spark.createDataFrame(corpus_rows[:80], DOCS_SCHEMA).selectExpr(
+    extra = [("r/x", f"x{i}.py", "c", "py", t) for i, t in enumerate(
+        ["", "   ", "the and for", "норма geese норма tamok"])]
+    df = spark.createDataFrame(corpus_rows[:80] + extra,
+                               DOCS_SCHEMA).selectExpr(
         "repo", "abs(hash(path)) as doc_id", "content"
     )
     a = {(r["repo"], r["doc_id"], r["lemma"]): (r["tf"], r["dl"])
          for r in doc_term_stats_arrow(df).collect()}
-    p = {(r["repo"], r["doc_id"], r["lemma"]): (r["tf"], r["dl"])
-         for r in doc_term_stats_pandas(df).collect()}
-    assert a == p and len(a) > 1000
+    want = {}
+    for r in df.collect():
+        stream = analyze(r["content"])
+        for lemma, tf in Counter(stream).items():
+            want[(r["repo"], r["doc_id"], lemma)] = (tf, len(stream))
+    assert a == want and len(a) > 1000
+    lemmas = {lm for _, _, lm in a}
+    assert {"нормаль", "goose"} <= lemmas  # multi-lemma expansion fired
+    docs = {d for _, d, _ in a}
+    zero = [r["doc_id"] for r in df.collect() if not analyze(r["content"])]
+    assert len(zero) >= 3 and not docs & set(zero)
 
 
 def test_doc_term_stats_arrow_stemmer_normalizers(spark, corpus_rows):

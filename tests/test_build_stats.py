@@ -3,7 +3,7 @@ accumulators) against the queries they replaced.
 
 ``build_index`` derives avgdl, the manifests' lineage and written counts,
 the sites sidecar and the positional stats from values the analysis kernel
-and the two merge encoders tally while they run, instead of querying the
+and the merge encoder tally while they run, instead of querying the
 corpus and the written files again.  The oracle here IS those queries: the
 gaps-and-islands window for sites, the per-segment lineage aggregation
 over the docs, the aggregation over the written postings and positions,
@@ -21,9 +21,12 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.analyzer import doc_term_stats_arrow
 from searchengine_spark.corpus import gen_corpus_local
-from searchengine_spark.index.builder import SITES_SCHEMA, build_index
+from searchengine_spark.index.builder import (
+    INDEX_OUT_SCHEMA,
+    SITES_SCHEMA,
+    build_index,
+)
 from searchengine_spark.index.checkpoint import all_manifests
-from searchengine_spark.index.positions import POS_SCHEMA_DDL
 from searchengine_spark.streaming.incremental import rebuild_segments
 
 N_DOCS = 180
@@ -54,18 +57,22 @@ def _oracle(spark, docs, idx):
             F.count("*").alias("docs"),
             F.expr("bit_xor(cast(conv(substring(sha256, 1, 15), 16, 10) "
                    "as bigint))").alias("sha_xor")).collect()}
+    data = (spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{idx}/data")
+            if _has(idx, "data") else None)
     written = {
-        r["segment"]: r for r in spark.read.parquet(f"{idx}/data")
-        .groupBy("segment").agg(
+        r["segment"]: r for r in data.groupBy("segment").agg(
             F.count("*").alias("terms"), F.sum("df").alias("postings"),
             F.sum(F.length("postings") + F.length("tfs")
                   + F.length("dls")).alias("bytes")).collect()
-    } if _has(idx, "data") else {}
+    } if data is not None else {}
+    # a positional fetch moves postings + tfs + pstream
     pos = {
-        r["segment"]: r for r in spark.read.schema(POS_SCHEMA_DDL)
-        .parquet(f"{idx}/positions").groupBy("segment").agg(
-            F.sum("df").alias("p"), F.sum("nbytes").alias("b")).collect()
-    } if _has(idx, "positions") else {}
+        r["segment"]: r for r in data.filter(F.col("pstream").isNotNull())
+        .groupBy("segment").agg(
+            F.sum("df").alias("p"),
+            F.sum(F.length("postings") + F.length("tfs")
+                  + F.length("pstream")).alias("b")).collect()
+    } if data is not None else {}
     sites = sorted(
         tuple(r) for r in docs.select(seg, "repo", "doc_id")
         .withColumn("island", F.col("doc_id") - F.row_number().over(
@@ -100,11 +107,12 @@ def _check(spark, docs, idx):
             "posting_count": wrt["postings"] if wrt else 0,
             "posting_bytes": wrt["bytes"] if wrt else 0,
             "input_sha_xor": (lin["sha_xor"] or 0) if lin else 0,
+            "positions": True,
+            "pos_posting_bytes": p["b"] if p else 0,
             "status": "done",
         }
-        if _has(idx, "data"):  # an emptied index has no sidecar to count
-            want["pos_posting_count"] = p["p"] if p else 0
-            want["pos_posting_bytes"] = p["b"] if p else 0
+        # every written row carries positions
+        assert (p["p"] if p else 0) == want["posting_count"], s
         assert m == want, s
     assert meta["n_docs"] == docs.count()
     tot_p = sum(r["postings"] for r in written.values())
@@ -191,17 +199,18 @@ def _jobs(spark, group, fn):
 
 
 def test_build_job_count(spark, tmp_path):
-    """A fresh positional build launches at most 9 Spark jobs: the
+    """A fresh positional build launches at most 6 Spark jobs: the
     count/max/sha scan (a map stage and its result), the runs checkpoint,
-    the data merge-write (two), the dict write, the sites write and the
-    positions merge-write (two).  A one-segment rebuild runs the same
-    jobs.  Statistics re-derived by queries would each add jobs here."""
+    the one merge-write of postings and positions (two) and the sites
+    write.  A one-segment rebuild runs the same jobs.  Statistics
+    re-derived by queries, or a second dataset written beside data/, would
+    each add jobs here."""
     docs = _docs(spark, gen_corpus_local(120))
     idx = str(tmp_path / "idx")
     fresh = _jobs(spark, "stats-fresh", lambda: build_index(
         docs, idx, n_segments=N_SEGMENTS, salt=4, n_buckets=8,
         resume=False, positions=True))
-    assert fresh <= 9
+    assert fresh <= 6
     rebuild = _jobs(spark, "stats-rebuild",
                     lambda: rebuild_segments(docs, idx, [1]))
-    assert rebuild <= 9
+    assert rebuild <= 6

@@ -186,7 +186,7 @@ def test_pinned_default_unchanged(spark, tmp_path):
 def test_porter_index_end_to_end(spark, tmp_path):
     """normalizer='porter' on the physical path: regular inflections meet
     at the stem on both sides (build stems inside the Arrow run kernel,
-    queries stemmed by index_analyzer), and the positional sidecar serves
+    queries stemmed by index_analyzer), and the index's positions serve
     phrases across inflections."""
     from searchengine_spark.index.positions import build_positions
 
@@ -212,7 +212,7 @@ def test_porter_index_end_to_end(spark, tmp_path):
         assert got == [0, 1], q
     eng = QueryEngine(spark, idx)
     assert sorted(d for d, _ in eng.topk_rows("connecting", 10)) == [0, 1]
-    # positional sidecar on a STEMMED index: phrase adjacency holds in
+    # positions on a STEMMED index: phrase adjacency holds in
     # stemmed positions — "connected pools" matches doc 0's "connection
     # pools" (both sides analyze to [connect, pool] at adjacent slots)
     build_positions(docs, idx)
@@ -319,7 +319,7 @@ def test_dict_porter_index_end_to_end(spark, tmp_path):
     build_index(docs, idx, n_segments=2, salt=2, n_buckets=4)
     with open(f"{idx}/meta.json") as fh:
         assert json.load(fh)["normalizer"] == "dict_porter"
-    # positional sidecar under the layered normalizer: an expanded form
+    # positions under the layered normalizer: an expanded form
     # and a raw porter output must keep distinct provenance ("gone home"
     # matches "went home" via the dict lemma 'go' at one slot, while the
     # porter side handles "fixing" -> "fix")
@@ -440,7 +440,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
         got = sorted(r["doc_id"] for r in _topk(spark, idx, q, 200).collect())
         assert got == want, q
 
-    # (d) cross-inflection phrase over the positional sidecar: the doc
+    # (d) cross-inflection phrase over the index's positions: the doc
     # bigram "<lx0>ed <lx1>ing" matches under DIFFERENT suffixes
     pwant = sorted(r["doc_id"] for r in id_rows
                    if f"{lx0}ed {lx1}ing" in r["content"])
@@ -473,7 +473,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
 
 def test_dict_porter_incremental_rebuild_refreshes_positions(spark, tmp_path):
     """rebuild_segments on a layered-normalizer index must keep BOTH the
-    normalizer and a fresh positional sidecar (the refresh resolves the
+    normalizer and fresh positions (the refresh resolves the
     stemmed positional path from meta)."""
     from searchengine_spark.index.positions import build_positions
     from searchengine_spark.streaming.incremental import rebuild_segments

@@ -426,7 +426,7 @@ def test_read_store_kbs_direct_path_pruning(spark, tmp_path):
 def test_compact_job_sheds_segments_and_matches_fresh_build(spark, tmp_path):
     """jobs/compact.py end-to-end: after deletes leave id holes and appends
     grow the tail, compaction re-ranks densely and the full rebuild (a) sheds
-    the now-empty tail segments everywhere (data/dict/manifests), (b) keeps
+    the now-empty tail segments everywhere (data/sites/manifests), (b) keeps
     the pinned codec params, (c) serves EXACTLY what a fresh build over the
     surviving corpus serves."""
     import importlib.util
@@ -465,7 +465,8 @@ def test_compact_job_sheds_segments_and_matches_fresh_build(spark, tmp_path):
     assert out["index"]["n_segments"] == 3  # ceil(30/10): shed from 6 dirs
     assert out["index"]["seg_size"] == seg_size
 
-    for sub in ("data", "dict", "sites"):
+    assert not os.path.exists(f"{idx}/dict")  # no dictionary dataset
+    for sub in ("data", "sites"):
         segs = {int(n.split("=")[1]) for n in os.listdir(f"{idx}/{sub}")
                 if n.startswith("segment=")}
         assert segs == {0, 1, 2}, (sub, segs)

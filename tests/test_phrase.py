@@ -87,13 +87,13 @@ def test_phrase_multiform_occupies_one_position():
 def test_phrase_high_df_guard_fails_loudly(spark, phrase_env):
     """r4 VERDICT minor #2: on a POSITIONLESS index, a phrase whose
     dictionary-df estimate exceeds max_candidate_df must fail loudly with
-    the build-the-sidecar hint (not silently run the O(corpus) verify);
+    the build-with-positions hint (not silently run the O(corpus) verify);
     force=True downgrades to a warning and returns the same rows."""
     store, idx = phrase_env
     phrase = "kw_pair_alpha kw_pair_beta"
-    with pytest.raises(ValueError, match="positional sidecar"):
+    with pytest.raises(ValueError, match="Build the index with positions"):
         phrase_topk(spark, idx, store, phrase, k=10, max_candidate_df=1)
-    with pytest.warns(UserWarning, match="positional sidecar"):
+    with pytest.warns(UserWarning, match="Build the index with positions"):
         forced = [(r["doc_id"], r["phrase_tf"]) for r in
                   phrase_topk(spark, idx, store, phrase, k=10,
                               max_candidate_df=1, force=True).collect()]

@@ -1,5 +1,5 @@
-"""Positional-sidecar phrase search (index/positions.py): row-identity with
-the store-verify path, brute-force oracle, codec round-trip, bucket-pruned
+"""Positional phrase search (index/positions.py): row-identity with the
+store-verify path, brute-force oracle, codec round-trip, bucket-pruned
 reads, and incremental-rebuild freshness (r3 VERDICT item 2)."""
 
 from __future__ import annotations
@@ -63,16 +63,48 @@ def test_codec_roundtrip_randomized():
         assert np.array_equal(_delta_decode(enc, firsts), flat)
 
 
+def test_decode_term_positions_block_restarts():
+    """Docs decode from the codec's ``postings`` stream alone, which
+    restarts absolute at every block: randomized lists over several blocks
+    round-trip through encode_postings + the pstream delta codec."""
+    from searchengine_spark.index.codec import encode_postings, varbyte_encode
+    from searchengine_spark.index.positions import _delta_encode
+
+    rng = np.random.default_rng(11)
+    for block_size in (1, 3, 4, 128):
+        n = int(rng.integers(1, 30))
+        docs = np.sort(rng.choice(10_000, size=n, replace=False))
+        counts = rng.integers(1, 6, size=n)
+        flat = np.concatenate([np.sort(rng.choice(300, size=int(c),
+                                                  replace=False))
+                               for c in counts]).astype(np.int64)
+        firsts = np.zeros(flat.size, dtype=bool)
+        firsts[np.cumsum(counts) - counts] = True
+        enc = encode_postings(docs, counts, counts, 5.0,
+                              block_size=block_size)
+        pstream = varbyte_encode(_delta_encode(flat, firsts)).tobytes()
+        d, c, f = decode_term_positions(enc.docs, enc.tfs, pstream,
+                                        block_size)
+        assert np.array_equal(d, docs)
+        assert np.array_equal(c, counts)
+        assert np.array_equal(f, flat)
+
+
 def test_positions_df_matches_dictionary(spark, env):
-    """Sidecar df per (segment, lemma) must equal the main index's df —
-    both count the docs that carry the lemma in that segment."""
+    """The doc count decoded from each positional row must equal the
+    index's df — both count the docs that carry the lemma in that
+    segment — and every posting row has its positions."""
     _, idx = env
+    import json
+
+    with open(f"{idx}/meta.json") as fh:
+        block_size = json.load(fh)["block_size"]
     main = {(r["segment"], r["lemma"]): r["df"]
             for r in read_index(spark, idx).select(
                 "segment", "lemma", "df").collect()}
-    side = {(r["segment"], r["lemma"]): r["df"]
-            for r in read_positions(spark, idx).select(
-                "segment", "lemma", "df").collect()}
+    side = {(r["segment"], r["lemma"]): decode_term_positions(
+                r["postings"], r["tfs"], r["pstream"], block_size)[0].size
+            for r in read_positions(spark, idx).collect()}
     assert side == main
 
 
@@ -80,6 +112,10 @@ def test_decoded_positions_match_analyzer(spark, env):
     """Decode a common term's positions in one segment and compare with the
     pinned analyzer's positional stream on the raw docs."""
     store, idx = env
+    import json
+
+    with open(f"{idx}/meta.json") as fh:
+        block_size = json.load(fh)["block_size"]
     rows = read_positions(spark, idx, ["tamok"]).collect()
     assert rows
     docs_by_id = {r["doc_id"]: r["content"] for r in
@@ -87,7 +123,7 @@ def test_decoded_positions_match_analyzer(spark, env):
                       "doc_id", "content").collect()}
     for r in rows:
         docs, counts, flat = decode_term_positions(
-            r["pdocs"], r["pcounts"], r["pstream"])
+            r["postings"], r["tfs"], r["pstream"], block_size)
         offs = np.cumsum(counts) - counts
         for i, d in enumerate(docs):
             want = [j for j, fs in
@@ -125,8 +161,9 @@ def test_positions_match_brute_force_oracle(spark, env):
 
 
 def test_auto_dispatch_and_store_free_serving(spark, env):
-    """With a fresh sidecar, impl='auto' serves positionally — store_dir
-    may be None; without the flag it falls back to store-verify."""
+    """With positions on every segment, impl='auto' serves positionally —
+    store_dir may be None; without the flag it falls back to
+    store-verify."""
     store, idx = env
     assert has_positions(idx)
     got = [(r["doc_id"], r["phrase_tf"]) for r in
@@ -158,9 +195,10 @@ def test_positions_read_is_bucket_pruned(spark, env):
 
 
 def test_rebuild_refreshes_positions_and_stays_exact(spark, env, tmp_path):
-    """An incremental rebuild with a live sidecar must refresh the rebuilt
-    segments' positions (rebuild_segments wires build_positions) and the
-    positional path must see the new content — never stale positions."""
+    """An incremental rebuild of a positional index must refresh the
+    rebuilt segments' positions (rebuild_segments keeps positions on) and
+    the positional path must see the new content — never stale
+    positions."""
     from searchengine_spark.streaming.incremental import rebuild_segments
 
     rows = gen_corpus_local(120)
@@ -195,7 +233,7 @@ def test_rebuild_refreshes_positions_and_stays_exact(spark, env, tmp_path):
 def test_phrase_batch_matches_single_path(spark, env):
     """phrase_topk_batch must return, per qid, exactly the single-phrase
     positional path's rows — including the empty cases — while scanning the
-    sidecar once for the whole workload."""
+    positional columns once for the whole workload."""
     from searchengine_spark.index.positions import phrase_topk_batch
 
     _, idx = env
@@ -211,8 +249,9 @@ def test_phrase_batch_matches_single_path(spark, env):
 
 def test_compact_job_refreshes_positions(spark, tmp_path):
     """jobs/compact.py re-ranks every doc_id; an index that served phrases
-    before compaction must keep doing so after — full sidecar refresh, and
-    results match a brute-force re-oracle over the compacted store."""
+    before compaction must keep doing so after — every row's positions
+    rebuilt, and results match a brute-force re-oracle over the compacted
+    store."""
     import sys
     from pathlib import Path
 
@@ -279,10 +318,10 @@ def test_phrase_site_scope_both_paths(spark, env):
 
 
 def test_rebuild_never_reenables_incomplete_sidecar(spark, tmp_path):
-    """Review fix: leftover positions/ dirs with the meta flag CLEARED mean
-    a previous rebuild disabled the sidecar (possibly with gaps) —
-    rebuild_segments must NOT re-enable it from this call's segments alone,
-    and the positional API must refuse to serve it."""
+    """Review fix: with the meta flag CLEARED, a previous rebuild left
+    segments without positions (a gap) — rebuild_segments must NOT
+    re-enable positions from this call's segments alone, and the
+    positional API must refuse to serve them."""
     import json as _json
 
     from searchengine_spark.corpus import ingest
@@ -294,16 +333,11 @@ def test_rebuild_never_reenables_incomplete_sidecar(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(docs, idx, n_segments=3, salt=4, n_buckets=4, resume=False)
     build_positions(docs, idx)
-    # simulate the disabled-with-gaps state: flag cleared, one segment's
-    # positions deleted (as a flagless build_index rebuild would leave it)
-    import shutil
-
+    # the disabled-with-gaps state: one segment rebuilt without positions
+    # (as a flagless build_index rebuild leaves it) clears the flag
+    rebuild_segments(docs, idx, [1], positions=False)
     with open(f"{idx}/meta.json") as fh:
-        meta = _json.load(fh)
-    meta.pop("has_positions", None)
-    with open(f"{idx}/meta.json", "w") as fh:
-        _json.dump(meta, fh)
-    shutil.rmtree(f"{idx}/positions/segment=1")
+        assert _json.load(fh)["has_positions"] is False
     assert not has_positions(idx)
 
     rebuild_segments(docs, idx, [0])

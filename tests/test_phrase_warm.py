@@ -201,3 +201,18 @@ def test_sidecar_stats_in_manifests_and_meta(spark, tmp_path):
     assert meta2["pos_posting_bytes"] == sum(
         m["pos_posting_bytes"] for m in manifests2)
     assert meta2["pos_posting_bytes"] == meta["pos_posting_bytes"]
+
+
+def test_engine_cache_holds_no_positions(spark, env):
+    """The engine's Spark-cached index relation holds the posting columns
+    only: positional streams are fetched per form from disk and never
+    enter the Spark cache, even after phrase serving."""
+    idx, _ = env
+    eng = QueryEngine(spark, idx)
+    assert eng.topk_rows("tamok velsor", k=5)
+    assert eng.phrase_rows("sorvel tamok", k=5)
+    assert "pstream" not in eng.index_df.columns
+    plan = eng.index_df._jdf.queryExecution().withCachedData().toString()
+    rel = [ln for ln in plan.splitlines() if "InMemoryRelation" in ln]
+    assert rel and "postings" in rel[0] and "pstream" not in rel[0], plan
+    eng.index_df.unpersist()

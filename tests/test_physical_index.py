@@ -183,11 +183,14 @@ def test_query_engine_fast_path_equals_distributed(spark, index_dir):
 
 
 def test_dictionary_artifact(spark, index_dir, logical_index):
-    """The build-time dict (per-segment rows) sums to global df per lemma."""
+    """The index's lemma/df columns (per-segment rows, read alone by
+    column projection) sum to global df per lemma."""
     from pyspark.sql import functions as F
 
+    from searchengine_spark.index.builder import read_index
+
     tf, _ = logical_index
-    d = spark.read.parquet(f"{index_dir}/dict")
+    d = read_index(spark, index_dir, columns=("lemma", "df"))
     got = {r["lemma"]: r["gdf"] for r in
            d.groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()}
     want = {r["lemma"]: r["n"] for r in
@@ -550,7 +553,6 @@ def test_meta_write_is_atomic(index_dir, monkeypatch):
     import os
 
     from searchengine_spark.index import checkpoint
-    from searchengine_spark.index.positions import _positions_bookkeeping
 
     with open(f"{index_dir}/meta.json") as fh:
         before = fh.read()
@@ -562,7 +564,8 @@ def test_meta_write_is_atomic(index_dir, monkeypatch):
 
     monkeypatch.setattr(checkpoint.json, "dump", _torn_dump)
     with pytest.raises(OSError, match="disk full"):
-        _positions_bookkeeping(None, index_dir, [])
+        checkpoint.write_json_atomic(f"{index_dir}/meta.json",
+                                     json.loads(before), indent=1)
     monkeypatch.setattr(checkpoint.json, "dump", real_dump)
 
     with open(f"{index_dir}/meta.json") as fh:
