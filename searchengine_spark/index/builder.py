@@ -65,7 +65,7 @@ from pyspark.sql import types as T
 from .runs import merge_sites
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import Column, DataFrame, SparkSession
 
 K1, B = 1.2, 0.75  # pinned BM25 params baked into block-max weights
 
@@ -643,14 +643,43 @@ def read_index(spark: SparkSession, out_dir: str,
     with open(f"{out_dir}/meta.json") as fh:
         meta = json.load(fh)
     if not _glob.glob(f"{out_dir}/data/segment=*"):
-        return spark.createDataFrame([], INDEX_OUT_SCHEMA).select(*columns)
-    # explicit schema: partition discovery still lists dirs, but no parquet
-    # footer sampling for schema inference (O(1) planning per read)
-    df = spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{out_dir}/data")
-    if lemmas is not None:
-        buckets = sorted({hash_bucket(x, meta["n_buckets"]) for x in lemmas})
-        df = df.filter(F.col("bucket").isin(buckets)).filter(F.col("lemma").isin(lemmas))
-    return df.select(*columns)
+        df = spark.createDataFrame([], INDEX_OUT_SCHEMA)
+    else:
+        # explicit schema: partition discovery still lists dirs, but no
+        # parquet footer sampling for schema inference (O(1) planning)
+        df = spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{out_dir}/data")
+    if lemmas is None:
+        return df.select(*columns)
+    return prune_index(df, lemmas, meta["n_buckets"], columns)
+
+
+def prune_index(df: DataFrame, lemmas: list[str], n_buckets: int,
+                columns=POSTING_COLS) -> DataFrame:
+    """``lemmas``' rows of an unfiltered ``data/`` frame: pruned to their
+    bucket= dirs (partition pruning), filtered to the exact terms and
+    projected to ``columns`` (names or Column expressions).  Deriving
+    every read from one such frame reuses its file listing."""
+    buckets = sorted({hash_bucket(x, n_buckets) for x in lemmas})
+    return (df.filter(isin_expr("bucket", buckets))
+            .filter(isin_expr("lemma", lemmas)).select(*columns))
+
+
+def isin_expr(col: str, values) -> Column:
+    """``col IN (values)`` for str or int ``values``, parsed from one SQL
+    literal list (strings escaped for the default, backslash-escaping
+    parser): ``Column.isin`` makes two py4j round trips per value, about
+    90 ms for 185 lemmas on a 4-core host, more than the pruned read it
+    filters.  Catalyst
+    plans both forms alike (an INSET past ten values)."""
+    if not values:
+        return F.lit(False)
+
+    def lit(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return F.expr(f"{col} IN ({','.join(map(lit, values))})")
 
 
 def read_site_ranges(spark: SparkSession, out_dir: str,

@@ -66,20 +66,26 @@ if TYPE_CHECKING:
 POS_COLS = ("segment", "lemma", "postings", "tfs", "pstream")
 
 
-def has_positions(index_dir: str) -> bool:
-    """Positional serving is enabled iff meta carries the flag, which the
-    build sets only when every segment's rows carry positions.  An index
-    in an older layout (no ``format`` marker: positions in a sidecar, not
-    on its rows) has none to serve."""
+def positions_enabled(meta: dict) -> bool:
+    """Positional serving is enabled iff ``meta`` carries the flag, which
+    the build sets only when every segment's rows carry positions.  An
+    index in an older layout (no ``format`` marker: positions in a
+    sidecar, not on its rows) has none to serve."""
     from .builder import INDEX_FORMAT
 
+    return meta.get("format") == INDEX_FORMAT and bool(
+        meta.get("has_positions"))
+
+
+def has_positions(index_dir: str) -> bool:
+    """:func:`positions_enabled` of the index's ``meta.json`` (False when
+    there is none)."""
     try:
         with open(f"{index_dir}/meta.json") as fh:
             meta = json.load(fh)
     except FileNotFoundError:
         return False
-    return meta.get("format") == INDEX_FORMAT and bool(
-        meta.get("has_positions"))
+    return positions_enabled(meta)
 
 
 def _delta_encode(vals: np.ndarray, firsts: np.ndarray) -> np.ndarray:

@@ -38,6 +38,7 @@ every term) with the same block-skipping lookups, rarest term driving.
 from __future__ import annotations
 
 import json
+from collections import OrderedDict
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -46,7 +47,7 @@ from ..analyzer import analyze
 from .codec import decode_block
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import Column, DataFrame, SparkSession
 
 
 class TermPostings:
@@ -379,17 +380,85 @@ def index_fingerprint(index_dir: str) -> tuple:
     return tuple(out)
 
 
+class _ByteLRU:
+    """Per-lemma cache of decoded entries, LRU-bounded by entry count AND
+    total compressed bytes, so it never grows O(vocabulary) or O(hot-term).
+    :meth:`evict` never drops below ``floor`` entries: the current working
+    set must survive its own fetch."""
+
+    def __init__(self, max_entries: int, max_bytes: int):
+        self.max_entries, self.max_bytes = max_entries, max_bytes
+        self._items: OrderedDict[str, tuple[list, int]] = OrderedDict()
+        self.total = 0  # Σ bytes of the resident entries
+
+    def __contains__(self, key: str) -> bool:
+        return key in self._items
+
+    def __iter__(self):
+        return iter(self._items)
+
+    def __len__(self) -> int:
+        return len(self._items)
+
+    def get(self, key: str) -> list:
+        return self._items[key][0] if key in self._items else []
+
+    def nbytes(self, key: str) -> int:
+        return self._items[key][1] if key in self._items else 0
+
+    def touch(self, keys: list[str]) -> list[str]:
+        """Mark the resident ``keys`` most recently used; return the others
+        (what the caller has to fetch)."""
+        missing = []
+        for key in keys:
+            if key in self._items:
+                self._items.move_to_end(key)
+            else:
+                missing.append(key)
+        return missing
+
+    def put(self, key: str, entries: list, nbytes: int) -> None:
+        if key in self._items:
+            self.total -= self._items.pop(key)[1]
+        self._items[key] = (entries, nbytes)
+        self.total += nbytes
+
+    def evict(self, floor: int = 0) -> None:
+        while len(self._items) > floor and (
+            len(self._items) > self.max_entries or self.total > self.max_bytes
+        ):
+            self.total -= self._items.popitem(last=False)[1][1]
+
+    def drop(self, keys: list[str]) -> None:
+        """Remove ``keys`` (the post-fetch backstop's cleanup: an
+        under-estimated fetch that turned out over-threshold must not stay
+        resident past the byte bound its floor-protected fetch just
+        pierced), then evict with no floor, back inside the budget."""
+        for key in keys:
+            if key in self._items:
+                self.total -= self._items.pop(key)[1]
+        self.evict()
+
+
 class QueryEngine:
-    """Warm serving wrapper: caches meta, the (Spark-cached) index DataFrame
-    and a bounded LRU of term rows, so each query is at most one Spark job.
+    """Warm serving wrapper: caches meta, one listing of the index's
+    ``data/`` and driver-side LRUs of decoded term and positional rows, so
+    a query is at most a df lookup plus one Spark job, and a repeated one
+    runs none.
+
+    It pins no Spark cache.  Every read derives from one uncached frame
+    over ``data/`` (:attr:`index_df`, listed once per load) and is
+    bucket-pruned, lemma-filtered and column-projected (:meth:`_read`), so
+    a read touches only its lemmas' buckets and executors hold nothing
+    between queries; the driver LRUs serve repeats.
 
     Defaults are the 10^12-file-safe ones: ``preload_dict=False`` (the full
     dictionary is O(vocabulary) — gdf comes free with the bucket-pruned term
-    rows, or from a pruned lemma/df read on the distributed path); the term-row
-    cache is LRU-bounded.  Every query first checks
+    rows, or from a pruned lemma/df read on the distributed path); both
+    LRUs are bounded by entries and bytes.  Every query first checks
     :func:`index_fingerprint`: an incremental rebuild under a live engine
-    invalidates the cached index DataFrame and warm term rows instead of
-    silently serving stale postings."""
+    re-lists the index and drops the warm rows instead of silently serving
+    stale postings."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  preload_dict: bool = False, term_cache_size: int = 4096,
@@ -399,24 +468,18 @@ class QueryEngine:
         self.spark = spark
         self.index_dir = index_dir
         self._preload_dict = preload_dict
-        self._term_cache_size = term_cache_size
-        self._term_cache_bytes = term_cache_bytes
-        self._pos_cache_size = pos_cache_size
-        self._pos_cache_bytes = pos_cache_bytes
+        self._term_bounds = (term_cache_size, term_cache_bytes)
+        self._pos_bounds = (pos_cache_size, pos_cache_bytes)
         self._load()
 
     def _load(self) -> None:
-        from collections import OrderedDict
-
-        from .builder import read_index
+        from .builder import INDEX_OUT_SCHEMA, index_analyzer, read_index
 
         with open(f"{self.index_dir}/meta.json") as fh:
             self.meta = json.load(fh)
         self._fp = index_fingerprint(self.index_dir)
         # the index's morphology (normalizer + dict sidecar) is part of its
         # identity: queries must analyze with the table the build used
-        from .builder import index_analyzer
-
         self._ana = index_analyzer(self.spark, self.index_dir, self.meta)
         # build-time average posting width: df * _bpp predicts a term's
         # driver-side bytes BEFORE any collect.  Indexes built before the
@@ -426,31 +489,24 @@ class QueryEngine:
         # no term can exceed it, so small indexes skip the dict job.
         self._bpp = float(self.meta.get("bytes_per_posting") or 8.0)
         self._index_bytes: int | None = self.meta.get("posting_bytes")
-        # .cache() only marks the plan; the FIRST query that reads through
-        # it materializes the whole relation — every partition, whatever
-        # buckets the query's filter names (measured: one topk_rows on a
-        # fresh engine cached all 4 of 4 partitions of a 4,000-doc index).
-        # The cached relation holds the posting columns only (read_index's
-        # default projection): positional streams are fetched per form
-        # from disk and never enter the Spark cache.
-        self.index_df = read_index(self.spark, self.index_dir).cache()
-        self._term_cache: OrderedDict[str, list] = OrderedDict()
-        self._cache_nb: dict[str, int] = {}   # lemma -> cached posting bytes
-        self._cache_total = 0                 # Σ _cache_nb (LRU byte bound)
-        # warm PHRASE serving: positional postings get their own LRU (same
-        # byte discipline; estimates use the build's measured
-        # pos_bytes_per_posting — postings + tfs + pstream per posting, so
-        # the index df prices both fetches)
-        # fallback mirrors _bpp's: an index without the stat must still
-        # ESTIMATE (conservatively) rather than skip the guard — skipping
-        # would collect a common form's full positional stream to the
-        # driver unguarded, the exact OOM the estimate exists to stop
+        # the positional twins price postings + tfs + pstream per posting,
+        # so the index df prices both fetches.  The fallback mirrors
+        # _bpp's: an index without the stat must still ESTIMATE
+        # (conservatively) rather than skip the guard — skipping would
+        # collect a common form's full positional stream to the driver
+        # unguarded, the exact OOM the estimate exists to stop
         self._pos_bpp = float(
             self.meta.get("pos_bytes_per_posting") or 16.0)
         self._pos_bytes: int | None = self.meta.get("pos_posting_bytes")
-        self._pos_cache: OrderedDict[str, list] = OrderedDict()
-        self._pos_nb: dict[str, int] = {}
-        self._pos_total = 0
+        # no .cache(): a cached relation is materialized whole by its first
+        # read, whatever buckets that read filters on (one topk_rows on a
+        # fresh engine cached 4 of 4 partitions of a 4,000-doc index), and
+        # the driver LRUs already serve repeats.  The uncached frame keeps
+        # the one file listing every pruned read reuses.
+        self.index_df = read_index(self.spark, self.index_dir,
+                                   columns=tuple(INDEX_OUT_SCHEMA.names))
+        self._term_cache = _ByteLRU(*self._term_bounds)
+        self._pos_cache = _ByteLRU(*self._pos_bounds)
         self._gdf_cache: dict[str, int] = {}  # lemma -> global df (tiny rows)
         self._site_cache: dict[str, list[tuple[int, int]]] = {}
         self._gdf: dict[str, int] | None = None
@@ -459,48 +515,54 @@ class QueryEngine:
 
             self._gdf = {
                 r["lemma"]: int(r["gdf"])
-                for r in read_index(self.spark, self.index_dir,
-                                    columns=("lemma", "df"))
-                .groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()
+                for r in self.index_df.groupBy("lemma")
+                .agg(F.sum("df").alias("gdf")).collect()
             }
 
     def _check_fresh(self) -> None:
         if index_fingerprint(self.index_dir) != self._fp:
-            self.index_df.unpersist()
             self._load()
+
+    def _read(self, lemmas: list[str], columns=None) -> DataFrame:
+        """``lemmas``' rows of the engine's listed frame, bucket-pruned,
+        lemma-filtered and projected to ``columns`` (default: the posting
+        columns) exactly as ``read_index(lemmas, columns)`` reads them.
+        Every engine read goes through here: fetches, df lookups and the
+        distributed paths' input."""
+        from .builder import POSTING_COLS, prune_index
+
+        return prune_index(self.index_df, lemmas, self.meta["n_buckets"],
+                           columns or POSTING_COLS)
 
     def topk(self, query: str, k: int = 10, mode: str = "auto",
              conjunctive: bool = False, site: str | None = None,
              offset: int = 0) -> DataFrame:
         self._check_fresh()
-        gdf = None
-        if self._gdf is not None:
-            qlemmas = sorted(set(analyze(query, *self._ana)))
-            gdf = {t: self._gdf[t] for t in qlemmas if t in self._gdf}
+        qlemmas = sorted(set(analyze(query, *self._ana)))
         return bm25_topk(self.spark, self.index_dir, query, k, mode=mode,
-                         conjunctive=conjunctive, index_df=self.index_df,
-                         gdf_override=gdf, site=site, offset=offset,
-                         site_intervals=self._site(site))
+                         conjunctive=conjunctive,
+                         index_df=self._read(qlemmas),
+                         gdf_override=self._gdf_for(qlemmas), site=site,
+                         offset=offset, site_intervals=self._site(site))
 
     def topk_batch(self, queries: dict[str, str], k: int = 10,
                    mode: str = "auto", conjunctive: bool = False,
                    sites: dict[str, str] | None = None,
                    offsets: dict[str, int] | None = None) -> DataFrame:
-        """Whole-workload scoring in one Spark job over the engine's cached
-        index (see :func:`bm25_topk_batch`).  A preloaded dictionary skips
-        the batch's gdf-lookup job; per-qid ``sites`` resolve through the
+        """Whole-workload scoring in one Spark job over the engine's pruned
+        read of the index (see :func:`bm25_topk_batch`).  Global df comes
+        from the engine's dict/gdf caches, so a warm suite skips the
+        batch's gdf-lookup job; per-qid ``sites`` resolve through the
         engine's interval cache, so repeated scoped suites skip the sidecar
         reads too."""
         self._check_fresh()
-        gdf = None
-        if self._gdf is not None:
-            lemmas = {t for q in queries.values()
-                      for t in analyze(q, *self._ana)}
-            gdf = {t: self._gdf[t] for t in lemmas if t in self._gdf}
+        lemmas = sorted({t for q in queries.values()
+                         for t in analyze(q, *self._ana)})
         iv = {s: (self._site(s) or []) for s in set((sites or {}).values())}
         return bm25_topk_batch(self.spark, self.index_dir, queries, k,
                                mode=mode, conjunctive=conjunctive,
-                               index_df=self.index_df, gdf_override=gdf,
+                               index_df=self._read(lemmas),
+                               gdf_override=self._gdf_for(lemmas),
                                sites=sites, offsets=offsets,
                                site_intervals=iv)
 
@@ -519,61 +581,56 @@ class QueryEngine:
 
     def _gdf_for(self, lemmas: list[str]) -> dict[str, int]:
         """Global df per lemma WITHOUT touching posting bytes: preloaded
-        dict > per-engine gdf cache > one pruned, lemma/df-projected index
-        read (:func:`gdf_lookup`, cached for the engine's lifetime — a
-        term's df is a handful of longs)."""
+        dict > per-engine gdf cache > one pruned, lemma/df-projected read
+        (cached for the engine's lifetime — a term's df is a handful of
+        longs).  Lemmas absent from the index are absent from the result."""
         if self._gdf is not None:
             return {t: self._gdf[t] for t in lemmas if t in self._gdf}
         missing = [t for t in lemmas if t not in self._gdf_cache]
         if missing:
-            found = gdf_lookup(self.spark, self.index_dir, missing)
-            for t in missing:
-                self._gdf_cache[t] = int(found.get(t, 0))
+            self._gdf_cache.update(dict.fromkeys(missing, 0))
+            for r in self._read(missing, ("lemma", "df")).collect():
+                self._gdf_cache[r["lemma"]] += int(r["df"])
         return {t: self._gdf_cache[t] for t in lemmas
-                if self._gdf_cache.get(t, 0) > 0}
+                if self._gdf_cache[t] > 0}
 
-    def _evict(self, floor: int) -> None:
-        """LRU eviction, bounded by BOTH entry count and total posting
-        bytes; never drops below ``floor`` entries (the current working
-        set must survive its own fetch)."""
-        while len(self._term_cache) > floor and (
-            len(self._term_cache) > self._term_cache_size
-            or self._cache_total > self._term_cache_bytes
-        ):
-            lemma, _ = self._term_cache.popitem(last=False)
-            self._cache_total -= self._cache_nb.pop(lemma, 0)
-
-    def _fetch_terms(self, fetch: list[str], floor: int = 0,
-                     gdf_hint: dict[str, int] | None = None) -> None:
-        """One bucket-pruned Spark collect for ``fetch`` lemmas; cache
-        DECODED TermPostings (global df baked in for idf) so the
-        lazily-decoded block caches survive across queries — a repeated
-        term costs neither a Spark job nor a varbyte decode.  ``floor``
-        keeps the CURRENT working set from evicting itself when it is
-        larger than the LRU bound.  Callers are expected to route
-        over-estimate terms away BEFORE calling (topk_rows/prefetch do) —
-        this function itself does not guard."""
+    def _fetch(self, terms: list[str], forms: list[str] = (),
+               tfloor: int = 0, pfloor: int = 0) -> None:
+        """ONE bucket-pruned collect warms both LRUs: ``terms``' posting
+        rows and ``forms``' positional rows (a lemma in both is one row).
+        A column that no cache wants for a lemma arrives null, so a
+        topk-only term moves no positional bytes to the driver and a
+        form-only lemma no dls or block directory.  Entries are cached
+        DECODED per (lemma, segment), global df baked in for idf, so a
+        repeat costs neither a Spark job nor a varbyte decode; bytes are
+        counted compressed.  The floors keep each cache's current working
+        set from evicting itself.  Callers route over-estimate lemmas away
+        BEFORE calling; this function does not guard."""
         from pyspark.sql import functions as F
 
-        from .builder import hash_bucket
+        from .builder import isin_expr
+        from .positions import decode_term_positions
 
-        buckets = sorted({hash_bucket(x, self.meta["n_buckets"]) for x in fetch})
-        fetched = (
-            self.index_df.filter(F.col("bucket").isin(buckets))
-            .filter(F.col("lemma").isin(fetch))
-            .collect()
-        )
-        by_lemma: dict[str, list] = {t: [] for t in fetch}
-        for r in fetched:
-            by_lemma[r["lemma"]].append(r)
-        for lemma, rs in by_lemma.items():
-            if gdf_hint is not None and lemma in gdf_hint:
-                gdf = int(gdf_hint[lemma])
-            elif self._gdf is not None:
-                gdf = self._gdf.get(lemma, 0)
-            else:
-                gdf = sum(int(r["df"]) for r in rs)
-            self._gdf_cache[lemma] = gdf
+        tset, fset = set(terms), set(forms)
+        want = sorted(tset | fset)
+
+        def only(col: str, keep: set[str]) -> Column:
+            if len(keep) == len(want):
+                return F.col(col)
+            return F.when(isin_expr("lemma", sorted(keep)),
+                          F.col(col)).alias(col)
+
+        cols = ["segment", "lemma", "df", "postings", "tfs"]
+        if tset:
+            cols += [only("dls", tset), only("blocks", tset)]
+        if fset:
+            cols.append(only("pstream", fset))
+        rows: dict[str, list] = {t: [] for t in want}
+        for r in self._read(want, cols).collect():
+            rows[r["lemma"]].append(r)
+        for lemma, rs in rows.items():
+            self._gdf_cache[lemma] = sum(int(r["df"]) for r in rs)
+        for lemma in terms:
             entries = [
                 (
                     lemma,
@@ -582,83 +639,31 @@ class QueryEngine:
                         r["postings"], r["tfs"], r["dls"],
                         [b.asDict() if hasattr(b, "asDict") else b
                          for b in r["blocks"]],
-                        gdf,
+                        self._gdf_cache[lemma],
                     ),
                     len(r["postings"]) + len(r["tfs"]) + len(r["dls"]),
                 )
-                for r in rs
+                for r in rows[lemma]
             ]
-            self._cache_total -= self._cache_nb.pop(lemma, 0)
-            self._term_cache[lemma] = entries
-            nb = sum(e[3] for e in entries)
-            self._cache_nb[lemma] = nb
-            self._cache_total += nb
-        self._evict(floor)
-
-    def _drop_terms(self, lemmas: list[str]) -> None:
-        """Remove specific lemmas from the term cache (the post-fetch
-        backstop's cleanup: an under-estimated fetch that turned out
-        over-threshold must not stay resident past the byte bound its
-        floor-protected fetch just pierced), then re-run the bounded
-        eviction with no floor so the cache is back inside its budget."""
-        for t in lemmas:
-            if t in self._term_cache:
-                del self._term_cache[t]
-                self._cache_total -= self._cache_nb.pop(t, 0)
-        self._evict(0)
-
-    def _drop_pos(self, forms: list[str]) -> None:
-        """Positional twin of :meth:`_drop_terms`."""
-        for t in forms:
-            if t in self._pos_cache:
-                del self._pos_cache[t]
-                self._pos_total -= self._pos_nb.pop(t, 0)
-        self._evict_pos(0)
-
-    def _evict_pos(self, floor: int) -> None:
-        """Positional-cache LRU eviction (same bounds discipline as
-        :meth:`_evict`: entry count AND total compressed bytes, never below
-        the current working set)."""
-        while len(self._pos_cache) > floor and (
-            len(self._pos_cache) > self._pos_cache_size
-            or self._pos_total > self._pos_cache_bytes
-        ):
-            lemma, _ = self._pos_cache.popitem(last=False)
-            self._pos_total -= self._pos_nb.pop(lemma, 0)
-
-    def _fetch_positions(self, fetch: list[str], floor: int = 0) -> None:
-        """One bucket-pruned collect of ``fetch`` forms' positional postings;
-        cache them DECODED per (form, segment) — a repeated phrase costs
-        neither a Spark job nor a varbyte decode.  Byte accounting uses the
-        compressed stream lengths (symmetric with the term cache).  Callers
-        route over-estimate forms away BEFORE calling (phrase_rows/prefetch
-        do) — this function itself does not guard."""
-        from .positions import decode_term_positions, read_positions
-
+            self._term_cache.put(lemma, entries, sum(e[3] for e in entries))
         seg_size = int(self.meta["seg_size"])
         block_size = int(self.meta["block_size"])
-        rows = read_positions(self.spark, self.index_dir, fetch).collect()
-        by_lemma: dict[str, list] = {t: [] for t in fetch}
-        for r in rows:
-            by_lemma[r["lemma"]].append(r)
-        for lemma, rs in by_lemma.items():
+        for lemma in forms:
             entries = []
-            for r in rs:
+            for r in rows[lemma]:
                 docs, counts, flat = decode_term_positions(
                     r["postings"], r["tfs"], r["pstream"], block_size)
-                base = int(r["segment"]) * seg_size
-                # per-OCCURRENCE local doc ids, aligned with flat positions —
-                # exactly the decoded shape _intersect_slots consumes
-                occ = np.repeat(docs - base, counts)
+                # per-OCCURRENCE local doc ids, aligned with flat positions
+                # — exactly the decoded shape _intersect_slots consumes
+                occ = np.repeat(docs - int(r["segment"]) * seg_size, counts)
                 mx = int(flat.max()) if flat.size else 0
                 nb = len(r["postings"]) + len(r["tfs"]) + len(r["pstream"])
                 entries.append((int(r["segment"]), occ, flat, mx, nb))
-            self._pos_total -= self._pos_nb.pop(lemma, 0)
-            self._pos_cache[lemma] = entries
-            nb = sum(e[4] for e in entries)
-            self._pos_nb[lemma] = nb
-            self._pos_total += nb
-        self._evict_pos(floor)
+            self._pos_cache.put(lemma, entries, sum(e[4] for e in entries))
+        if tset:
+            self._term_cache.evict(tfloor)
+        if fset:
+            self._pos_cache.evict(pfloor)
 
     def phrase_rows(self, phrase: str, k: int = 10, site: str | None = None,
                     local_threshold_bytes: int = 64 << 20,
@@ -679,12 +684,12 @@ class QueryEngine:
         from ..analyzer import analyze_positions
         from .positions import (
             _intersect_slots,
-            has_positions,
             phrase_topk_positions,
+            positions_enabled,
         )
 
         self._check_fresh()
-        if not has_positions(self.index_dir):
+        if not positions_enabled(self.meta):
             raise ValueError(
                 "index has no positions (a rebuild without positions "
                 "clears meta.has_positions) — run build_positions first, "
@@ -702,28 +707,26 @@ class QueryEngine:
                 self.spark, self.index_dir, phrase, k, site=site).collect()
             return [(r["doc_id"], r["phrase_tf"]) for r in out]
 
-        fetch = [t for t in forms if t not in self._pos_cache]
-        for t in forms:
-            if t in self._pos_cache:
-                self._pos_cache.move_to_end(t)
+        fetch = self._pos_cache.touch(forms)
         if fetch:
             if (self._pos_bytes is None
                     or self._pos_bytes > local_threshold_bytes):
                 gdf = self._gdf_for(forms)
                 est = sum(
-                    self._pos_nb[t] if t in self._pos_cache
+                    self._pos_cache.nbytes(t) if t in self._pos_cache
                     else gdf.get(t, 0) * self._pos_bpp
                     for t in forms
                 )
                 if est > local_threshold_bytes:
                     return _distributed()
-            self._fetch_positions(fetch, floor=len(forms))
-        if sum(self._pos_nb.get(t, 0) for t in forms) > local_threshold_bytes:
+            self._fetch([], fetch, pfloor=len(forms))
+        if (sum(self._pos_cache.nbytes(t) for t in forms)
+                > local_threshold_bytes):
             # under-estimate backstop: route distributed, and drop the
             # just-fetched oversized entries so they don't sit floor-pinned
             # past pos_cache_bytes until a later fetch evicts
             if fetch:
-                self._drop_pos(fetch)
+                self._pos_cache.drop(fetch)
             return _distributed()
 
         seg_size = int(self.meta["seg_size"])
@@ -732,7 +735,7 @@ class QueryEngine:
         by_seg: dict[int, dict[str, tuple]] = {}
         maxp: dict[int, int] = {}
         for t in forms:
-            for seg, occ, flat, mx, _ in self._pos_cache.get(t, ()):
+            for seg, occ, flat, mx, _ in self._pos_cache.get(t):
                 if live is not None and seg not in live:
                     continue  # site intervals cannot reach this segment
                 by_seg.setdefault(seg, {})[t] = (occ, flat)
@@ -788,71 +791,56 @@ class QueryEngine:
     def prefetch(self, queries: list[str], sites: list[str] | None = None,
                  local_threshold_bytes: int = 64 << 20,
                  phrases: list[str] | None = None) -> int:
-        """Warm the term cache for a whole query suite in ONE bucket-pruned
-        Spark job (round-4 backlog: cold first-query latency is one pruned
-        collect per query; a broker restart re-warms its expected workload
-        in a single scan instead).  Returns the number of lemmas fetched
-        (term + positional forms).
+        """Warm the term cache for a whole query suite, and with
+        ``phrases`` the positional cache for their forms, in at most two
+        Spark jobs: one df lookup (only when an index is over the
+        threshold) and ONE bucket-pruned collect over every lemma either
+        cache needs (round-4 backlog: a broker restart re-warms its
+        expected workload in a single scan instead of one pruned collect
+        per first query).  Returns the number of lemmas fetched (terms +
+        positional forms).
 
-        Honors the same byte discipline as :meth:`topk_rows`: a term whose
-        dict-estimated postings exceed ``local_threshold_bytes`` is SKIPPED
-        (queries using it route to the distributed path anyway, so warming
-        it would only pull oversized bytes onto the broker), and the fetch
-        never exceeds the engine's LRU byte budget by more than the suite's
-        own (pre-checked) working set.  ``sites`` additionally warms the
-        site-interval cache so site-scoped queries skip their sidecar read.
-        ``phrases`` warms the POSITIONAL cache the same way (one extra
-        pruned, column-projected collect of the forms' positional streams,
-        per-form byte estimates from the build's measured positional
-        bytes-per-posting) so a phrase workload's first queries are as
-        warm as its repeats."""
+        Honors the same byte discipline as :meth:`topk_rows` and
+        :meth:`phrase_rows`: a lemma whose dict-estimated postings
+        (positional postings, for a form) exceed ``local_threshold_bytes``
+        is SKIPPED before any posting bytes move (queries using it route to
+        the distributed path anyway, so warming it would only pull
+        oversized bytes onto the broker), and the fetch never exceeds an
+        LRU's byte budget by more than the suite's own (pre-checked)
+        working set.  ``sites`` additionally warms the site-interval cache
+        so site-scoped queries skip their sidecar read."""
+        from ..analyzer import analyze_positions
+        from .positions import positions_enabled
+
         self._check_fresh()
         for s in sites or ():
             self._site(s)
         lemmas = sorted({t for q in queries for t in analyze(q, *self._ana)})
-        fetch = []
-        for t in lemmas:
-            if t in self._term_cache:
-                self._term_cache.move_to_end(t)  # suite terms must survive
-            else:                                # the post-fetch eviction
-                fetch.append(t)
-        n_fetched = 0
-        if fetch:
-            gdf = None
-            if (self._index_bytes is None
-                    or self._index_bytes > local_threshold_bytes):
-                gdf = self._gdf_for(fetch)
-                fetch = [t for t in fetch if gdf.get(t, 0) * self._bpp
-                         <= local_threshold_bytes]
-            if fetch:
-                self._fetch_terms(fetch, floor=len(lemmas), gdf_hint=gdf)
-            n_fetched += len(fetch)
-
-        if phrases:
-            from ..analyzer import analyze_positions
-            from .positions import has_positions
-
-            if has_positions(self.index_dir):
-                forms = sorted({f for ph in phrases
-                                for fs in analyze_positions(ph, *self._ana)
-                                for f in fs})
-                pfetch = []
-                for t in forms:
-                    if t in self._pos_cache:
-                        self._pos_cache.move_to_end(t)
-                    else:
-                        pfetch.append(t)
-                if pfetch and (
-                        self._pos_bytes is None
-                        or self._pos_bytes > local_threshold_bytes):
-                    gdf = self._gdf_for(pfetch)
-                    pfetch = [t for t in pfetch
-                              if gdf.get(t, 0) * self._pos_bpp
-                              <= local_threshold_bytes]
-                if pfetch:
-                    self._fetch_positions(pfetch, floor=len(forms))
-                n_fetched += len(pfetch)
-        return n_fetched
+        forms = []
+        if phrases and positions_enabled(self.meta):
+            forms = sorted({f for ph in phrases
+                            for fs in analyze_positions(ph, *self._ana)
+                            for f in fs})
+        # resident lemmas are touched: the suite must survive the
+        # post-fetch eviction
+        terms = self._term_cache.touch(lemmas)
+        pforms = self._pos_cache.touch(forms)
+        tguard = (self._index_bytes is None
+                  or self._index_bytes > local_threshold_bytes)
+        pguard = (self._pos_bytes is None
+                  or self._pos_bytes > local_threshold_bytes)
+        gdf = self._gdf_for(sorted({*(terms if tguard else ()),
+                                    *(pforms if pguard else ())}))
+        if tguard:
+            terms = [t for t in terms
+                     if gdf.get(t, 0) * self._bpp <= local_threshold_bytes]
+        if pguard:
+            pforms = [t for t in pforms if gdf.get(t, 0) * self._pos_bpp
+                      <= local_threshold_bytes]
+        if terms or pforms:
+            self._fetch(terms, pforms, tfloor=len(lemmas),
+                        pfloor=len(forms))
+        return len(terms) + len(pforms)
 
     def topk_rows(self, query: str, k: int = 10, mode: str = "auto",
                   conjunctive: bool = False,
@@ -883,34 +871,28 @@ class QueryEngine:
         kk = k + offset
         # driver-side LRU term cache: index immutable per fingerprint, so a
         # term's rows (postings bytes + blocks) are collected once and
-        # repeated terms cost no Spark job at all; bounded by entry count
-        # AND bytes so the cache never grows O(vocabulary) or O(hot-term)
-        fetch = [t for t in qlemmas if t not in self._term_cache]
-        for t in qlemmas:
-            if t in self._term_cache:
-                self._term_cache.move_to_end(t)
+        # repeated terms cost no Spark job at all
+        fetch = self._term_cache.touch(qlemmas)
         if fetch:
-            gdf = None
             if (self._index_bytes is None
                     or self._index_bytes > local_threshold_bytes):
                 # dict rows only — no posting bytes move for the estimate
                 gdf = self._gdf_for(qlemmas)
-            if gdf is not None:
                 est = sum(
-                    self._cache_nb[t] if t in self._term_cache
+                    self._term_cache.nbytes(t) if t in self._term_cache
                     else gdf.get(t, 0) * self._bpp
                     for t in qlemmas
                 )
                 if est > local_threshold_bytes:
                     out = bm25_topk(
                         self.spark, self.index_dir, query, k, mode=mode,
-                        conjunctive=conjunctive, index_df=self.index_df,
-                        gdf_override=gdf or None, site=site, offset=offset,
-                        site_intervals=intervals,
+                        conjunctive=conjunctive,
+                        index_df=self._read(qlemmas), gdf_override=gdf,
+                        site=site, offset=offset, site_intervals=intervals,
                     ).collect()
                     return [(r["doc_id"], r["score"]) for r in out]
-            self._fetch_terms(fetch, floor=len(qlemmas), gdf_hint=gdf)
-        entries = [e for t in qlemmas for e in self._term_cache.get(t, ())]
+            self._fetch(fetch, tfloor=len(qlemmas))
+        entries = [e for t in qlemmas for e in self._term_cache.get(t)]
         if not entries:
             return []
         total = sum(nb for _, _, _, nb in entries)
@@ -919,7 +901,7 @@ class QueryEngine:
             # just-fetched oversized entries so they don't sit floor-pinned
             # past term_cache_bytes until a later fetch evicts them
             if fetch:
-                self._drop_terms(fetch)
+                self._term_cache.drop(fetch)
             out = self.topk(query, k, mode, conjunctive,
                             site=site, offset=offset).collect()
             return [(r["doc_id"], r["score"]) for r in out]
@@ -986,7 +968,10 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     qid is site-scoped the index scan itself is pruned to the union of
     their overlapping segments.  ``site_intervals`` (site -> intervals)
     short-circuits sidecar reads for callers that cache them
-    (QueryEngine)."""
+    (QueryEngine).  ``index_df`` replaces the fresh read as in
+    :func:`bm25_topk`; rows of a lemma outside the queries may ride along
+    only when ``gdf_override`` carries its df (QueryEngine's covers every
+    lemma it reads)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -1023,10 +1008,8 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
         return empty
     all_lemmas = sorted({t for ls in qmap.values() for t in ls})
 
-    if index_df is not None:
-        idx = index_df.filter(F.col("lemma").isin(all_lemmas))
-    else:
-        idx = read_index(spark, index_dir, all_lemmas)
+    idx = (index_df if index_df is not None
+           else read_index(spark, index_dir, all_lemmas))
     seg_size = int(meta["seg_size"])
     qsegs = {qid: (_overlapping_segments(iv, seg_size) if iv else None)
              for qid, iv in qiv.items()}
@@ -1108,8 +1091,9 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     """Distributed top-k: partition-pruned index read -> per-segment numpy
     top-k (applyInPandas) -> global ordered merge.
 
-    ``index_df``: pass a cached ``read_index(spark, dir)`` DataFrame to
-    amortize the scan across many queries (warm-path latency).
+    ``index_df``: the query lemmas' index rows, read instead of a fresh
+    ``read_index(spark, dir, lemmas)`` (QueryEngine passes its pruned read
+    of the one listing it keeps); it must hold no other lemma's rows.
 
     ``site``/``offset`` complete the reference search API
     (ApiController.java `GET /api/search?query&site&offset&limit`): the
@@ -1139,10 +1123,8 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     if site is not None and not intervals:
         return empty  # unknown site owns no pages
 
-    if index_df is not None:
-        idx = index_df.filter(F.col("lemma").isin(qlemmas))
-    else:
-        idx = read_index(spark, index_dir, qlemmas)
+    idx = (index_df if index_df is not None
+           else read_index(spark, index_dir, qlemmas))
     if intervals:
         # partition pruning on segment=: a site's docs live only in the
         # segments its intervals overlap

@@ -57,7 +57,7 @@ def test_warm_repeat_runs_no_spark_job(spark, env):
     phrase = "sorvel tamok"
     want = eng.phrase_rows(phrase, k=10)
     assert want
-    eng._fetch_positions = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("re-fetched warm positional postings"))
     assert eng.phrase_rows(phrase, k=10) == want
 
@@ -68,7 +68,7 @@ def test_shared_forms_warm_across_phrases(spark, env):
     eng = QueryEngine(spark, idx)
     eng.phrase_rows("sorvel tamok", k=5)
     eng.phrase_rows("veltadrolix", k=5)
-    eng._fetch_positions = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched forms an earlier phrase already warmed"))
     want = _distributed(spark, idx, "tamok veltadrolix", k=10)
     assert eng.phrase_rows("tamok veltadrolix", k=10) == want
@@ -77,12 +77,12 @@ def test_shared_forms_warm_across_phrases(spark, env):
 def test_oversized_estimate_routes_distributed_without_fetch(spark, env):
     """The byte guard must fire BEFORE any positional bytes reach the
     driver: with a tiny threshold the result still matches, the positional
-    cache stays empty, and _fetch_positions is never called."""
+    cache stays empty, and _fetch is never called."""
     idx, _ = env
     eng = QueryEngine(spark, idx)
     assert eng._pos_bpp is not None          # sidecar stats present
     assert eng._pos_bytes is not None
-    eng._fetch_positions = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched despite over-threshold estimate"))
     phrase = "sorvel tamok"
     got = eng.phrase_rows(phrase, k=10, local_threshold_bytes=1)
@@ -108,7 +108,8 @@ def test_pos_cache_byte_bound_evicts(spark, env):
     assert set(eng._pos_cache) <= {"sorvel", "tamok"}
     eng.phrase_rows("veltadrolix", k=5)
     assert "tamok" not in eng._pos_cache  # prior set evicted past the bound
-    assert eng._pos_total == sum(eng._pos_nb.values())
+    assert eng._pos_cache.total == sum(
+        eng._pos_cache.nbytes(t) for t in eng._pos_cache)
 
 
 def test_prefetch_phrases_warms_cache(spark, env):
@@ -116,7 +117,7 @@ def test_prefetch_phrases_warms_cache(spark, env):
     eng = QueryEngine(spark, idx)
     n = eng.prefetch([], phrases=["sorvel tamok", "veltadrolix"])
     assert n == 3  # sorvel, tamok, veltadrolix
-    eng._fetch_positions = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("prefetch left the suite cold"))
     assert eng.phrase_rows("sorvel tamok", k=10) == _distributed(
         spark, idx, "sorvel tamok", k=10)
@@ -141,7 +142,7 @@ def test_phrase_rows_batch_matches_single_path(spark, env):
     assert got == want
 
     # the batch's serving loop must be fully warm: poison every Spark path
-    eng._fetch_positions = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("batch left a form cold"))
     again = eng.phrase_rows_batch(workload, k=50, sites=sites)
     assert again == want
@@ -203,16 +204,23 @@ def test_sidecar_stats_in_manifests_and_meta(spark, tmp_path):
     assert meta2["pos_posting_bytes"] == meta["pos_posting_bytes"]
 
 
-def test_engine_cache_holds_no_positions(spark, env):
-    """The engine's Spark-cached index relation holds the posting columns
-    only: positional streams are fetched per form from disk and never
-    enter the Spark cache, even after phrase serving."""
+def test_engine_pins_no_spark_storage(spark, env):
+    """The engine pins no Spark cache: term, phrase, prefetch and batch
+    serving on a fresh engine store no RDD on the executors, and the index
+    frame's plan reads from disk, not from an in-memory relation — so
+    neither positions nor postings sit in executor memory."""
     idx, _ = env
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc()
+                .getRDDStorageInfo()}
+
+    before = stored()  # what other tests' fixtures cached
     eng = QueryEngine(spark, idx)
     assert eng.topk_rows("tamok velsor", k=5)
     assert eng.phrase_rows("sorvel tamok", k=5)
-    assert "pstream" not in eng.index_df.columns
+    assert eng.prefetch(["lixpex"], phrases=["veltadrolix tamok"])
+    assert eng.topk_batch({"a": "tamok velsor", "b": "sorvel"}, k=5).collect()
+    assert not stored() - before
     plan = eng.index_df._jdf.queryExecution().withCachedData().toString()
-    rel = [ln for ln in plan.splitlines() if "InMemoryRelation" in ln]
-    assert rel and "postings" in rel[0] and "pstream" not in rel[0], plan
-    eng.index_df.unpersist()
+    assert "InMemoryRelation" not in plan, plan

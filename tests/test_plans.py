@@ -4,6 +4,8 @@ Python/shuffles).  Guard rails for the 100 TB story."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -79,6 +81,43 @@ def test_index_read_prunes_buckets(spark, tmp_path, docs):
     assert f"bucket#" in plan or "PartitionFilters" in plan
     rows = pruned.select("bucket").distinct().collect()
     assert [r["bucket"] for r in rows] == [bucket]
+
+
+def test_engine_distributed_reads_prune_buckets_uncached(spark, tmp_path, docs):
+    """The engine's distributed top-k and batch plans read only the query
+    terms' bucket= dirs and never an in-memory (Spark-cached) relation."""
+    from searchengine_spark.index.builder import build_index, hash_bucket
+    from searchengine_spark.index.wand import QueryEngine
+
+    out = str(tmp_path / "idx")
+    build_index(docs, out, n_segments=2, salt=2, n_buckets=8)
+    assert hash_bucket("tamok", 8) != hash_bucket("velsor", 8)
+    eng = QueryEngine(spark, out)
+    for df in (eng.topk("tamok velsor", 5),
+               eng.topk_batch({"a": "tamok velsor", "b": "velsor"}, 5)):
+        plan = _plan(df)
+        scans = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+        assert scans and all(re.search(r"PartitionFilters: \[.*bucket#\d+ IN \(", ln)
+                             for ln in scans), plan
+        assert "InMemoryTableScan" not in plan, plan
+
+
+def test_isin_expr_selects_as_isin(spark):
+    """The one-call IN predicate the index reads use selects exactly what
+    Column.isin selects, quotes and backslashes included, and plans as
+    the same INSET."""
+    from searchengine_spark.index.builder import isin_expr
+
+    vals = ["it's", "a\\b", "x\\'y", "квант", "uni\\u0041", "tab\there"]
+    vals += [f"w{i}" for i in range(12)]
+    df = spark.createDataFrame(
+        [(v,) for v in vals + ["other", "A", "unia", "x'y", "ab"]],
+        "lemma string")
+    got = df.filter(isin_expr("lemma", vals))
+    assert sorted(r[0] for r in got.collect()) == sorted(vals)
+    assert "INSET" in got._jdf.queryExecution().optimizedPlan().toString()
+    assert df.filter(isin_expr("lemma", [])).count() == 0
+    assert df.filter(isin_expr("lemma", ["A"])).count() == 1
 
 
 def test_proximity_candidate_join_not_forced_broadcast(spark, docs):

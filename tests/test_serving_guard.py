@@ -8,9 +8,10 @@ from __future__ import annotations
 
 import pytest
 
+from searchengine_spark.analyzer import analyze
 from searchengine_spark.corpus import gen_corpus_local, ingest
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.wand import QueryEngine, bm25_topk
+from searchengine_spark.index.wand import QueryEngine, bm25_topk, gdf_lookup
 from searchengine_spark.schema import DOCS_SCHEMA
 
 QUERY = "tamok sorvel"  # both df>0 at 60 docs (velsor is not)
@@ -22,6 +23,27 @@ def idx(spark, tmp_path_factory):
     docs = ingest(spark.createDataFrame(gen_corpus_local(60), DOCS_SCHEMA))
     build_index(docs, out, n_segments=2, salt=4, n_buckets=4, resume=False)
     return out
+
+
+@pytest.fixture(scope="module")
+def pidx(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("guard_pos") / "idx")
+    docs = ingest(spark.createDataFrame(gen_corpus_local(60), DOCS_SCHEMA))
+    build_index(docs, out, n_segments=2, salt=4, n_buckets=4, resume=False,
+                positions=True)
+    return out
+
+
+def _jobs(spark, group, fn):
+    """(fn(), the number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _hits_distributed(spark, idx, query, k, **kw):
@@ -44,17 +66,17 @@ def test_meta_carries_bytes_per_posting(idx):
 
 def test_over_threshold_term_never_fetched(spark, idx):
     """A term whose ESTIMATED postings exceed the threshold must route to
-    the distributed path without any posting-bytes collect: _fetch_terms is
+    the distributed path without any posting-bytes collect: _fetch is
     never called and the term never enters the cache."""
     eng = QueryEngine(spark, idx)
 
     def _boom(*a, **kw):  # any fetch attempt is the r3 hole reopening
         raise AssertionError("posting bytes were collected before the guard")
 
-    eng._fetch_terms = _boom
+    eng._fetch = _boom
     hits = eng.topk_rows(QUERY, 5, local_threshold_bytes=1)
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
-    assert not eng._term_cache and eng._cache_total == 0
+    assert not eng._term_cache and eng._term_cache.total == 0
 
 
 def test_over_threshold_routing_respects_site_and_offset(spark, idx):
@@ -62,7 +84,7 @@ def test_over_threshold_routing_respects_site_and_offset(spark, idx):
     from searchengine_spark.streaming.store import read_store  # noqa: F401
 
     site = "org0/proj0"
-    eng._fetch_terms = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched despite over-threshold estimate"))
     got = eng.topk_rows(QUERY, 3, local_threshold_bytes=1, site=site, offset=1)
     want = _hits_distributed(spark, idx, QUERY, 3, site=site, offset=1)
@@ -73,8 +95,9 @@ def test_under_threshold_path_unchanged_and_exact(spark, idx):
     eng = QueryEngine(spark, idx)
     hits = eng.topk_rows(QUERY, 5)  # default 64 MiB threshold: local path
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
-    assert "tamok" in eng._term_cache and eng._cache_total > 0
-    assert eng._cache_total == sum(eng._cache_nb.values())
+    assert "tamok" in eng._term_cache and eng._term_cache.total > 0
+    assert eng._term_cache.total == sum(
+        eng._term_cache.nbytes(t) for t in eng._term_cache)
 
 
 def test_term_cache_is_byte_bounded_with_working_set_floor(spark, idx):
@@ -86,7 +109,7 @@ def test_term_cache_is_byte_bounded_with_working_set_floor(spark, idx):
     eng.topk_rows("lixpex", 5)
     assert "tamok" not in eng._term_cache  # evicted by the byte bound
     assert list(eng._term_cache) == ["lixpex"]
-    assert eng._cache_total == eng._cache_nb["lixpex"]
+    assert eng._term_cache.total == eng._term_cache.nbytes("lixpex")
 
 
 def test_prefetch_skips_over_threshold_terms_and_warms_sites(spark, idx):
@@ -99,7 +122,7 @@ def test_prefetch_skips_over_threshold_terms_and_warms_sites(spark, idx):
     # subsequent queries are exact with zero further fetches
     n2 = eng.prefetch([QUERY, "lixpex"], local_threshold_bytes=64 << 20)
     assert n2 == 3  # tamok, sorvel, lixpex
-    eng._fetch_terms = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("prefetch should have warmed the whole suite"))
     assert eng.topk_rows(QUERY, 5) == _hits_distributed(spark, idx, QUERY, 5)
     assert eng.topk_rows("lixpex", 5) == _hits_distributed(
@@ -110,18 +133,49 @@ def test_gdf_cache_avoids_repeat_dict_jobs(spark, idx):
     eng = QueryEngine(spark, idx)
     eng.topk_rows(QUERY, 5, local_threshold_bytes=1)  # distributed route
     assert eng._gdf_cache.get("tamok", 0) > 0
-    # second query over the same terms: estimate comes from the gdf cache,
-    # no dict read — assert by breaking gdf_lookup for this engine
-    import searchengine_spark.index.wand as wand
-
-    orig = wand.gdf_lookup
-    wand.gdf_lookup = lambda *a, **kw: (_ for _ in ()).throw(
-        AssertionError("dict re-read despite warm gdf cache"))
-    try:
-        hits = eng.topk_rows(QUERY, 5, local_threshold_bytes=1)
-    finally:
-        wand.gdf_lookup = orig
+    # a second query over the same terms prices itself from the gdf cache:
+    # the estimate runs no Spark job
+    lemmas = sorted(set(analyze(QUERY, *eng._ana)))
+    assert _jobs(spark, "gdf-warm", lambda: eng._gdf_for(lemmas))[1] == 0
+    hits = eng.topk_rows(QUERY, 5, local_threshold_bytes=1)
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
+
+
+def test_prefetch_is_one_lookup_and_one_fetch(spark, pidx):
+    """prefetch warms both LRUs with one bucket-pruned collect, preceded by
+    one df lookup only when an index is over the threshold, whatever the
+    mix of terms and phrase forms; lemmas over the threshold are still
+    skipped before any posting bytes move."""
+    queries, phrases = ["sorvel jordro", "lixpex"], ["veltadrolix hazlixsor"]
+    gdf = gdf_lookup(spark, pidx, ["sorvel", "jordro", "lixpex",
+                                   "veltadrolix", "hazlixsor"])
+    assert len(gdf) == 5
+
+    eng = QueryEngine(spark, pidx)  # whole index under 64 MiB: no lookup
+    assert _jobs(spark, "prefetch-fits", lambda: eng.prefetch(
+        queries, phrases=phrases)) == (5, 1)
+
+    # under both index totals, over every lemma: the guard needs df
+    thr = int(max(gdf.values()) * eng._pos_bpp) + 1
+    assert thr < min(eng._index_bytes, eng._pos_bytes)
+    eng = QueryEngine(spark, pidx)
+    assert _jobs(spark, "prefetch-guarded", lambda: eng.prefetch(
+        queries, phrases=phrases, local_threshold_bytes=thr)) == (5, 2)
+
+    # one term and one form over the threshold are skipped
+    thr = int(min(gdf["sorvel"] * eng._bpp,
+                  gdf["veltadrolix"] * eng._pos_bpp)) - 1
+    assert max(gdf["jordro"], gdf["lixpex"]) * eng._bpp <= thr
+    assert gdf["hazlixsor"] * eng._pos_bpp <= thr
+    eng = QueryEngine(spark, pidx)
+    assert _jobs(spark, "prefetch-skips", lambda: eng.prefetch(
+        queries, phrases=phrases, local_threshold_bytes=thr)) == (3, 2)
+    assert sorted(eng._term_cache) == ["jordro", "lixpex"]
+    assert list(eng._pos_cache) == ["hazlixsor"]
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
+        AssertionError("fetched a term prefetch skipped"))
+    assert eng.topk_rows(queries[0], 5, local_threshold_bytes=thr) == (
+        _hits_distributed(spark, pidx, queries[0], 5))
 
 
 def test_mixed_generation_manifests_disable_bytes_shortcut(spark, tmp_path):
@@ -152,7 +206,7 @@ def test_mixed_generation_manifests_disable_bytes_shortcut(spark, tmp_path):
     # tiny threshold routes distributed WITHOUT fetching
     eng = QueryEngine(spark, out)
     assert eng._index_bytes is None
-    eng._fetch_terms = lambda *a, **kw: (_ for _ in ()).throw(
+    eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched despite over-threshold estimate"))
     hits = eng.topk_rows(QUERY, 5, local_threshold_bytes=1)
     assert hits == _hits_distributed(spark, out, QUERY, 5)
