@@ -182,7 +182,14 @@ def corpus_df(spark: SparkSession, n_docs: int, seed: int = SEED,
 
 
 def ingest(docs: DataFrame, key_partitions: int | None = None) -> DataFrame:
-    """Add ``doc_id`` (global rank of (repo, path, commit)) and ``sha256``.
+    """Add ``doc_id`` (global rank of (repo, path, commit)) and ``sha256``
+    (see :func:`_ingest`)."""
+    return _ingest(docs, key_partitions)[0]
+
+
+def _ingest(docs: DataFrame, key_partitions: int | None = None
+            ) -> tuple[DataFrame, int]:
+    """:func:`ingest`, plus the row count its checkpoint job tallied.
 
     Scale path: ONE range shuffle on the key, then a fully map-side rank
     assignment — sort within partitions, append the per-partition position
@@ -256,7 +263,7 @@ def ingest(docs: DataFrame, key_partitions: int | None = None) -> DataFrame:
         staged.withColumn("doc_id", (F.col("_lpos") + off[F.col("_pid")])
                           .cast(LongType()))
         .select(*docs.columns, "doc_id", "sha256")
-    )
+    ), acc
 
 
 def sha256_invariant_ok(ingested: DataFrame) -> bool:

@@ -531,7 +531,7 @@ def build_index(
         # group lands in its partition dir from one task, no repartition).
         # The encoder adds each segment's written counts to `stats`.
         (
-            encode_index_runs(runs.filter(F.col("segment").isin(missing)),
+            encode_index_runs(runs.filter(isin_expr("segment", missing)),
                               avgdl, block_size, stats, positions)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")  # done segments untouched
@@ -682,24 +682,62 @@ def isin_expr(col: str, values) -> Column:
     return F.expr(f"{col} IN ({','.join(map(lit, values))})")
 
 
-def read_site_ranges(spark: SparkSession, out_dir: str,
-                     site: str) -> list[tuple[int, int]]:
+def list_index_files(out_dir: str) -> dict[int, list[str]]:
+    """The index's data files by bucket: one listing of
+    ``data/segment=*/bucket=*/*.parquet`` (an emptied index lists none)."""
+    import glob as _glob
+
+    files: dict[int, list[str]] = {}
+    for f in sorted(_glob.glob(f"{out_dir}/data/segment=*/bucket=*/*.parquet")):
+        bucket = int(f.rsplit("/bucket=", 1)[1].split("/", 1)[0])
+        files.setdefault(bucket, []).append(f)
+    return files
+
+
+def scan_index(out_dir: str, files: dict[int, list[str]], lemmas: list[str],
+               n_buckets: int, columns):
+    """Driver-side Arrow read of ``lemmas``' rows: record batches of
+    ``columns`` from the listed ``files`` of their buckets (see
+    :func:`list_index_files`), ``segment``/``bucket`` parsed from the hive
+    paths.  No Spark job runs.  Batches stream one row group at a time
+    (no read-ahead), so the driver holds at most one row group beyond the
+    matched rows.  A listed file that has since been removed raises
+    FileNotFoundError."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    paths = [f for b in sorted({hash_bucket(x, n_buckets) for x in lemmas})
+             for f in files.get(b, ())]
+    if not paths:
+        return
+    hive = pads.partitioning(
+        pa.schema([("segment", pa.int32()), ("bucket", pa.int32())]),
+        flavor="hive")
+    ds = pads.dataset(paths, format="parquet", partitioning=hive,
+                      partition_base_dir=f"{out_dir}/data")
+    yield from ds.to_batches(columns=list(columns),
+                             filter=pc.field("lemma").isin(lemmas),
+                             batch_readahead=0, fragment_readahead=0)
+
+
+def read_site_ranges(out_dir: str, site: str) -> list[tuple[int, int]]:
     """Doc_id intervals owned by ``site`` (repo), merged across segments —
     the reference's `site=` search scope (SearchServiceImpl.java filters
     hits to one site's pages) resolved to id ranges.  A site absent from
     the sidecar (or an emptied index) returns [] — no pages, no hits.
-    The sites table is O(repos + append batches) rows: driver-collectable
-    by construction, one pruned read per (engine, site)."""
+    The sites table is O(repos + append batches) rows, so it is read on
+    the driver with Arrow: no Spark job."""
     import glob as _glob
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
 
     if not _glob.glob(f"{out_dir}/sites/segment=*"):
         return []
-    rows = (
-        spark.read.schema(SITES_SCHEMA).parquet(f"{out_dir}/sites")
-        .filter(F.col("repo") == site)
-        .select("lo", "hi")
-        .collect()
-    )
+    rows = pads.dataset(f"{out_dir}/sites", format="parquet").to_table(
+        columns=["lo", "hi"], filter=pc.field("repo") == site)
     # runs split only by a segment boundary rejoin
-    return [(lo, hi) for _, lo, hi in
-            merge_sites((site, int(r["lo"]), int(r["hi"])) for r in rows)]
+    return [(lo, hi) for _, lo, hi in merge_sites(
+        (site, lo, hi) for lo, hi in zip(rows.column("lo").to_pylist(),
+                                         rows.column("hi").to_pylist()))]

@@ -92,7 +92,7 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
     from pyspark.sql import functions as F
 
     from ..streaming.store import read_store
-    from .builder import read_index
+    from .builder import isin_expr, read_index
     from .positions import has_positions, phrase_topk_positions
     from .wand import TermPostings
 
@@ -163,7 +163,7 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
         # serving uses); candidates outside them can't be site hits
         from .builder import read_site_ranges
 
-        iv = read_site_ranges(spark, index_dir, site)
+        iv = read_site_ranges(index_dir, site)
         if not iv:
             return empty  # unknown site owns no pages
         cond = None
@@ -197,7 +197,7 @@ def phrase_topk(spark: SparkSession, index_dir: str, store_dir: str | None,
         ids = sorted(int(r["doc_id"]) for r in cand_rows)
         if not ids:
             return empty
-        page = store.filter(F.col("doc_id").isin(ids))  # row-group pruned
+        page = store.filter(isin_expr("doc_id", ids))  # row-group pruned
         return (
             page.mapInPandas(_verify, schema=out_schema)
             .orderBy(F.desc("phrase_tf"), F.asc("doc_id"))

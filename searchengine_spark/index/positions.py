@@ -225,7 +225,7 @@ def phrase_topk_batch(spark: SparkSession, index_dir: str,
             "meta.has_positions) — run build_positions first")
     out_schema = "qid string, doc_id long, phrase_tf long"
     empty = spark.createDataFrame([], out_schema)
-    from .builder import index_analyzer
+    from .builder import index_analyzer, isin_expr
 
     ana = index_analyzer(spark, index_dir)
     qpat = {qid: [frozenset(p) for p in analyze_positions(ph, *ana)]
@@ -249,7 +249,7 @@ def phrase_topk_batch(spark: SparkSession, index_dir: str,
             if s is None:
                 continue
             if s not in iv_cache:
-                iv_cache[s] = read_site_ranges(spark, index_dir, s)
+                iv_cache[s] = read_site_ranges(index_dir, s)
             if not iv_cache[s]:
                 del qpat[qid]  # unknown site owns no pages
             else:
@@ -262,7 +262,7 @@ def phrase_topk_batch(spark: SparkSession, index_dir: str,
     pdf_src = read_positions(spark, index_dir, all_forms)
     if sites and all(qlive.get(q) is not None for q in qpat):
         union = sorted(set().union(*(qlive[q] for q in qpat)))
-        pdf_src = pdf_src.filter(F.col("segment").isin(union))
+        pdf_src = pdf_src.filter(isin_expr("segment", union))
 
     def _seg(pdf: pd.DataFrame) -> pd.DataFrame:
         seg = int(pdf["segment"].iloc[0])
@@ -354,7 +354,7 @@ def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
             "store-verify path")
     out_schema = "doc_id long, phrase_tf long"
     empty = spark.createDataFrame([], out_schema)
-    from .builder import index_analyzer
+    from .builder import index_analyzer, isin_expr
 
     qforms = [frozenset(p) for p in
               analyze_positions(phrase, *index_analyzer(spark, index_dir))]
@@ -369,7 +369,7 @@ def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
     if site is not None:
         from .builder import read_site_ranges
 
-        intervals = read_site_ranges(spark, index_dir, site)
+        intervals = read_site_ranges(index_dir, site)
         if not intervals:
             return empty  # unknown site owns no pages
 
@@ -378,7 +378,7 @@ def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
         from .wand import _overlapping_segments
 
         segs = sorted(_overlapping_segments(intervals, seg_size))
-        pdf_src = pdf_src.filter(F.col("segment").isin(segs))
+        pdf_src = pdf_src.filter(isin_expr("segment", segs))
 
     def _seg(pdf: pd.DataFrame) -> pd.DataFrame:
         e_ = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),

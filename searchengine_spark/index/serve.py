@@ -36,6 +36,7 @@ def enrich_hits(spark: SparkSession, store_dir: str, query: str,
     """(doc_id, score) page -> reference DTO rows, store-backed."""
     from ..operators.snippet import with_snippet_and_title
     from ..streaming.store import read_store
+    from .builder import isin_expr
 
     if not hits:
         return spark.createDataFrame([], DTO_SCHEMA)
@@ -44,7 +45,7 @@ def enrich_hits(spark: SparkSession, store_dir: str, query: str,
         [(int(d), float(s)) for d, s in hits], "doc_id long, relevance double")
     page = (
         read_store(spark, store_dir)
-        .filter(F.col("doc_id").isin(ids))  # pushed: row-group pruned scan
+        .filter(isin_expr("doc_id", ids))  # pushed: row-group pruned scan
         .select("doc_id", "repo", "path", "content")
         .join(F.broadcast(scores), "doc_id")
     )

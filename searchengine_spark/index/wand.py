@@ -47,7 +47,7 @@ from ..analyzer import analyze
 from .codec import decode_block
 
 if TYPE_CHECKING:
-    from pyspark.sql import Column, DataFrame, SparkSession
+    from pyspark.sql import DataFrame, SparkSession
 
 
 class TermPostings:
@@ -442,20 +442,21 @@ class _ByteLRU:
 
 class QueryEngine:
     """Warm serving wrapper: caches meta, one listing of the index's
-    ``data/`` and driver-side LRUs of decoded term and positional rows, so
-    a query is at most a df lookup plus one Spark job, and a repeated one
-    runs none.
+    ``data/`` files and driver-side LRUs of decoded term and positional
+    rows.  The local route launches no Spark job: df lookups and posting
+    fetches are driver-side Arrow reads of the listed files of the lemmas'
+    buckets (:meth:`_scan`), and a repeated query reads nothing.
 
-    It pins no Spark cache.  Every read derives from one uncached frame
-    over ``data/`` (:attr:`index_df`, listed once per load) and is
-    bucket-pruned, lemma-filtered and column-projected (:meth:`_read`), so
-    a read touches only its lemmas' buckets and executors hold nothing
-    between queries; the driver LRUs serve repeats.
+    It pins no Spark cache.  Only the distributed routes run Spark, over
+    one uncached frame of ``data/`` (:attr:`index_df`, built when a route
+    first needs it) that every such read bucket-prunes, lemma-filters and
+    column-projects (:meth:`_read`); executors hold nothing between
+    queries.
 
     Defaults are the 10^12-file-safe ones: ``preload_dict=False`` (the full
-    dictionary is O(vocabulary) — gdf comes free with the bucket-pruned term
-    rows, or from a pruned lemma/df read on the distributed path); both
-    LRUs are bounded by entries and bytes.  Every query first checks
+    dictionary is O(vocabulary) — gdf comes free with the fetched term
+    rows, or from a lemma/df read of their buckets); both LRUs are bounded
+    by entries and bytes.  Every query first checks
     :func:`index_fingerprint`: an incremental rebuild under a live engine
     re-lists the index and drops the warm rows instead of silently serving
     stale postings."""
@@ -473,7 +474,7 @@ class QueryEngine:
         self._load()
 
     def _load(self) -> None:
-        from .builder import INDEX_OUT_SCHEMA, index_analyzer, read_index
+        from .builder import index_analyzer, list_index_files
 
         with open(f"{self.index_dir}/meta.json") as fh:
             self.meta = json.load(fh)
@@ -482,11 +483,10 @@ class QueryEngine:
         # identity: queries must analyze with the table the build used
         self._ana = index_analyzer(self.spark, self.index_dir, self.meta)
         # build-time average posting width: df * _bpp predicts a term's
-        # driver-side bytes BEFORE any collect.  Indexes built before the
-        # estimate existed fall back to a conservative constant.
-        # _index_bytes (whole-index posting bytes) short-circuits the
-        # estimate when the ENTIRE index fits under a query's threshold —
-        # no term can exceed it, so small indexes skip the dict job.
+        # driver-side bytes BEFORE any fetch (a conservative constant for
+        # indexes built without the stat).  _index_bytes (whole-index
+        # posting bytes) skips the estimate when the ENTIRE index fits
+        # under a query's threshold: no term can exceed it.
         self._bpp = float(self.meta.get("bytes_per_posting") or 8.0)
         self._index_bytes: int | None = self.meta.get("posting_bytes")
         # the positional twins price postings + tfs + pstream per posting,
@@ -498,13 +498,11 @@ class QueryEngine:
         self._pos_bpp = float(
             self.meta.get("pos_bytes_per_posting") or 16.0)
         self._pos_bytes: int | None = self.meta.get("pos_posting_bytes")
-        # no .cache(): a cached relation is materialized whole by its first
-        # read, whatever buckets that read filters on (one topk_rows on a
-        # fresh engine cached 4 of 4 partitions of a 4,000-doc index), and
-        # the driver LRUs already serve repeats.  The uncached frame keeps
-        # the one file listing every pruned read reuses.
-        self.index_df = read_index(self.spark, self.index_dir,
-                                   columns=tuple(INDEX_OUT_SCHEMA.names))
+        # one listing of data/ per load: every local read takes its files
+        # from it, and a file a rebuild has since removed fails the read
+        # (FileNotFoundError) instead of being skipped.
+        self._files = list_index_files(self.index_dir)
+        self._index_df: DataFrame | None = None
         self._term_cache = _ByteLRU(*self._term_bounds)
         self._pos_cache = _ByteLRU(*self._pos_bounds)
         self._gdf_cache: dict[str, int] = {}  # lemma -> global df (tiny rows)
@@ -519,20 +517,38 @@ class QueryEngine:
                 .agg(F.sum("df").alias("gdf")).collect()
             }
 
+    @property
+    def index_df(self) -> DataFrame:
+        """The index as one uncached Spark frame for the distributed routes,
+        built on first use per load.  Spark lists ``data/`` itself: past 32
+        root paths it would list the engine's files in a Spark job.  Never
+        cached: a cached relation is materialized whole by its first read,
+        and the driver LRUs already serve repeats."""
+        if self._index_df is None:
+            from .builder import INDEX_OUT_SCHEMA, read_index
+
+            self._index_df = read_index(self.spark, self.index_dir,
+                                        columns=tuple(INDEX_OUT_SCHEMA.names))
+        return self._index_df
+
     def _check_fresh(self) -> None:
         if index_fingerprint(self.index_dir) != self._fp:
             self._load()
 
-    def _read(self, lemmas: list[str], columns=None) -> DataFrame:
-        """``lemmas``' rows of the engine's listed frame, bucket-pruned,
-        lemma-filtered and projected to ``columns`` (default: the posting
-        columns) exactly as ``read_index(lemmas, columns)`` reads them.
-        Every engine read goes through here: fetches, df lookups and the
-        distributed paths' input."""
-        from .builder import POSTING_COLS, prune_index
+    def _read(self, lemmas: list[str]) -> DataFrame:
+        """The distributed routes' input: ``lemmas``' posting rows of
+        :attr:`index_df`, pruned as ``read_index(lemmas)`` prunes them."""
+        from .builder import prune_index
 
-        return prune_index(self.index_df, lemmas, self.meta["n_buckets"],
-                           columns or POSTING_COLS)
+        return prune_index(self.index_df, lemmas, self.meta["n_buckets"])
+
+    def _scan(self, lemmas: list[str], columns):
+        """``lemmas``' rows of the files listed at load, as Arrow record
+        batches of ``columns``: every local read goes through here."""
+        from .builder import scan_index
+
+        return scan_index(self.index_dir, self._files, lemmas,
+                          self.meta["n_buckets"], columns)
 
     def topk(self, query: str, k: int = 10, mode: str = "auto",
              conjunctive: bool = False, site: str | None = None,
@@ -567,84 +583,71 @@ class QueryEngine:
                                site_intervals=iv)
 
     def _site(self, site: str | None) -> list[tuple[int, int]] | None:
-        """Cached (repo -> doc_id intervals) lookup: one pruned sites-sidecar
-        read per (engine load, site) — fingerprint invalidation drops the
-        cache with the rest of the warm state."""
+        """Cached (repo -> doc_id intervals) lookup: one sites-sidecar read
+        per (engine load, site), dropped with the rest of the warm state."""
         if site is None:
             return None
         if site not in self._site_cache:
             from .builder import read_site_ranges
 
-            self._site_cache[site] = read_site_ranges(
-                self.spark, self.index_dir, site)
+            self._site_cache[site] = read_site_ranges(self.index_dir, site)
         return self._site_cache[site]
 
     def _gdf_for(self, lemmas: list[str]) -> dict[str, int]:
         """Global df per lemma WITHOUT touching posting bytes: preloaded
-        dict > per-engine gdf cache > one pruned, lemma/df-projected read
-        (cached for the engine's lifetime — a term's df is a handful of
-        longs).  Lemmas absent from the index are absent from the result."""
+        dict > per-engine gdf cache > one lemma/df-projected read of their
+        buckets (cached for the engine's lifetime — a term's df is a
+        handful of longs).  Lemmas absent from the index are absent from
+        the result."""
         if self._gdf is not None:
             return {t: self._gdf[t] for t in lemmas if t in self._gdf}
         missing = [t for t in lemmas if t not in self._gdf_cache]
         if missing:
             self._gdf_cache.update(dict.fromkeys(missing, 0))
-            for r in self._read(missing, ("lemma", "df")).collect():
-                self._gdf_cache[r["lemma"]] += int(r["df"])
+            for b in self._scan(missing, ("lemma", "df")):
+                for t, df in zip(b.column("lemma").to_pylist(),
+                                 b.column("df").to_pylist()):
+                    self._gdf_cache[t] += df
         return {t: self._gdf_cache[t] for t in lemmas
                 if self._gdf_cache[t] > 0}
 
     def _fetch(self, terms: list[str], forms: list[str] = (),
                tfloor: int = 0, pfloor: int = 0) -> None:
-        """ONE bucket-pruned collect warms both LRUs: ``terms``' posting
-        rows and ``forms``' positional rows (a lemma in both is one row).
-        A column that no cache wants for a lemma arrives null, so a
-        topk-only term moves no positional bytes to the driver and a
+        """ONE read warms both LRUs: ``terms``' posting rows and
+        ``forms``' positional rows (a lemma in both is one row).  A column
+        that no cache wants for a lemma is dropped as its row arrives, so
+        a topk-only term keeps no positional bytes on the driver and a
         form-only lemma no dls or block directory.  Entries are cached
         DECODED per (lemma, segment), global df baked in for idf, so a
-        repeat costs neither a Spark job nor a varbyte decode; bytes are
+        repeat costs neither a read nor a varbyte decode; bytes are
         counted compressed.  The floors keep each cache's current working
         set from evicting itself.  Callers route over-estimate lemmas away
         BEFORE calling; this function does not guard."""
-        from pyspark.sql import functions as F
-
-        from .builder import isin_expr
         from .positions import decode_term_positions
 
         tset, fset = set(terms), set(forms)
         want = sorted(tset | fset)
-
-        def only(col: str, keep: set[str]) -> Column:
-            if len(keep) == len(want):
-                return F.col(col)
-            return F.when(isin_expr("lemma", sorted(keep)),
-                          F.col(col)).alias(col)
-
         cols = ["segment", "lemma", "df", "postings", "tfs"]
         if tset:
-            cols += [only("dls", tset), only("blocks", tset)]
+            cols += ["dls", "blocks"]
         if fset:
-            cols.append(only("pstream", fset))
+            cols.append("pstream")
         rows: dict[str, list] = {t: [] for t in want}
-        for r in self._read(want, cols).collect():
-            rows[r["lemma"]].append(r)
+        for batch in self._scan(want, cols):
+            for r in batch.to_pylist():
+                if r["lemma"] not in tset:
+                    r["dls"] = r["blocks"] = None
+                if r["lemma"] not in fset:
+                    r["pstream"] = None
+                rows[r["lemma"]].append(r)
         for lemma, rs in rows.items():
-            self._gdf_cache[lemma] = sum(int(r["df"]) for r in rs)
+            self._gdf_cache[lemma] = sum(r["df"] for r in rs)
         for lemma in terms:
-            entries = [
-                (
-                    lemma,
-                    int(r["segment"]),
-                    TermPostings(
-                        r["postings"], r["tfs"], r["dls"],
-                        [b.asDict() if hasattr(b, "asDict") else b
-                         for b in r["blocks"]],
-                        self._gdf_cache[lemma],
-                    ),
-                    len(r["postings"]) + len(r["tfs"]) + len(r["dls"]),
-                )
-                for r in rows[lemma]
-            ]
+            entries = [(lemma, r["segment"],
+                        TermPostings(r["postings"], r["tfs"], r["dls"],
+                                     r["blocks"], self._gdf_cache[lemma]),
+                        len(r["postings"]) + len(r["tfs"]) + len(r["dls"]))
+                       for r in rows[lemma]]
             self._term_cache.put(lemma, entries, sum(e[3] for e in entries))
         seg_size = int(self.meta["seg_size"])
         block_size = int(self.meta["block_size"])
@@ -655,10 +658,10 @@ class QueryEngine:
                     r["postings"], r["tfs"], r["pstream"], block_size)
                 # per-OCCURRENCE local doc ids, aligned with flat positions
                 # — exactly the decoded shape _intersect_slots consumes
-                occ = np.repeat(docs - int(r["segment"]) * seg_size, counts)
+                occ = np.repeat(docs - r["segment"] * seg_size, counts)
                 mx = int(flat.max()) if flat.size else 0
                 nb = len(r["postings"]) + len(r["tfs"]) + len(r["pstream"])
-                entries.append((int(r["segment"]), occ, flat, mx, nb))
+                entries.append((r["segment"], occ, flat, mx, nb))
             self._pos_cache.put(lemma, entries, sum(e[4] for e in entries))
         if tset:
             self._term_cache.evict(tfloor)
@@ -792,13 +795,11 @@ class QueryEngine:
                  local_threshold_bytes: int = 64 << 20,
                  phrases: list[str] | None = None) -> int:
         """Warm the term cache for a whole query suite, and with
-        ``phrases`` the positional cache for their forms, in at most two
-        Spark jobs: one df lookup (only when an index is over the
-        threshold) and ONE bucket-pruned collect over every lemma either
-        cache needs (round-4 backlog: a broker restart re-warms its
-        expected workload in a single scan instead of one pruned collect
-        per first query).  Returns the number of lemmas fetched (terms +
-        positional forms).
+        ``phrases`` the positional cache for their forms, with no Spark
+        job: at most one df read (only when an index is over the
+        threshold), then ONE read of every lemma either cache needs, so a
+        broker restart re-warms its expected workload in a single pass.
+        Returns the number of lemmas fetched (terms + positional forms).
 
         Honors the same byte discipline as :meth:`topk_rows` and
         :meth:`phrase_rows`: a lemma whose dict-estimated postings
@@ -847,9 +848,9 @@ class QueryEngine:
                   local_threshold_bytes: int = 64 << 20,
                   site: str | None = None,
                   offset: int = 0) -> list[tuple[int, float]]:
-        """Serving fast path: collect the (pruned, tiny) term rows to the
-        driver and score them locally in numpy — one cheap collect instead
-        of a shuffle + applyInPandas stage.  Falls back to the distributed
+        """Serving fast path: read the term rows on the driver (no Spark
+        job) and score them locally in numpy instead of in a shuffle +
+        applyInPandas stage.  Falls back to the distributed
         path when the query's postings exceed ``local_threshold_bytes``
         (broker-style: small working sets score on the broker, big ones on
         the workers).  The size check runs BEFORE any posting bytes move:
@@ -870,8 +871,7 @@ class QueryEngine:
             return []  # unknown site owns no pages
         kk = k + offset
         # driver-side LRU term cache: index immutable per fingerprint, so a
-        # term's rows (postings bytes + blocks) are collected once and
-        # repeated terms cost no Spark job at all
+        # term's rows are read once and a repeated term reads nothing
         fetch = self._term_cache.touch(qlemmas)
         if fetch:
             if (self._index_bytes is None
@@ -975,7 +975,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .builder import read_index, read_site_ranges
+    from .builder import isin_expr, read_index, read_site_ranges
 
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
@@ -999,7 +999,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
             qiv[qid] = None
             continue
         if s not in iv_cache:
-            iv_cache[s] = read_site_ranges(spark, index_dir, s)
+            iv_cache[s] = read_site_ranges(index_dir, s)
         if not iv_cache[s]:
             del qmap[qid]  # unknown site owns no pages (single-path parity)
         else:
@@ -1017,7 +1017,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
         # every query is site-scoped: partition-prune the shared scan to the
         # union of their live segments (same pruning as the single path)
         union = sorted(set().union(*qsegs.values()))
-        idx = idx.filter(F.col("segment").isin(union))
+        idx = idx.filter(isin_expr("segment", union))
     if gdf_override is not None:
         gdf = gdf_override
     else:
@@ -1104,7 +1104,7 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     callers that cache it (QueryEngine)."""
     from pyspark.sql import functions as F
 
-    from .builder import read_index, read_site_ranges
+    from .builder import isin_expr, read_index, read_site_ranges
 
     if offset < 0:
         raise ValueError("offset must be >= 0")
@@ -1119,7 +1119,7 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
         return empty
     intervals = site_intervals
     if site is not None and intervals is None:
-        intervals = read_site_ranges(spark, index_dir, site)
+        intervals = read_site_ranges(index_dir, site)
     if site is not None and not intervals:
         return empty  # unknown site owns no pages
 
@@ -1129,7 +1129,7 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
         # partition pruning on segment=: a site's docs live only in the
         # segments its intervals overlap
         segs = sorted(_overlapping_segments(intervals, int(meta["seg_size"])))
-        idx = idx.filter(F.col("segment").isin(segs))
+        idx = idx.filter(isin_expr("segment", segs))
     # global df per lemma: preloaded dict (QueryEngine) > pruned lemma/df
     # read of the index.  Never scoped to the site's segments: df (hence
     # idf) is a corpus-global statistic — summing only the site's segments

@@ -58,7 +58,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 
-from ..corpus import ingest
+from ..corpus import _ingest, ingest
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -136,17 +136,22 @@ def read_store(spark: SparkSession, store_dir: str,
 def init_store(batch: DataFrame, store_dir: str,
                n_kb: int = DEFAULT_N_KB) -> dict:
     """First batch: dedupe, dense-rank ingest, write the partitioned store."""
-    deduped = _dedupe_latest(batch)
-    ing = ingest(deduped).withColumn("kb", _kb_col(n_kb))
+    return _write_store(_dedupe_latest(batch), store_dir, n_kb)
+
+
+def _write_store(rows: DataFrame, store_dir: str, n_kb: int) -> dict:
+    """Dense-rank ``rows`` (the fresh-ingest order) and overwrite the
+    whole store with them.  ``n`` comes from the ingest checkpoint's
+    partition counts, so the written store is never re-read to count it."""
+    ing, n = _ingest(rows)
     (
-        ing.repartition("kb")
+        ing.withColumn("kb", _kb_col(n_kb))
+        .repartition("kb")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .partitionBy("kb")
         .parquet(f"{store_dir}/data")
     )
-    spark = batch.sparkSession
-    n = read_store(spark, store_dir).count()
     meta = {"n_kb": n_kb, "max_doc_id": n - 1, "n_docs": n}
     _write_meta(store_dir, meta)
     return meta
@@ -331,19 +336,7 @@ def compact_store(spark: SparkSession, store_dir: str) -> dict:
     meta = store_meta(store_dir)
     if meta is None:
         raise FileNotFoundError(f"no store_meta.json under {store_dir}")
-    n_kb = int(meta["n_kb"])
     rows = read_store(spark, store_dir).select(
         "repo", "path", "commit", "lang", "content"
     ).localCheckpoint()
-    ing = ingest(rows).withColumn("kb", _kb_col(n_kb))
-    (
-        ing.repartition("kb")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .partitionBy("kb")
-        .parquet(f"{store_dir}/data")
-    )
-    n = read_store(spark, store_dir).count()
-    meta = {"n_kb": n_kb, "max_doc_id": n - 1, "n_docs": n}
-    _write_meta(store_dir, meta)
-    return meta
+    return _write_store(rows, store_dir, int(meta["n_kb"]))

@@ -401,6 +401,45 @@ def test_compact_store_restores_dense_global_ranks(spark, tmp_path):
     assert got == want
 
 
+def test_store_meta_counts_come_from_ingest(spark, tmp_path):
+    """init_store and compact_store take n_docs from the partition counts
+    the ingest checkpoint tallies, not from a count of the written store:
+    store_meta matches a count after init (with a duplicate key version
+    deduped away) and after compaction (with deletes leaving holes), and
+    init launches at most 6 Spark jobs, 2 fewer than with that count."""
+    from searchengine_spark.streaming.store import (
+        compact_store, delete_keys, init_store, merge_batch, read_store,
+        store_meta,
+    )
+
+    def check():
+        n = read_store(spark, store).count()
+        assert store_meta(store) == {"n_kb": 8, "max_doc_id": n - 1,
+                                     "n_docs": n}
+        return n
+
+    rows = gen_corpus_local(30)
+    old = (*rows[0][:2], "0" + rows[0][2], *rows[0][3:])  # same key
+    batch = spark.createDataFrame(rows[:20] + [old], DOCS_SCHEMA)
+    batch.count()
+    store = str(tmp_path / "store")
+    sc = spark.sparkContext
+    sc.setJobGroup("init-store", "init-store")
+    try:
+        init_store(batch, store, n_kb=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("init-store")) <= 6
+    assert check() == 20
+
+    merge_batch(spark.createDataFrame(rows[20:], DOCS_SCHEMA), store)
+    delete_keys(spark.createDataFrame([r[:2] for r in rows[3:6]],
+                                      "repo string, path string"), store)
+    assert compact_store(spark, store) == store_meta(store)
+    assert check() == 27
+
+
 def test_read_store_kbs_direct_path_pruning(spark, tmp_path):
     """read_store(kbs=...) must produce exactly the rows of those key
     buckets while its scan lists ONLY the requested kb= directories — the
@@ -521,7 +560,7 @@ def test_site_scope_spans_appended_tail_runs(spark, tmp_path):
     repo = target[0]
     ids = sorted(r["doc_id"] for r in
                  docs_now.filter(docs_now.repo == repo).collect())
-    iv = read_site_ranges(spark, idx, repo)
+    iv = read_site_ranges(idx, repo)
     assert {i for lo, hi in iv for i in range(lo, hi + 1)} == set(ids)
     assert len(iv) >= 2 or all(i >= 50 for i in ids)  # prefix + tail run
 

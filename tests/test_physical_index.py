@@ -252,9 +252,9 @@ def test_query_engine_invalidates_on_rebuild(spark, docs, tmp_path):
 
 
 def test_query_engine_prefetch_single_job_warms_suite(spark, index_dir):
-    """prefetch() warms a whole suite's terms in one bucket-pruned collect;
-    subsequent topk_rows hit only the driver cache (no further Spark jobs)
-    and return exactly what a non-prefetched engine returns."""
+    """prefetch() warms a whole suite's terms in one driver-side read of
+    their buckets; subsequent topk_rows hit only the driver cache (no
+    Spark job) and return exactly what a non-prefetched engine returns."""
     from searchengine_spark.index.wand import QueryEngine
 
     queries = ["tamok velsor", "kw_rare_xyzzy tamok", "velsor"]
@@ -353,7 +353,7 @@ def test_sites_sidecar_is_islands_of_the_ingest(spark, index_dir, docs):
     for r in docs.select("repo", "doc_id").collect():
         by_repo.setdefault(r["repo"], set()).add(r["doc_id"])
     for repo, ids in by_repo.items():
-        iv = read_site_ranges(spark, index_dir, repo)
+        iv = read_site_ranges(index_dir, repo)
         covered = {i for lo, hi in iv for i in range(lo, hi + 1)}
         assert covered == ids, repo
         # fresh build: one contiguous run per repo once segments are merged
@@ -387,7 +387,7 @@ def test_site_scope_prunes_segment_partitions(spark, index_dir, docs):
     with open(f"{index_dir}/meta.json") as fh:
         seg_size = _json.load(fh)["seg_size"]
     repo = docs.select("repo").distinct().orderBy("repo").collect()[0]["repo"]
-    iv = read_site_ranges(spark, index_dir, repo)
+    iv = read_site_ranges(index_dir, repo)
     want_segs = {s for lo, hi in iv
                  for s in range(lo // seg_size, hi // seg_size + 1)}
     assert 0 < len(want_segs) < 3  # non-trivial pruning at 3 segments

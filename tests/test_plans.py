@@ -104,8 +104,8 @@ def test_engine_distributed_reads_prune_buckets_uncached(spark, tmp_path, docs):
 
 def test_isin_expr_selects_as_isin(spark):
     """The one-call IN predicate the index reads use selects exactly what
-    Column.isin selects, quotes and backslashes included, and plans as
-    the same INSET."""
+    Column.isin selects, for strings (quotes and backslashes included) and
+    for int and long columns, and plans as the same INSET."""
     from searchengine_spark.index.builder import isin_expr
 
     vals = ["it's", "a\\b", "x\\'y", "квант", "uni\\u0041", "tab\there"]
@@ -118,6 +118,15 @@ def test_isin_expr_selects_as_isin(spark):
     assert "INSET" in got._jdf.queryExecution().optimizedPlan().toString()
     assert df.filter(isin_expr("lemma", [])).count() == 0
     assert df.filter(isin_expr("lemma", ["A"])).count() == 1
+    ids = spark.range(40).withColumn("seg", F.col("id").cast("int") % 7)
+    for vals in ([3, 11, 39], list(range(0, 40, 3)), [2, 5]):
+        for col in ("id", "seg"):
+            got = ids.filter(isin_expr(col, vals))
+            assert (sorted(r[0] for r in got.collect())
+                    == sorted(r[0] for r in ids.filter(
+                        F.col(col).isin(vals)).collect()))
+    assert "INSET" in ids.filter(isin_expr("id", list(range(12)))
+                                 )._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_proximity_candidate_join_not_forced_broadcast(spark, docs):

@@ -6,6 +6,9 @@ byte guard and warms site scopes."""
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 import pytest
 
 from searchengine_spark.analyzer import analyze
@@ -141,41 +144,176 @@ def test_gdf_cache_avoids_repeat_dict_jobs(spark, idx):
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
 
 
-def test_prefetch_is_one_lookup_and_one_fetch(spark, pidx):
-    """prefetch warms both LRUs with one bucket-pruned collect, preceded by
-    one df lookup only when an index is over the threshold, whatever the
-    mix of terms and phrase forms; lemmas over the threshold are still
-    skipped before any posting bytes move."""
+POSTING_READ = ("segment", "lemma", "df", "postings", "tfs", "dls", "blocks",
+                "pstream")
+
+
+def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
+    """An engine set-up (QueryEngine + prefetch) launches no Spark job,
+    whatever the mix of terms, phrase forms and sites: its reads are
+    driver-side Arrow reads.  The guard's order holds: a lemma/df read
+    comes first, and only when an index is over the threshold; then ONE
+    posting read, which never names a term or form the guard skipped."""
+    from searchengine_spark.index import builder
+
     queries, phrases = ["sorvel jordro", "lixpex"], ["veltadrolix hazlixsor"]
-    gdf = gdf_lookup(spark, pidx, ["sorvel", "jordro", "lixpex",
-                                   "veltadrolix", "hazlixsor"])
+    lemmas = ["hazlixsor", "jordro", "lixpex", "sorvel", "veltadrolix"]
+    gdf = gdf_lookup(spark, pidx, lemmas)
     assert len(gdf) == 5
+    reads = []
+    scan = builder.scan_index
 
-    eng = QueryEngine(spark, pidx)  # whole index under 64 MiB: no lookup
-    assert _jobs(spark, "prefetch-fits", lambda: eng.prefetch(
-        queries, phrases=phrases)) == (5, 1)
+    def recorded(out_dir, files, want, n_buckets, columns):
+        reads.append((sorted(want), tuple(columns)))
+        return scan(out_dir, files, want, n_buckets, columns)
 
-    # under both index totals, over every lemma: the guard needs df
+    monkeypatch.setattr(builder, "scan_index", recorded)
+
+    def setup(group, **kw):
+        def run():
+            eng = QueryEngine(spark, pidx)
+            return eng, eng.prefetch(queries, phrases=phrases, **kw)
+
+        reads.clear()
+        (eng, n), jobs = _jobs(spark, group, run)
+        assert jobs == 0
+        return eng, n, list(reads)
+
+    # whole index under 64 MiB: no df read; the site interval lookup is
+    # a driver-side read too
+    eng, n, got = setup("prefetch-fits", sites=["org0/proj0"])
+    assert n == 5 and got == [(lemmas, POSTING_READ)]
+    assert eng._site_cache["org0/proj0"]
+
+    # under both index totals, over every lemma: the guard reads df first
     thr = int(max(gdf.values()) * eng._pos_bpp) + 1
     assert thr < min(eng._index_bytes, eng._pos_bytes)
-    eng = QueryEngine(spark, pidx)
-    assert _jobs(spark, "prefetch-guarded", lambda: eng.prefetch(
-        queries, phrases=phrases, local_threshold_bytes=thr)) == (5, 2)
+    eng, n, got = setup("prefetch-guarded", local_threshold_bytes=thr)
+    assert n == 5 and got == [(lemmas, ("lemma", "df")),
+                              (lemmas, POSTING_READ)]
 
-    # one term and one form over the threshold are skipped
+    # one term and one form over the threshold are skipped: neither ever
+    # appears in a posting read
     thr = int(min(gdf["sorvel"] * eng._bpp,
                   gdf["veltadrolix"] * eng._pos_bpp)) - 1
     assert max(gdf["jordro"], gdf["lixpex"]) * eng._bpp <= thr
     assert gdf["hazlixsor"] * eng._pos_bpp <= thr
-    eng = QueryEngine(spark, pidx)
-    assert _jobs(spark, "prefetch-skips", lambda: eng.prefetch(
-        queries, phrases=phrases, local_threshold_bytes=thr)) == (3, 2)
+    eng, n, got = setup("prefetch-skips", local_threshold_bytes=thr)
+    assert n == 3 and got == [(lemmas, ("lemma", "df")),
+                              (["hazlixsor", "jordro", "lixpex"],
+                               POSTING_READ)]
     assert sorted(eng._term_cache) == ["jordro", "lixpex"]
     assert list(eng._pos_cache) == ["hazlixsor"]
     eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched a term prefetch skipped"))
     assert eng.topk_rows(queries[0], 5, local_threshold_bytes=thr) == (
         _hits_distributed(spark, pidx, queries[0], 5))
+
+
+def _term_entry(lemma, seg, tp, nb):
+    return (lemma, seg, tp.docs_b.tobytes(), tp.tfs_b.tobytes(),
+            tp.dls_b.tobytes(), tp.first.tolist(), tp.last.tolist(),
+            tp.n.tolist(), tp.doc_off.tolist(), tp.tf_off.tolist(),
+            tp.dl_off.tolist(), tp.max_w.tolist(), tp.df, nb)
+
+
+def _pos_entry(lemma, seg, occ, flat, mx, nb):
+    return (lemma, seg, occ.tolist(), flat.tolist(), mx, nb)
+
+
+def _spark_entries(spark, index_dir, terms, forms):
+    """What the engine's caches should hold for ``terms``/``forms``,
+    collected through Spark (read_index/read_positions) and decoded."""
+    import json
+
+    from searchengine_spark.index.builder import read_index
+    from searchengine_spark.index.positions import (
+        decode_term_positions,
+        read_positions,
+    )
+    from searchengine_spark.index.wand import TermPostings
+
+    with open(f"{index_dir}/meta.json") as fh:
+        meta = json.load(fh)
+    gdf = gdf_lookup(spark, index_dir, terms + forms)
+    want_t = [
+        _term_entry(r["lemma"], r["segment"],
+                    TermPostings(r["postings"], r["tfs"], r["dls"],
+                                 r["blocks"], gdf[r["lemma"]]),
+                    len(r["postings"]) + len(r["tfs"]) + len(r["dls"]))
+        for r in read_index(spark, index_dir, terms).collect()]
+    want_p = []
+    for r in read_positions(spark, index_dir, forms).collect():
+        docs, counts, flat = decode_term_positions(
+            r["postings"], r["tfs"], r["pstream"], meta["block_size"])
+        occ = np.repeat(docs - r["segment"] * meta["seg_size"], counts)
+        want_p.append(_pos_entry(
+            r["lemma"], r["segment"], occ, flat,
+            int(flat.max()) if flat.size else 0,
+            len(r["postings"]) + len(r["tfs"]) + len(r["pstream"])))
+    return sorted(want_t), sorted(want_p)
+
+
+def _engine_entries(eng, terms, forms):
+    return (sorted(_term_entry(*e) for t in terms
+                   for e in eng._term_cache.get(t)),
+            sorted(_pos_entry(t, *e) for t in forms
+                   for e in eng._pos_cache.get(t)))
+
+
+def test_engine_cache_entries_match_spark_reads(spark, pidx, tmp_path):
+    """The engine's Arrow reads fill its term and positional caches with
+    exactly what read_index/read_positions collect through Spark, decoded,
+    up to segment order: a lemma in both caches, a term only, a form only
+    and a lemma absent from the index (cached as no entries).  An emptied
+    index lists no files and caches no entries."""
+    from searchengine_spark.streaming.incremental import rebuild_segments
+    from searchengine_spark.streaming.store import (
+        delete_keys,
+        init_store,
+        read_store,
+    )
+
+    terms, forms = ["sorvel", "jordro", "zz_absent"], ["sorvel", "veltadrolix",
+                                                      "zz_absent"]
+    eng = QueryEngine(spark, pidx)
+    assert _jobs(spark, "arrow-fetch", lambda: eng._fetch(terms, forms))[1] == 0
+    want = _spark_entries(spark, pidx, terms, forms)
+    assert want[0] and want[1]
+    assert _engine_entries(eng, terms, forms) == want
+    assert "zz_absent" in eng._term_cache and "zz_absent" in eng._pos_cache
+    assert eng._gdf_for(["zz_absent"]) == {}
+
+    store, idx = str(tmp_path / "store"), str(tmp_path / "idx")
+    init_store(spark.createDataFrame(gen_corpus_local(20), DOCS_SCHEMA), store)
+    build_index(read_store(spark, store), idx, n_segments=2, resume=False,
+                positions=True)
+    eng = QueryEngine(spark, idx)
+    summary = delete_keys(read_store(spark, store).select("repo", "path"),
+                          store, seg_size=eng.meta["seg_size"])
+    rebuild_segments(read_store(spark, store), idx, summary["dirty_segments"])
+    assert eng.topk_rows("sorvel tamok", 5) == []  # reloads: emptied index
+    assert eng._files == {}
+    eng._fetch(terms, forms)
+    assert _engine_entries(eng, terms, forms) == ([], [])
+    assert _spark_entries(spark, idx, terms, forms) == ([], [])
+
+
+def test_engine_read_of_a_removed_file_fails_loudly(spark, idx, tmp_path):
+    """The engine reads the files it listed at load: one removed under it
+    (here without touching meta or the manifests, so no reload) fails the
+    read with FileNotFoundError instead of serving fewer postings."""
+    import shutil
+
+    from searchengine_spark.index.builder import hash_bucket
+
+    out = str(tmp_path / "idx")
+    shutil.copytree(idx, out)
+    eng = QueryEngine(spark, out)
+    for f in eng._files[hash_bucket("tamok", eng.meta["n_buckets"])][:1]:
+        os.remove(f)
+    with pytest.raises(FileNotFoundError):
+        eng.topk_rows("tamok", 5)
 
 
 def test_mixed_generation_manifests_disable_bytes_shortcut(spark, tmp_path):
