@@ -5,9 +5,10 @@
         --index /path/to/index --query "spark shuffle merge" -k 10
 
 ``--query`` is repeatable: with several queries the job serves them through
-QueryEngine — one bucket-pruned prefetch collect warms every term, then
-each query scores driver-side with no further Spark job (broker serving
-shape).  A single query keeps the one-shot distributed path.
+QueryEngine — one prefetch warms every term with driver-side Arrow reads of
+the index files (no Spark job), then each query scores driver-side too
+(broker serving shape).  A single query keeps the one-shot distributed
+path.
 
 ``--batch FILE`` (one query per line) instead scores the whole workload
 distributed in ONE Spark job (wand.bm25_topk_batch): the offline shape for
@@ -66,6 +67,10 @@ def main() -> None:
 
     if (args.query is None) == (args.batch is None):
         ap.error("exactly one of --query / --batch is required")
+    if args.k < 1:
+        ap.error("-k must be >= 1")
+    if args.offset < 0:
+        ap.error("--offset must be >= 0")
     # reject silently-unsupported combinations instead of dropping flags
     if args.phrase and (args.offset or args.conjunctive
                         or args.mode is not None):
@@ -127,15 +132,15 @@ def main() -> None:
             # ids), then driver-side snippet/title per query — no per-query
             # Spark job creeps back into the batch path
             import pandas as pd
-            from pyspark.sql import functions as F
 
+            from searchengine_spark.index.builder import isin_expr
             from searchengine_spark.operators.snippet import snippet_series
             from searchengine_spark.streaming.store import read_store
 
             all_ids = sorted({d for hits in by_q.values() for d, _ in hits})
             info = {r["doc_id"]: r for r in (
                 read_store(spark, args.store)
-                .filter(F.col("doc_id").isin(all_ids))
+                .filter(isin_expr("doc_id", all_ids))
                 .select("doc_id", "repo", "path", "content")
                 .collect())} if all_ids else {}
 

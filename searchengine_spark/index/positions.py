@@ -24,12 +24,15 @@ several forms), so matching is symmetric with the store-verify path by
 construction and the two implementations are row-identical
 (tests/test_phrase_positions.py).
 
-Query time (:func:`phrase_topk_positions`): a bucket-pruned read of the
-query forms' rows, then per segment (one ``applyInPandas`` group, all
-numpy) each pattern slot j becomes a sorted key set
-``local_doc * K + (pos - j)`` — the union over the slot's forms — and the
-phrase's start positions are the INTERSECTION of the slots' key sets.
-``phrase_tf`` is the per-doc count of surviving starts.  Cost is
+Query time: one front end serves :func:`phrase_topk_positions` and
+:func:`phrase_topk_batch` (a phrase is a batch of one): a bucket-pruned
+read of the query forms' rows, then per segment (one ``applyInPandas``
+group, all numpy) :func:`phrase_segment` turns each pattern slot j into a
+sorted key set ``local_doc * K + (pos - j)`` — the union over the slot's
+forms — and the phrase's start positions are the INTERSECTION of the
+slots' key sets.  ``phrase_tf`` is the per-doc count of surviving starts.
+``QueryEngine.phrase_rows`` runs the same scorer over its cached decoded
+forms.  Cost is
 O(postings of the query terms) — the same class as conjunctive search —
 regardless of how common the words are; no store scan, no per-row Python
 re-analysis.
@@ -58,6 +61,7 @@ import numpy as np
 
 from ..analyzer import analyze_positions
 from .codec import varbyte_decode, varbyte_encode_with_ends
+from .wand import _mask_ids, _site_scopes
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -182,135 +186,25 @@ def read_positions(spark: SparkSession, index_dir: str,
     return read_index(spark, index_dir, lemmas, columns=POS_COLS)
 
 
-def _decode_segment(pdf, base: int, block_size: int
-                    ) -> tuple[dict[str, tuple], int]:
-    """One segment's positional rows -> (lemma -> (local doc per
-    occurrence, flat positions), K): the shape :func:`_intersect_slots`
-    consumes, and a key stride past every position."""
-    decoded: dict[str, tuple] = {}
-    max_pos = 0
-    for r in pdf.itertuples():
-        docs, counts, flat = decode_term_positions(
-            r.postings, r.tfs, r.pstream, block_size)
-        if flat.size:
-            max_pos = max(max_pos, int(flat.max()))
-        decoded[r.lemma] = (np.repeat(docs - base, counts), flat)
-    return decoded, max_pos + 2
-
-
-def phrase_topk_batch(spark: SparkSession, index_dir: str,
-                      phrases: dict[str, str], k: int = 10,
-                      sites: dict[str, str] | None = None) -> DataFrame:
-    """Score a whole PHRASE workload in one Spark job: (qid, doc_id,
-    phrase_tf) — the positional twin of wand.bm25_topk_batch.  ONE
-    bucket-pruned positional scan covers the union of all patterns' forms;
-    inside each segment every form is decoded ONCE and shared across all
-    phrases using it; the per-qid top-k merge is one tiny window-ranked
-    shuffle.  Row-identical per qid to :func:`phrase_topk_positions`
-    (parity-tested).
-
-    ``sites`` (qid -> repo, optional per qid) completes batch API parity
-    with BM25: a qid's scope becomes the same doc_id interval mask the
-    single path applies (in-segment after the slot intersection, with a
-    per-qid live-segment skip), an unknown site drops its qid (single-path
-    parity: empty), and when EVERY qid is scoped the positional scan itself
-    prunes to the union of their overlapping segments."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    if not has_positions(index_dir):
-        raise ValueError(
-            "index has no positions (a rebuild without positions clears "
-            "meta.has_positions) — run build_positions first")
-    out_schema = "qid string, doc_id long, phrase_tf long"
-    empty = spark.createDataFrame([], out_schema)
-    from .builder import index_analyzer, isin_expr
-
-    ana = index_analyzer(spark, index_dir)
-    qpat = {qid: [frozenset(p) for p in analyze_positions(ph, *ana)]
-            for qid, ph in phrases.items()}
-    qpat = {qid: p for qid, p in qpat.items() if p}
-    if not qpat:
-        return empty
-    with open(f"{index_dir}/meta.json") as fh:
-        meta = json.load(fh)
-    seg_size, block_size = int(meta["seg_size"]), int(meta["block_size"])
-
-    qiv: dict[str, list[tuple[int, int]] | None] = {q: None for q in qpat}
-    qlive: dict[str, set[int] | None] = {q: None for q in qpat}
-    if sites:
-        from .builder import read_site_ranges
-        from .wand import _overlapping_segments
-
-        iv_cache: dict[str, list[tuple[int, int]]] = {}
-        for qid in list(qpat):
-            s = sites.get(qid)
-            if s is None:
-                continue
-            if s not in iv_cache:
-                iv_cache[s] = read_site_ranges(index_dir, s)
-            if not iv_cache[s]:
-                del qpat[qid]  # unknown site owns no pages
-            else:
-                qiv[qid] = iv_cache[s]
-                qlive[qid] = _overlapping_segments(iv_cache[s], seg_size)
-        if not qpat:
-            return empty
-    all_forms = sorted({f for p in qpat.values() for fs in p for f in fs})
-
-    pdf_src = read_positions(spark, index_dir, all_forms)
-    if sites and all(qlive.get(q) is not None for q in qpat):
-        union = sorted(set().union(*(qlive[q] for q in qpat)))
-        pdf_src = pdf_src.filter(isin_expr("segment", union))
-
-    def _seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["segment"].iloc[0])
-        base = seg * seg_size
-        decoded, K = _decode_segment(pdf, base, block_size)
-        out_q: list[str] = []
-        out_d: list[int] = []
-        out_t: list[int] = []
-        for qid, pattern in qpat.items():
-            live = qlive.get(qid)
-            if live is not None and seg not in live:
-                continue  # this qid's site cannot reach this segment
-            acc = _intersect_slots(pattern, decoded, K)
-            if acc is None or acc.size == 0:
-                continue
-            ids, tf = np.unique(base + acc // K, return_counts=True)
-            iv = qiv.get(qid)
-            if iv is not None:
-                from .wand import _mask_ids
-
-                keep = np.isin(ids, _mask_ids(ids, iv))
-                ids, tf = ids[keep], tf[keep]
-                if ids.size == 0:
-                    continue
-            order = np.lexsort((ids, -tf))[:k]  # segment-local pre-cut
-            out_q.extend([qid] * order.size)
-            out_d.extend(ids[order].tolist())
-            out_t.extend(tf[order].tolist())
-        return pd.DataFrame({"qid": out_q, "doc_id": out_d,
-                             "phrase_tf": out_t})
-
-    local = pdf_src.groupBy("segment").applyInPandas(_seg, schema=out_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("phrase_tf"),
-                                          F.asc("doc_id"))
-    return (
-        local.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-        .orderBy("qid", F.desc("phrase_tf"), F.asc("doc_id"))
-    )
+def decode_form(postings: bytes, tfs: bytes, pstream: bytes, seg: int,
+                seg_size: int, block_size: int
+                ) -> tuple[np.ndarray, np.ndarray, int]:
+    """One form's positional row in the shape :func:`phrase_segment`
+    consumes: (segment-local doc id per OCCURRENCE, the aligned flat
+    positions, the max position).  Spark's segment groups and
+    QueryEngine's positional cache both decode through it."""
+    docs, counts, flat = decode_term_positions(postings, tfs, pstream,
+                                               block_size)
+    return (np.repeat(docs - seg * seg_size, counts), flat,
+            int(flat.max()) if flat.size else 0)
 
 
 def _intersect_slots(pattern: list[frozenset], decoded: dict[str, tuple],
                      K: int) -> np.ndarray | None:
-    """Shared slot-intersection core: ``decoded`` maps lemma ->
-    (local_doc-per-occurrence, flat positions).  Returns the surviving
-    start keys (local_doc * K + start_pos), or None when some slot has no
-    form in this segment."""
+    """Slot intersection: ``decoded`` maps lemma -> (local_doc per
+    occurrence, flat positions).  Returns the surviving start keys
+    (local_doc * K + start_pos), or None when some slot has no form in
+    this segment."""
     slot_keys: list[np.ndarray | None] = []
     for j, fs in enumerate(pattern):
         parts = []
@@ -332,72 +226,149 @@ def _intersect_slots(pattern: list[frozenset], decoded: dict[str, tuple],
     return acc
 
 
-def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
-                          k: int = 10,
-                          site: str | None = None) -> DataFrame:
-    """Top-k (doc_id, phrase_tf) from the index's positions alone — exact,
-    store-free, O(query-term postings) even for a phrase of two common
-    words.  Row-identical to index/phrase.py's store-verify path (same
-    ``analyze_positions`` pattern contract on both sides; parity-tested).
+def phrase_segment(seg: int, decoded: dict[str, tuple], K: int,
+                   seg_size: int, queries: dict, k: int) -> list[tuple]:
+    """The one per-segment phrase scorer, run by Spark's segment groups
+    and by ``QueryEngine.phrase_rows`` alike: ``decoded`` is this
+    segment's forms as :func:`_intersect_slots` consumes them (``K`` a key
+    stride past every position), ``queries`` qid -> (pattern, site
+    intervals, live segments).  Returns (qid, doc_ids, phrase_tfs) per
+    query with matches here, cut to its top ``k`` by (phrase_tf desc,
+    doc_id asc)."""
+    base = seg * seg_size
+    out = []
+    for qid, (pattern, intervals, live) in queries.items():
+        if live is not None and seg not in live:
+            continue  # this qid's site cannot reach this segment
+        acc = _intersect_slots(pattern, decoded, K)
+        if acc is None or acc.size == 0:
+            continue
+        ids, tf = np.unique(base + acc // K, return_counts=True)
+        if intervals is not None:
+            keep = np.isin(ids, _mask_ids(ids, intervals))
+            ids, tf = ids[keep], tf[keep]
+        order = np.lexsort((ids, -tf))[:k]
+        if order.size:
+            out.append((qid, ids[order], tf[order]))
+    return out
 
-    ``site`` scopes the search to one repo exactly like BM25 serving: the
-    builder's sites sidecar resolves to doc_id intervals, the positional scan
-    is partition-pruned to overlapping segments, and matched docs are
-    interval-masked after the slot intersection."""
+
+def _phrase_segments(spark: SparkSession, index_dir: str,
+                     phrases: dict[str, str], k: int,
+                     sites: dict[str, str | None],
+                     index_df: DataFrame | None,
+                     site_intervals: dict[str, list[tuple[int, int]]] | None,
+                     ) -> DataFrame | None:
+    """The one front end of :func:`phrase_topk_positions` and
+    :func:`phrase_topk_batch`: analyze every phrase, resolve its site
+    scope, read the union of the forms' positional rows bucket-pruned
+    (pruned to the scopes' segments when every phrase is scoped), and run
+    :func:`phrase_segment` in one ``applyInPandas`` group per segment.
+    Returns the (qid, doc_id, phrase_tf) frame of every segment's top-k
+    per qid, or None when no phrase can match."""
     import pandas as pd
-    from pyspark.sql import functions as F
+
+    from .builder import index_analyzer, isin_expr
 
     if not has_positions(index_dir):
         raise ValueError(
             "index has no positions (a rebuild without positions clears "
             "meta.has_positions) — run build_positions first, or use the "
             "store-verify path")
-    out_schema = "doc_id long, phrase_tf long"
-    empty = spark.createDataFrame([], out_schema)
-    from .builder import index_analyzer, isin_expr
-
-    qforms = [frozenset(p) for p in
-              analyze_positions(phrase, *index_analyzer(spark, index_dir))]
-    if not qforms:
-        return empty
-    all_forms = sorted({f for fs in qforms for f in fs})
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
     seg_size, block_size = int(meta["seg_size"]), int(meta["block_size"])
-
-    intervals = None
-    if site is not None:
-        from .builder import read_site_ranges
-
-        intervals = read_site_ranges(index_dir, site)
-        if not intervals:
-            return empty  # unknown site owns no pages
-
-    pdf_src = read_positions(spark, index_dir, all_forms)
-    if intervals:
-        from .wand import _overlapping_segments
-
-        segs = sorted(_overlapping_segments(intervals, seg_size))
-        pdf_src = pdf_src.filter(isin_expr("segment", segs))
+    ana = index_analyzer(spark, index_dir, meta)
+    qpat = {qid: [frozenset(p) for p in analyze_positions(ph, *ana)]
+            for qid, ph in phrases.items()}
+    scopes, union = _site_scopes(
+        index_dir, seg_size,
+        {qid: sites.get(qid) for qid, p in qpat.items() if p},
+        dict(site_intervals or {}))
+    if not scopes:
+        return None
+    all_forms = sorted({f for q in scopes for fs in qpat[q] for f in fs})
+    src = (index_df if index_df is not None
+           else read_positions(spark, index_dir, all_forms))
+    if union is not None:
+        src = src.filter(isin_expr("segment", union))
+    qs = {qid: (qpat[qid], *scopes[qid]) for qid in scopes}
 
     def _seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        e_ = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                           "phrase_tf": pd.Series([], dtype="int64")})
-        base = int(pdf["segment"].iloc[0]) * seg_size
-        decoded, K = _decode_segment(pdf, base, block_size)
-        acc = _intersect_slots(qforms, decoded, K)
-        if acc is None or acc.size == 0:
-            return e_
-        ids, tf = np.unique(base + acc // K, return_counts=True)
-        if intervals is not None:
-            from .wand import _mask_ids
+        seg = int(pdf["segment"].iloc[0])
+        decoded, max_pos = {}, 0
+        for r in pdf.itertuples():
+            occ, flat, mx = decode_form(r.postings, r.tfs, r.pstream, seg,
+                                        seg_size, block_size)
+            decoded[r.lemma] = (occ, flat)
+            max_pos = max(max_pos, mx)
+        hits = phrase_segment(seg, decoded, max_pos + 2, seg_size, qs, k)
+        return pd.DataFrame({
+            "qid": [q for q, ids, _ in hits for _ in range(ids.size)],
+            "doc_id": [d for _, ids, _ in hits for d in ids.tolist()],
+            "phrase_tf": [t for _, _, tf in hits for t in tf.tolist()]})
 
-            keep = np.isin(ids, _mask_ids(ids, intervals))
-            ids, tf = ids[keep], tf[keep]
-        return pd.DataFrame({"doc_id": ids, "phrase_tf": tf})
+    return src.groupBy("segment").applyInPandas(
+        _seg, schema="qid string, doc_id long, phrase_tf long")
 
-    local = pdf_src.groupBy("segment").applyInPandas(_seg, schema=out_schema)
+
+def phrase_topk_batch(spark: SparkSession, index_dir: str,
+                      phrases: dict[str, str], k: int = 10,
+                      sites: dict[str, str] | None = None) -> DataFrame:
+    """Score a whole PHRASE workload in one Spark job: (qid, doc_id,
+    phrase_tf) — the positional twin of wand.bm25_topk_batch.  ONE
+    bucket-pruned positional scan covers the union of all patterns' forms;
+    inside each segment every form is decoded ONCE and shared across all
+    phrases using it; the per-qid top-k merge is one tiny window-ranked
+    shuffle.  :func:`phrase_topk_positions` is its batch of one (same
+    front end, same :func:`phrase_segment`).
+
+    ``sites`` (qid -> repo, optional per qid) scopes a qid to the same
+    doc_id interval mask as BM25 (in-segment after the slot intersection,
+    with a per-qid live-segment skip), an unknown site drops its qid, and
+    when EVERY qid is scoped the positional scan itself prunes to the
+    union of their overlapping segments."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    local = _phrase_segments(spark, index_dir, phrases, k, sites or {},
+                             None, None)
+    if local is None:
+        return spark.createDataFrame(
+            [], "qid string, doc_id long, phrase_tf long")
+    w = Window.partitionBy("qid").orderBy(F.desc("phrase_tf"),
+                                          F.asc("doc_id"))
     return (
-        local.orderBy(F.desc("phrase_tf"), F.asc("doc_id"))
-        .limit(k)
+        local.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= k)
+        .drop("_rk")
+        .orderBy("qid", F.desc("phrase_tf"), F.asc("doc_id"))
     )
+
+
+def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
+                          k: int = 10, site: str | None = None,
+                          index_df: DataFrame | None = None,
+                          site_intervals: list[tuple[int, int]] | None = None,
+                          ) -> DataFrame:
+    """Top-k (doc_id, phrase_tf) from the index's positions alone — exact,
+    store-free, O(query-term postings) even for a phrase of two common
+    words.  Row-identical to index/phrase.py's store-verify path (same
+    ``analyze_positions`` pattern contract on both sides; parity-tested).
+    One phrase as a batch of one through :func:`phrase_topk_batch`'s front
+    end, merged by one global ordered limit (no per-qid window).
+
+    ``site`` scopes the search to one repo exactly like BM25 serving: the
+    builder's sites sidecar resolves to doc_id intervals, the positional
+    scan is partition-pruned to overlapping segments, and matched docs are
+    interval-masked after the slot intersection.  ``index_df`` and
+    ``site_intervals`` mean what they mean for ``wand.bm25_topk``."""
+    from pyspark.sql import functions as F
+
+    local = _phrase_segments(
+        spark, index_dir, {"q": phrase}, k, {"q": site}, index_df,
+        None if site_intervals is None else {site: site_intervals})
+    if local is None:
+        return spark.createDataFrame([], "doc_id long, phrase_tf long")
+    return (local.drop("qid")
+            .orderBy(F.desc("phrase_tf"), F.asc("doc_id")).limit(k))

@@ -1,12 +1,18 @@
 """Top-k query over the physical index: MaxScore/block-max pruning + BM25.
 
 SURVEY.md §4 item 2.  The reference's retrieval is a rarest-first
-intersection loop (SearchServiceImpl.java:122-143); at scale this becomes:
+intersection loop (SearchServiceImpl.java:122-143), one query at a time.
+Query time here has one serving core, and a single query is a batch of one
+(one front end, ``_bm25_segments``, for ``bm25_topk`` and
+``bm25_topk_batch``):
 
 - the index is read partition-pruned (bucket= dirs of the query terms only);
-- each doc-range SEGMENT computes its local top-k independently inside one
-  ``applyInPandas`` group (numpy, Arrow-batched — no per-row Python);
-- segment winners merge via a global TakeOrderedAndProject.
+- each doc-range SEGMENT scores every query independently inside one
+  ``applyInPandas`` group with :func:`bm25_segment` (numpy, Arrow-batched —
+  no per-row Python); ``QueryEngine.topk_rows`` runs the same scorer over
+  its driver-side cache;
+- a single query's segment winners merge via a global
+  TakeOrderedAndProject, a batch's via one per-qid window.
 
 Within a segment several exact algorithms (self-oracle-tested against each
 other, SURVEY.md §5.4; the hypothesis property test asserts all modes
@@ -208,28 +214,16 @@ def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.n
     return ids[order], scores[order]
 
 
-def segment_topk(term_rows: list[dict], n_docs: int, avgdl: float, k: int,
-                 k1: float = 1.2, b: float = 0.75, mode: str = "maxscore",
-                 conjunctive: bool = False,
-                 intervals: list[tuple[int, int]] | None = None,
-                 ) -> tuple[np.ndarray, np.ndarray]:
-    """Local top-k for one segment.  ``term_rows``: dicts with df (global!),
-    postings/tfs/dls/blocks for each query term present in the segment."""
-    terms = [TermPostings(r["postings"], r["tfs"], r["dls"], r["blocks"], r["df"])
-             for r in term_rows]
-    return segment_topk_terms(terms, n_docs, avgdl, k, k1, b, mode,
-                              conjunctive, intervals)
-
-
 def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
                        k: int, k1: float = 1.2, b: float = 0.75,
                        mode: str = "maxscore",
                        conjunctive: bool = False,
                        intervals: list[tuple[int, int]] | None = None,
                        ) -> tuple[np.ndarray, np.ndarray]:
-    """Same as :func:`segment_topk` over PREBUILT ``TermPostings`` — the
-    warm-serving path reuses cached objects so their lazily-decoded block
-    caches survive across queries (repeated terms never re-decode).
+    """Local top-k for one segment over its query terms' ``TermPostings``
+    (df global, for idf).  The warm-serving path reuses cached objects so
+    their lazily-decoded block caches survive across queries (repeated
+    terms never re-decode).
 
     ``intervals`` (the builder's sites sidecar for one repo) scopes the
     search to a site: every candidate list is masked at generation, so θ
@@ -343,6 +337,56 @@ def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
         [terms[i].decode_all()[0] for i in sorted(essential)]
     )), intervals)
     return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
+
+
+def bm25_segment(seg: int, tps: dict[str, TermPostings], queries: dict,
+                 meta: dict, mode: str, conjunctive: bool) -> list[tuple]:
+    """The one per-segment BM25 scorer, run by Spark's segment groups and
+    by :meth:`QueryEngine.topk_rows` alike: ``tps`` maps lemma -> this
+    segment's ``TermPostings``, ``queries`` qid -> (sorted lemmas, AND
+    arity, k + offset, site intervals, live segments).  Returns (qid, ids,
+    scores) per query with hits here.  A query skips a segment its site
+    cannot reach, and under ``conjunctive`` one that lacks a term found
+    elsewhere in the index."""
+    out = []
+    for qid, (lemmas, arity, kk, intervals, live) in queries.items():
+        if live is not None and seg not in live:
+            continue
+        terms = [tps[t] for t in lemmas if t in tps]
+        if not terms or (conjunctive and len(terms) < arity):
+            continue
+        ids, scores = segment_topk_terms(
+            terms, meta["n_docs"], meta["avgdl"], kk, meta["k1"], meta["b"],
+            mode, conjunctive, intervals)
+        out.append((qid, ids, scores))
+    return out
+
+
+def _site_scopes(index_dir: str, seg_size: int,
+                 sites: dict[str, str | None], cache: dict
+                 ) -> tuple[dict[str, tuple], list[int] | None]:
+    """The one site-scope resolver: ``sites`` maps qid -> repo (None =
+    unscoped), ``cache`` (repo -> doc_id intervals) is read first and
+    receives every sites-sidecar read.  Returns qid -> (intervals, live
+    segments), ``(None, None)`` when unscoped, with every qid of an unknown
+    site dropped (it owns no pages), and the union of the live segments
+    when every kept qid is scoped (the scan prunes to it), else None."""
+    from .builder import read_site_ranges
+
+    scopes: dict[str, tuple] = {}
+    for qid, site in sites.items():
+        if site is None:
+            scopes[qid] = (None, None)
+            continue
+        if site not in cache:
+            cache[site] = read_site_ranges(index_dir, site)
+        if cache[site]:
+            scopes[qid] = (cache[site],
+                           _overlapping_segments(cache[site], seg_size))
+    live = [sc[1] for sc in scopes.values()]
+    if live and all(sg is not None for sg in live):
+        return scopes, sorted(set().union(*live))
+    return scopes, None
 
 
 def gdf_lookup(spark: SparkSession, index_dir: str,
@@ -555,11 +599,13 @@ class QueryEngine:
              offset: int = 0) -> DataFrame:
         self._check_fresh()
         qlemmas = sorted(set(analyze(query, *self._ana)))
+        self._scopes({"q": site})
         return bm25_topk(self.spark, self.index_dir, query, k, mode=mode,
                          conjunctive=conjunctive,
                          index_df=self._read(qlemmas),
                          gdf_override=self._gdf_for(qlemmas), site=site,
-                         offset=offset, site_intervals=self._site(site))
+                         offset=offset,
+                         site_intervals=self._site_cache.get(site))
 
     def topk_batch(self, queries: dict[str, str], k: int = 10,
                    mode: str = "auto", conjunctive: bool = False,
@@ -574,24 +620,20 @@ class QueryEngine:
         self._check_fresh()
         lemmas = sorted({t for q in queries.values()
                          for t in analyze(q, *self._ana)})
-        iv = {s: (self._site(s) or []) for s in set((sites or {}).values())}
+        self._scopes(dict(sites or {}))
         return bm25_topk_batch(self.spark, self.index_dir, queries, k,
                                mode=mode, conjunctive=conjunctive,
                                index_df=self._read(lemmas),
                                gdf_override=self._gdf_for(lemmas),
                                sites=sites, offsets=offsets,
-                               site_intervals=iv)
+                               site_intervals=self._site_cache)
 
-    def _site(self, site: str | None) -> list[tuple[int, int]] | None:
-        """Cached (repo -> doc_id intervals) lookup: one sites-sidecar read
-        per (engine load, site), dropped with the rest of the warm state."""
-        if site is None:
-            return None
-        if site not in self._site_cache:
-            from .builder import read_site_ranges
-
-            self._site_cache[site] = read_site_ranges(self.index_dir, site)
-        return self._site_cache[site]
+    def _scopes(self, sites: dict[str, str | None]) -> dict[str, tuple]:
+        """:func:`_site_scopes` through the engine's interval cache: one
+        sites-sidecar read per (engine load, site), dropped with the rest
+        of the warm state."""
+        return _site_scopes(self.index_dir, int(self.meta["seg_size"]),
+                            sites, self._site_cache)[0]
 
     def _gdf_for(self, lemmas: list[str]) -> dict[str, int]:
         """Global df per lemma WITHOUT touching posting bytes: preloaded
@@ -623,7 +665,7 @@ class QueryEngine:
         counted compressed.  The floors keep each cache's current working
         set from evicting itself.  Callers route over-estimate lemmas away
         BEFORE calling; this function does not guard."""
-        from .positions import decode_term_positions
+        from .positions import decode_form
 
         tset, fset = set(terms), set(forms)
         want = sorted(tset | fset)
@@ -654,12 +696,9 @@ class QueryEngine:
         for lemma in forms:
             entries = []
             for r in rows[lemma]:
-                docs, counts, flat = decode_term_positions(
-                    r["postings"], r["tfs"], r["pstream"], block_size)
-                # per-OCCURRENCE local doc ids, aligned with flat positions
-                # — exactly the decoded shape _intersect_slots consumes
-                occ = np.repeat(docs - r["segment"] * seg_size, counts)
-                mx = int(flat.max()) if flat.size else 0
+                occ, flat, mx = decode_form(r["postings"], r["tfs"],
+                                            r["pstream"], r["segment"],
+                                            seg_size, block_size)
                 nb = len(r["postings"]) + len(r["tfs"]) + len(r["pstream"])
                 entries.append((r["segment"], occ, flat, mx, nb))
             self._pos_cache.put(lemma, entries, sum(e[4] for e in entries))
@@ -668,25 +707,49 @@ class QueryEngine:
         if fset:
             self._pos_cache.evict(pfloor)
 
+    def _warm(self, cache: _ByteLRU, keys: list[str], bpp: float,
+              index_bytes: int | None, threshold: int, fetch) -> bool:
+        """Make ``keys`` resident in ``cache`` if their bytes fit under
+        ``threshold``; False routes the caller distributed.  Resident keys
+        are touched and only the missing ones are fetched (``fetch``).
+        The size check runs BEFORE any posting bytes move — index df ×
+        ``bpp``, from df rows only — unless the whole index
+        (``index_bytes``) fits; the actual size after the fetch is the
+        backstop for under-estimates, and an oversized fetch is dropped
+        again so it does not sit floor-pinned past the cache's budget."""
+        missing = cache.touch(keys)
+        if missing:
+            if index_bytes is None or index_bytes > threshold:
+                gdf = self._gdf_for(keys)
+                if sum(cache.nbytes(t) if t in cache else gdf.get(t, 0) * bpp
+                       for t in keys) > threshold:
+                    return False
+            fetch(missing)
+        if sum(cache.nbytes(t) for t in keys) > threshold:
+            if missing:
+                cache.drop(missing)
+            return False
+        return True
+
     def phrase_rows(self, phrase: str, k: int = 10, site: str | None = None,
                     local_threshold_bytes: int = 64 << 20,
                     ) -> list[tuple[int, int]]:
         """Warm phrase serving over the index's positions: (doc_id,
-        phrase_tf) pairs, row-identical to
-        :func:`positions.phrase_topk_positions` (parity-tested) — but a
+        phrase_tf) pairs, each segment scored by the same
+        :func:`positions.phrase_segment` the distributed path runs — but a
         repeated phrase (or one whose forms an earlier phrase warmed) costs
         NO Spark job: slot postings come from the engine's positional LRU
         and the intersection runs driver-side in numpy.
 
-        Same routing discipline as :meth:`topk_rows`: a phrase whose
-        dict-estimated positional postings exceed ``local_threshold_bytes``
-        is served by the distributed path WITHOUT collecting them (est =
-        index df × the build's measured positional bytes-per-posting), with
-        the post-fetch actual-size check as the backstop for
-        under-estimates."""
+        Same routing discipline as :meth:`topk_rows` (:meth:`_warm`, priced
+        by the build's positional bytes-per-posting): a phrase over
+        ``local_threshold_bytes`` is served by the distributed path, which
+        reads the engine's :attr:`index_df` and site cache (no listing)."""
         from ..analyzer import analyze_positions
+        from .builder import prune_index
         from .positions import (
-            _intersect_slots,
+            POS_COLS,
+            phrase_segment,
             phrase_topk_positions,
             positions_enabled,
         )
@@ -700,68 +763,34 @@ class QueryEngine:
         qpat = [frozenset(p) for p in analyze_positions(phrase, *self._ana)]
         if not qpat:
             return []
-        intervals = self._site(site)
-        if site is not None and not intervals:
+        seg_size = int(self.meta["seg_size"])
+        scopes = self._scopes({"q": site})
+        if not scopes:
             return []  # unknown site owns no pages
         forms = sorted({f for fs in qpat for f in fs})
 
-        def _distributed() -> list[tuple[int, int]]:
+        if not self._warm(self._pos_cache, forms, self._pos_bpp,
+                          self._pos_bytes, local_threshold_bytes,
+                          lambda m: self._fetch([], m, pfloor=len(forms))):
             out = phrase_topk_positions(
-                self.spark, self.index_dir, phrase, k, site=site).collect()
+                self.spark, self.index_dir, phrase, k, site=site,
+                index_df=prune_index(self.index_df, forms,
+                                     self.meta["n_buckets"], POS_COLS),
+                site_intervals=scopes["q"][0]).collect()
             return [(r["doc_id"], r["phrase_tf"]) for r in out]
-
-        fetch = self._pos_cache.touch(forms)
-        if fetch:
-            if (self._pos_bytes is None
-                    or self._pos_bytes > local_threshold_bytes):
-                gdf = self._gdf_for(forms)
-                est = sum(
-                    self._pos_cache.nbytes(t) if t in self._pos_cache
-                    else gdf.get(t, 0) * self._pos_bpp
-                    for t in forms
-                )
-                if est > local_threshold_bytes:
-                    return _distributed()
-            self._fetch([], fetch, pfloor=len(forms))
-        if (sum(self._pos_cache.nbytes(t) for t in forms)
-                > local_threshold_bytes):
-            # under-estimate backstop: route distributed, and drop the
-            # just-fetched oversized entries so they don't sit floor-pinned
-            # past pos_cache_bytes until a later fetch evicts
-            if fetch:
-                self._pos_cache.drop(fetch)
-            return _distributed()
-
-        seg_size = int(self.meta["seg_size"])
-        live = (_overlapping_segments(intervals, seg_size)
-                if intervals else None)
         by_seg: dict[int, dict[str, tuple]] = {}
         maxp: dict[int, int] = {}
         for t in forms:
             for seg, occ, flat, mx, _ in self._pos_cache.get(t):
-                if live is not None and seg not in live:
-                    continue  # site intervals cannot reach this segment
                 by_seg.setdefault(seg, {})[t] = (occ, flat)
                 maxp[seg] = max(maxp.get(seg, 0), mx)
-        merged_ids: list[np.ndarray] = []
-        merged_tf: list[np.ndarray] = []
-        for seg, decoded in by_seg.items():
-            K = maxp[seg] + 2
-            acc = _intersect_slots(qpat, decoded, K)
-            if acc is None or acc.size == 0:
-                continue
-            ids, tf = np.unique(seg * seg_size + acc // K, return_counts=True)
-            if intervals is not None:
-                keep = np.isin(ids, _mask_ids(ids, intervals))
-                ids, tf = ids[keep], tf[keep]
-            merged_ids.append(ids)
-            merged_tf.append(tf)
-        if not merged_ids:
-            return []
-        ids = np.concatenate(merged_ids)
-        tf = np.concatenate(merged_tf)
-        order = np.lexsort((ids, -tf))[:k]
-        return list(zip(ids[order].tolist(), tf[order].tolist()))
+        qs = {"q": (qpat, *scopes["q"])}
+        merged = [(d, t) for seg, decoded in by_seg.items()
+                  for _, ids, tf in phrase_segment(
+                      seg, decoded, maxp[seg] + 2, seg_size, qs, k)
+                  for d, t in zip(ids.tolist(), tf.tolist())]
+        merged.sort(key=lambda x: (-x[1], x[0]))
+        return merged[:k]
 
     def phrase_rows_batch(self, phrases: dict[str, str], k: int = 10,
                           sites: dict[str, str] | None = None,
@@ -814,8 +843,7 @@ class QueryEngine:
         from .positions import positions_enabled
 
         self._check_fresh()
-        for s in sites or ():
-            self._site(s)
+        self._scopes({s: s for s in sites or ()})
         lemmas = sorted({t for q in queries for t in analyze(q, *self._ana)})
         forms = []
         if phrases and positions_enabled(self.meta):
@@ -849,82 +877,111 @@ class QueryEngine:
                   site: str | None = None,
                   offset: int = 0) -> list[tuple[int, float]]:
         """Serving fast path: read the term rows on the driver (no Spark
-        job) and score them locally in numpy instead of in a shuffle +
-        applyInPandas stage.  Falls back to the distributed
-        path when the query's postings exceed ``local_threshold_bytes``
-        (broker-style: small working sets score on the broker, big ones on
-        the workers).  The size check runs BEFORE any posting bytes move:
-        a term's footprint is estimated as dict-df × the build's
-        bytes-per-posting, so a common term at 10^12 docs (GBs of postings)
-        is routed to the workers without ever being collected — the r3
-        fetch-before-guard hole.  The post-fetch actual-size guard stays as
-        the backstop for under-estimates.  Exactness is identical: same
-        segment_topk code."""
+        job) and score each segment locally with :func:`bm25_segment`, the
+        scorer the distributed path runs in its applyInPandas groups.
+        Falls back to the distributed path (:meth:`topk`) when the query's
+        postings exceed ``local_threshold_bytes`` (broker-style: small
+        working sets score on the broker, big ones on the workers).  The
+        size check (:meth:`_warm`) runs BEFORE any posting bytes move: a
+        term's footprint is estimated as dict-df × the build's
+        bytes-per-posting, so a common term at 10^12 docs (GBs of
+        postings) is routed to the workers without ever being collected."""
         self._check_fresh()
         if offset < 0:
             raise ValueError("offset must be >= 0")
         qlemmas = sorted(set(analyze(query, *self._ana)))
         if not qlemmas:
             return []
-        intervals = self._site(site)
-        if site is not None and not intervals:
+        scopes = self._scopes({"q": site})
+        if not scopes:
             return []  # unknown site owns no pages
-        kk = k + offset
-        # driver-side LRU term cache: index immutable per fingerprint, so a
-        # term's rows are read once and a repeated term reads nothing
-        fetch = self._term_cache.touch(qlemmas)
-        if fetch:
-            if (self._index_bytes is None
-                    or self._index_bytes > local_threshold_bytes):
-                # dict rows only — no posting bytes move for the estimate
-                gdf = self._gdf_for(qlemmas)
-                est = sum(
-                    self._term_cache.nbytes(t) if t in self._term_cache
-                    else gdf.get(t, 0) * self._bpp
-                    for t in qlemmas
-                )
-                if est > local_threshold_bytes:
-                    out = bm25_topk(
-                        self.spark, self.index_dir, query, k, mode=mode,
-                        conjunctive=conjunctive,
-                        index_df=self._read(qlemmas), gdf_override=gdf,
-                        site=site, offset=offset, site_intervals=intervals,
-                    ).collect()
-                    return [(r["doc_id"], r["score"]) for r in out]
-            self._fetch(fetch, tfloor=len(qlemmas))
-        entries = [e for t in qlemmas for e in self._term_cache.get(t)]
-        if not entries:
-            return []
-        total = sum(nb for _, _, _, nb in entries)
-        if total > local_threshold_bytes:
-            # under-estimate backstop: route distributed, and drop the
-            # just-fetched oversized entries so they don't sit floor-pinned
-            # past term_cache_bytes until a later fetch evicts them
-            if fetch:
-                self._term_cache.drop(fetch)
-            out = self.topk(query, k, mode, conjunctive,
-                            site=site, offset=offset).collect()
+
+        if not self._warm(self._term_cache, qlemmas, self._bpp,
+                          self._index_bytes, local_threshold_bytes,
+                          lambda m: self._fetch(m, tfloor=len(qlemmas))):
+            out = self.topk(query, k, mode, conjunctive, site=site,
+                            offset=offset).collect()
             return [(r["doc_id"], r["score"]) for r in out]
-        n_terms = len({lemma for lemma, _, _, _ in entries})
-        live_segs = (_overlapping_segments(intervals, int(self.meta["seg_size"]))
-                     if intervals else None)
-        by_seg: dict[int, list[tuple[str, TermPostings]]] = {}
+        entries = [e for t in qlemmas for e in self._term_cache.get(t)]
+        by_seg: dict[int, dict[str, TermPostings]] = {}
         for lemma, seg, tp, _ in entries:
-            if live_segs is not None and seg not in live_segs:
-                continue  # site intervals cannot reach this segment
-            by_seg.setdefault(seg, []).append((lemma, tp))
-        merged: list[tuple[int, float]] = []
-        for seg_terms in by_seg.values():
-            if conjunctive and len({lm for lm, _ in seg_terms}) < n_terms:
-                continue
-            ids, scores = segment_topk_terms(
-                [tp for _, tp in seg_terms], self.meta["n_docs"],
-                self.meta["avgdl"], kk, self.meta["k1"], self.meta["b"],
-                mode, conjunctive, intervals,
-            )
-            merged.extend(zip(ids.tolist(), scores.tolist()))
+            by_seg.setdefault(seg, {})[lemma] = tp
+        arity = len({lemma for lemma, _, _, _ in entries})
+        qs = {"q": (qlemmas, arity, k + offset, *scopes["q"])}
+        merged = [(d, s) for seg, tps in by_seg.items()
+                  for _, ids, scores in bm25_segment(
+                      seg, tps, qs, self.meta, mode, conjunctive)
+                  for d, s in zip(ids.tolist(), scores.tolist())]
         merged.sort(key=lambda t: (-t[1], t[0]))
-        return merged[offset:kk]
+        return merged[offset:k + offset]
+
+
+def _bm25_segments(spark: SparkSession, index_dir: str,
+                   queries: dict[str, str], k: int, mode: str,
+                   conjunctive: bool, index_df: DataFrame | None,
+                   gdf_override: dict[str, int] | None,
+                   sites: dict[str, str | None],
+                   offsets: dict[str, int],
+                   site_intervals: dict[str, list[tuple[int, int]]] | None,
+                   ) -> DataFrame | None:
+    """The one front end of :func:`bm25_topk` and :func:`bm25_topk_batch`:
+    analyze every query, resolve its site scope, read the union of the
+    lemmas' rows bucket-pruned (pruned to the scopes' segments when every
+    query is scoped), take the global df, and score each segment with
+    :func:`bm25_segment` in one ``applyInPandas`` group.  Returns the
+    (qid, doc_id, score) frame of every segment's top-(offset+k) per qid,
+    or None when no query can match."""
+    from .builder import index_analyzer, isin_expr, read_index
+
+    if any(v < 0 for v in offsets.values()):
+        raise ValueError("offsets must be >= 0")
+    with open(f"{index_dir}/meta.json") as fh:
+        meta = json.load(fh)
+    ana = index_analyzer(spark, index_dir, meta)
+    qmap = {qid: sorted(set(analyze(q, *ana))) for qid, q in queries.items()}
+    scopes, union = _site_scopes(
+        index_dir, int(meta["seg_size"]),
+        {qid: sites.get(qid) for qid, ls in qmap.items() if ls},
+        dict(site_intervals or {}))
+    if not scopes:
+        return None
+    all_lemmas = sorted({t for qid in scopes for t in qmap[qid]})
+    idx = (index_df if index_df is not None
+           else read_index(spark, index_dir, all_lemmas))
+    if union is not None:
+        # partition pruning on segment=: a site's docs live only in the
+        # segments its intervals overlap
+        idx = idx.filter(isin_expr("segment", union))
+    # global df per lemma: the caller's (QueryEngine) > pruned lemma/df
+    # read of the index.  Never scoped to the site's segments: df (hence
+    # idf) is a corpus-global statistic — summing only the site's segments
+    # would score the same query differently per serving path.
+    gdf = (gdf_override if gdf_override is not None
+           else gdf_lookup(spark, index_dir, all_lemmas))
+    if not gdf:
+        return None
+    # AND arity counts only terms that exist SOMEWHERE in the index,
+    # mirroring the reference's loop over lemmas found in the DB
+    # (SearchServiceImpl.java:122-143)
+    qs = {qid: (qmap[qid], sum(t in gdf for t in qmap[qid]),
+                k + offsets.get(qid, 0), *scopes[qid])
+          for qid in scopes}
+
+    def _seg(pdf):
+        import pandas as pd
+
+        tps = {r.lemma: TermPostings(r.postings, r.tfs, r.dls, r.blocks,
+                                     int(gdf[r.lemma]))
+               for r in pdf.itertuples()}
+        hits = bm25_segment(int(pdf["segment"].iloc[0]), tps, qs, meta,
+                            mode, conjunctive)
+        return pd.DataFrame({
+            "qid": [q for q, ids, _ in hits for _ in range(ids.size)],
+            "doc_id": [d for _, ids, _ in hits for d in ids.tolist()],
+            "score": [s for _, _, sc in hits for s in sc.tolist()]})
+
+    return idx.groupBy("segment").applyInPandas(
+        _seg, schema="qid string, doc_id long, score double")
 
 
 def bm25_topk_batch(spark: SparkSession, index_dir: str,
@@ -943,8 +1000,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     suites, training-data mining at 100 TB) where thousands of queries hit
     the same index.  This path amortizes everything that is per-job:
 
-    - ONE bucket-pruned index scan covers the union of all query lemmas
-      (partition pruning on bucket= exactly as the single path);
+    - ONE bucket-pruned index scan covers the union of all query lemmas;
     - ONE pruned dictionary lookup fetches every lemma's global df;
     - inside each segment group the per-lemma ``TermPostings`` is built
       ONCE and shared across every query that uses the term — the varbyte
@@ -952,121 +1008,39 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     - the per-query top-k merge is one tiny shuffle of
       O(queries x segments x k) rows, window-ranked by qid.
 
-    Semantics per query are identical to :func:`bm25_topk` (same
-    ``segment_topk_terms`` code, same AND behavior: terms absent from the
-    whole index drop out of the conjunction exactly like the single path,
-    mirroring the reference's loop over lemmas found in the DB —
-    SearchServiceImpl.java:122-143); the parity test asserts row-identity
-    against the single-query path for every qid, both modes.
+    :func:`bm25_topk` is this function's batch of one: both run the same
+    front end and per-segment scorer (:func:`bm25_segment`), so a qid's
+    rows equal the single query's (parity-tested for every qid, both
+    modes, and against an independent BM25).
 
     ``sites``/``offsets`` (each ``qid -> value``, both optional per qid)
-    complete the reference search API on the batch path too: a qid's site
-    scope becomes the same doc_id interval mask the single path uses
-    (masked candidate generation inside each segment — pruning stays
-    exact), and its offset is served by taking top-(offset+k) per segment
-    then window-ranking ``offset < rank <= offset+k`` per qid.  When every
-    qid is site-scoped the index scan itself is pruned to the union of
-    their overlapping segments.  ``site_intervals`` (site -> intervals)
-    short-circuits sidecar reads for callers that cache them
-    (QueryEngine).  ``index_df`` replaces the fresh read as in
-    :func:`bm25_topk`; rows of a lemma outside the queries may ride along
-    only when ``gdf_override`` carries its df (QueryEngine's covers every
-    lemma it reads)."""
+    complete the reference search API: a qid's site scope is a doc_id
+    interval mask inside each segment's candidate generation (pruning
+    stays exact), an unknown site drops its qid, and an offset is served
+    by taking top-(offset+k) per segment then window-ranking ``offset <
+    rank <= offset+k`` per qid.  When every qid is site-scoped the index
+    scan itself is pruned to the union of their overlapping segments.
+    ``site_intervals`` (site -> intervals) short-circuits sidecar reads for
+    callers that cache them (QueryEngine).  ``index_df`` replaces the fresh
+    read as in :func:`bm25_topk`; rows of a lemma outside the queries may
+    ride along only when ``gdf_override`` carries its df (QueryEngine's
+    covers every lemma it reads)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .builder import isin_expr, read_index, read_site_ranges
-
-    with open(f"{index_dir}/meta.json") as fh:
-        meta = json.load(fh)
-    from .builder import index_analyzer
-
-    ana = index_analyzer(spark, index_dir, meta)
-    qmap = {qid: sorted(set(analyze(q, *ana))) for qid, q in queries.items()}
-    qmap = {qid: ls for qid, ls in qmap.items() if ls}
-    out_schema = "qid string, doc_id long, score double"
-    empty = spark.createDataFrame([], out_schema)
-
-    sites = sites or {}
-    if any(int(v) < 0 for v in (offsets or {}).values()):
-        raise ValueError("offsets must be >= 0")
-    offsets = {qid: int(v) for qid, v in (offsets or {}).items() if v}
-    iv_cache: dict[str, list[tuple[int, int]]] = dict(site_intervals or {})
-    qiv: dict[str, list[tuple[int, int]] | None] = {}
-    for qid in list(qmap):
-        s = sites.get(qid)
-        if s is None:
-            qiv[qid] = None
-            continue
-        if s not in iv_cache:
-            iv_cache[s] = read_site_ranges(index_dir, s)
-        if not iv_cache[s]:
-            del qmap[qid]  # unknown site owns no pages (single-path parity)
-        else:
-            qiv[qid] = iv_cache[s]
-    if not qmap:
-        return empty
-    all_lemmas = sorted({t for ls in qmap.values() for t in ls})
-
-    idx = (index_df if index_df is not None
-           else read_index(spark, index_dir, all_lemmas))
-    seg_size = int(meta["seg_size"])
-    qsegs = {qid: (_overlapping_segments(iv, seg_size) if iv else None)
-             for qid, iv in qiv.items()}
-    if all(sg is not None for sg in qsegs.values()):
-        # every query is site-scoped: partition-prune the shared scan to the
-        # union of their live segments (same pruning as the single path)
-        union = sorted(set().union(*qsegs.values()))
-        idx = idx.filter(isin_expr("segment", union))
-    if gdf_override is not None:
-        gdf = gdf_override
-    else:
-        gdf = gdf_lookup(spark, index_dir, all_lemmas)
-    if not gdf:
-        return empty
-    n_docs, avgdl, k1, b = meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]
-    # AND arity per query counts only terms that exist SOMEWHERE in the
-    # index (single-path parity: its n_terms = len(gdf) of found terms)
-    n_terms_q = {qid: sum(1 for t in ls if t in gdf) for qid, ls in qmap.items()}
-
-    kk_q = {qid: k + offsets.get(qid, 0) for qid in qmap}
-
-    def _seg(pdf):
-        import pandas as pd
-
-        seg = int(pdf["segment"].iloc[0])
-        tps: dict[str, TermPostings] = {}
-        for r in pdf.itertuples():
-            tps[r.lemma] = TermPostings(r.postings, r.tfs, r.dls, r.blocks,
-                                        int(gdf[r.lemma]))
-        out_q: list[str] = []
-        out_d: list[int] = []
-        out_s: list[float] = []
-        for qid, lemmas in qmap.items():
-            live = qsegs[qid]
-            if live is not None and seg not in live:
-                continue  # qid's site intervals cannot reach this segment
-            terms = [tps[t] for t in lemmas if t in tps]
-            if not terms:
-                continue
-            if conjunctive and len(terms) < n_terms_q[qid]:
-                continue  # a required term is absent from this segment
-            ids, scores = segment_topk_terms(
-                terms, n_docs, avgdl, kk_q[qid], k1, b, mode, conjunctive,
-                qiv[qid])
-            out_q.extend([qid] * ids.size)
-            out_d.extend(ids.tolist())
-            out_s.extend(scores.tolist())
-        return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s})
-
-    local = idx.groupBy("segment").applyInPandas(_seg, schema=out_schema)
+    offsets = {qid: int(v) for qid, v in (offsets or {}).items()}
+    local = _bm25_segments(spark, index_dir, queries, k, mode, conjunctive,
+                           index_df, gdf_override, sites or {}, offsets,
+                           site_intervals)
+    if local is None:
+        return spark.createDataFrame([], "qid string, doc_id long, score double")
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = local.withColumn("_rk", F.row_number().over(w))
-    if offsets:
+    if any(offsets.values()):
         # per-qid pagination: broadcast-join the tiny (qid, offset) side and
         # keep offset < rank <= offset + k for each query
         off_df = spark.createDataFrame(
-            [(qid, offsets.get(qid, 0)) for qid in qmap],
+            [(qid, offsets.get(qid, 0)) for qid in queries],
             "qid string, _off int")
         ranked = (
             ranked.join(F.broadcast(off_df), "qid")
@@ -1088,8 +1062,11 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
               gdf_override: dict[str, int] | None = None,
               site: str | None = None, offset: int = 0,
               site_intervals: list[tuple[int, int]] | None = None) -> DataFrame:
-    """Distributed top-k: partition-pruned index read -> per-segment numpy
-    top-k (applyInPandas) -> global ordered merge.
+    """Distributed top-k: one query as a batch of one through
+    :func:`bm25_topk_batch`'s front end (partition-pruned index read ->
+    per-segment :func:`bm25_segment` in applyInPandas), then a global
+    ordered merge that compiles to TakeOrderedAndProject — no per-qid
+    window exchange.
 
     ``index_df``: the query lemmas' index rows, read instead of a fresh
     ``read_index(spark, dir, lemmas)`` (QueryEngine passes its pruned read
@@ -1104,61 +1081,11 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     callers that cache it (QueryEngine)."""
     from pyspark.sql import functions as F
 
-    from .builder import isin_expr, read_index, read_site_ranges
-
-    if offset < 0:
-        raise ValueError("offset must be >= 0")
-    with open(f"{index_dir}/meta.json") as fh:
-        meta = json.load(fh)
-    from .builder import index_analyzer
-
-    qlemmas = sorted(set(analyze(query, *index_analyzer(spark, index_dir,
-                                                        meta))))
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if not qlemmas:
-        return empty
-    intervals = site_intervals
-    if site is not None and intervals is None:
-        intervals = read_site_ranges(index_dir, site)
-    if site is not None and not intervals:
-        return empty  # unknown site owns no pages
-
-    idx = (index_df if index_df is not None
-           else read_index(spark, index_dir, qlemmas))
-    if intervals:
-        # partition pruning on segment=: a site's docs live only in the
-        # segments its intervals overlap
-        segs = sorted(_overlapping_segments(intervals, int(meta["seg_size"])))
-        idx = idx.filter(isin_expr("segment", segs))
-    # global df per lemma: preloaded dict (QueryEngine) > pruned lemma/df
-    # read of the index.  Never scoped to the site's segments: df (hence
-    # idf) is a corpus-global statistic — summing only the site's segments
-    # would score the same query differently per serving path.
-    if gdf_override is not None:
-        gdf = gdf_override
-    else:
-        gdf = gdf_lookup(spark, index_dir, qlemmas)
-    if not gdf:
-        return empty
-    n_docs, avgdl, k1, b = meta["n_docs"], meta["avgdl"], meta["k1"], meta["b"]
-    n_terms = len(gdf)
-
-    def _seg(pdf):
-        import pandas as pd
-
-        if conjunctive and pdf["lemma"].nunique() < n_terms:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        rows = [
-            {"df": int(gdf[r.lemma]), "postings": r.postings, "tfs": r.tfs,
-             "dls": r.dls, "blocks": r.blocks}
-            for r in pdf.itertuples()
-        ]
-        ids, scores = segment_topk(rows, n_docs, avgdl, k + offset, k1, b,
-                                   mode, conjunctive, intervals)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-
-    local = idx.groupBy("segment").applyInPandas(_seg, schema="doc_id long, score double")
-    ordered = local.orderBy(F.desc("score"), F.asc("doc_id"))
+    local = _bm25_segments(
+        spark, index_dir, {"q": query}, k, mode, conjunctive, index_df,
+        gdf_override, {"q": site}, {"q": offset},
+        None if site_intervals is None else {site: site_intervals})
+    if local is None:
+        return spark.createDataFrame([], "doc_id long, score double")
+    ordered = local.drop("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return ordered.offset(offset).limit(k) if offset else ordered.limit(k)

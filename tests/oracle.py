@@ -203,3 +203,35 @@ class Oracle:
                 s += idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dls[d] / avgdl))
             out[d] = s
         return out
+
+    def bm25_topk(self, query: str, k: int, site: str | None = None,
+                  offset: int = 0, conjunctive: bool = False,
+                  k1: float = 1.2, b: float = 0.75) -> list[tuple[int, float]]:
+        """The physical index's BM25 top-k, re-derived from the tf table:
+        corpus-global df and avgdl, no df threshold; ``site`` keeps one
+        repo's docs, ``conjunctive`` requires every query lemma the corpus
+        has (absent lemmas drop out), ``offset`` pages.  (doc_id, score)
+        by score desc, doc_id asc."""
+        import math
+
+        n = len(self.docs)
+        dls = {d: sum(c.values()) for d, c in self.tf.items()}
+        avgdl = sum(dls.values()) / n
+        gdf = {t: sum(1 for c in self.tf.values() if t in c)
+               for t in sorted(set(analyze(query)))}
+        idf = {t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+               for t, df in gdf.items() if df}
+        scores = {}
+        for d, c in self.tf.items():
+            if site is not None and self.docs[d]["repo"] != site:
+                continue
+            if conjunctive and not all(t in c for t in idf):
+                continue
+            hit = [t for t in idf if c.get(t)]
+            if hit:
+                scores[d] = sum(
+                    idf[t] * c[t] * (k1 + 1.0)
+                    / (c[t] + k1 * (1.0 - b + b * dls[d] / avgdl))
+                    for t in hit)
+        ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))
+        return ranked[offset:offset + k]

@@ -145,19 +145,29 @@ def test_positions_row_identical_to_store_verify(spark, env, phrase):
     assert pos == sv, phrase
 
 
-def test_positions_match_brute_force_oracle(spark, env):
-    store, idx = env
-    phrase = "kw_pair_alpha kw_pair_beta"
+def _phrase_reference(spark, store, phrase, k, site=None):
+    """Brute-force top-k (doc_id, phrase_tf) over the store's docs
+    (``site`` keeps one repo's): analyze_positions + count_phrase, no
+    index involved."""
     qforms = [frozenset(p) for p in analyze_positions(phrase)]
     want = []
-    for r in read_store(spark, store).select("doc_id", "content").collect():
+    for r in read_store(spark, store).select("doc_id", "repo",
+                                             "content").collect():
+        if site is not None and r["repo"] != site:
+            continue
         tf = count_phrase(analyze_positions(r["content"]), qforms)
         if tf > 0:
             want.append((r["doc_id"], tf))
     want.sort(key=lambda t: (-t[1], t[0]))
+    return want[:k]
+
+
+def test_positions_match_brute_force_oracle(spark, env):
+    store, idx = env
+    phrase = "kw_pair_alpha kw_pair_beta"
     got = [(r["doc_id"], r["phrase_tf"]) for r in
            phrase_topk_positions(spark, idx, phrase, k=100).collect()]
-    assert got == want
+    assert got == _phrase_reference(spark, store, phrase, 100)
 
 
 def test_auto_dispatch_and_store_free_serving(spark, env):
@@ -233,10 +243,11 @@ def test_rebuild_refreshes_positions_and_stays_exact(spark, env, tmp_path):
 def test_phrase_batch_matches_single_path(spark, env):
     """phrase_topk_batch must return, per qid, exactly the single-phrase
     positional path's rows — including the empty cases — while scanning the
-    positional columns once for the whole workload."""
+    positional columns once for the whole workload.  Both run one serving
+    core, so every qid is also checked against the brute-force oracle."""
     from searchengine_spark.index.positions import phrase_topk_batch
 
-    _, idx = env
+    store, idx = env
     workload = {f"q{i}": ph for i, ph in enumerate(PHRASES)}
     got: dict[str, list] = {}
     for r in phrase_topk_batch(spark, idx, workload, k=10).collect():
@@ -245,6 +256,7 @@ def test_phrase_batch_matches_single_path(spark, env):
         want = [(r["doc_id"], r["phrase_tf"]) for r in
                 phrase_topk_positions(spark, idx, ph, k=10).collect()]
         assert got.get(qid, []) == want, (qid, ph)
+        assert want == _phrase_reference(spark, store, ph, 10), (qid, ph)
 
 
 def test_compact_job_refreshes_positions(spark, tmp_path):
@@ -355,7 +367,7 @@ def test_phrase_batch_sites_match_single_path(spark, env):
     """phrase_topk_batch with per-qid sites: row-identical to the
     site-scoped single path (scoped / unscoped mixed, unknown site ->
     empty), and with EVERY qid scoped the scan prunes to the union of
-    live segments."""
+    live segments; every qid also matches the brute-force oracle."""
     from searchengine_spark.index.positions import phrase_topk_batch
 
     store, idx = env
@@ -375,4 +387,6 @@ def test_phrase_batch_sites_match_single_path(spark, env):
                 phrase_topk_positions(spark, idx, ph, k=10,
                                       site=sites.get(qid)).collect()]
         assert got.get(qid, []) == want, (qid, ph, sites.get(qid))
+        assert want == _phrase_reference(spark, store, ph, 10,
+                                         sites.get(qid)), (qid, ph)
     assert "d" not in got  # unknown site drops its qid entirely

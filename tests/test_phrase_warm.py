@@ -224,3 +224,26 @@ def test_engine_pins_no_spark_storage(spark, env):
     assert not stored() - before
     plan = eng.index_df._jdf.queryExecution().withCachedData().toString()
     assert "InMemoryRelation" not in plan, plan
+
+
+def test_distributed_phrase_route_reads_engine_frame(spark, env, monkeypatch):
+    """The over-threshold phrase route reads the engine's own ``index_df``
+    (and site cache): once that frame exists, no read of the index is
+    planned again."""
+    import searchengine_spark.index.builder as builder
+
+    idx, docs = env
+    site = sorted(r["repo"] for r in docs.select("repo").distinct().collect())[0]
+    want = _distributed(spark, idx, "sorvel tamok", 10)
+    want_site = _distributed(spark, idx, "sorvel tamok", 10, site=site)
+    assert want
+    eng = QueryEngine(spark, idx)
+    assert eng.index_df is not None
+
+    def _no_read(*a, **k):
+        raise AssertionError("the phrase route read the index again")
+
+    monkeypatch.setattr(builder, "read_index", _no_read)
+    assert eng.phrase_rows("sorvel tamok", 10, local_threshold_bytes=1) == want
+    assert eng.phrase_rows("sorvel tamok", 10, site=site,
+                           local_threshold_bytes=1) == want_site

@@ -6,7 +6,11 @@ import numpy as np
 import pytest
 
 from searchengine_spark.index.builder import build_index, read_index
-from searchengine_spark.index.wand import bm25_topk, segment_topk
+from searchengine_spark.index.wand import (
+    TermPostings,
+    bm25_topk,
+    segment_topk_terms,
+)
 
 
 @pytest.fixture(scope="module")
@@ -113,32 +117,19 @@ def test_conjunctive_matches_strict_and_oracle(spark, index_dir, oracle):
         assert r["score"] == pytest.approx(s, rel=1e-9)
 
 
+def _assert_matches_reference(got, want):
+    """(doc_id, score) rows == the oracle's: ids exactly, scores to 1e-9."""
+    assert [d for d, _ in got] == [d for d, _ in want]
+    assert [s for _, s in got] == pytest.approx([s for _, s in want],
+                                                rel=1e-9)
+
+
 def test_exhaustive_matches_numpy_reference(spark, index_dir, oracle):
     """Segment math cross-check: full-index disjunctive scores vs a direct
-    numpy BM25 over the oracle's tf table."""
-    import math
-
-    q = ["tamok", "velsor"]
-    n = len(oracle.docs)
-    dls = {d: sum(c.values()) for d, c in oracle.tf.items()}
-    avgdl = sum(dls.values()) / n
-    gdf = {t: sum(1 for c in oracle.tf.values() if t in c) for t in q}
-    want = {}
-    for d, c in oracle.tf.items():
-        s = 0.0
-        for t in q:
-            tfv = c.get(t, 0)
-            if not tfv:
-                continue
-            idf = math.log(1.0 + (n - gdf[t] + 0.5) / (gdf[t] + 0.5))
-            s += idf * tfv * 2.2 / (tfv + 1.2 * (0.25 + 0.75 * dls[d] / avgdl))
-        if s > 0:
-            want[d] = s
+    BM25 over the oracle's tf table."""
     got = bm25_topk(spark, index_dir, "tamok velsor", k=10, mode="exhaustive").collect()
-    want_top = sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    assert [r["doc_id"] for r in got] == [d for d, _ in want_top]
-    for r, (_, s) in zip(got, want_top):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
+    _assert_matches_reference([(r["doc_id"], r["score"]) for r in got],
+                              oracle.bm25_topk("tamok velsor", 10))
 
 
 def test_resume_skips_done_segments_and_is_identical(spark, docs, tmp_path):
@@ -207,14 +198,16 @@ def test_segment_topk_unit():
                          np.array([10, 10, 10]), avgdl)
     e2 = encode_postings(np.array([5, 9, 20]), np.array([1, 1, 1]),
                          np.array([10, 10, 10]), avgdl)
-    rows = [
-        {"df": 3, "postings": e1.docs, "tfs": e1.tfs, "dls": e1.dls,
-         "blocks": [tuple(b) for b in e1.blocks]},
-        {"df": 3, "postings": e2.docs, "tfs": e2.tfs, "dls": e2.dls,
-         "blocks": [tuple(b) for b in e2.blocks]},
-    ]
-    ids_e, sc_e = segment_topk(rows, n_docs=30, avgdl=avgdl, k=2, mode="exhaustive")
-    ids_m, sc_m = segment_topk(rows, n_docs=30, avgdl=avgdl, k=2, mode="maxscore")
+
+    def run(mode):  # fresh TermPostings per mode, as each segment builds
+        terms = [TermPostings(e.docs, e.tfs, e.dls,
+                              [tuple(b) for b in e.blocks], 3)
+                 for e in (e1, e2)]
+        return segment_topk_terms(terms, n_docs=30, avgdl=avgdl, k=2,
+                                  mode=mode)
+
+    ids_e, sc_e = run("exhaustive")
+    ids_m, sc_m = run("maxscore")
     assert ids_e.tolist() == ids_m.tolist()
     assert sc_e.tolist() == sc_m.tolist()
     # doc 9 (tf 4 + both terms) must beat doc 5 (1+1) and doc 1 (2)
@@ -406,10 +399,13 @@ def test_site_scope_prunes_segment_partitions(spark, index_dir, docs):
 
 
 @pytest.mark.parametrize("conjunctive", [False, True])
-def test_batch_topk_matches_single_query_path(spark, index_dir, conjunctive):
+def test_batch_topk_matches_single_query_path(spark, index_dir, oracle,
+                                             conjunctive):
     """bm25_topk_batch must return, per qid, exactly the single-query
     path's rows (ids AND scores) — including the empty cases (no-hit term,
-    stopword-only query) — while running the whole workload as one job."""
+    stopword-only query) — while running the whole workload as one job.
+    Both run one serving core, so every qid is also checked against the
+    oracle's independent BM25."""
     from searchengine_spark.index.wand import bm25_topk_batch
 
     workload = {
@@ -432,14 +428,17 @@ def test_batch_topk_matches_single_query_path(spark, index_dir, conjunctive):
                 bm25_topk(spark, index_dir, q, 10,
                           conjunctive=conjunctive).collect()]
         assert got.get(qid, []) == want, qid
+        _assert_matches_reference(
+            want, oracle.bm25_topk(q, 10, conjunctive=conjunctive))
 
 
 @pytest.mark.parametrize("conjunctive", [False, True])
-def test_batch_topk_site_offset_matches_single_path(spark, index_dir,
+def test_batch_topk_site_offset_matches_single_path(spark, index_dir, oracle,
                                                     conjunctive):
     """r3 VERDICT item 4: the batch path accepts per-qid site/offset and
     must stay row-identical to the single-query path under every
-    combination — scoped, paginated, scoped+paginated, unknown site."""
+    combination — scoped, paginated, scoped+paginated, unknown site — and
+    every qid to the oracle's independent BM25."""
     from searchengine_spark.index.wand import bm25_topk_batch
 
     workload = {
@@ -467,6 +466,9 @@ def test_batch_topk_site_offset_matches_single_path(spark, index_dir,
                           site=sites.get(qid),
                           offset=offsets.get(qid, 0)).collect()]
         assert got.get(qid, []) == want, qid
+        _assert_matches_reference(want, oracle.bm25_topk(
+            q, 5, site=sites.get(qid), offset=offsets.get(qid, 0),
+            conjunctive=conjunctive))
     assert "ghost_site" not in got
 
 

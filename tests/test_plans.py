@@ -443,3 +443,22 @@ def test_lsh_batch_matches_single_probe_path(spark, tmp_path):
     scans = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert scans and "bucket" in scans[0]
     assert "Join" not in plan
+
+
+def test_single_query_merges_without_window(spark, tmp_path, docs):
+    """A single query runs the batch's front end as a batch of one, but
+    merges as one query: a global TakeOrderedAndProject, never the batch's
+    per-qid Window exchange."""
+    from searchengine_spark.index.builder import build_index
+    from searchengine_spark.index.wand import QueryEngine, bm25_topk
+
+    out = str(tmp_path / "idx")
+    build_index(docs, out, n_segments=2, salt=2, n_buckets=8)
+    eng = QueryEngine(spark, out)
+    for df in (eng.topk("tamok velsor", 5),
+               eng.topk("tamok velsor", 5, site="org0/proj0"),
+               bm25_topk(spark, out, "tamok velsor", 5),
+               bm25_topk(spark, out, "tamok", 5, conjunctive=True)):
+        plan = _plan(df)
+        assert "TakeOrderedAndProject" in plan, plan
+        assert "Window" not in plan, plan

@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from searchengine_spark.index.codec import encode_postings
-from searchengine_spark.index.wand import segment_topk
+from searchengine_spark.index.wand import TermPostings, segment_topk_terms
 
 
 def _mk_term(rng, n_docs, avgdl):
@@ -17,8 +17,7 @@ def _mk_term(rng, n_docs, avgdl):
     tfs = rng.integers(1, 20, n)
     dls = rng.integers(1, 200, n)
     enc = encode_postings(ids, tfs, dls, avgdl, block_size=8)
-    return {"df": int(n), "postings": enc.docs, "tfs": enc.tfs, "dls": enc.dls,
-            "blocks": [tuple(b) for b in enc.blocks]}
+    return (enc.docs, enc.tfs, enc.dls, [tuple(b) for b in enc.blocks]), int(n)
 
 
 @given(
@@ -32,14 +31,19 @@ def test_maxscore_equals_exhaustive_random(seed, n_terms, k, conjunctive):
     rng = np.random.default_rng(seed)
     n_docs = int(rng.integers(5, 300))
     avgdl = 100.0
-    rows = [_mk_term(rng, n_docs, avgdl) for _ in range(n_terms)]
-    ids_e, sc_e = segment_topk(rows, n_docs, avgdl, k,
-                               mode="exhaustive", conjunctive=conjunctive)
-    ids_m, sc_m = segment_topk(rows, n_docs, avgdl, k,
-                               mode="maxscore", conjunctive=conjunctive)
+    encoded = [_mk_term(rng, n_docs, avgdl) for _ in range(n_terms)]
+
+    def run(mode):
+        # fresh TermPostings per mode: one mode's decode_all() must not
+        # leave the next mode only the decoded fast path
+        terms = [TermPostings(*enc, df) for enc, df in encoded]
+        return segment_topk_terms(terms, n_docs, avgdl, k,
+                                  mode=mode, conjunctive=conjunctive)
+
+    ids_e, sc_e = run("exhaustive")
+    ids_m, sc_m = run("maxscore")
     assert ids_e.tolist() == ids_m.tolist()
     assert sc_e.tolist() == sc_m.tolist()  # bit-identical, same math path
-    ids_w, sc_w = segment_topk(rows, n_docs, avgdl, k,
-                               mode="bmw", conjunctive=conjunctive)
+    ids_w, sc_w = run("bmw")
     assert ids_e.tolist() == ids_w.tolist()
     assert sc_e.tolist() == sc_w.tolist()  # block-max WAND is exact too
