@@ -169,38 +169,19 @@ def main() -> None:
             shutil.rmtree(out_dict, ignore_errors=True)
         t_additions = time.perf_counter() - t_add0
 
-        # 2b — positions (opt-in phrase scale path: build_positions
-        # rebuilds every segment with positions on) + the high-df
-        # phrase probe: a bigram of two COMMON terms, the regime where the
-        # store-verify path degrades to near-full-corpus re-analysis; the
-        # positional path must stay in the conjunctive-search cost class
-        # (r3 VERDICT item 2 target: within ~3x of search_sumtf).  The whole
-        # block (like every r3+ addition) is excluded from the headline
-        # total so round-over-round "value" stays like-for-like.
-        from searchengine_spark.index.phrase import phrase_topk
-        from searchengine_spark.index.positions import build_positions
+        # 2b — the high-df phrase probe: a bigram of two COMMON terms,
+        # served from the index's positions (every build writes them, so
+        # index_build above includes them); the positional path must stay
+        # in the conjunctive-search cost class (r3 VERDICT item 2 target:
+        # within ~3x of search_sumtf).  Excluded from the headline total
+        # (like every r3+ addition) so round-over-round "value" stays
+        # like-for-like.
+        from searchengine_spark.index.positions import phrase_topk_positions
 
         t_add0 = time.perf_counter()
+        phrase_topk_positions(spark, out, "sorvel veltadrolix", 10).collect()
         t0 = time.perf_counter()
-        build_positions(docs, out)
-        q_times["positions_build"] = round(time.perf_counter() - t0, 3)
-
-        # 2d — FUSED single-scan positional build (r5): postings and
-        # positions from ONE analysis pass and one merge
-        # (build_index(positions=True)); compare against index_build +
-        # positions_build, the two-pass total it replaces.  Byte-identical
-        # output (tests/test_fused_build.py).
-        out_fused = tempfile.mkdtemp(prefix="bench_idx_fused_")
-        try:
-            t0 = time.perf_counter()
-            build_index(docs, out_fused, n_segments=4, salt=8, n_buckets=16,
-                        block_size=128, resume=False, positions=True)
-            q_times["fused_build"] = round(time.perf_counter() - t0, 3)
-        finally:
-            shutil.rmtree(out_fused, ignore_errors=True)
-        phrase_topk(spark, out, None, "sorvel veltadrolix", 10).collect()
-        t0 = time.perf_counter()
-        phrase_topk(spark, out, None, "sorvel veltadrolix", 10).collect()
+        phrase_topk_positions(spark, out, "sorvel veltadrolix", 10).collect()
         q_times["phrase_common_bigram"] = round(time.perf_counter() - t0, 3)
         t_additions += time.perf_counter() - t_add0
 

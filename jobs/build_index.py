@@ -39,10 +39,6 @@ def main() -> None:
                     help="also init the kb-partitioned docs store here and "
                          "build the index FROM it (ids guaranteed "
                          "consistent; enables jobs/query.py --store DTOs)")
-    ap.add_argument("--positions", action="store_true",
-                    help="also store each posting row's positions (exact "
-                         "phrase search without store re-analysis; opt-in, "
-                         "adds the position stream to the index bytes)")
     ap.add_argument("--normalizer",
                     choices=["pinned", "english", "porter", "english-porter"],
                     default="pinned",
@@ -116,12 +112,10 @@ def main() -> None:
 
     from searchengine_spark.index.builder import build_index
 
-    # --positions rides the SAME analysis pass and merge as the postings
     meta = build_index(
         docs, args.out, n_segments=args.segments, salt=args.salt,
         n_buckets=args.buckets, block_size=args.block_size,
         resume=not args.no_resume, normalizer=normalizer, forms=forms,
-        positions=args.positions,
     )
     dt = time.perf_counter() - t0
     n = meta["n_docs"]

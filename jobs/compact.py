@@ -40,7 +40,6 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     # (+ dict sidecar) BEFORE the resume=False rebuild, which would
     # otherwise default back to the pinned table
     normalizer, forms = index_analyzer(spark, index_dir, imeta)
-    had_positions = bool(imeta.get("has_positions"))
 
     smeta = dstore.compact_store(spark, store_dir)
 
@@ -50,14 +49,11 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     docs = dstore.read_store(spark, store_dir).localCheckpoint()
     n = docs.count()
     n_segments = max(1, -(-n // seg_size))
-    # positions=had_positions: an index that served phrases before
-    # compaction keeps doing so after (every doc_id moved, so every row's
-    # positions are rebuilt) — in the rebuild's own analysis pass
     meta = build_index(
         docs, index_dir, n_segments=n_segments,
         salt=int(imeta["salt"]), n_buckets=int(imeta["n_buckets"]),
         block_size=int(imeta["block_size"]), resume=False,
-        normalizer=normalizer, forms=forms, positions=had_positions,
+        normalizer=normalizer, forms=forms,
     )
     return {
         "mode": "compact", "store": smeta,

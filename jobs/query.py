@@ -15,6 +15,9 @@ distributed in ONE Spark job (wand.bm25_topk_batch): the offline shape for
 relevance sweeps / eval suites, where per-query job scheduling would
 dominate — terms decode once per (segment, lemma) and are shared across
 every query in the file.
+
+``--phrase`` treats each query (or line) as an exact phrase, served from
+the index's positions (index/positions.py).
 """
 
 from __future__ import annotations
@@ -45,8 +48,8 @@ def main() -> None:
     ap.add_argument("--offset", type=int, default=0,
                     help="pagination offset (the reference's offset=)")
     ap.add_argument("--phrase", action="store_true",
-                    help="treat --query as an exact phrase (requires --store "
-                         "for positional verification)")
+                    help="treat --query / --batch lines as exact phrases, "
+                         "served from the index's positions")
     ap.add_argument("--mode", choices=["auto", "maxscore", "bmw", "exhaustive"],
                     default=None,
                     help="scoring strategy (default maxscore); phrase paths "
@@ -75,24 +78,17 @@ def main() -> None:
     if args.phrase and (args.offset or args.conjunctive
                         or args.mode is not None):
         ap.error("--phrase does not support --offset/--conjunctive/--mode")
-    if args.batch is not None and args.phrase and args.store is not None:
-        ap.error("--batch --phrase serves from the index's positions only; "
-                 "--store (store-verify) is not supported on the batch "
-                 "phrase path")
+    if args.phrase and args.store is not None:
+        ap.error("--phrase serves from the index's positions and prints "
+                 "(doc_id, phrase_tf) only; it takes no --store")
     mode = args.mode or "maxscore"
 
     spark = get_spark("query", cores=args.cores)
 
     if args.batch is not None and args.phrase:
         # whole phrase workload in ONE job over the index's positions
-        from searchengine_spark.index.positions import (
-            has_positions,
-            phrase_topk_batch,
-        )
+        from searchengine_spark.index.positions import phrase_topk_batch
 
-        if not has_positions(args.index):
-            ap.error("--batch --phrase needs an index built with positions "
-                     "(jobs/build_index.py --positions)")
         lines = [ln.strip() for ln in Path(args.batch).read_text().splitlines()]
         workload = {f"q{i}": q for i, q in enumerate(ln for ln in lines if ln)}
         p_sites = ({qid: args.site for qid in workload} if args.site else None)
@@ -171,18 +167,12 @@ def main() -> None:
         return
 
     if args.phrase:
-        from searchengine_spark.index.phrase import phrase_topk
-        from searchengine_spark.index.positions import has_positions
-
-        if args.store is None and not has_positions(args.index):
-            ap.error("--phrase requires --store (store-verify path "
-                     "re-reads candidate docs) unless the index has "
-                     "positions (build_index.py --positions)")
+        from searchengine_spark.index.positions import phrase_topk_positions
 
         for q in args.query:
             t0 = time.perf_counter()
-            rows = phrase_topk(spark, args.index, args.store, q,
-                               args.k, site=args.site).collect()
+            rows = phrase_topk_positions(spark, args.index, q, args.k,
+                                         site=args.site).collect()
             dt = (time.perf_counter() - t0) * 1000
             print(json.dumps({
                 "phrase": q, "latency_ms": round(dt, 1),

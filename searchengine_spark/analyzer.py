@@ -682,16 +682,15 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
                         text_col: str = "content",
                         normalizer: str = "pinned",
                         forms: dict[str, tuple[str, ...]] | None = None,
-                        positions: bool = False, stats=None) -> DataFrame:
+                        stats=None) -> DataFrame:
     """THE build's analysis kernel: (doc_id, text) -> sorted posting runs,
     one row per (segment, lemma) per Arrow batch (``index/runs.py``
     schema), with ZERO shuffle.  The batch is analyzed once
     (:func:`_analyze_arrow_batch`), then one numpy lexsort forms the runs
     in the same Python pass — tf is a lemma's occurrence count per doc,
     dl the doc's occurrence total (multi-lemma expansions count once per
-    form).  ``positions=True`` adds each run's occurrence positions, so
-    ONE scan feeds both the posting and the positional merge (the fused
-    single-scan build).
+    form) — with each run's occurrence positions, so ONE scan feeds the
+    postings and their positional streams.
 
     ``stats`` (an accumulator over :class:`session.MergeDicts` with
     ``xor=("sha_xor",)``) also receives every batch's per-segment doc
@@ -699,8 +698,7 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
     id runs — zero-lemma docs included); ``docs`` then needs ``repo``
     and ``sha256`` too.  Read it after an action that consumes the runs
     in its result stage (``localCheckpoint``)."""
-    from .index.runs import (POS_RUN_DDL, SHA_PREFIX, STAT_RUN_DDL,
-                             doc_stats, form_runs)
+    from .index.runs import RUN_DDL, SHA_PREFIX, doc_stats, form_runs
 
     table, stem_fn = _normalizer_fns(normalizer, forms)
     cols = ["doc_id", text_col]
@@ -732,7 +730,6 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
                 continue
             _, lemmas, pos = got
             yield form_runs(ids[par], lemmas, dl[par], seg_size, n_buckets,
-                            pos=pos if positions else None)
+                            pos)
 
-    return narrowed.mapInArrow(
-        _batches, schema=POS_RUN_DDL if positions else STAT_RUN_DDL)
+    return narrowed.mapInArrow(_batches, schema=RUN_DDL)

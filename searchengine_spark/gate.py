@@ -356,10 +356,11 @@ FROM scored ORDER BY bm25 DESC, doc_id LIMIT 20
 
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PHRASE search twin (beyond the reference): docs where the two query
-    terms occur ADJACENTLY, ranked by occurrence count.  Logical-plan shape
-    of index/phrase.py: positional token stream (posexplode), self-equijoin
-    on (doc_id, pos+1) — a declarative adjacency join Catalyst plans as one
-    shuffle on doc_id, no per-row Python."""
+    terms occur ADJACENTLY, ranked by occurrence count.  Logical-plan twin
+    of the positional phrase search (index/positions.py): positional token
+    stream (posexplode), self-equijoin on (doc_id, pos+1) — a declarative
+    adjacency join Catalyst plans as one shuffle on doc_id, no per-row
+    Python."""
     docs = _load(spark, sf_dir, "documents")
     w1, w2 = SEARCH_TERMS
     # literal-space split WITH empties kept: position-identical to DuckDB's
@@ -392,7 +393,7 @@ GROUP BY t1.doc_id ORDER BY phrase_tf DESC, t1.doc_id LIMIT 20
 
 
 def q_phrase_site(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SITE-SCOPED phrase twin (`--phrase --site`, phrase.py interval
+    """SITE-SCOPED phrase twin (`--phrase --site`, positions.py interval
     mask): the adjacency join runs over ONE source's docs only — the scope
     filter is pushed into the scan BEFORE the positional explode, the same
     prune-first discipline the physical path's doc_id intervals encode."""

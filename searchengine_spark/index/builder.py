@@ -10,15 +10,15 @@ over all segments that still need building):
        — aligned doc/tf/dl lists, hash bucket — in ONE mapInArrow; a
        doc's tokens never leave its partition    [narrow, localCheckpoint]
     -> merge: groupBy(segment, BUCKET), per-lemma merge of the lemma's
-       runs in numpy, delta+varbyte encode + block-max directory (and,
-       with positions, the lemma's position stream)    [the ONE shuffle]
+       runs in numpy, delta+varbyte encode + block-max directory and the
+       lemma's position stream                        [the ONE shuffle]
     -> write as the groups leave the merge, partitionBy(segment,
        bucket(lemma)), dynamic partition overwrite (already-done segments
        untouched, no repartition)                [partition-pruned reads]
 
 That merge writes the WHOLE index: one ``data/`` row per (segment, lemma)
-carries the dictionary (lemma, df), the postings and, opt-in, the
-positional stream (index/positions.py).  Readers take the columns they
+carries the dictionary (lemma, df), the postings and the positional
+stream ``pstream`` (index/positions.py).  Readers take the columns they
 need by Parquet column projection, so no dictionary or positional
 dataset is written beside it (:func:`read_index`).
 
@@ -70,9 +70,11 @@ if TYPE_CHECKING:
 K1, B = 1.2, 0.75  # pinned BM25 params baked into block-max weights
 
 # meta["format"]: the layout this builder writes and reads — one data/
-# dataset whose rows also carry the positional streams.  Indexes without
-# it (dict/ and positions/ sidecars beside data/) are rebuilt on resume.
-INDEX_FORMAT = 2
+# dataset whose every row carries its positional stream.  Any other
+# format is rebuilt whole on resume: format 2 could hold segments built
+# without positions, and indexes without the marker kept dict/ and
+# positions/ sidecars beside data/.
+INDEX_FORMAT = 3
 
 SITES_SCHEMA = T.StructType(
     [
@@ -108,7 +110,9 @@ INDEX_OUT_SCHEMA = T.StructType(
             ),
             False,
         ),
-        T.StructField("pstream", T.BinaryType(), True),  # positions=True only
+        # nullable as format 2 declared it, so the written files keep
+        # their bytes; every row of this format fills it
+        T.StructField("pstream", T.BinaryType(), True),
         T.StructField("bucket", T.IntegerType(), False),
     ]
 )
@@ -151,7 +155,7 @@ def hash_bucket(lemma: str, n_buckets: int) -> int:
 
 
 def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
-                      stats=None, positions: bool = False) -> DataFrame:
+                      stats=None) -> DataFrame:
     """Sorted runs -> encoded posting rows (:data:`INDEX_OUT_SCHEMA`), in
     ONE exchange: runs group by (segment, BUCKET) — n_segments x n_buckets
     well-sized groups (grouping by (segment, lemma) would mean one
@@ -159,15 +163,14 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
     and the per-lemma merge + delta/varbyte encode + block-max directory
     runs vectorized inside each group.
 
-    ``positions=True`` takes the runs' ``pos`` too and fills each row's
-    ``pstream`` (:func:`positions.encode_pstream`) in the same group, so
-    the positional streams cost no second exchange; otherwise ``pstream``
-    is null.
+    The runs' ``pos`` fill each row's ``pstream``
+    (:func:`positions.encode_pstream`) in the same group, so the
+    positional streams cost no second exchange.
 
     ``stats`` (an accumulator over :class:`session.MergeDicts`) receives
-    each segment's ``{"terms", "postings", "bytes"}`` — its manifest's
-    written counts — plus ``"pos_bytes"`` (postings + tfs + pstream: what a
-    positional fetch moves) with positions, from the groups as they
+    each segment's ``{"terms", "postings", "bytes", "pos_bytes"}`` — its
+    manifest's written counts, ``pos_bytes`` being postings + tfs +
+    pstream (what a positional fetch moves) — from the groups as they
     encode.  The encoder runs in the result stage of the job that writes
     its output, so the counts are complete once that write returns."""
 
@@ -197,9 +200,9 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         order = np.lexsort((docs, rid))
         counts = np.bincount(rid, minlength=len(lemmas))
         offsets = np.concatenate([[0], np.cumsum(counts)])
-        pstream = ([None] * len(lemmas) if not positions else encode_pstream(
+        pstream = encode_pstream(
             np.concatenate(pdf["pos"].to_list()).astype(np.int64), tfs,
-            order, offsets))
+            order, offsets)
         docs, tfs, dls = docs[order], tfs[order], dls[order]
         encs = encode_postings_many(docs, tfs, dls, offsets, avgdl, K1, B, block_size)
         out = [
@@ -217,17 +220,16 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
             for t, enc in enumerate(encs)
         ]
         if stats is not None:
-            st = {"terms": len(encs), "postings": int(counts.sum()),
-                  "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
-                               for e in encs)}
-            if positions:
-                st["pos_bytes"] = sum(len(e.docs) + len(e.tfs) + len(p)
-                                      for e, p in zip(encs, pstream))
-            stats.add({seg: st})
+            stats.add({seg: {
+                "terms": len(encs), "postings": int(counts.sum()),
+                "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
+                             for e in encs),
+                "pos_bytes": sum(len(e.docs) + len(e.tfs) + len(p)
+                                 for e, p in zip(encs, pstream))}})
         return pd.DataFrame(out, columns=cols)
 
-    cols = ["segment", "bucket", "lemma", "docs", "tfs", "dls"]
-    return (runs.select(*cols, *(["pos"] if positions else []))
+    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls",
+                        "pos")
             .groupBy("segment", "bucket")
             .applyInPandas(_merge, schema=INDEX_OUT_SCHEMA))
 
@@ -272,7 +274,7 @@ def build_index(
     fixed_avgdl: float | None = None,
     normalizer: str = "pinned",
     forms: dict[str, tuple[str, ...]] | None = None,
-    positions: bool = False,
+    positions: bool = True,
 ) -> dict:
     """Build (or resume) the physical index under ``out_dir``.
 
@@ -292,16 +294,21 @@ def build_index(
     reference ships its morphology inside the index the same way —
     LemmaFinderImpl.java:25-31 singleton).
 
-    ``positions=True`` gives every written row its ``pstream`` from the
-    same analysis pass and the same merge (index/positions.py).  A segment
-    counts as done for a positional build only if its manifest records
-    positions, so a positional resume also rebuilds the segments that lack
-    them; ``meta.has_positions`` is on exactly when every segment's rows
-    carry positions."""
+    Every written row carries its ``pstream`` from the same analysis
+    pass and the same merge (index/positions.py).  An index of another
+    :data:`INDEX_FORMAT` is rebuilt whole on resume.
+
+    ``positions`` only accepts ``True``.  It is kept because
+    ``perfbench/workloads.py`` passes ``positions=True`` (debt: drop it
+    with the next benchmark change)."""
     import shutil
 
     from .checkpoint import (all_manifests, read_manifest, write_json_atomic,
                              write_manifest)
+
+    if positions is not True:
+        raise ValueError("every index carries positions: build_index takes "
+                         f"no positions={positions!r}")
 
     spark = docs_ingested.sparkSession
     narrow = docs_ingested.select("repo", "doc_id", "content", "sha256")
@@ -316,9 +323,9 @@ def build_index(
     if resume and os.path.exists(f"{out_dir}/meta.json"):
         with open(f"{out_dir}/meta.json") as fh:
             old_meta = json.load(fh)
-    # an index in the older layout (dict/ and positions/ sidecars beside
-    # data/, no format marker) is rebuilt whole rather than mixed with
-    # this one; its sidecars go now — nothing of this layout reads them
+    # an index of another format (segments without positions, or dict/
+    # and positions/ sidecars beside data/) is rebuilt whole rather than
+    # mixed with this one; the sidecars go now — nothing here reads them
     legacy = old_meta is not None and old_meta.get("format") != INDEX_FORMAT
     if legacy:
         for d in ("dict", "positions"):
@@ -355,8 +362,7 @@ def build_index(
     def done(s: int) -> bool:
         """Segment ``s`` of the old index needs no rebuild."""
         m = read_manifest(out_dir, s)
-        return bool(resume and not legacy and m and m.get("status") == "done"
-                    and (m.get("positions") or not positions))
+        return bool(resume and not legacy and m and m.get("status") == "done")
 
     # n_docs (the BM25 idf/avgdl base) is the ROW count; the segment span
     # derives from max(doc_id)+1 — they differ once deletes leave id holes
@@ -420,7 +426,7 @@ def build_index(
     # its last manifest and its final meta write left them unset
     if (old_meta is not None and not missing
             and int(old_meta.get("n_docs", -1)) == n_docs):
-        totals = _manifest_totals(all_manifests(out_dir), n_segments)
+        totals = _manifest_totals(all_manifests(out_dir))
         if any(old_meta.get(k) != v for k, v in totals.items()):
             old_meta.update(totals)
             write_json_atomic(f"{out_dir}/meta.json", old_meta, indent=1)
@@ -449,16 +455,16 @@ def build_index(
     # never leave its partition, and the first shuffle of the whole build
     # is the (segment, bucket) merge itself.  EVERY normalizer routes here
     # (the stemmer family stems the batch's UNIQUE tokens inside the same
-    # kernel).  positions=True adds the runs' occurrence positions.  The
-    # same pass tallies each segment's docs, sha lineage, Σ dl and repo id
-    # runs into `stats` — the build's statistics never re-read the corpus.
+    # kernel), occurrence positions included.  The same pass tallies each
+    # segment's docs, sha lineage, Σ dl and repo id runs into `stats` — the
+    # build's statistics never re-read the corpus.
     from ..analyzer import doc_term_runs_arrow
     from ..session import MergeDicts
 
     stats = spark.sparkContext.accumulator({}, MergeDicts(xor=("sha_xor",)))
     runs = doc_term_runs_arrow(analyzed, seg_size, n_buckets,
                                normalizer=normalizer, forms=forms,
-                               positions=positions, stats=stats)
+                               stats=stats)
     # MATERIALIZE the runs once (localCheckpoint, not .cache()): the SQL
     # cache's compressed-columnar form measured ~3x slower to re-scan into
     # Arrow batches than checkpointed rows on this host.  The checkpoint
@@ -503,6 +509,10 @@ def build_index(
         "k1": K1,
         "b": B,
         "normalizer": normalizer,
+        # a constant no library code reads, kept because
+        # perfbench/workloads.py checks it (debt: drop it with the next
+        # benchmark change)
+        "has_positions": True,
     }
     os.makedirs(out_dir, exist_ok=True)
     if normalizer in ("dict", "dict_porter"):
@@ -526,13 +536,13 @@ def build_index(
 
     if missing:
         # ONE exchange: the runs go straight into their (segment, bucket)
-        # merge group, and the merge output — postings and, with
-        # positions, pstream — is written as it leaves the group (each
-        # group lands in its partition dir from one task, no repartition).
+        # merge group, and the merge output — postings and pstream — is
+        # written as it leaves the group (each group lands in its
+        # partition dir from one task, no repartition).
         # The encoder adds each segment's written counts to `stats`.
         (
             encode_index_runs(runs.filter(isin_expr("segment", missing)),
-                              avgdl, block_size, stats, positions)
+                              avgdl, block_size, stats)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")  # done segments untouched
             .partitionBy("segment", "bucket")
@@ -583,13 +593,11 @@ def build_index(
             "posting_count": st.get("postings", 0),
             "posting_bytes": st.get("bytes", 0),
             "input_sha_xor": st.get("sha_xor", 0),
-            "positions": positions,
+            "pos_posting_bytes": st.get("pos_bytes", 0),
             "status": "done",
         }
-        if positions:
-            m["pos_posting_bytes"] = st.get("pos_bytes", 0)
         write_manifest(out_dir, seg, m)
-    meta.update(_manifest_totals(all_manifests(out_dir), n_segments))
+    meta.update(_manifest_totals(all_manifests(out_dir)))
     write_json_atomic(f"{out_dir}/meta.json", meta, indent=1)
     timings["manifests_s"] = round(_time.perf_counter() - _t, 2)
 
@@ -597,7 +605,7 @@ def build_index(
     return meta
 
 
-def _manifest_totals(manifests: list[dict], n_segments: int) -> dict:
+def _manifest_totals(manifests: list[dict]) -> dict:
     """Index-wide serving estimates from the per-segment manifests.
 
     bytes-per-posting: with it, a term's driver-side working-set size is
@@ -610,9 +618,7 @@ def _manifest_totals(manifests: list[dict], n_segments: int) -> dict:
     whole-index TOTALS (QueryEngine's skip-the-guard short-circuit: index
     <= threshold => no term can exceed it) are only sound when EVERY
     manifest contributed — an undercounted total would reopen the
-    fetch-before-guard hole for exactly the big indexes it protects.
-    ``has_positions`` is on exactly when every segment's rows carry
-    positions."""
+    fetch-before-guard hole for exactly the big indexes it protects."""
     out: dict = {}
     for key, total, ratio in (("posting_bytes", "posting_bytes",
                                "bytes_per_posting"),
@@ -625,8 +631,6 @@ def _manifest_totals(manifests: list[dict], n_segments: int) -> dict:
             out[ratio] = round(nb / n, 3)
             if len(have) == len(manifests):
                 out[total] = nb
-    segs = {m["segment"] for m in manifests if m.get("positions")}
-    out["has_positions"] = segs >= set(range(n_segments))
     return out
 
 

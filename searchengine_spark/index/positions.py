@@ -1,12 +1,8 @@
-"""Positional postings on the index rows: the high-df phrase story.
+"""Positional postings on the index rows: exact phrase search.
 
-r3 VERDICT item 2: the store-verify phrase path (index/phrase.py) is
-candidate-bounded — exactly right for selective phrases, O(corpus) for a
-phrase of two COMMON words (every candidate doc re-analyzed in Python).
-Positions remove that regime.  They are opt-in (``build_index(positions=
-True)``) and live on the index's own rows, not in a second dataset: each
-``data/`` row (one ``(segment, lemma)``) carries a nullable ``pstream``
-column next to ``postings/tfs/dls/blocks`` —
+Every build writes positions, on the index's own rows rather than in a
+second dataset: each ``data/`` row (one ``(segment, lemma)``) carries a
+``pstream`` column next to ``postings/tfs/dls/blocks`` —
 
     index_dir/data/segment=K/bucket=B/*.parquet
         (segment, lemma, df, postings, tfs, dls, blocks, pstream, bucket)
@@ -20,9 +16,9 @@ positional read (:func:`read_positions`) touches only ``segment, lemma,
 postings, tfs, pstream``.  A POSITION is the index of a surviving source
 token in the pinned analyzer's positional stream
 (analyzer.analyze_positions — multi-lemma tokens occupy ONE position with
-several forms), so matching is symmetric with the store-verify path by
-construction and the two implementations are row-identical
-(tests/test_phrase_positions.py).
+several forms), and a query phrase is analyzed by the same function, so
+the results are row-identical to re-analyzing every document
+(tests/test_phrase_positions.py checks against that pure-Python oracle).
 
 Query time: one front end serves :func:`phrase_topk_positions` and
 :func:`phrase_topk_batch` (a phrase is a batch of one): a bucket-pruned
@@ -37,16 +33,13 @@ O(postings of the query terms) — the same class as conjunctive search —
 regardless of how common the words are; no store scan, no per-row Python
 re-analysis.
 
-Build: the analysis kernel (``analyzer.doc_term_runs_arrow(positions=
-True)``) forms each Arrow batch's occurrences into the same sorted
-(segment, lemma) runs as the stats (``index/runs.py``), and the build's
-one merge (``builder.encode_index_runs``) encodes ``pstream``
-(:func:`encode_pstream`) in the group that encodes the postings.
-
-Lifecycle: a segment's manifest records whether its rows carry positions,
-and ``meta.has_positions`` is on exactly when every segment's does — a
-rebuild without positions turns it off, so stale or missing positions are
-never served; :func:`build_positions` rebuilds segments with positions on.
+Build: the analysis kernel (``analyzer.doc_term_runs_arrow``) forms each
+Arrow batch's occurrences into the same sorted (segment, lemma) runs as
+the stats (``index/runs.py``), and the build's one merge
+(``builder.encode_index_runs``) encodes ``pstream``
+(:func:`encode_pstream`) in the group that encodes the postings.  An
+index of an older format may hold rows without positions; phrase serving
+refuses it (:func:`check_phrase_format`) until a resume rebuilds it.
 Reference analog: none — the reference's index stores no positions
 (`lemma`/`index` tables, SearchEngine schema); its proximity rule is a
 post-AND substring heuristic (SearchServiceImpl.java:231-264).
@@ -70,26 +63,19 @@ if TYPE_CHECKING:
 POS_COLS = ("segment", "lemma", "postings", "tfs", "pstream")
 
 
-def positions_enabled(meta: dict) -> bool:
-    """Positional serving is enabled iff ``meta`` carries the flag, which
-    the build sets only when every segment's rows carry positions.  An
-    index in an older layout (no ``format`` marker: positions in a
-    sidecar, not on its rows) has none to serve."""
+def check_phrase_format(meta: dict) -> None:
+    """Raise unless ``meta`` is of the current ``builder.INDEX_FORMAT``,
+    the only one whose every row carries ``pstream``: format 2 could hold
+    segments built without positions, and older indexes kept them in a
+    sidecar.  The library front end and ``QueryEngine`` both check here
+    before serving a phrase."""
     from .builder import INDEX_FORMAT
 
-    return meta.get("format") == INDEX_FORMAT and bool(
-        meta.get("has_positions"))
-
-
-def has_positions(index_dir: str) -> bool:
-    """:func:`positions_enabled` of the index's ``meta.json`` (False when
-    there is none)."""
-    try:
-        with open(f"{index_dir}/meta.json") as fh:
-            meta = json.load(fh)
-    except FileNotFoundError:
-        return False
-    return positions_enabled(meta)
+    if meta.get("format") != INDEX_FORMAT:
+        raise ValueError(
+            f"index format {meta.get('format')} may lack positions; rebuild "
+            f"it to format {INDEX_FORMAT} before serving phrases (a resumed "
+            "build_index rebuilds an older format whole)")
 
 
 def _delta_encode(vals: np.ndarray, firsts: np.ndarray) -> np.ndarray:
@@ -156,25 +142,6 @@ def decode_term_positions(postings: bytes, tfs: bytes, pstream: bytes,
         firsts[np.cumsum(counts) - counts] = True
     flat = _delta_decode(varbyte_decode(pstream), firsts)
     return docs, counts, flat
-
-
-def build_positions(docs_ingested: DataFrame, index_dir: str,
-                    segments: list[int] | None = None) -> dict:
-    """Give ``segments`` (None = every segment) positional streams and
-    return the new meta: a rebuild of those segments with positions on
-    under the stored avgdl (``streaming.incremental.rebuild_segments``).
-    Any other segment whose rows lack positions is rebuilt in the same
-    pass, so ``has_positions`` ends on.  MUST run against the same corpus
-    state as the index data."""
-    from ..streaming.incremental import rebuild_segments
-
-    with open(f"{index_dir}/meta.json") as fh:
-        n_segments = int(json.load(fh)["n_segments"])
-    rebuild_segments(docs_ingested, index_dir,
-                     list(range(n_segments)) if segments is None
-                     else segments, positions=True)
-    with open(f"{index_dir}/meta.json") as fh:
-        return json.load(fh)
 
 
 def read_positions(spark: SparkSession, index_dir: str,
@@ -270,13 +237,9 @@ def _phrase_segments(spark: SparkSession, index_dir: str,
 
     from .builder import index_analyzer, isin_expr
 
-    if not has_positions(index_dir):
-        raise ValueError(
-            "index has no positions (a rebuild without positions clears "
-            "meta.has_positions) — run build_positions first, or use the "
-            "store-verify path")
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
+    check_phrase_format(meta)
     seg_size, block_size = int(meta["seg_size"]), int(meta["block_size"])
     ana = index_analyzer(spark, index_dir, meta)
     qpat = {qid: [frozenset(p) for p in analyze_positions(ph, *ana)]
@@ -353,9 +316,7 @@ def phrase_topk_positions(spark: SparkSession, index_dir: str, phrase: str,
                           ) -> DataFrame:
     """Top-k (doc_id, phrase_tf) from the index's positions alone — exact,
     store-free, O(query-term postings) even for a phrase of two common
-    words.  Row-identical to index/phrase.py's store-verify path (same
-    ``analyze_positions`` pattern contract on both sides; parity-tested).
-    One phrase as a batch of one through :func:`phrase_topk_batch`'s front
+    words.  One phrase as a batch of one through :func:`phrase_topk_batch`'s front
     end, merged by one global ordered limit (no per-qid window).
 
     ``site`` scopes the search to one repo exactly like BM25 serving: the

@@ -8,7 +8,7 @@ by doc_id, shipped as aligned primitive lists::
     tfs   array<int>      per-doc term frequency (== occurrence count)
     dls   array<bigint>   per-doc length (Σ tf over the doc's lemmas)
     pos   array<int>      occurrence positions, (doc, pos)-ascending, aligned
-                          with ``repeat(docs, tfs)`` — positional kernels only
+                          with ``repeat(docs, tfs)``
 
 The analysis kernel (``analyzer.doc_term_runs_arrow``) forms runs in the
 same Python pass that tokenized the batch — one numpy lexsort per batch —
@@ -33,29 +33,27 @@ import numpy as np
 # the manifest's ``input_sha_xor`` lineage is the XOR of this per-doc value
 # (the first 60 bits of the hex sha256), evaluated by the JVM
 SHA_PREFIX = "cast(conv(substring(sha256, 1, 15), 16, 10) as bigint)"
-STAT_RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
-                "tfs array<int>, dls array<bigint>")
-POS_RUN_DDL = STAT_RUN_DDL + ", pos array<int>"
+RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
+           "tfs array<int>, dls array<bigint>, pos array<int>")
 
 
 def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
-              n_buckets: int, pos: np.ndarray | None = None):
+              n_buckets: int, pos: np.ndarray):
     """Lemma occurrences of one batch -> one run per ``(segment, lemma)``
-    (a ``pyarrow.RecordBatch`` in :data:`STAT_RUN_DDL` /
-    :data:`POS_RUN_DDL` order).
+    (a ``pyarrow.RecordBatch`` in :data:`RUN_DDL` order).
 
     ``doc``/``dl`` are int64 per occurrence, ``lemma`` an Arrow string
-    array and ``pos`` (optional) the occurrence positions; a run's tf is
-    its occurrence count per doc."""
+    array and ``pos`` the occurrence positions; a run's tf is its
+    occurrence count per doc."""
     import pyarrow as pa
 
     from .builder import hash_bucket
 
     enc = lemma.dictionary_encode()
     code = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    # lemma-major, then doc (then pos): a (segment, lemma) run is
+    # lemma-major, then doc, then pos: a (segment, lemma) run is
     # contiguous because the segment is monotone in doc within a lemma
-    order = np.lexsort((doc, code) if pos is None else (pos, doc, code))
+    order = np.lexsort((pos, doc, code))
     d, c = doc[order], code[order]
     s = d // seg_size
     n = d.size
@@ -73,21 +71,17 @@ def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
     bucket = np.fromiter(
         (hash_bucket(lm, n_buckets) for lm in enc.dictionary.to_pylist()),
         dtype=np.int32, count=len(enc.dictionary))[run_code]
-    cols = [
+    occ_off = pa.array(np.append(run_at, n).astype(np.int32))
+    return pa.record_batch([
         pa.array(s[run_at].astype(np.int32)),
         pa.array(bucket),
         enc.dictionary.take(pa.array(run_code)),
         pa.ListArray.from_arrays(doc_off, pa.array(d[doc_at])),
         pa.ListArray.from_arrays(doc_off, pa.array(tfs)),
         pa.ListArray.from_arrays(doc_off, pa.array(dl[order][doc_at])),
-    ]
-    names = ["segment", "bucket", "lemma", "docs", "tfs", "dls"]
-    if pos is not None:
-        occ_off = pa.array(np.append(run_at, n).astype(np.int32))
-        cols.append(pa.ListArray.from_arrays(
-            occ_off, pa.array(pos[order].astype(np.int32))))
-        names.append("pos")
-    return pa.record_batch(cols, names=names)
+        pa.ListArray.from_arrays(occ_off,
+                                 pa.array(pos[order].astype(np.int32))),
+    ], names=["segment", "bucket", "lemma", "docs", "tfs", "dls", "pos"])
 
 
 def doc_stats(doc: np.ndarray, dl: np.ndarray, repo, sha_prefix,

@@ -749,17 +749,13 @@ class QueryEngine:
         from .builder import prune_index
         from .positions import (
             POS_COLS,
+            check_phrase_format,
             phrase_segment,
             phrase_topk_positions,
-            positions_enabled,
         )
 
         self._check_fresh()
-        if not positions_enabled(self.meta):
-            raise ValueError(
-                "index has no positions (a rebuild without positions "
-                "clears meta.has_positions) — run build_positions first, "
-                "or use the store-verify path")
+        check_phrase_format(self.meta)
         qpat = [frozenset(p) for p in analyze_positions(phrase, *self._ana)]
         if not qpat:
             return []
@@ -840,13 +836,14 @@ class QueryEngine:
         working set.  ``sites`` additionally warms the site-interval cache
         so site-scoped queries skip their sidecar read."""
         from ..analyzer import analyze_positions
-        from .positions import positions_enabled
+        from .positions import check_phrase_format
 
         self._check_fresh()
         self._scopes({s: s for s in sites or ()})
         lemmas = sorted({t for q in queries for t in analyze(q, *self._ana)})
         forms = []
-        if phrases and positions_enabled(self.meta):
+        if phrases:
+            check_phrase_format(self.meta)
             forms = sorted({f for ph in phrases
                             for fs in analyze_positions(ph, *self._ana)
                             for f in fs})

@@ -104,25 +104,17 @@ def changed_segments(old_ingested: DataFrame, new_ingested: DataFrame,
 
 
 def rebuild_segments(docs_ingested: DataFrame, index_dir: str,
-                     segs: list[int], positions: bool | None = None
-                     ) -> list[int]:
+                     segs: list[int]) -> list[int]:
     """THE segment-rebuild primitive: invalidate the given segments'
     manifests and resume the build over them under the pinned seg_size /
     avgdl (MaxScore's block-max bounds and query scores must share one
     avgdl; a full rebuild refreshes it).  Every incremental path — doc-id
     upserts, streaming micro-batches, store deletes — funnels through
-    here so the rebuild contract lives in one place.
-
-    ``positions`` (None = keep the index's ``has_positions``) decides
-    whether the rebuilt rows carry positions; they ride the SAME analysis
-    pass and merge as the postings.  With positions on, any other segment
-    whose rows lack them is rebuilt too, so the flag ends on."""
+    here so the rebuild contract lives in one place."""
     from ..index.builder import build_index
 
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
-    if positions is None:
-        positions = bool(meta.get("has_positions"))
     for s in segs:
         p = pathlib.Path(f"{index_dir}/manifests/segment={s}.json")
         if p.exists():
@@ -132,7 +124,6 @@ def rebuild_segments(docs_ingested: DataFrame, index_dir: str,
         index_dir,
         resume=True,  # seg_size/salt/buckets/block_size/avgdl pinned from meta
         fixed_avgdl=meta["avgdl"],
-        positions=positions,
     )
     return segs
 

@@ -16,11 +16,61 @@ import re
 from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
-from searchengine_spark.analyzer import analyze, collect_lemmas
+from searchengine_spark.analyzer import (
+    analyze,
+    analyze_positions,
+    collect_lemmas,
+)
 
 FREQUENCY_THRESHOLD = 200  # SearchServiceImpl.java:34
 MAX_DISTANCE = 5  # SearchServiceImpl.java:35
 SNIPPET_RADIUS = 100
+
+
+def count_phrase(stream: list[tuple[str, ...]], qforms: list[frozenset]) -> int:
+    """Occurrences of the phrase in a positional stream: position i matches
+    iff for every j the doc's form set at i+j intersects query word j's
+    form set."""
+    m = len(qforms)
+    n = len(stream)
+    if m == 0 or n < m:
+        return 0
+    c = 0
+    for i in range(n - m + 1):
+        if all(any(f in qforms[j] for f in stream[i + j]) for j in range(m)):
+            c += 1
+    return c
+
+
+def phrase_topk(docs, phrase: str, k: int, normalizer: str = "pinned",
+                forms: dict[str, tuple[str, ...]] | None = None
+                ) -> list[tuple[int, int]]:
+    """Brute-force top-k (doc_id, phrase_tf) over ``docs`` ((doc_id,
+    content) pairs): every doc re-analyzed with ``analyze_positions``, no
+    index involved; ranked by phrase_tf desc, doc_id asc."""
+    qforms = [frozenset(p)
+              for p in analyze_positions(phrase, normalizer, forms)]
+    hits = []
+    for doc_id, content in docs:
+        tf = count_phrase(analyze_positions(content, normalizer, forms),
+                          qforms)
+        if tf > 0:
+            hits.append((doc_id, tf))
+    hits.sort(key=lambda t: (-t[1], t[0]))
+    return hits[:k]
+
+
+def store_phrase_topk(spark, store: str, phrase: str, k: int,
+                      site: str | None = None) -> list[tuple[int, int]]:
+    """:func:`phrase_topk` over the kb store's docs at ``store`` (``site``
+    keeps one repo's): the brute-force reference the positional phrase
+    path is checked against."""
+    from searchengine_spark.streaming.store import read_store
+
+    return phrase_topk(
+        [(r["doc_id"], r["content"]) for r in read_store(spark, store)
+         .select("doc_id", "repo", "content").collect()
+         if site is None or r["repo"] == site], phrase, k)
 
 
 def round_half_up(x: float, nd: int = 4) -> float:

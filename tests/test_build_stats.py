@@ -107,7 +107,6 @@ def _check(spark, docs, idx):
             "posting_count": wrt["postings"] if wrt else 0,
             "posting_bytes": wrt["bytes"] if wrt else 0,
             "input_sha_xor": (lin["sha_xor"] or 0) if lin else 0,
-            "positions": True,
             "pos_posting_bytes": p["b"] if p else 0,
             "status": "done",
         }
@@ -146,7 +145,7 @@ def test_stats_match_the_queries_they_replace(spark, tmp_path):
 
     # fresh positional build
     meta = build_index(docs, idx, n_segments=N_SEGMENTS, salt=4,
-                       n_buckets=8, resume=False, positions=True)
+                       n_buckets=8, resume=False)
     assert meta["timings"]["scan_s"] >= 0
     meta = _check(spark, docs, idx)
     assert meta["avgdl"] == _avgdl(doc_term_stats_arrow(docs), N_DOCS)
@@ -175,7 +174,7 @@ def test_stats_match_the_queries_they_replace(spark, tmp_path):
     _check(spark, docs, idx)
     fresh = str(tmp_path / "fresh_holes")
     meta = build_index(docs, fresh, n_segments=N_SEGMENTS, salt=4,
-                       n_buckets=8, resume=False, positions=True)
+                       n_buckets=8, resume=False)
     meta = _check(spark, docs, fresh)
     assert meta["avgdl"] == _avgdl(doc_term_stats_arrow(docs),
                                    N_DOCS - len(holes))
@@ -209,7 +208,7 @@ def test_build_job_count(spark, tmp_path):
     idx = str(tmp_path / "idx")
     fresh = _jobs(spark, "stats-fresh", lambda: build_index(
         docs, idx, n_segments=N_SEGMENTS, salt=4, n_buckets=8,
-        resume=False, positions=True))
+        resume=False))
     assert fresh <= 6
     rebuild = _jobs(spark, "stats-rebuild",
                     lambda: rebuild_segments(docs, idx, [1]))

@@ -19,12 +19,10 @@ from searchengine_spark.analyzer import MIN_TOKEN_LEN, STOP_WORDS, analyze
 from searchengine_spark.corpus import ingest
 from searchengine_spark.functions.english import ENGLISH_FORMS
 from searchengine_spark.index.builder import build_index, index_analyzer
-from searchengine_spark.index.positions import (
-    build_positions,
-    phrase_topk_positions,
-)
+from searchengine_spark.index.positions import phrase_topk_positions
 from searchengine_spark.index.wand import QueryEngine, bm25_topk
 from searchengine_spark.schema import DOCS_SCHEMA
+from tests.oracle import phrase_topk
 
 DOCS = [
     ("org/a", "src/a.py", "c1", "py",
@@ -64,7 +62,6 @@ def dict_idx(spark, tmp_path_factory):
     idx = str(root / "idx")
     build_index(docs, idx, n_segments=3, salt=2, n_buckets=4, resume=False,
                 normalizer="dict", forms=ENGLISH_FORMS)
-    build_positions(docs, idx)
     return idx, docs
 
 
@@ -112,7 +109,8 @@ def test_engine_paths_match_distributed(spark, dict_idx):
 def test_phrase_paths_cross_inflection(spark, dict_idx):
     """Phrase matching through the dictionary: 'went home' and 'gone home'
     are the same lemma pattern (go, home) — both match docs 0 and 1, on
-    the positional path, the warm engine path, and the store-verify path."""
+    the positional path and the warm engine path, as the pure-Python
+    oracle re-analyzing every doc with the dictionary finds."""
     idx, docs = dict_idx
     want = [(0, 1), (1, 1)]
     for ph in ("went home", "gone home"):
@@ -121,19 +119,10 @@ def test_phrase_paths_cross_inflection(spark, dict_idx):
         assert got == want, ph
     eng = QueryEngine(spark, idx)
     assert eng.phrase_rows("went home", 10) == want
-
-    from searchengine_spark.index.phrase import phrase_topk
-    from searchengine_spark.streaming.store import init_store
-
-    # store-verify path: build a store from the raw docs (ids consistent
-    # because ingest ranks deterministically)
-    store = idx + "_store"
-    raw = spark.createDataFrame(DOCS, DOCS_SCHEMA)
-    init_store(raw, store)
-    got = [(r["doc_id"], r["phrase_tf"])
-           for r in phrase_topk(spark, idx, store, "went home", 10,
-                                impl="store").collect()]
-    assert got == want
+    # DOCS are listed in ingest's (repo, path, commit) order, so a doc's
+    # list index is its doc_id
+    assert phrase_topk([(i, d[4]) for i, d in enumerate(DOCS)],
+                       "went home", 10, "dict", ENGLISH_FORMS) == want
 
 
 def test_resume_and_rebuild_pin_normalizer(spark, tmp_path):
@@ -188,8 +177,6 @@ def test_porter_index_end_to_end(spark, tmp_path):
     at the stem on both sides (build stems inside the Arrow run kernel,
     queries stemmed by index_analyzer), and the index's positions serve
     phrases across inflections."""
-    from searchengine_spark.index.positions import build_positions
-
     rows = [
         ("org/a", "s/a.py", "c1", "py",
          "the connection pools were connected early"),
@@ -215,7 +202,6 @@ def test_porter_index_end_to_end(spark, tmp_path):
     # positions on a STEMMED index: phrase adjacency holds in
     # stemmed positions — "connected pools" matches doc 0's "connection
     # pools" (both sides analyze to [connect, pool] at adjacent slots)
-    build_positions(docs, idx)
     got = [(r["doc_id"], r["phrase_tf"]) for r in
            phrase_topk_positions(spark, idx, "connected pools", 10).collect()]
     assert got == [(0, 1)]
@@ -323,7 +309,6 @@ def test_dict_porter_index_end_to_end(spark, tmp_path):
     # and a raw porter output must keep distinct provenance ("gone home"
     # matches "went home" via the dict lemma 'go' at one slot, while the
     # porter side handles "fixing" -> "fix")
-    build_positions(docs, idx)
     want = [(0, 1), (1, 1)]
     got = [(r["doc_id"], r["phrase_tf"]) for r in
            phrase_topk_positions(spark, idx, "gone home", 10).collect()]
@@ -409,8 +394,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
     monkeypatch.setattr("sys.argv", [
         "build_index.py", "--input", inp, "--out", idx, "--store", store,
         "--segments", "3", "--salt", "2", "--buckets", "8", "--no-resume",
-        "--normalizer", "english-porter", "--forms-json", fj, "--positions",
-        "--cores", "8",
+        "--normalizer", "english-porter", "--forms-json", fj, "--cores", "8",
     ])
     build_job.main()
     dict_s = _time.perf_counter() - t0
@@ -475,7 +459,6 @@ def test_dict_porter_incremental_rebuild_refreshes_positions(spark, tmp_path):
     """rebuild_segments on a layered-normalizer index must keep BOTH the
     normalizer and fresh positions (the refresh resolves the
     stemmed positional path from meta)."""
-    from searchengine_spark.index.positions import build_positions
     from searchengine_spark.streaming.incremental import rebuild_segments
 
     rows = [
@@ -490,7 +473,6 @@ def test_dict_porter_incremental_rebuild_refreshes_positions(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(docs, idx, n_segments=2, salt=2, n_buckets=4, resume=False,
                 normalizer="dict_porter", forms=ENGLISH_FORMS)
-    build_positions(docs, idx)
     want = [(r["doc_id"], r["phrase_tf"]) for r in
             phrase_topk_positions(spark, idx, "went home", 10).collect()]
     assert want
@@ -499,7 +481,6 @@ def test_dict_porter_incremental_rebuild_refreshes_positions(spark, tmp_path):
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     assert meta["normalizer"] == "dict_porter"
-    assert meta["has_positions"]
     got = [(r["doc_id"], r["phrase_tf"]) for r in
            phrase_topk_positions(spark, idx, "gone home", 10).collect()]
     assert got == want  # same lemma pattern (go, home) on both phrases

@@ -1,5 +1,6 @@
-"""Phrase search (index/phrase.py): candidates from the index, positional
-verify against the kb store; brute-force oracle over the pinned analyzer."""
+"""Phrase search (positions.phrase_topk_positions) against a brute-force
+oracle that re-analyzes every doc of the kb store with the pinned
+analyzer."""
 
 from __future__ import annotations
 
@@ -8,9 +9,10 @@ import pytest
 from searchengine_spark.analyzer import analyze, analyze_positions
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.phrase import count_phrase, phrase_topk
+from searchengine_spark.index.positions import phrase_topk_positions
 from searchengine_spark.schema import DOCS_SCHEMA
 from searchengine_spark.streaming.store import init_store, read_store
+from tests.oracle import count_phrase, store_phrase_topk
 
 
 @pytest.fixture(scope="module")
@@ -25,17 +27,9 @@ def phrase_env(spark, tmp_path_factory):
     return store, idx
 
 
-def _brute(spark, store, phrase, k=100):
-    qforms = [frozenset(p) for p in analyze_positions(phrase)]
-    if not qforms:
-        return []
-    want = []
-    for r in read_store(spark, store).select("doc_id", "content").collect():
-        tf = count_phrase(analyze_positions(r["content"]), qforms)
-        if tf > 0:
-            want.append((r["doc_id"], tf))
-    want.sort(key=lambda t: (-t[1], t[0]))
-    return want[:k]
+def _rows(spark, idx, phrase, k):
+    return [(r["doc_id"], r["phrase_tf"]) for r in
+            phrase_topk_positions(spark, idx, phrase, k=k).collect()]
 
 
 @pytest.mark.parametrize("phrase", [
@@ -46,9 +40,8 @@ def _brute(spark, store, phrase, k=100):
 ])
 def test_phrase_matches_brute_force(spark, phrase_env, phrase):
     store, idx = phrase_env
-    got = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk(spark, idx, store, phrase, k=100).collect()]
-    assert got == _brute(spark, store, phrase, k=100)
+    assert _rows(spark, idx, phrase, 100) == store_phrase_topk(
+        spark, store, phrase, 100)
 
 
 def test_phrase_planted_markers_separate_adjacent_from_far(spark, phrase_env):
@@ -56,9 +49,8 @@ def test_phrase_planted_markers_separate_adjacent_from_far(spark, phrase_env):
     in {3,7,11,13}: phrase search must keep exactly the adjacent ones
     (the proximity heuristic, by contrast, passes near-misses)."""
     store, idx = phrase_env
-    got = {r["doc_id"] for r in
-           phrase_topk(spark, idx, store, "kw_pair_alpha kw_pair_beta",
-                       k=100).collect()}
+    got = {d for d, _ in _rows(spark, idx, "kw_pair_alpha kw_pair_beta",
+                               100)}
     rows = {(r["path"]): r["doc_id"] for r in
             read_store(spark, store).select("path", "doc_id").collect()}
     gen = gen_corpus_local(200)
@@ -84,37 +76,15 @@ def test_phrase_multiform_occupies_one_position():
                                                "tamok"]
 
 
-def test_phrase_high_df_guard_fails_loudly(spark, phrase_env):
-    """r4 VERDICT minor #2: on a POSITIONLESS index, a phrase whose
-    dictionary-df estimate exceeds max_candidate_df must fail loudly with
-    the build-with-positions hint (not silently run the O(corpus) verify);
-    force=True downgrades to a warning and returns the same rows."""
-    store, idx = phrase_env
-    phrase = "kw_pair_alpha kw_pair_beta"
-    with pytest.raises(ValueError, match="Build the index with positions"):
-        phrase_topk(spark, idx, store, phrase, k=10, max_candidate_df=1)
-    with pytest.warns(UserWarning, match="Build the index with positions"):
-        forced = [(r["doc_id"], r["phrase_tf"]) for r in
-                  phrase_topk(spark, idx, store, phrase, k=10,
-                              max_candidate_df=1, force=True).collect()]
-    assert forced == _brute(spark, store, phrase, k=10)
-    # under the default threshold the estimate passes silently
-    ok = [(r["doc_id"], r["phrase_tf"]) for r in
-          phrase_topk(spark, idx, store, phrase, k=10).collect()]
-    assert ok == forced
-
-
 def test_phrase_degenerate_queries(spark, phrase_env):
     store, idx = phrase_env
     # a stopword vanishes from the pattern exactly as it vanished from every
     # doc stream (symmetric analysis): "the tamok" == phrase "tamok"
-    a = [(r["doc_id"], r["phrase_tf"]) for r in
-         phrase_topk(spark, idx, store, "the tamok", k=10).collect()]
-    b = [(r["doc_id"], r["phrase_tf"]) for r in
-         phrase_topk(spark, idx, store, "tamok", k=10).collect()]
-    assert a == b and a
+    a = _rows(spark, idx, "the tamok", 10)
+    assert a == _rows(spark, idx, "tamok", 10) and a
+    assert a == store_phrase_topk(spark, store, "the tamok", 10)
     # word with no postings anywhere
-    assert phrase_topk(spark, idx, store, "tamok zz_nope_zz", k=10).count() == 0
+    assert _rows(spark, idx, "tamok zz_nope_zz", 10) == []
     # phrase whose every word vanishes
-    assert phrase_topk(spark, idx, store, "the and for", k=10).count() == 0
-    assert phrase_topk(spark, idx, store, "   ", k=10).count() == 0
+    assert _rows(spark, idx, "the and for", 10) == []
+    assert _rows(spark, idx, "   ", 10) == []

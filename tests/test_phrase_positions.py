@@ -1,6 +1,7 @@
 """Positional phrase search (index/positions.py): row-identity with the
-store-verify path, brute-force oracle, codec round-trip, bucket-pruned
-reads, and incremental-rebuild freshness (r3 VERDICT item 2)."""
+pure-Python oracle (analyze_positions + count_phrase over every doc),
+codec round-trip, bucket-pruned reads, and incremental-rebuild freshness
+(r3 VERDICT item 2)."""
 
 from __future__ import annotations
 
@@ -10,20 +11,19 @@ import pytest
 from searchengine_spark.analyzer import analyze_positions
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import build_index, read_index
-from searchengine_spark.index.phrase import count_phrase, phrase_topk
 from searchengine_spark.index.positions import (
-    build_positions,
     decode_term_positions,
-    has_positions,
     phrase_topk_positions,
     read_positions,
 )
+from searchengine_spark.index.wand import QueryEngine
 from searchengine_spark.schema import DOCS_SCHEMA
 from searchengine_spark.streaming.store import init_store, read_store
+from tests.oracle import store_phrase_topk
 
 PHRASES = [
     "kw_pair_alpha kw_pair_beta",   # planted adjacent vs far-apart markers
-    "tamok velsor",                 # organic adjacency of common terms
+    "tamok velsor",                 # common terms, never adjacent: empty
     "kw_pair_beta kw_pair_alpha",   # reversed order = different phrase
     "veltadrolix",                  # single-position pattern (== term tf)
     "multi норма",                  # multi-lemma token at one position
@@ -40,9 +40,8 @@ def env(spark, tmp_path_factory):
     store = str(root / "store")
     init_store(spark.createDataFrame(rows, DOCS_SCHEMA), store)
     idx = str(root / "idx")
-    docs = read_store(spark, store)
-    build_index(docs, idx, n_segments=3, salt=4, n_buckets=8, resume=False)
-    build_positions(docs, idx)
+    build_index(read_store(spark, store), idx, n_segments=3, salt=4,
+                n_buckets=8, resume=False)
     return store, idx
 
 
@@ -133,57 +132,35 @@ def test_decoded_positions_match_analyzer(spark, env):
             assert got == want, (r["segment"], int(d))
 
 
+def _rows(spark, idx, phrase, k, site=None):
+    return [(r["doc_id"], r["phrase_tf"]) for r in phrase_topk_positions(
+        spark, idx, phrase, k=k, site=site).collect()]
+
+
 @pytest.mark.parametrize("phrase", PHRASES)
 def test_positions_row_identical_to_store_verify(spark, env, phrase):
+    """Every PHRASES case is row-identical to re-analyzing every stored
+    doc (what the deleted store-verify path did for its candidates)."""
     store, idx = env
-    pos = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk(spark, idx, store, phrase, k=100,
-                       impl="positions").collect()]
-    sv = [(r["doc_id"], r["phrase_tf"]) for r in
-          phrase_topk(spark, idx, store, phrase, k=100,
-                      impl="store").collect()]
-    assert pos == sv, phrase
-
-
-def _phrase_reference(spark, store, phrase, k, site=None):
-    """Brute-force top-k (doc_id, phrase_tf) over the store's docs
-    (``site`` keeps one repo's): analyze_positions + count_phrase, no
-    index involved."""
-    qforms = [frozenset(p) for p in analyze_positions(phrase)]
-    want = []
-    for r in read_store(spark, store).select("doc_id", "repo",
-                                             "content").collect():
-        if site is not None and r["repo"] != site:
-            continue
-        tf = count_phrase(analyze_positions(r["content"]), qforms)
-        if tf > 0:
-            want.append((r["doc_id"], tf))
-    want.sort(key=lambda t: (-t[1], t[0]))
-    return want[:k]
+    assert _rows(spark, idx, phrase, 100) == store_phrase_topk(
+        spark, store, phrase, 100), phrase
 
 
 def test_positions_match_brute_force_oracle(spark, env):
     store, idx = env
     phrase = "kw_pair_alpha kw_pair_beta"
-    got = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk_positions(spark, idx, phrase, k=100).collect()]
-    assert got == _phrase_reference(spark, store, phrase, 100)
+    got = _rows(spark, idx, phrase, 100)
+    assert got and got == store_phrase_topk(spark, store, phrase, 100)
 
 
 def test_auto_dispatch_and_store_free_serving(spark, env):
-    """With positions on every segment, impl='auto' serves positionally —
-    store_dir may be None; without the flag it falls back to
-    store-verify."""
+    """Phrases serve from the index alone — no store is read — on the
+    library path and the engine path, both equal to the oracle."""
     store, idx = env
-    assert has_positions(idx)
-    got = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk(spark, idx, None, "tamok velsor", k=10).collect()]
-    want = [(r["doc_id"], r["phrase_tf"]) for r in
-            phrase_topk(spark, idx, store, "tamok velsor", k=10,
-                        impl="store").collect()]
-    assert got == want
-    with pytest.raises(ValueError):
-        phrase_topk(spark, idx, None, "tamok velsor", impl="store")
+    want = store_phrase_topk(spark, store, "sorvel tamok", 10)
+    assert want
+    assert _rows(spark, idx, "sorvel tamok", 10) == want
+    assert QueryEngine(spark, idx).phrase_rows("sorvel tamok", 10) == want
 
 
 def test_positions_read_is_bucket_pruned(spark, env):
@@ -217,8 +194,6 @@ def test_rebuild_refreshes_positions_and_stays_exact(spark, env, tmp_path):
     idx = str(tmp_path / "idx")
     docs = read_store(spark, store)
     build_index(docs, idx, n_segments=3, salt=4, n_buckets=4, resume=False)
-    build_positions(docs, idx)
-    assert has_positions(idx)
 
     # plant a brand-new adjacent pair into doc 5's content via the store
     target = docs.filter("doc_id = 5").collect()[0]
@@ -233,11 +208,7 @@ def test_rebuild_refreshes_positions_and_stays_exact(spark, env, tmp_path):
     docs2 = ingest(spark.createDataFrame(rows2, DOCS_SCHEMA))
     rebuild_segments(docs2, idx, [5 // __import__("json").load(
         open(f"{idx}/meta.json")).get("seg_size", 1)])
-    assert has_positions(idx)  # refreshed, not left disabled
-    got = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk(spark, idx, None, "zzfresh_alpha zzfresh_beta",
-                       k=10).collect()]
-    assert got == [(5, 1)]
+    assert _rows(spark, idx, "zzfresh_alpha zzfresh_beta", 10) == [(5, 1)]
 
 
 def test_phrase_batch_matches_single_path(spark, env):
@@ -256,7 +227,7 @@ def test_phrase_batch_matches_single_path(spark, env):
         want = [(r["doc_id"], r["phrase_tf"]) for r in
                 phrase_topk_positions(spark, idx, ph, k=10).collect()]
         assert got.get(qid, []) == want, (qid, ph)
-        assert want == _phrase_reference(spark, store, ph, 10), (qid, ph)
+        assert want == store_phrase_topk(spark, store, ph, 10), (qid, ph)
 
 
 def test_compact_job_refreshes_positions(spark, tmp_path):
@@ -276,91 +247,34 @@ def test_compact_job_refreshes_positions(spark, tmp_path):
     store = str(tmp_path / "store")
     init_store(spark.createDataFrame(rows, DOCS_SCHEMA), store)
     idx = str(tmp_path / "idx")
-    docs = read_store(spark, store)
-    build_index(docs, idx, n_segments=3, salt=4, n_buckets=4, resume=False)
-    build_positions(docs, idx)
+    build_index(read_store(spark, store), idx, n_segments=3, salt=4,
+                n_buckets=4, resume=False)
 
     # delete a few keys -> holes -> compact re-ranks densely
     victims = [(r[0], r[1]) for r in rows[10:20]]
     delete_keys(spark.createDataFrame(victims, "repo string, path string"),
                 store)
     run_compact(spark, store, idx)
-    assert has_positions(idx)
 
     phrase = "kw_pair_alpha kw_pair_beta"
-    qforms = [frozenset(p) for p in analyze_positions(phrase)]
-    want = []
-    for r in read_store(spark, store).select("doc_id", "content").collect():
-        tf = count_phrase(analyze_positions(r["content"]), qforms)
-        if tf > 0:
-            want.append((r["doc_id"], tf))
-    want.sort(key=lambda t: (-t[1], t[0]))
-    got = [(r["doc_id"], r["phrase_tf"]) for r in
-           phrase_topk(spark, idx, None, phrase, k=100).collect()]
-    assert got == want and got
+    got = _rows(spark, idx, phrase, 100)
+    assert got == store_phrase_topk(spark, store, phrase, 100) and got
 
 
 def test_phrase_site_scope_both_paths(spark, env):
     """site= scopes phrase search to one repo's doc_id intervals on BOTH
-    serving paths, matching a brute-force oracle restricted to that repo;
-    an unknown site yields no rows."""
+    serving paths (library and engine), matching the oracle restricted to
+    that repo; an unknown site yields no rows on either."""
     store, idx = env
-    phrase, site = "tamok velsor", "org0/proj0"
-    qforms = [frozenset(p) for p in analyze_positions(phrase)]
-    want = []
-    for r in (read_store(spark, store)
-              .select("repo", "doc_id", "content").collect()):
-        if r["repo"] != site:
-            continue
-        tf = count_phrase(analyze_positions(r["content"]), qforms)
-        if tf > 0:
-            want.append((r["doc_id"], tf))
-    want.sort(key=lambda t: (-t[1], t[0]))
-    got_pos = [(r["doc_id"], r["phrase_tf"]) for r in
-               phrase_topk(spark, idx, None, phrase, k=100,
-                           site=site).collect()]
-    got_store = [(r["doc_id"], r["phrase_tf"]) for r in
-                 phrase_topk(spark, idx, store, phrase, k=100,
-                             impl="store", site=site).collect()]
-    assert got_pos == want
-    assert got_store == want
-    assert phrase_topk(spark, idx, None, phrase, site="org9/nope").count() == 0
-    assert phrase_topk(spark, idx, store, phrase, impl="store",
-                       site="org9/nope").count() == 0
-
-
-def test_rebuild_never_reenables_incomplete_sidecar(spark, tmp_path):
-    """Review fix: with the meta flag CLEARED, a previous rebuild left
-    segments without positions (a gap) — rebuild_segments must NOT
-    re-enable positions from this call's segments alone, and the
-    positional API must refuse to serve them."""
-    import json as _json
-
-    from searchengine_spark.corpus import ingest
-    from searchengine_spark.index.positions import phrase_topk_batch
-    from searchengine_spark.streaming.incremental import rebuild_segments
-
-    rows = gen_corpus_local(120)
-    docs = ingest(spark.createDataFrame(rows, DOCS_SCHEMA))
-    idx = str(tmp_path / "idx")
-    build_index(docs, idx, n_segments=3, salt=4, n_buckets=4, resume=False)
-    build_positions(docs, idx)
-    # the disabled-with-gaps state: one segment rebuilt without positions
-    # (as a flagless build_index rebuild leaves it) clears the flag
-    rebuild_segments(docs, idx, [1], positions=False)
-    with open(f"{idx}/meta.json") as fh:
-        assert _json.load(fh)["has_positions"] is False
-    assert not has_positions(idx)
-
-    rebuild_segments(docs, idx, [0])
-    assert not has_positions(idx)  # must stay disabled (gap at segment 1)
-    with pytest.raises(ValueError):
-        phrase_topk_positions(spark, idx, "tamok velsor")
-    with pytest.raises(ValueError):
-        phrase_topk_batch(spark, idx, {"q": "tamok velsor"})
-    # full refresh is the recovery path
-    build_positions(docs, idx)
-    assert has_positions(idx)
+    phrase, site = "sorvel tamok", "org1/proj1"
+    want = store_phrase_topk(spark, store, phrase, 100, site)
+    assert want and len(want) < len(store_phrase_topk(spark, store, phrase,
+                                                      100))
+    eng = QueryEngine(spark, idx)
+    assert _rows(spark, idx, phrase, 100, site) == want
+    assert eng.phrase_rows(phrase, 100, site=site) == want
+    assert _rows(spark, idx, phrase, 100, "org9/nope") == []
+    assert eng.phrase_rows(phrase, 100, site="org9/nope") == []
 
 
 def test_phrase_batch_sites_match_single_path(spark, env):
@@ -387,6 +301,6 @@ def test_phrase_batch_sites_match_single_path(spark, env):
                 phrase_topk_positions(spark, idx, ph, k=10,
                                       site=sites.get(qid)).collect()]
         assert got.get(qid, []) == want, (qid, ph, sites.get(qid))
-        assert want == _phrase_reference(spark, store, ph, 10,
+        assert want == store_phrase_topk(spark, store, ph, 10,
                                          sites.get(qid)), (qid, ph)
     assert "d" not in got  # unknown site drops its qid entirely

@@ -9,7 +9,7 @@ import pytest
 
 from searchengine_spark.corpus import gen_corpus_local, ingest
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.positions import build_positions, phrase_topk_positions
+from searchengine_spark.index.positions import phrase_topk_positions
 from searchengine_spark.index.wand import QueryEngine
 from searchengine_spark.schema import DOCS_SCHEMA
 
@@ -31,7 +31,6 @@ def env(spark, tmp_path_factory):
     docs = ingest(spark.createDataFrame(rows, DOCS_SCHEMA))
     idx = str(root / "idx")
     build_index(docs, idx, n_segments=3, salt=4, n_buckets=8, resume=False)
-    build_positions(docs, idx)
     return idx, docs
 
 
@@ -149,31 +148,30 @@ def test_phrase_rows_batch_matches_single_path(spark, env):
 
 
 def test_rebuild_invalidates_warm_phrase_cache(spark, tmp_path):
-    """An incremental rebuild under a live engine must drop warm positional
-    state (fingerprint) and refuse a stale sidecar (has_positions)."""
+    """A rebuild under a live engine must drop its warm positional state
+    (fingerprint): phrase_rows itself sees the rebuild and serves the
+    rebuilt rows, not the phrase it had warmed as absent."""
+    fresh = "zzfresh_alpha zzfresh_beta"
     rows = gen_corpus_local(120)
-    spark_docs = ingest(
-        spark.createDataFrame(rows, DOCS_SCHEMA))
     idx = str(tmp_path / "idx")
-    build_index(spark_docs, idx, n_segments=2, salt=4, n_buckets=4,
-                resume=False)
-    build_positions(spark_docs, idx)
+    build_index(ingest(spark.createDataFrame(rows, DOCS_SCHEMA)), idx,
+                n_segments=2, salt=4, n_buckets=4, resume=False)
     eng = QueryEngine(spark, idx)
-    assert eng.phrase_rows("sorvel tamok", k=5) is not None
+    assert eng.phrase_rows(fresh, k=5) == []
     assert eng._pos_cache
-    # full data rebuild clears has_positions: engine must refuse, not serve
-    build_index(spark_docs, idx, n_segments=2, salt=4, n_buckets=4,
-                resume=False)
-    with pytest.raises(ValueError):
-        eng.phrase_rows("sorvel tamok", k=5)
-    assert not eng._pos_cache  # reload dropped the warm state
-    build_positions(spark_docs, idx)
-    assert eng.phrase_rows("sorvel tamok", k=5) == _distributed(
-        spark, idx, "sorvel tamok", k=5)
+
+    # plant the adjacent pair into one document and rebuild the index
+    planted = [(*r[:4], r[4] + " " + fresh if i == 7 else r[4])
+               for i, r in enumerate(rows)]
+    build_index(ingest(spark.createDataFrame(planted, DOCS_SCHEMA)), idx,
+                n_segments=2, salt=4, n_buckets=4, resume=False)
+    got = eng.phrase_rows(fresh, k=5)
+    assert len(got) == 1 and got[0][1] == 1
+    assert got == _distributed(spark, idx, fresh, k=5)
 
 
 def test_sidecar_stats_in_manifests_and_meta(spark, tmp_path):
-    """build_positions writes per-segment positional stats into the index
+    """The build writes per-segment positional stats into the index
     manifests and the meta ratio/total (the serving estimate's inputs);
     a partial refresh keeps totals complete."""
     import json
@@ -185,7 +183,6 @@ def test_sidecar_stats_in_manifests_and_meta(spark, tmp_path):
     docs = ingest(spark.createDataFrame(rows, DOCS_SCHEMA))
     idx = str(tmp_path / "idx")
     build_index(docs, idx, n_segments=3, salt=4, n_buckets=4, resume=False)
-    build_positions(docs, idx)
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     assert meta["pos_bytes_per_posting"] > 0

@@ -26,7 +26,7 @@ def env(spark, tmp_path_factory):
                store)
     idx = str(root / "idx")
     build_index(read_store(spark, store), idx, n_segments=2, salt=2,
-                n_buckets=4, resume=False, positions=True)
+                n_buckets=4, resume=False)
     return root, store, idx
 
 
@@ -71,9 +71,26 @@ def test_batch_phrase_matches_engine(spark, env, monkeypatch, capsys):
     assert out[1]["hits"]
 
 
+def test_single_phrase_matches_engine(spark, env, monkeypatch, capsys):
+    """``--phrase`` without ``--batch`` serves each query from the index's
+    positions: one line per phrase, the engine's rows."""
+    _, _, idx = env
+    argv = ["--index", idx, "--phrase", "-k", "5"]
+    for ph in PHRASES:
+        argv += ["--query", ph]
+    out = _run(monkeypatch, capsys, argv)
+    eng = QueryEngine(spark, idx)
+    for ph, line in zip(PHRASES, out, strict=True):
+        want = [{"doc_id": d, "phrase_tf": t}
+                for d, t in eng.phrase_rows(ph, 5)]
+        assert line["phrase"] == ph and line["hits"] == want
+    assert out[0]["hits"]
+
+
 @pytest.mark.parametrize("argv,msg", [
     (["-k", "0"], "-k must be >= 1"),
     (["--offset", "-1"], "--offset must be >= 0"),
+    (["--phrase", "--store", "unused"], "it takes no --store"),
 ])
 def test_query_job_validated_before_spark(monkeypatch, capsys, argv, msg):
     import jobs.query as job

@@ -32,8 +32,7 @@ def idx(spark, tmp_path_factory):
 def pidx(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("guard_pos") / "idx")
     docs = ingest(spark.createDataFrame(gen_corpus_local(60), DOCS_SCHEMA))
-    build_index(docs, out, n_segments=2, salt=4, n_buckets=4, resume=False,
-                positions=True)
+    build_index(docs, out, n_segments=2, salt=4, n_buckets=4, resume=False)
     return out
 
 
@@ -286,8 +285,7 @@ def test_engine_cache_entries_match_spark_reads(spark, pidx, tmp_path):
 
     store, idx = str(tmp_path / "store"), str(tmp_path / "idx")
     init_store(spark.createDataFrame(gen_corpus_local(20), DOCS_SCHEMA), store)
-    build_index(read_store(spark, store), idx, n_segments=2, resume=False,
-                positions=True)
+    build_index(read_store(spark, store), idx, n_segments=2, resume=False)
     eng = QueryEngine(spark, idx)
     summary = delete_keys(read_store(spark, store).select("repo", "path"),
                           store, seg_size=eng.meta["seg_size"])
