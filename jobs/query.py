@@ -52,7 +52,7 @@ def main() -> None:
                          "served from the index's positions")
     ap.add_argument("--mode", choices=["auto", "maxscore", "bmw", "exhaustive"],
                     default=None,
-                    help="scoring strategy (default maxscore); phrase paths "
+                    help="scoring strategy (default auto); phrase paths "
                          "reject it — phrases do not score")
     ap.add_argument("--conjunctive", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
@@ -81,7 +81,7 @@ def main() -> None:
     if args.phrase and args.store is not None:
         ap.error("--phrase serves from the index's positions and prints "
                  "(doc_id, phrase_tf) only; it takes no --store")
-    mode = args.mode or "maxscore"
+    mode = args.mode or "auto"
 
     spark = get_spark("query", cores=args.cores)
 

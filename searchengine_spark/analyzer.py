@@ -26,51 +26,42 @@ here (shared verbatim by the pure-Python oracle in ``tests/oracle.py``):
 
 Any change here invalidates all golden fixtures.
 
-Two executions of the SAME pinned definition:
+Two executions of the SAME pinned definition, for every normalizer in
+:data:`NORMALIZERS`:
 
-- ``tokenize_jvm``    pure Catalyst expressions (regexp_replace / split /
-  explode / broadcast-join for the exception table).  Whole-stage codegen,
-  zero Python in the hot path.  The logical index (``operators/tf_df``)
-  and the gate's logical path run on it; the physical build runs the
-  Arrow run kernel ``doc_term_runs_arrow``.
-- ``tokenize_arrow``  ``mapInPandas`` over Arrow batches, vectorized pandas
-  string ops (no per-row Python).  The shape mandated by BASELINE.json
-  ``input_hint``; also the extension point where a real morphology /
-  tree-sitter analyzer would plug in.
+- :func:`analyze_positions` (and its flattening :func:`analyze`): pure
+  Python, one text at a time.  The oracle the tests hold every other
+  result to, and the query-time analyzer.
+- :func:`_analyze_arrow_batch`: pyarrow compute kernels over one Arrow
+  batch of texts (``mapInArrow``, no per-row Python; a stemmer touches
+  each batch's UNIQUE tokens only).  It serves the build's run kernel
+  :func:`doc_term_runs_arrow` (``build_index``, ``rebuild_segments``)
+  and the logical index (``operators/tf_df.term_frequencies``).
 
-``tests/test_analyzer.py`` asserts the two agree row-for-row.
-
-MAINTENANCE: the per-batch tokenize preamble (steps 1-5 + expansion) is
-additionally materialized once as pyarrow kernels (``_analyze_arrow_batch``,
-behind ``doc_term_stats_arrow`` and the build's run kernel
-``doc_term_runs_arrow``).  A change to the pinned shape must land there
-and in the pure-Python oracle :func:`analyze`; the agreement tests
-(test_analyzer.py, test_phrase_positions.py, test_fused_build.py) fail on
-any drift.
+MAINTENANCE: a change to the pinned shape must land in both; the
+agreement tests (test_analyzer.py, test_phrase_positions.py,
+test_fused_build.py) fail on any drift.
 """
 
 from __future__ import annotations
 
 import re
 from collections import Counter
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 # --- pinned definition ------------------------------------------------------
 
 # camelCase boundaries (applied before lowercasing)
-_CAMEL_1 = ("([a-z0-9])([A-Z])", "$1 $2")  # fooBar -> foo Bar
-_CAMEL_2 = ("([A-Z]+)([A-Z][a-z])", "$1 $2")  # HTTPServer -> HTTP Server
+_CAMEL_1 = "([a-z0-9])([A-Z])"  # fooBar -> foo Bar
+_CAMEL_2 = "([A-Z]+)([A-Z][a-z])"  # HTTPServer -> HTTP Server
 
-# The reference's strip class (LemmaFinderImpl.java:21) verbatim.  Java regex
-# (JVM path) can use \p{Punct}; the Python mirror expands it to the ASCII
-# punctuation block explicitly so both engines strip identical characters.
-_STRIP_JAVA = r"[\p{Punct}0-9№©◄«»—…]"
-_STRIP_PY = r"[!-/:-@\[-`{-~0-9№©◄«»—…]"
+# The reference's strip class (LemmaFinderImpl.java:21), [\p{Punct}0-9№©◄«»—…],
+# with \p{Punct} spelled out as the ASCII punctuation block so Python's re
+# and pyarrow's RE2 strip identical characters.
+_STRIP = r"[!-/:-@\[-`{-~0-9№©◄«»—…]"
 
 MIN_TOKEN_LEN = 4  # tokens of length <= 3 are dropped (C5 analog)
 
@@ -101,13 +92,15 @@ NORMAL_FORMS: dict[str, tuple[str, ...]] = {
     "geese": ("goose", "geese"),     # an ASCII multi-lemma case for tests
 }
 
+# The pluggable normalizer slot (the reference fills it with
+# RussianLuceneMorphology, LemmaFinderImpl.java:49-60).  'pinned' is the
+# fixture contract; the others leave the golden fixtures valid.
+# :func:`_normalizer_fns` says what each one does.
+NORMALIZERS = ("pinned", "dict", "stem", "porter", "dict_porter")
+
 # --- optional normalizer: 'stem' (suffix stemmer) ---------------------------
-# A REAL normalizer exercising the pluggable analyzer slot (the slot the
-# reference fills with RussianLuceneMorphology, LemmaFinderImpl.java:49-60)
-# WITHOUT touching the pinned default — golden fixtures stay valid.  With
-# ``normalizer='stem'`` the exception-table stage is replaced by a
-# deterministic porter-lite suffix stripper; the pure-Python, Catalyst and
-# pandas executions below are asserted equal in tests/test_analyzer.py.
+# A deterministic porter-lite suffix stripper in place of the exception-table
+# stage.
 #
 # Rules (first match wins; a rule only fires if the guard holds):
 #   1. -sses -> -ss
@@ -132,49 +125,11 @@ def stem_token(tok: str) -> str:
     return tok
 
 
-def stem_col(tok_col):
-    """Catalyst twin of :func:`stem_token` (whole-stage codegen, first
-    match wins via the when-chain)."""
-    from pyspark.sql import functions as F
-
-    c = tok_col
-    drop = lambda n: c.substr(F.lit(1), F.length(c) - n)  # noqa: E731
-    return (
-        F.when(c.endswith("sses"), F.concat(drop(4), F.lit("ss")))
-        .when(c.endswith("ies"), F.concat(drop(3), F.lit("y")))
-        .when(c.endswith("ing") & (F.length(c) >= 6), drop(3))
-        .when(c.endswith("ed") & (F.length(c) >= 5), drop(2))
-        .when(c.endswith("s") & ~c.endswith("ss") & ~c.endswith("us"), drop(1))
-        .otherwise(c)
-    )
-
-
-def stem_series(s):
-    """Vectorized pandas twin of :func:`stem_token`."""
-    import numpy as np
-
-    ln = s.str.len()
-    conds = [
-        s.str.endswith("sses"),
-        s.str.endswith("ies"),
-        s.str.endswith("ing") & (ln >= 6),
-        s.str.endswith("ed") & (ln >= 5),
-        s.str.endswith("s") & ~s.str.endswith("ss") & ~s.str.endswith("us"),
-    ]
-    outs = [
-        s.str[:-2],
-        s.str[:-3] + "y",
-        s.str[:-3],
-        s.str[:-2],
-        s.str[:-1],
-    ]
-    return s.where(~np.logical_or.reduce(conds), np.select(conds, outs, default=s))
-
 # --- pure-Python core (shared with tests/oracle.py) -------------------------
 
-_camel1_re = re.compile(_CAMEL_1[0])
-_camel2_re = re.compile(_CAMEL_2[0])
-_strip_re = re.compile(_STRIP_PY)
+_camel1_re = re.compile(_CAMEL_1)
+_camel2_re = re.compile(_CAMEL_2)
+_strip_re = re.compile(_STRIP)
 
 
 def analyze(text: str, normalizer: str = "pinned",
@@ -205,45 +160,23 @@ def analyze_positions(text: str, normalizer: str = "pinned",
     the flat stream is [норма, нормаль, tamok].  This function IS the single
     pinned pipeline — :func:`analyze` is exactly its flattening, so the two
     views cannot drift apart (the parity contract has one implementation)."""
+    table, stem_fn = _normalizer_fns(normalizer, forms)
     if not text:
         return []
     s = _camel1_re.sub(r"\1 \2", text)
     s = _camel2_re.sub(r"\1 \2", s)
     s = _strip_re.sub(" ", s.lower())
-    norm = None
-    fallback = None
-    table = NORMAL_FORMS
-    if normalizer == "porter":
-        from .functions.porter import porter_stem
-
-        norm = porter_stem
-    elif normalizer == "stem":
-        norm = stem_token
-    elif normalizer == "dict":
-        if forms is None:
-            raise ValueError("normalizer='dict' needs a forms mapping")
-        table = forms
-    elif normalizer == "dict_porter":
-        # the LAYERED full English normalizer (the reference's own shape:
-        # a dictionary morphology layered over the tokenizer) — the
-        # dictionary answers irregular/ambiguous forms with ALL their
-        # lemmas, and every token it does not know falls through to the
-        # Porter stemmer for the regular -s/-ed/-ing inflections
-        from .functions.porter import porter_stem
-
-        table = dict_porter_table(forms)
-        fallback = porter_stem
     out: list[tuple[str, ...]] = []
     for tok in s.split():
         if len(tok) < MIN_TOKEN_LEN or tok in STOP_WORDS:
             continue
-        if norm is not None:
-            out.append((norm(tok),))
-        elif fallback is not None:
-            hit = table.get(tok)
-            out.append(hit if hit is not None else (fallback(tok),))
+        hit = table.get(tok)
+        if hit is not None:
+            out.append(tuple(hit))
+        elif stem_fn is not None:
+            out.append((stem_fn(tok),))
         else:
-            out.append(tuple(table.get(tok, (tok,))))
+            out.append((tok,))
     return out
 
 
@@ -253,7 +186,7 @@ def collect_lemmas(text: str) -> dict[str, int]:
     return dict(Counter(analyze(text)))
 
 
-def dict_porter_table(forms: dict[str, tuple[str, ...]] | None,
+def dict_porter_table(forms: dict[str, tuple[str, ...]],
                       ) -> dict[str, tuple[str, ...]]:
     """The dictionary as the LAYERED normalizer consumes it: every output
     lemma projected into porter space (stemmed, deduped, sorted).  Under
@@ -265,247 +198,8 @@ def dict_porter_table(forms: dict[str, tuple[str, ...]] | None,
     the caller loaded from JSON."""
     from .functions.porter import porter_stem
 
-    if forms is None:
-        raise ValueError("normalizer='dict_porter' needs a forms mapping")
     return {k: tuple(sorted({porter_stem(f) for f in v}))
             for k, v in forms.items()}
-
-
-def stem_vocab_map(tokens_df: DataFrame, series) -> DataFrame:
-    """(token) DF -> (token, lemma) mapping via ONE vectorized pass over
-    the DISTINCT vocabulary (mapInPandas) — the shared O(vocabulary)
-    normalization-join building block for every stemmer execution path."""
-
-    def _stem_vocab(it):
-        for pdf in it:
-            pdf["lemma"] = series(pdf["token"])
-            yield pdf
-
-    return tokens_df.select("token").distinct().mapInPandas(
-        _stem_vocab, schema="token string, lemma string")
-
-
-def _forms_table(normalizer: str,
-                 forms: dict[str, tuple[str, ...]] | None,
-                 ) -> dict[str, tuple[str, ...]]:
-    """Resolve the normal-forms table for a TABLE-DRIVEN normalizer:
-    'pinned' -> the fixture exception table, 'dict' -> the caller's
-    dictionary.  The stemmer normalizers ('stem'/'porter') are not
-    table-driven and are rejected here — the fused map-side analyzer
-    stages support exactly the table mechanism (the reference's
-    LemmaFinderImpl shape)."""
-    if normalizer == "pinned":
-        return NORMAL_FORMS
-    if normalizer == "dict":
-        if forms is None:
-            raise ValueError("normalizer='dict' needs a forms mapping")
-        return forms
-    raise ValueError(
-        f"table-driven analyzer stage supports normalizer in "
-        f"('pinned', 'dict'), got {normalizer!r}")
-
-
-# --- JVM path (default): pure Catalyst expressions --------------------------
-
-
-def _jvm_token_col(text_col):
-    """Column expr: text -> array<string> of raw tokens (pre normal-forms)."""
-    from pyspark.sql import functions as F
-
-    c = F.regexp_replace(text_col, _CAMEL_1[0], _CAMEL_1[1])
-    c = F.regexp_replace(c, _CAMEL_2[0], _CAMEL_2[1])
-    c = F.regexp_replace(F.lower(c), _STRIP_JAVA, " ")
-    return F.split(F.trim(c), r"\s+")
-
-
-def tokenize_jvm(docs: DataFrame, text_col: str = "content",
-                 id_cols: str | list[str] = "doc_id",
-                 normalizer: str = "pinned",
-                 forms: dict[str, tuple[str, ...]] | None = None) -> DataFrame:
-    """(ids..., text) -> (ids..., lemma) one row per lemma occurrence.
-
-    Entirely whole-stage-codegen: regexp_replace/lower/split/explode, a
-    length/stop filter, and a broadcast left join against the (tiny) pinned
-    exception table for multi-lemma expansion.  At 100 TB this is the path
-    that matters: no Python, no Arrow transfer, content column never
-    shuffled (explode happens map-side before any exchange).
-    """
-    from pyspark.sql import functions as F
-
-    ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
-    spark = docs.sparkSession
-    stop_arr = F.array(*[F.lit(w) for w in sorted(STOP_WORDS)])
-
-    toks = (
-        docs.select(*ids, F.explode(_jvm_token_col(F.col(text_col))).alias("token"))
-        .filter(F.length("token") >= MIN_TOKEN_LEN)
-        .filter(~F.array_contains(stop_arr, F.col("token")))
-    )
-    if normalizer == "stem":
-        return toks.select(*ids, stem_col(F.col("token")).alias("lemma"))
-    if normalizer == "dict_porter":
-        # layered: ONE combined vocabulary mapping — the broadcast
-        # dictionary answers its tokens with ALL forms (projected into
-        # porter space, one lemma space for both layers), and every
-        # DISTINCT token the dictionary does not know is porter-stemmed
-        # once (anti-join against the dict keys, then the shared
-        # O(vocabulary) mapInPandas) and unioned in as a 1-form entry.
-        # The token stream then takes a SINGLE FORCED-BROADCAST join +
-        # explode against that mapping — O(dictionary) broadcast +
-        # O(unknown vocabulary) python, never O(corpus) python, and
-        # (unlike the first cut of this path) no O(corpus tokens)
-        # localCheckpoint of the joined stream: the only re-run of the
-        # tokenizer is the narrow distinct pass, the same cost the plain
-        # 'porter' path accepts.  The broadcast is forced (not left to
-        # AQE) so the token stream NEVER takes an exchange — an unhinted
-        # join materializes the whole (ids, token) stream as shuffle
-        # files before AQE's runtime conversion, an O(corpus tokens)
-        # write this path exists to avoid.  The mapping side is the
-        # bounded dictionary artifact plus the corpus's DISTINCT unknown
-        # vocabulary (MBs–low GBs at any realistic corpus; the same
-        # object the 'porter' path joins); a corpus with a pathological
-        # vocabulary should use the (default) arrow build path.
-        from .functions.porter import porter_series
-
-        exc = spark.createDataFrame(
-            [(k, list(v)) for k, v in dict_porter_table(forms).items()],
-            "token string, forms array<string>")
-        miss_vocab = stem_vocab_map(
-            toks.join(F.broadcast(exc.select("token")), "token", "left_anti"),
-            porter_series)
-        vocab = exc.unionByName(
-            miss_vocab.select("token", F.array("lemma").alias("forms")))
-        return (toks.join(F.broadcast(vocab), "token")
-                .select(*ids, F.explode("forms").alias("lemma")))
-    if normalizer == "porter":
-        # vocabulary normalization: stem each DISTINCT token once (a tiny
-        # mapInPandas over the deduped vocabulary), join the mapping back to
-        # the token stream.  O(vocabulary) normalizer work regardless of
-        # corpus size; the mapping side is small, AQE broadcasts it.
-        from .functions.porter import porter_series
-
-        vocab = stem_vocab_map(toks, porter_series)
-        return toks.join(vocab, "token").select(*ids, "lemma")
-    # dictionary morphology: surface token -> ALL normal forms, every form
-    # counted (LemmaFinderImpl.java:40-44).  The pinned path is this exact
-    # mechanism with the 2-entry fixture table; 'dict' takes an arbitrary
-    # dictionary.  Broadcast left join + explode: the dictionary is a
-    # bounded vocabulary artifact (MBs at any corpus size — the reference
-    # holds its whole morphology in one singleton,
-    # LemmaFinderImpl.java:25-31), so broadcasting is the right call even
-    # where forced broadcasts are otherwise banned.
-    if normalizer == "dict":
-        if forms is None:
-            raise ValueError("normalizer='dict' needs a forms mapping")
-        table = forms
-    else:
-        table = NORMAL_FORMS
-    if table:
-        exc = spark.createDataFrame(
-            [(k, list(v)) for k, v in table.items()], "token string, forms array<string>"
-        )
-        toks = (
-            toks.join(F.broadcast(exc), "token", "left")
-            .select(
-                *ids,
-                F.explode(
-                    F.coalesce(F.col("forms"), F.array(F.col("token")))
-                ).alias("lemma"),
-            )
-        )
-    else:
-        toks = toks.select(*ids, F.col("token").alias("lemma"))
-    return toks
-
-
-# --- Arrow path: mapInPandas, vectorized pandas string ops ------------------
-
-
-def tokenize_arrow(docs: DataFrame, text_col: str = "content",
-                   id_cols: str | list[str] = "doc_id",
-                   normalizer: str = "pinned",
-                   forms: dict[str, tuple[str, ...]] | None = None) -> DataFrame:
-    """Same contract as :func:`tokenize_jvm`, executed as a vectorized
-    pandas/Arrow UDF (``mapInPandas``) — the BASELINE.json ``input_hint``
-    shape, and the hook where a real (non-regex) analyzer would live.
-
-    All operations are pandas-vectorized over each Arrow batch: no per-row
-    Python function calls.
-    """
-    import pandas as pd  # noqa: F401 (runtime import keeps module import light)
-
-    ids = [id_cols] if isinstance(id_cols, str) else list(id_cols)
-    id_fields = ", ".join(
-        f"{c} {docs.schema[c].dataType.simpleString()}" for c in ids
-    )
-    out_schema = f"{id_fields}, lemma string"
-    narrowed = docs.select(*ids, text_col)
-    if normalizer == "dict_porter":
-        table = {k: list(v) for k, v in dict_porter_table(forms).items()}
-    elif normalizer == "dict":
-        if forms is None:
-            raise ValueError("normalizer='dict' needs a forms mapping")
-        table = {k: list(v) for k, v in forms.items()}
-    else:
-        table = {k: list(v) for k, v in NORMAL_FORMS.items()}
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-
-        forms = table  # closure: pinned fixture table or the user dictionary
-        for pdf in it:
-            if pdf.empty:
-                continue
-            s = pdf[text_col].fillna("")
-            s = s.str.replace(_CAMEL_1[0], r"\1 \2", regex=True)
-            s = s.str.replace(_CAMEL_2[0], r"\1 \2", regex=True)
-            s = s.str.lower().str.replace(_STRIP_PY, " ", regex=True)
-            tokens = s.str.split()
-            flat = tokens.explode().dropna()
-            keep = (flat.str.len() >= MIN_TOKEN_LEN) & ~flat.isin(STOP_WORDS)
-            flat = flat[keep]
-            if normalizer in ("stem", "porter"):
-                if normalizer == "porter":
-                    from .functions.porter import porter_series as _norm
-                else:
-                    _norm = stem_series
-                yield (
-                    pdf[ids].reindex(flat.index)
-                    .assign(lemma=_norm(flat).values)
-                    .reset_index(drop=True)
-                )
-                continue
-            base = pdf[ids].reindex(flat.index)
-            base = base.assign(lemma=flat.values)
-            # multi-lemma expansion: exception tokens -> list of forms, explode
-            has_exc = base["lemma"].isin(forms.keys())
-            exc_rows = None
-            if has_exc.any():
-                exc_rows = base[has_exc].copy()
-                exc_rows["lemma"] = exc_rows["lemma"].map(forms)
-                exc_rows = exc_rows.explode("lemma")
-                base = base[~has_exc]
-            if normalizer == "dict_porter" and len(base):
-                # layered fallback: tokens the dictionary does not know go
-                # through the porter stemmer (vectorized over the batch)
-                from .functions.porter import porter_series
-
-                base = base.assign(lemma=porter_series(base["lemma"]).values)
-            if exc_rows is not None:
-                base = pd.concat([base, exc_rows], ignore_index=True)
-            yield base.reset_index(drop=True)
-
-    return narrowed.mapInPandas(_batches, schema=out_schema)
-
-
-def tokenize(docs: DataFrame, text_col: str = "content",
-             id_cols: str | list[str] = "doc_id", impl: str = "jvm") -> DataFrame:
-    """Dispatch: impl in {'jvm', 'arrow'}."""
-    if impl == "jvm":
-        return tokenize_jvm(docs, text_col, id_cols)
-    if impl == "arrow":
-        return tokenize_arrow(docs, text_col, id_cols)
-    raise ValueError(f"unknown analyzer impl: {impl!r}")
 
 
 _STEM_MEMO: dict = {}
@@ -540,15 +234,35 @@ def _stem_arrow(tokens, stem_fn, pa, pc):
     return out.combine_chunks() if isinstance(out, pa.ChunkedArray) else out
 
 
+def check_normalizer(normalizer: str,
+                     forms: dict[str, tuple[str, ...]] | None) -> None:
+    """ValueError for a name outside :data:`NORMALIZERS` and for a
+    dictionary normalizer ('dict', 'dict_porter') without ``forms``."""
+    if normalizer not in NORMALIZERS:
+        raise ValueError(
+            f"normalizer must be one of {NORMALIZERS}, got {normalizer!r}")
+    if normalizer in ("dict", "dict_porter") and forms is None:
+        raise ValueError(f"normalizer={normalizer!r} needs a forms mapping")
+
+
 def _normalizer_fns(normalizer: str,
                     forms: dict[str, tuple[str, ...]] | None):
-    """(exception table, stemmer or None) for the Arrow kernels.  EVERY
-    normalizer runs in them: table-driven ones ('pinned'/'dict') as pure
-    arrow-kernel work; the stemmer family ('porter'/'stem', and
-    'dict_porter' for its dictionary MISSES) adds one dictionary-encode
-    per batch (:func:`_stem_arrow`) — Python touches only the batch's
-    UNIQUE tokens, and the O(corpus tokens) stream never leaves its
-    partition."""
+    """(normal-forms table, stemmer or None) for ``normalizer``, shared by
+    both executions: a token in the table emits ALL its forms, any other
+    token is stemmed (when there is a stemmer) or kept as is.
+
+    - 'pinned': the fixture exception table, no stemmer;
+    - 'dict': the caller's dictionary ``forms``, no stemmer;
+    - 'stem' / 'porter': no table, the suffix / Porter stemmer;
+    - 'dict_porter': the LAYERED full English normalizer (the reference's
+      own shape: a dictionary morphology over the tokenizer).  The
+      dictionary, projected into porter space (:func:`dict_porter_table`),
+      answers irregular/ambiguous forms with ALL their lemmas; every token
+      it does not know falls through to Porter for the regular
+      -s/-ed/-ing inflections.
+
+    Raises as :func:`check_normalizer` does."""
+    check_normalizer(normalizer, forms)
     if normalizer in ("porter", "dict_porter"):
         from .functions.porter import porter_stem
 
@@ -556,7 +270,7 @@ def _normalizer_fns(normalizer: str,
         return table, porter_stem
     if normalizer == "stem":
         return {}, stem_token
-    return _forms_table(normalizer, forms), None
+    return (forms if normalizer == "dict" else NORMAL_FORMS), None
 
 
 def _analyze_arrow_batch(content, table, stem_fn, stop_set, exc_set, pa, pc):
@@ -570,10 +284,10 @@ def _analyze_arrow_batch(content, table, stem_fn, stop_set, exc_set, pa, pc):
     import numpy as np
 
     x = pc.fill_null(content, "")
-    x = pc.replace_substring_regex(x, pattern=_CAMEL_1[0], replacement=r"\1 \2")
-    x = pc.replace_substring_regex(x, pattern=_CAMEL_2[0], replacement=r"\1 \2")
+    x = pc.replace_substring_regex(x, pattern=_CAMEL_1, replacement=r"\1 \2")
+    x = pc.replace_substring_regex(x, pattern=_CAMEL_2, replacement=r"\1 \2")
     x = pc.utf8_lower(x)
-    x = pc.replace_substring_regex(x, pattern=_STRIP_PY, replacement=" ")
+    x = pc.replace_substring_regex(x, pattern=_STRIP, replacement=" ")
     lists = pc.split_pattern_regex(x, pattern=r"\s+")
     toks = pc.list_flatten(lists)
     par = pc.list_parent_indices(lists)
@@ -619,63 +333,6 @@ def _analyze_arrow_batch(content, table, stem_fn, stop_set, exc_set, pa, pc):
     elif stem_fn is not None:
         toks = _stem_arrow(toks, stem_fn, pa, pc)
     return par, pc.cast(toks, pa.string()), pos
-
-
-def doc_term_stats_arrow(docs: DataFrame, text_col: str = "content",
-                         normalizer: str = "pinned",
-                         forms: dict[str, tuple[str, ...]] | None = None,
-                         ) -> DataFrame:
-    """(repo, doc_id, text) -> FLAT (repo, doc_id, lemma, tf, dl) with
-    ZERO shuffle: a document's tokens all live in its own input row, so
-    per-doc term frequencies and the doc length are computable entirely
-    map-side inside one Arrow batch.  The index build consumes the same
-    analysis as sorted runs (:func:`doc_term_runs_arrow`); this flat view
-    is the equivalence-test contract.
-
-    Executed via ``mapInArrow`` + pyarrow compute kernels (C++ hash
-    aggregation), measured ~2.4x a pandas-object execution per core.
-    """
-    schema = "repo string, doc_id long, lemma string, tf int, dl long"
-    narrowed = docs.select("repo", "doc_id", text_col)
-    table, stem_fn = _normalizer_fns(normalizer, forms)
-
-    def _batches(it):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        stop_set = pa.array(sorted(STOP_WORDS))
-        exc_set = pa.array(list(table), type=pa.string())
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            got = _analyze_arrow_batch(batch.column(2), table, stem_fn,
-                                       stop_set, exc_set, pa, pc)
-            if got is None:
-                continue
-            par, toks, _ = got
-            tf_t = (
-                pa.table({"i": par, "lemma": toks})
-                .group_by(["i", "lemma"], use_threads=False)
-                .aggregate([([], "count_all")])
-            )
-            dl_t = (
-                tf_t.group_by(["i"], use_threads=False)
-                .aggregate([("count_all", "sum")])
-            )
-            out = tf_t.join(dl_t, keys="i", use_threads=False)
-            i = out["i"].combine_chunks()
-            yield pa.record_batch(
-                [
-                    pc.cast(pc.take(batch.column(0), i), pa.string()),
-                    pc.cast(pc.take(batch.column(1), i), pa.int64()),
-                    pc.cast(out["lemma"].combine_chunks(), pa.string()),
-                    pc.cast(out["count_all"].combine_chunks(), pa.int32()),
-                    pc.cast(out["count_all_sum"].combine_chunks(), pa.int64()),
-                ],
-                names=["repo", "doc_id", "lemma", "tf", "dl"],
-            )
-
-    return narrowed.mapInArrow(_batches, schema=schema)
 
 
 def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,

@@ -9,17 +9,10 @@ with a real, complete English normalizer — the classic five-step Porter
 algorithm, implemented from the published description (public knowledge;
 no code derived from the reference).
 
-Three executions, agreement-tested in tests/test_analyzer.py:
-
-- :func:`porter_stem`    pure-Python, token -> stem (the spec).
-- :func:`porter_series`  pandas twin for the Arrow analyzer path —
-  vectorized VOCABULARY normalization: ``factorize`` + one call per
-  DISTINCT token (Zipf token streams make distinct << occurrences).
-- the JVM tokenizer path (``tokenize_jvm(normalizer='porter')``) stems the
-  distinct-token vocabulary once in a tiny ``mapInPandas`` and joins it
-  back to the token stream — at 100 TB the expensive normalizer runs
-  O(vocabulary), never O(corpus), and the join side is small enough for
-  AQE to broadcast.
+:func:`porter_stem` is the spec, token -> stem.  Both analyzer executions
+call it (``analyzer._normalizer_fns``): the pure-Python one per token, the
+Arrow kernel once per UNIQUE token of a batch.  tests/test_analyzer.py
+holds the kernel's output to the pure-Python one.
 """
 
 from __future__ import annotations
@@ -178,17 +171,3 @@ def porter_stem(tok: str) -> str:
         w = w[:-1]
     return w
 
-
-def porter_series(s):
-    """Vectorized pandas twin: stem each DISTINCT token once, broadcast the
-    mapping back through the factorize codes."""
-    import numpy as np
-    import pandas as pd
-
-    codes, uniques = pd.factorize(s)
-    stems = np.array([porter_stem(u) for u in uniques], dtype=object)
-    out = np.empty(len(codes), dtype=object)
-    valid = codes >= 0
-    out[valid] = stems[codes[valid]]
-    out[~valid] = None
-    return pd.Series(out, index=s.index)

@@ -485,8 +485,8 @@ ORDER BY qid, phrase_tf DESC, doc_id
 # dictionary morphology (C4 at dictionary scale): surface token -> ALL
 # normal forms, EVERY form counted (LemmaFinderImpl.java:40-44).  The gate
 # twin uses a pinned 3-entry probe dictionary over the documents tokens;
-# the engine side is the same broadcast-join + explode the analyzer's
-# normalizer='dict' slot compiles to.
+# the engine side is a broadcast-join + explode, the Catalyst form of the
+# analyzer's normalizer='dict' table lookup.
 GATE_DICT_FORMS: dict[str, tuple[str, ...]] = {
     "spark": ("spark", "sparkle"),
     "table": ("table", "tabling"),

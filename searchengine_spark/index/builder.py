@@ -303,6 +303,7 @@ def build_index(
     with the next benchmark change)."""
     import shutil
 
+    from ..analyzer import check_normalizer
     from .checkpoint import (all_manifests, read_manifest, write_json_atomic,
                              write_manifest)
 
@@ -336,12 +337,7 @@ def build_index(
         normalizer = old_meta.get("normalizer", "pinned")
         if normalizer in ("dict", "dict_porter"):
             _, forms = index_analyzer(spark, out_dir, old_meta)
-    if normalizer not in ("pinned", "dict", "dict_porter", "porter", "stem"):
-        raise ValueError(
-            "build_index supports normalizer in ('pinned', 'dict', "
-            f"'dict_porter', 'porter', 'stem'), got {normalizer!r}")
-    if normalizer in ("dict", "dict_porter") and forms is None:
-        raise ValueError(f"normalizer={normalizer!r} needs a forms mapping")
+    check_normalizer(normalizer, forms)
     if normalizer in ("dict", "dict_porter") and old_meta is None:
         # validate user dictionaries ONCE, before the expensive build: a
         # duplicate form in a value tuple would crash the positional

@@ -9,10 +9,10 @@ Reference semantics (SURVEY.md §2.4):
   (IndexingServiceImpl.java:162-189) — i.e. ``count(*)`` over distinct
   (doc, lemma) pairs per repo.
 
-Spark shape: ``explode(tokens)`` -> one hash-aggregate per level.  Partial
-(map-side) aggregation makes the Zipf-skewed lemma key distribution a
-non-issue for these counts: each map task pre-combines, so the shuffle
-carries at most (#partitions x #distinct keys) rows, not raw postings.
+Spark shape: A1 needs no shuffle — a document's tokens all sit in its own
+row, so its term frequencies are counted inside the Arrow batch that
+analyzes it (the build's analysis kernel).  A2 and doc lengths are one
+hash-aggregate each over the tf rows, with map-side partial aggregation.
 """
 
 from __future__ import annotations
@@ -26,25 +26,54 @@ if TYPE_CHECKING:
 
 
 def term_frequencies(docs: DataFrame, text_col: str = "content",
-                     impl: str = "jvm", normalizer: str = "pinned",
+                     normalizer: str = "pinned",
                      forms: dict[str, tuple[str, ...]] | None = None,
                      ) -> DataFrame:
     """docs(repo, doc_id, content) -> tf(repo, doc_id, lemma, tf).
 
     ≙ reference ``index_table`` rows (model/IndexTable.java:7-30).
-    One shuffle on (repo, doc_id, lemma) with map-side combine.
+    One ``mapInArrow`` over the build's analysis kernel
+    (``analyzer._analyze_arrow_batch``), counting each batch's
+    (doc, lemma) pairs with a pyarrow hash aggregation: no shuffle.  An
+    unknown ``normalizer`` raises before any Spark job.
     """
-    from ..analyzer import tokenize_arrow, tokenize_jvm
+    from ..analyzer import STOP_WORDS, _analyze_arrow_batch, _normalizer_fns
 
-    if impl not in ("jvm", "arrow"):
-        raise ValueError(f"unknown analyzer impl: {impl!r}")
-    fn = tokenize_jvm if impl == "jvm" else tokenize_arrow
-    toks = fn(docs, text_col=text_col, id_cols=["repo", "doc_id"],
-              normalizer=normalizer, forms=forms)
-    return (
-        toks.groupBy("repo", "doc_id", "lemma")
-        .agg(F.count("*").cast("int").alias("tf"))
-    )
+    table, stem_fn = _normalizer_fns(normalizer, forms)
+    narrowed = docs.select("repo", "doc_id", text_col)
+
+    def _batches(it):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        stop_set = pa.array(sorted(STOP_WORDS))
+        exc_set = pa.array(list(table), type=pa.string())
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            got = _analyze_arrow_batch(batch.column(2), table, stem_fn,
+                                       stop_set, exc_set, pa, pc)
+            if got is None:
+                continue
+            par, lemmas, _ = got
+            tf = (
+                pa.table({"i": par, "lemma": lemmas})
+                .group_by(["i", "lemma"], use_threads=False)
+                .aggregate([([], "count_all")])
+            )
+            i = tf["i"].combine_chunks()
+            yield pa.record_batch(
+                [
+                    pc.cast(pc.take(batch.column(0), i), pa.string()),
+                    pc.cast(pc.take(batch.column(1), i), pa.int64()),
+                    pc.cast(tf["lemma"].combine_chunks(), pa.string()),
+                    pc.cast(tf["count_all"].combine_chunks(), pa.int32()),
+                ],
+                names=["repo", "doc_id", "lemma", "tf"],
+            )
+
+    return narrowed.mapInArrow(
+        _batches, schema="repo string, doc_id long, lemma string, tf int")
 
 
 def doc_frequencies(tf: DataFrame) -> DataFrame:
@@ -68,10 +97,8 @@ def doc_lengths(tf: DataFrame) -> DataFrame:
     return tf.groupBy("repo", "doc_id").agg(F.sum("tf").alias("dl"))
 
 
-def build_logical_index(docs_ingested: DataFrame, impl: str = "jvm",
+def build_logical_index(docs_ingested: DataFrame,
                         text_col: str = "content") -> tuple[DataFrame, DataFrame]:
     """Ingested docs -> (tf, lemmas).  The §7-step-2 logical index."""
-    tf = term_frequencies(
-        docs_ingested.select("repo", "doc_id", text_col), text_col=text_col, impl=impl
-    )
+    tf = term_frequencies(docs_ingested, text_col=text_col)
     return tf, doc_frequencies(tf)

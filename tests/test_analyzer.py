@@ -1,16 +1,36 @@
-"""Analyzer unit tests + three-way implementation agreement (SURVEY.md §5.2)."""
+"""Analyzer unit tests + agreement of its two executions (SURVEY.md §5.2):
+the Arrow kernel, run through the logical index's ``term_frequencies``,
+against the pure-Python oracle ``analyze``."""
 
 from __future__ import annotations
 
 from collections import Counter
 
+import pytest
+
 from searchengine_spark.analyzer import (
     MIN_TOKEN_LEN,
     analyze,
     collect_lemmas,
-    tokenize_arrow,
-    tokenize_jvm,
 )
+from searchengine_spark.operators.tf_df import doc_lengths, term_frequencies
+
+
+def _tf_agrees(spark, sample, normalizer="pinned", forms=None):
+    """``term_frequencies`` over ``sample`` (DOCS_SCHEMA rows, doc_id = the
+    row's index) must equal the oracle's per-doc lemma counts exactly;
+    returns the oracle's {(repo, doc_id, lemma): tf}."""
+    rows = [(r[0], i, r[4]) for i, r in enumerate(sample)]
+    df = spark.createDataFrame(rows,
+                               "repo string, doc_id long, content string")
+    got = {(r["repo"], r["doc_id"], r["lemma"]): r["tf"]
+           for r in term_frequencies(df, normalizer=normalizer,
+                                     forms=forms).collect()}
+    want = {(repo, i, lemma): n for repo, i, content in rows
+            for lemma, n in Counter(
+                analyze(content, normalizer, forms)).items()}
+    assert got == want, normalizer
+    return want
 
 
 def test_lowercase_and_strip():
@@ -50,28 +70,9 @@ def test_collect_lemmas_counts():
     assert got == {"value": 3, "table": 1, "scan": 1}
 
 
-def test_jvm_arrow_python_agree(spark, corpus_rows):
-    """The three executions of the pinned analyzer must agree exactly."""
-    from searchengine_spark.schema import DOCS_SCHEMA
-
-    sample = corpus_rows[:60]
-    df = spark.createDataFrame(sample, DOCS_SCHEMA).selectExpr(
-        "path as doc_key", "content"
-    )
-    jvm = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_jvm(df, id_cols="doc_key").collect()
-    )
-    arrow = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_arrow(df, id_cols="doc_key").collect()
-    )
-    pure = Counter()
-    for repo, path, commit, lang, content in sample:
-        for lemma in analyze(content):
-            pure[(path, lemma)] += 1
-    assert jvm == pure
-    assert arrow == pure
+def test_term_frequencies_match_oracle(spark, corpus_rows):
+    """The Arrow kernel and the pure-Python oracle must agree exactly."""
+    _tf_agrees(spark, corpus_rows[:60])
 
 
 def test_min_len_boundary():
@@ -97,34 +98,15 @@ def test_stemmer_rules():
 
 def test_stem_analyzer_three_way_agree(spark, corpus_rows):
     """The pluggable-normalizer slot, exercised with a REAL stemmer: the
-    pure-Python, Catalyst, and Arrow executions must agree exactly under
+    Arrow kernel and the pure-Python oracle must agree exactly under
     normalizer='stem' (its own fixture set — the pinned golden fixtures are
     untouched)."""
-    from searchengine_spark.analyzer import stem_token
-    from searchengine_spark.schema import DOCS_SCHEMA
-
     sample = corpus_rows[:60] + [
         ("r", "p1", "c", "py", "parsing parsed queries addresses tables Sing"),
         ("r", "p2", "c", "py", "classes class status buses using used"),
     ]
-    df = spark.createDataFrame(sample, DOCS_SCHEMA).selectExpr(
-        "path as doc_key", "content"
-    )
-    jvm = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_jvm(df, id_cols="doc_key", normalizer="stem").collect()
-    )
-    arrow = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_arrow(df, id_cols="doc_key", normalizer="stem").collect()
-    )
-    pure = Counter()
-    for repo, path, commit, lang, content in sample:
-        for lemma in analyze(content, normalizer="stem"):
-            pure[(path, lemma)] += 1
-    assert jvm == pure
-    assert arrow == pure
-    assert any(k[1] == "pars" for k in pure)  # the stemmer actually fired
+    want = _tf_agrees(spark, sample, "stem")
+    assert any(k[2] == "pars" for k in want)  # the stemmer actually fired
 
 
 def test_porter_canonical_vectors():
@@ -181,42 +163,42 @@ def test_porter_canonical_vectors():
 
 
 def test_porter_analyzer_three_way_agree(spark, corpus_rows):
-    """normalizer='porter': the pure-Python, JVM (vocabulary-join), and
-    Arrow executions must agree exactly — same structure as the 'stem'
-    slot test; the pinned golden fixtures are untouched."""
-    from searchengine_spark.schema import DOCS_SCHEMA
-
+    """normalizer='porter': the Arrow kernel and the pure-Python oracle
+    must agree exactly — same structure as the 'stem' slot test; the
+    pinned golden fixtures are untouched."""
     sample = corpus_rows[:60] + [
         ("r", "p1", "c", "py", "relational conditioners digitizer hopping"),
         ("r", "p2", "c", "py", "effective replacement adoption agreed ties"),
     ]
-    df = spark.createDataFrame(sample, DOCS_SCHEMA).selectExpr(
-        "path as doc_key", "content"
-    )
-    jvm = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_jvm(df, id_cols="doc_key", normalizer="porter").collect()
-    )
-    arrow = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_arrow(df, id_cols="doc_key", normalizer="porter").collect()
-    )
-    pure = Counter()
-    for repo, path, commit, lang, content in sample:
-        for lemma in analyze(content, normalizer="porter"):
-            pure[(path, lemma)] += 1
-    assert jvm == pure
-    assert arrow == pure
-    assert any(k[1] == "relat" for k in pure)  # porter actually fired
+    want = _tf_agrees(spark, sample, "porter")
+    assert any(k[2] == "relat" for k in want)  # porter actually fired
 
 
-def test_doc_term_stats_arrow_equals_oracle(spark, corpus_rows):
-    """The mapInArrow (pyarrow compute) fused tf/dl stage must equal the
-    pure-Python analyze() oracle exactly — including multi-lemma expansion
-    and zero-lemma docs (which emit no rows)."""
-    from collections import Counter
+def _tf_dl(df, normalizer="pinned", forms=None):
+    """(tf by (repo, doc_id, lemma), dl by (repo, doc_id)) of ``df``
+    through the logical index."""
+    tf = term_frequencies(df, normalizer=normalizer, forms=forms)
+    return ({(r["repo"], r["doc_id"], r["lemma"]): r["tf"]
+             for r in tf.collect()},
+            {(r["repo"], r["doc_id"]): r["dl"]
+             for r in doc_lengths(tf).collect()})
 
-    from searchengine_spark.analyzer import analyze, doc_term_stats_arrow
+
+def _oracle_tf_dl(df, normalizer="pinned", forms=None):
+    tf, dl = {}, {}
+    for r in df.collect():
+        c = Counter(analyze(r["content"], normalizer, forms))
+        for lemma, n in c.items():
+            tf[(r["repo"], r["doc_id"], lemma)] = n
+        if c:
+            dl[(r["repo"], r["doc_id"])] = sum(c.values())
+    return tf, dl
+
+
+def test_kernel_tf_and_dl_equal_oracle(spark, corpus_rows):
+    """tf (the kernel) and dl (Σ tf per doc) must equal the pure-Python
+    analyze() oracle exactly — including multi-lemma expansion and
+    zero-lemma docs (which emit no rows)."""
     from searchengine_spark.schema import DOCS_SCHEMA
 
     extra = [("r/x", f"x{i}.py", "c", "py", t) for i, t in enumerate(
@@ -225,29 +207,20 @@ def test_doc_term_stats_arrow_equals_oracle(spark, corpus_rows):
                                DOCS_SCHEMA).selectExpr(
         "repo", "abs(hash(path)) as doc_id", "content"
     )
-    a = {(r["repo"], r["doc_id"], r["lemma"]): (r["tf"], r["dl"])
-         for r in doc_term_stats_arrow(df).collect()}
-    want = {}
-    for r in df.collect():
-        stream = analyze(r["content"])
-        for lemma, tf in Counter(stream).items():
-            want[(r["repo"], r["doc_id"], lemma)] = (tf, len(stream))
-    assert a == want and len(a) > 1000
-    lemmas = {lm for _, _, lm in a}
+    tf, dl = _tf_dl(df)
+    assert (tf, dl) == _oracle_tf_dl(df) and len(tf) > 1000
+    lemmas = {lm for _, _, lm in tf}
     assert {"нормаль", "goose"} <= lemmas  # multi-lemma expansion fired
-    docs = {d for _, d, _ in a}
+    docs = {d for _, d, _ in tf}
     zero = [r["doc_id"] for r in df.collect() if not analyze(r["content"])]
     assert len(zero) >= 3 and not docs & set(zero)
 
 
-def test_doc_term_stats_arrow_stemmer_normalizers(spark, corpus_rows):
-    """r5: the fused zero-shuffle stage now runs the STEMMER family too
-    (dictionary-encode per batch — Python only on unique tokens).  Its
-    (tf, dl) output must equal the pure-Python analyze() oracle under
-    'porter', 'stem' and the layered 'dict_porter'."""
-    from collections import Counter
-
-    from searchengine_spark.analyzer import analyze, doc_term_stats_arrow
+def test_kernel_tf_and_dl_stemmer_normalizers(spark, corpus_rows):
+    """The kernel runs the STEMMER family too (dictionary-encode per
+    batch — Python only on unique tokens).  Its tf and dl must equal the
+    pure-Python analyze() oracle under 'porter', 'stem' and the layered
+    'dict_porter'."""
     from searchengine_spark.functions.english import ENGLISH_FORMS
     from searchengine_spark.schema import DOCS_SCHEMA
 
@@ -259,25 +232,10 @@ def test_doc_term_stats_arrow_stemmer_normalizers(spark, corpus_rows):
     ]
     df = spark.createDataFrame(sample, DOCS_SCHEMA).selectExpr(
         "repo", "abs(hash(path)) as doc_id", "content")
-    id_content = [(r["doc_id"], r["content"]) for r in df.collect()]
     for norm, forms in (("porter", None), ("stem", None),
                         ("dict_porter", ENGLISH_FORMS)):
-        got_tf: dict = {}
-        got_dl: dict = {}
-        for r in doc_term_stats_arrow(df, normalizer=norm,
-                                      forms=forms).collect():
-            got_tf[(r["doc_id"], r["lemma"])] = r["tf"]
-            got_dl.setdefault(r["doc_id"], r["dl"])
-        want_tf: dict = {}
-        want_dl: dict = {}
-        for did, content in id_content:
-            c = Counter(analyze(content, norm, forms))
-            for lemma, n in c.items():
-                want_tf[(did, lemma)] = n
-            if c:
-                want_dl[did] = sum(c.values())
-        assert got_tf == want_tf, norm
-        assert got_dl == want_dl, norm
+        assert _tf_dl(df, norm, forms) == _oracle_tf_dl(
+            df, norm, forms), norm
 
 
 def _inflection_dict(rows) -> dict[str, tuple[str, ...]]:
@@ -305,34 +263,14 @@ def _inflection_dict(rows) -> dict[str, tuple[str, ...]]:
 
 def test_dict_normalizer_three_way_agree(spark, corpus_rows):
     """normalizer='dict' (dictionary-grade morphology in the pluggable
-    slot): the pure-Python, Catalyst (broadcast-join + explode) and Arrow
-    executions must agree exactly under a ~200-entry multi-form dictionary;
-    the pinned golden fixtures are untouched (separate normalizer value)."""
-    from searchengine_spark.schema import DOCS_SCHEMA
-
+    slot): the Arrow kernel and the pure-Python oracle must agree exactly
+    under a ~200-entry multi-form dictionary; the pinned golden fixtures
+    are untouched (separate normalizer value)."""
     sample = corpus_rows[:60]
     table = _inflection_dict(sample)
     assert sum(1 for v in table.values() if len(v) > 1) > 30  # real ambiguity
-    df = spark.createDataFrame(sample, DOCS_SCHEMA).selectExpr(
-        "path as doc_key", "content"
-    )
-    jvm = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_jvm(df, id_cols="doc_key", normalizer="dict",
-                              forms=table).collect()
-    )
-    arrow = Counter(
-        (r["doc_key"], r["lemma"])
-        for r in tokenize_arrow(df, id_cols="doc_key", normalizer="dict",
-                                forms=table).collect()
-    )
-    pure = Counter()
-    for repo, path, commit, lang, content in sample:
-        for lemma in analyze(content, normalizer="dict", forms=table):
-            pure[(path, lemma)] += 1
-    assert jvm == pure
-    assert arrow == pure
-    assert any(k[1].endswith("_verb") for k in pure)  # expansion fired
+    want = _tf_agrees(spark, sample, "dict", table)
+    assert any(k[2].endswith("_verb") for k in want)  # expansion fired
 
 
 def test_dict_normalizer_counts_every_form():
@@ -353,7 +291,33 @@ def test_dict_normalizer_counts_every_form():
 
 
 def test_dict_normalizer_requires_forms():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         analyze("whatever", normalizer="dict")
+
+
+def test_unknown_normalizer_raises_everywhere(spark, tmp_path):
+    """A misspelled normalizer is an error on the query side, in the
+    logical index (before any Spark job) and in the build — never a silent
+    'pinned'."""
+    from searchengine_spark.index.builder import build_index
+
+    msg = "normalizer must be one of"
+    with pytest.raises(ValueError, match=msg):
+        analyze("parsing tables", normalizer="Porter")
+    with pytest.raises(ValueError, match=msg):
+        analyze("", normalizer="Porter")
+    docs = spark.createDataFrame(
+        [("r", 0, "parsing tables", "00")],
+        "repo string, doc_id long, content string, sha256 string")
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown_normalizer", "unknown_normalizer")
+    try:
+        with pytest.raises(ValueError, match=msg):
+            term_frequencies(docs, normalizer="Porter")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup("unknown_normalizer")
+    with pytest.raises(ValueError, match=msg):
+        build_index(docs, str(tmp_path / "idx"), resume=False,
+                    normalizer="Porter")

@@ -19,7 +19,7 @@ import json
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from searchengine_spark.analyzer import doc_term_stats_arrow
+from searchengine_spark.analyzer import analyze
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import (
     INDEX_OUT_SCHEMA,
@@ -132,10 +132,12 @@ def _check(spark, docs, idx):
     return meta
 
 
-def _avgdl(tf_rows, n_docs):
-    """Σ tf over every (doc, lemma) row / n_docs: the old runs aggregation."""
-    total = tf_rows.agg(F.sum("tf")).collect()[0][0] if n_docs else 0
-    return float(total or 0) / n_docs if n_docs else 1.0
+def _avgdl(docs, n_docs):
+    """Σ dl / n_docs, each doc's dl its lemma-stream length under the
+    pure-Python analyzer."""
+    total = sum(len(analyze(r["content"]))
+                for r in docs.select("content").collect())
+    return float(total) / n_docs if n_docs else 1.0
 
 
 def test_stats_match_the_queries_they_replace(spark, tmp_path):
@@ -148,7 +150,7 @@ def test_stats_match_the_queries_they_replace(spark, tmp_path):
                        n_buckets=8, resume=False)
     assert meta["timings"]["scan_s"] >= 0
     meta = _check(spark, docs, idx)
-    assert meta["avgdl"] == _avgdl(doc_term_stats_arrow(docs), N_DOCS)
+    assert meta["avgdl"] == _avgdl(docs, N_DOCS)
     _, _, _, sites = _oracle(spark, docs, idx)
     islands = {}
     for s, repo, _, _ in sites:
@@ -176,8 +178,7 @@ def test_stats_match_the_queries_they_replace(spark, tmp_path):
     meta = build_index(docs, fresh, n_segments=N_SEGMENTS, salt=4,
                        n_buckets=8, resume=False)
     meta = _check(spark, docs, fresh)
-    assert meta["avgdl"] == _avgdl(doc_term_stats_arrow(docs),
-                                   N_DOCS - len(holes))
+    assert meta["avgdl"] == _avgdl(docs, N_DOCS - len(holes))
 
     # emptied corpus
     docs = docs.limit(0)

@@ -209,16 +209,13 @@ def test_porter_index_end_to_end(spark, tmp_path):
 
 
 def test_dict_porter_three_executions_agree(spark):
-    """The layered normalizer's three executions (pure Python, JVM
-    broadcast-join + porter vocabulary join, pandas/Arrow) produce the
-    same lemma multiset per doc."""
+    """The layered normalizer's two executions (pure Python, and the
+    Arrow kernel through the logical index's ``term_frequencies``)
+    produce the same lemma multiset per doc."""
     from collections import Counter
 
-    from searchengine_spark.analyzer import (
-        analyze,
-        tokenize_arrow,
-        tokenize_jvm,
-    )
+    from searchengine_spark.analyzer import analyze
+    from searchengine_spark.operators.tf_df import term_frequencies
 
     texts = [
         "yesterday the team went home and wrote connection tests",
@@ -227,16 +224,16 @@ def test_dict_porter_three_executions_agree(spark):
         "turn left at the second junction then walking straight",
     ]
     df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, content string")
+        [("r", i, t) for i, t in enumerate(texts)],
+        "repo string, doc_id long, content string")
     want = {i: Counter(analyze(t, "dict_porter", ENGLISH_FORMS))
             for i, t in enumerate(texts)}
 
-    for fn in (tokenize_jvm, tokenize_arrow):
-        got: dict[int, Counter] = {}
-        rows = fn(df, normalizer="dict_porter", forms=ENGLISH_FORMS).collect()
-        for r in rows:
-            got.setdefault(r["doc_id"], Counter())[r["lemma"]] += 1
-        assert got == want, fn.__name__
+    got: dict[int, Counter] = {}
+    for r in term_frequencies(df, normalizer="dict_porter",
+                              forms=ENGLISH_FORMS).collect():
+        got.setdefault(r["doc_id"], Counter())[r["lemma"]] = r["tf"]
+    assert got == want
     # the layering itself: dictionary wins on its tokens (its outputs
     # PROJECTED into porter space — one lemma space for both layers, so
     # leaves -> leaf+leav can meet a raw 'leave' which porters to 'leav'),
@@ -345,14 +342,12 @@ def _lexeme(i: int) -> str:
 def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
                                           capsys):
     """r4 VERDICT item 2: the dictionary mechanism at full-dictionary SIZE
-    (20k entries) through the --forms-json job surface — the broadcast
-    join stays broadcast, build overhead stays bounded, dict_sha pins
-    across resume AND compaction, and cross-inflection search + phrase
-    stay green."""
+    (20k entries) through the --forms-json job surface — build overhead
+    stays bounded, dict_sha pins across resume AND compaction, and
+    cross-inflection search + phrase stay green."""
     import time as _time
 
     import jobs.build_index as build_job
-    from searchengine_spark.analyzer import tokenize_jvm
     from searchengine_spark.index.wand import bm25_topk as _topk
 
     big = _big_forms()
@@ -370,22 +365,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
     inp = str(tmp_path / "input")
     raw.write.parquet(inp)
 
-    # (a) at 20k entries the layered JVM path still BROADCASTS, statically:
-    # both the dict anti-join and the combined vocabulary join are forced
-    # broadcasts, so the (ids, token) stream never takes an exchange —
-    # no sort-merge join, no token-stream hashpartitioning anywhere
-    lem = tokenize_jvm(raw.selectExpr("monotonically_increasing_id() as "
-                                      "doc_id", "content"),
-                       text_col="content", normalizer="dict_porter",
-                       forms=big)
-    plan = lem._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    stream_exchanges = [ln for ln in plan.splitlines()
-                        if "Exchange hashpartitioning" in ln
-                        and "doc_id" in ln]
-    assert not stream_exchanges  # only the vocab distinct may shuffle
-
-    # (b) build through the job surface (--forms-json + --store so the
+    # (a) build through the job surface (--forms-json + --store so the
     # compaction step below has consistent ids), timing it against a
     # pinned-normalizer build of the same corpus
     idx = str(tmp_path / "idx")
@@ -412,7 +392,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
     norm, forms_back = index_analyzer(spark, idx, meta)
     assert norm == "dict_porter" and forms_back == big
 
-    # (c) cross-inflection search: any suffix of lemmo0000 reaches every
+    # (b) cross-inflection search: any suffix of lemmo0000 reaches every
     # doc carrying any inflection of it
     from searchengine_spark.streaming.store import read_store
 
@@ -424,7 +404,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
         got = sorted(r["doc_id"] for r in _topk(spark, idx, q, 200).collect())
         assert got == want, q
 
-    # (d) cross-inflection phrase over the index's positions: the doc
+    # (c) cross-inflection phrase over the index's positions: the doc
     # bigram "<lx0>ed <lx1>ing" matches under DIFFERENT suffixes
     pwant = sorted(r["doc_id"] for r in id_rows
                    if f"{lx0}ed {lx1}ing" in r["content"])
@@ -435,7 +415,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
     assert sorted(d for d, _ in eng.phrase_rows(
         f"{lx0}en {lx1}ed", 200)) == pwant
 
-    # (e) dict_sha pins across resume...
+    # (d) dict_sha pins across resume...
     build_index(read_store(spark, store), idx, n_segments=3, salt=2,
                 n_buckets=8)
     with open(f"{idx}/meta.json") as fh:

@@ -15,11 +15,7 @@ import os
 
 import pytest
 
-from searchengine_spark.analyzer import (
-    analyze_positions,
-    doc_term_runs_arrow,
-    doc_term_stats_arrow,
-)
+from searchengine_spark.analyzer import analyze_positions, doc_term_runs_arrow
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import (
     INDEX_OUT_SCHEMA,
@@ -92,17 +88,23 @@ def _explode(runs):
                          ids=[n for n, _ in NORMALIZERS])
 def test_fused_kernel_parity(spark, norm, forms):
     """Exploded, the fused kernel's runs must be exactly the flat rows they
-    summarize: stat rows == doc_term_stats_arrow, occurrence rows == the
-    pure-Python analyze_positions oracle — per normalizer family."""
+    summarize: stat rows == the logical index's tf and dl, occurrence
+    rows == the pure-Python analyze_positions oracle — per normalizer
+    family."""
+    from searchengine_spark.operators.tf_df import (
+        doc_lengths,
+        term_frequencies,
+    )
+
     docs = _texts_df(spark)
     runs = [r.asDict() for r in doc_term_runs_arrow(
         docs, 1000, 8, normalizer=norm, forms=forms).collect()]
     stats, occ = _explode(runs)
 
-    want_stats = sorted(
-        (r["doc_id"], r["lemma"], r["tf"], r["dl"])
-        for r in doc_term_stats_arrow(docs, normalizer=norm,
-                                      forms=forms).collect())
+    tf = term_frequencies(docs, normalizer=norm, forms=forms)
+    dl = {r["doc_id"]: r["dl"] for r in doc_lengths(tf).collect()}
+    want_stats = sorted((r["doc_id"], r["lemma"], r["tf"], dl[r["doc_id"]])
+                        for r in tf.collect())
     want_occ = sorted(
         (i, f, p) for i, t in enumerate(TEXTS)
         for p, fs in enumerate(analyze_positions(t, norm, forms))

@@ -36,21 +36,20 @@ def test_point_lookup_pushes_filters(spark):
     assert scan and all("text" not in ln for ln in scan)
 
 
-def test_jvm_analyzer_has_no_python_stage(spark, docs):
-    from searchengine_spark.analyzer import tokenize_jvm
+def test_arrow_analyzer_uses_arrow_not_pickle(spark, corpus_rows):
+    """The logical index's tf is ONE Arrow map over the build's analysis
+    kernel: no shuffle (a doc's tokens sit in its own row) and never
+    row-pickled Python."""
+    from searchengine_spark.operators.tf_df import term_frequencies
 
-    plan = _plan(tokenize_jvm(docs.select("doc_id", "content")))
-    assert "EvalPython" not in plan  # neither Batch- nor ArrowEvalPython
-    assert "MapInPandas" not in plan
-    assert "Generate explode" in plan  # JVM-side explode of the token array
-
-
-def test_arrow_analyzer_uses_arrow_not_pickle(spark, docs):
-    from searchengine_spark.analyzer import tokenize_arrow
-
-    plan = _plan(tokenize_arrow(docs.select("doc_id", "content")))
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan  # never row-pickled Python
+    # plain input so the plan shows only the operator's own nodes
+    docs = spark.createDataFrame(
+        [(r[0], i, r[4]) for i, r in enumerate(corpus_rows[:20])],
+        "repo string, doc_id long, content string")
+    plan = _plan(term_frequencies(docs))
+    assert plan.count("MapInArrow") == 1
+    assert "Exchange" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_exact_dedup_single_shuffle(spark):

@@ -50,8 +50,8 @@ def test_batch_store_matches_engine_and_enrich_hits(spark, env, monkeypatch,
     eng = QueryEngine(spark, idx)
     for q, line in zip(QUERIES, out[1:], strict=True):
         want = [{**r.asDict(), "relevance": round(r["relevance"], 4)}
-                for r in enrich_hits(spark, store, q, eng.topk_rows(
-                    q, 5, mode="maxscore")).collect()]
+                for r in enrich_hits(spark, store, q,
+                                     eng.topk_rows(q, 5)).collect()]
         assert line == {"query": q, "hits": want}
     assert out[1]["hits"] and not out[-1]["hits"]
 
@@ -85,6 +85,24 @@ def test_single_phrase_matches_engine(spark, env, monkeypatch, capsys):
                 for d, t in eng.phrase_rows(ph, 5)]
         assert line["phrase"] == ph and line["hits"] == want
     assert out[0]["hits"]
+
+
+def test_query_default_mode_matches_engine(spark, env, monkeypatch, capsys):
+    """``--query`` without ``--mode`` serves the engine's default: one query
+    (the distributed route) and several (the engine route) both print
+    ``topk_rows``'s rows."""
+    _, _, idx = env
+    eng = QueryEngine(spark, idx)
+    for qs in (QUERIES[:1], QUERIES):
+        argv = ["--index", idx, "-k", "5"]
+        for q in qs:
+            argv += ["--query", q]
+        out = [ln for ln in _run(monkeypatch, capsys, argv) if "query" in ln]
+        for q, line in zip(qs, out, strict=True):
+            want = [{"doc_id": d, "score": round(s, 4)}
+                    for d, s in eng.topk_rows(q, 5)]
+            assert line["query"] == q and line["hits"] == want
+    assert out[0]["hits"] and not out[-1]["hits"]
 
 
 @pytest.mark.parametrize("argv,msg", [
