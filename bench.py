@@ -200,7 +200,7 @@ def main() -> None:
             out_l: list[float] = []
             for q in BENCH_QUERY_SET:
                 t0 = time.perf_counter()
-                eng.topk_rows(q, 10, mode="auto")
+                eng.topk_rows(q, 10)
                 out_l.append(time.perf_counter() - t0)
             return out_l
 

@@ -39,7 +39,7 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     # the morphology is pinned with the index: resolve the old normalizer
     # (+ dict sidecar) BEFORE the resume=False rebuild, which would
     # otherwise default back to the pinned table
-    normalizer, forms = index_analyzer(spark, index_dir, imeta)
+    normalizer, forms, _ = index_analyzer(spark, index_dir, imeta)
 
     smeta = dstore.compact_store(spark, store_dir)
 

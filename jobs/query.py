@@ -50,10 +50,6 @@ def main() -> None:
     ap.add_argument("--phrase", action="store_true",
                     help="treat --query / --batch lines as exact phrases, "
                          "served from the index's positions")
-    ap.add_argument("--mode", choices=["auto", "maxscore", "bmw", "exhaustive"],
-                    default=None,
-                    help="scoring strategy (default auto); phrase paths "
-                         "reject it — phrases do not score")
     ap.add_argument("--conjunctive", action="store_true")
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args()
@@ -75,13 +71,11 @@ def main() -> None:
     if args.offset < 0:
         ap.error("--offset must be >= 0")
     # reject silently-unsupported combinations instead of dropping flags
-    if args.phrase and (args.offset or args.conjunctive
-                        or args.mode is not None):
-        ap.error("--phrase does not support --offset/--conjunctive/--mode")
+    if args.phrase and (args.offset or args.conjunctive):
+        ap.error("--phrase does not support --offset/--conjunctive")
     if args.phrase and args.store is not None:
         ap.error("--phrase serves from the index's positions and prints "
                  "(doc_id, phrase_tf) only; it takes no --store")
-    mode = args.mode or "auto"
 
     spark = get_spark("query", cores=args.cores)
 
@@ -118,7 +112,7 @@ def main() -> None:
                      if args.offset else None)
         t0 = time.perf_counter()
         rows = bm25_topk_batch(spark, args.index, workload, args.k,
-                               mode=mode, conjunctive=args.conjunctive,
+                               conjunctive=args.conjunctive,
                                sites=b_sites, offsets=b_offsets).collect()
         by_q: dict[str, list] = {qid: [] for qid in workload}
         for r in rows:
@@ -185,7 +179,7 @@ def main() -> None:
         q = args.query[0]
         t0 = time.perf_counter()
         rows = bm25_topk(spark, args.index, q, args.k,
-                         mode=mode, conjunctive=args.conjunctive,
+                         conjunctive=args.conjunctive,
                          site=args.site, offset=args.offset).collect()
         dt = (time.perf_counter() - t0) * 1000
         print(json.dumps({
@@ -202,8 +196,7 @@ def main() -> None:
                       "prefetch_ms": round(prefetch_ms, 1)}))
     for q in args.query:
         t0 = time.perf_counter()
-        hits = eng.topk_rows(q, args.k, mode=mode,
-                             conjunctive=args.conjunctive,
+        hits = eng.topk_rows(q, args.k, conjunctive=args.conjunctive,
                              site=args.site, offset=args.offset)
         dt = (time.perf_counter() - t0) * 1000
         print(json.dumps({

@@ -133,7 +133,8 @@ _strip_re = re.compile(_STRIP)
 
 
 def analyze(text: str, normalizer: str = "pinned",
-            forms: dict[str, tuple[str, ...]] | None = None) -> list[str]:
+            forms: dict[str, tuple[str, ...]] | None = None,
+            table: dict[str, tuple[str, ...]] | None = None) -> list[str]:
     """text -> lemma stream (with repetition).  ``normalizer='pinned'`` is
     the fixture contract (exception table); ``'stem'`` swaps in the suffix
     stemmer (the pluggable-slot exercise); ``'porter'`` the full five-step
@@ -144,13 +145,16 @@ def analyze(text: str, normalizer: str = "pinned",
     (LemmaFinderImpl.java:40-44/49-60), where one inflected token may emit
     several lemmas.  The pinned exception table is exactly this mechanism
     with a 2-entry dictionary; 'dict' opens the slot to an arbitrary-size
-    one without touching the golden fixtures."""
-    return [f for fs in analyze_positions(text, normalizer, forms)
+    one without touching the golden fixtures.  ``table``: the caller's
+    :func:`dict_porter_table` of ``forms`` ('dict_porter' only; queries
+    take it from ``builder.index_analyzer``, once per index)."""
+    return [f for fs in analyze_positions(text, normalizer, forms, table)
             for f in fs]
 
 
 def analyze_positions(text: str, normalizer: str = "pinned",
                       forms: dict[str, tuple[str, ...]] | None = None,
+                      table: dict[str, tuple[str, ...]] | None = None,
                       ) -> list[tuple[str, ...]]:
     """Positional variant of :func:`analyze`: one entry per SURVIVING source
     token, holding the tuple of its normal forms.  Where :func:`analyze`
@@ -160,7 +164,7 @@ def analyze_positions(text: str, normalizer: str = "pinned",
     the flat stream is [норма, нормаль, tamok].  This function IS the single
     pinned pipeline — :func:`analyze` is exactly its flattening, so the two
     views cannot drift apart (the parity contract has one implementation)."""
-    table, stem_fn = _normalizer_fns(normalizer, forms)
+    table, stem_fn = _normalizer_fns(normalizer, forms, table)
     if not text:
         return []
     s = _camel1_re.sub(r"\1 \2", text)
@@ -246,7 +250,8 @@ def check_normalizer(normalizer: str,
 
 
 def _normalizer_fns(normalizer: str,
-                    forms: dict[str, tuple[str, ...]] | None):
+                    forms: dict[str, tuple[str, ...]] | None,
+                    table: dict[str, tuple[str, ...]] | None = None):
     """(normal-forms table, stemmer or None) for ``normalizer``, shared by
     both executions: a token in the table emits ALL its forms, any other
     token is stemmed (when there is a stemmer) or kept as is.
@@ -259,15 +264,16 @@ def _normalizer_fns(normalizer: str,
       dictionary, projected into porter space (:func:`dict_porter_table`),
       answers irregular/ambiguous forms with ALL their lemmas; every token
       it does not know falls through to Porter for the regular
-      -s/-ed/-ing inflections.
+      -s/-ed/-ing inflections.  A caller's ``table`` skips the projection.
 
     Raises as :func:`check_normalizer` does."""
     check_normalizer(normalizer, forms)
     if normalizer in ("porter", "dict_porter"):
         from .functions.porter import porter_stem
 
-        table = dict_porter_table(forms) if normalizer == "dict_porter" else {}
-        return table, porter_stem
+        if normalizer == "dict_porter" and table is None:
+            table = dict_porter_table(forms)
+        return table or {}, porter_stem
     if normalizer == "stem":
         return {}, stem_token
     return (forms if normalizer == "dict" else NORMAL_FORMS), None

@@ -234,31 +234,37 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
             .applyInPandas(_merge, schema=INDEX_OUT_SCHEMA))
 
 
-_ANALYZER_CACHE: dict[tuple[str, str],
-                      tuple[str, dict[str, tuple[str, ...]] | None]] = {}
+_ANALYZER_CACHE: dict[tuple[str, str], tuple[str, dict, dict | None]] = {}
 
 
 def index_analyzer(spark, index_dir: str, meta: dict | None = None,
-                   ) -> tuple[str, dict[str, tuple[str, ...]] | None]:
-    """(normalizer, forms) for analyzing QUERIES against this index.
+                   ) -> tuple[str, dict | None, dict | None]:
+    """(normalizer, forms, table) for analyzing QUERIES against this index:
+    pass all three to ``analyze``/``analyze_positions``.
 
     The index's morphology is an index property (``meta.normalizer`` +
     the ``dict_forms`` sidecar), so every serving path must analyze with
     the same table the build used — the reference's per-process morphology
     singleton (LemmaFinderImpl.java:25-31).  The dictionary is collected
     once per (index_dir, dict_sha) and cached process-wide; it is a
-    bounded vocabulary artifact (MBs at any corpus size)."""
+    bounded vocabulary artifact (MBs at any corpus size).  ``table`` is
+    its porter projection under 'dict_porter' (None otherwise), cached
+    with it so no query re-projects it."""
+    from ..analyzer import dict_porter_table
+
     if meta is None:
         with open(f"{index_dir}/meta.json") as fh:
             meta = json.load(fh)
     norm = meta.get("normalizer", "pinned")
     if norm not in ("dict", "dict_porter"):
-        return norm, None
+        return norm, None, None
     key = (index_dir, str(meta.get("dict_sha", "")))
     hit = _ANALYZER_CACHE.get(key)
     if hit is None or hit[0] != norm:
         rows = spark.read.parquet(f"{index_dir}/dict_forms").collect()
-        hit = (norm, {r["token"]: tuple(r["forms"]) for r in rows})
+        forms = {r["token"]: tuple(r["forms"]) for r in rows}
+        hit = (norm, forms,
+               dict_porter_table(forms) if norm == "dict_porter" else None)
         _ANALYZER_CACHE[key] = hit
     return hit
 
@@ -336,7 +342,7 @@ def build_index(
         # lemmas); a resumed build must analyze with the stored table
         normalizer = old_meta.get("normalizer", "pinned")
         if normalizer in ("dict", "dict_porter"):
-            _, forms = index_analyzer(spark, out_dir, old_meta)
+            forms = index_analyzer(spark, out_dir, old_meta)[1]
     check_normalizer(normalizer, forms)
     if normalizer in ("dict", "dict_porter") and old_meta is None:
         # validate user dictionaries ONCE, before the expensive build: a

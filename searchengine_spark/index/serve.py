@@ -61,10 +61,10 @@ def enrich_hits(spark: SparkSession, store_dir: str, query: str,
 
 
 def serve_page(engine: QueryEngine, store_dir: str, query: str, k: int = 10,
-               site: str | None = None, offset: int = 0, mode: str = "auto",
+               site: str | None = None, offset: int = 0,
                conjunctive: bool = False) -> DataFrame:
     """One reference API call end-to-end on the physical path:
     GET /api/search?query&site&offset&limit -> DTO rows."""
-    hits = engine.topk_rows(query, k, mode=mode, conjunctive=conjunctive,
+    hits = engine.topk_rows(query, k, conjunctive=conjunctive,
                             site=site, offset=offset)
     return enrich_hits(engine.spark, store_dir, query, hits)

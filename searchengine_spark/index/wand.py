@@ -14,31 +14,30 @@ Query time here has one serving core, and a single query is a batch of one
 - a single query's segment winners merge via a global
   TakeOrderedAndProject, a batch's via one per-qid window.
 
-Within a segment several exact algorithms (self-oracle-tested against each
-other, SURVEY.md §5.4; the hypothesis property test asserts all modes
-return bit-identical (id, score) pairs on arbitrary posting sets):
+Within a segment two exact algorithms (the hypothesis property test asserts
+they return bit-identical (id, score) pairs on arbitrary posting sets,
+SURVEY.md §5.4), and :func:`segment_topk_terms` picks by what it can
+observe, the terms' decode state and list lengths:
 
-- ``exhaustive``: decode all postings of all query terms, accumulate
-  idf·(k1+1)·weight per doc (np.add.at), top-k.
-- ``maxscore``: safe dynamic pruning.  Pass 1 scores the rarest term's
-  postings exactly (lookups into other terms decode ONLY blocks overlapping
-  the candidate ids — the block directory's first/last_doc bounds drive the
-  skip, this is where block-max earns its keep).  With the pass-1 threshold
-  θ, terms whose upper bounds (idf·(k1+1)·max block weight) sum below θ are
+- exhaustive (:func:`_exhaustive`, and the reference the tests hold the
+  other to): decode all postings of all query terms, score every doc in
+  their union, top-k.  It runs whenever some term is still compressed
+  (Spark's segment groups, a term's first local use): cold scoring is
+  decode-bound, and MaxScore's pass-1 lookups would decode nearly every
+  block of the common terms anyway.  It also runs on near-uniform lists
+  (the shortest at least half the longest, single terms included), where
+  pruning has nothing to cut.
+- MaxScore (:func:`_maxscore`): safe dynamic pruning, run when every term
+  is decoded (warm engine LRU entries) and the lists are skewed.  Pass 1
+  scores the rarest term's postings exactly; with the pass-1 threshold θ,
+  terms whose upper bounds (idf·(k1+1)·max block weight) sum below θ are
   non-essential: docs appearing only in them provably cannot enter the
-  top-k, so candidate generation decodes essential terms only.
-- ``bmw``: Block-Max WAND (Ding & Suel, SIGIR 2011) in a vectorized
-  interval form — doc-id space is cut at every block boundary, each
-  interval carries Σ_t blockmax_t as a doc-wise score bound, and candidate
-  generation decodes only blocks overlapping intervals whose bound reaches
-  the pass-1 θ.  Block-granular pruning where MaxScore prunes whole terms.
-- ``auto`` (the default of every entry point): exhaustive when the
-  segment's posting lists are near-uniform in length (pruning provably
-  degenerates and pass-1 is pure overhead — measured ~1.4× exhaustive),
-  MaxScore otherwise.
-  Warm suite p95 12.2 → 8.5 ms with p50 unchanged at 40k docs.
+  top-k, so candidate generation takes the essential terms' ids only.
 
-Conjunctive mode replicates the reference's AND semantics (docs must carry
+The timing this rule rests on (cold/warm x 4k/40k docs, perfbench's query
+stream) is recorded in ROADMAP.md, direction 1.
+
+Conjunctive queries replicate the reference's AND semantics (docs must carry
 every term) with the same block-skipping lookups, rarest term driving.
 """
 
@@ -85,15 +84,12 @@ class TermPostings:
                           self.tf_off, self.dl_off))
         return (self.docs_b, self.tfs_b, self.dls_b, blocks)
 
+    @property
+    def decoded(self) -> bool:
+        """True once :meth:`decode_all` has run (a warm cache entry)."""
+        return self._full is not None
+
     def block(self, i: int):
-        if self._full is not None:
-            # fully-decoded fast path: slice the memoized flat arrays (BMW's
-            # candidate loop calls block() right after pass-1's decode_all —
-            # re-decoding would both waste CPU and repopulate the per-block
-            # cache decode_all just dropped)
-            s = int(self.n[:i].sum())
-            e = s + int(self.n[i])
-            return tuple(a[s:e] for a in self._full)
         if i not in self._cache:
             self._cache[i] = decode_block(self._enc(), i)
         return self._cache[i]
@@ -108,7 +104,7 @@ class TermPostings:
                 self._full = tuple(
                     np.concatenate([p[j] for p in parts]) for j in range(3)
                 )
-            # every lookup now takes the _full fast path, so the per-block
+            # every lookup now takes the flat-array path, so the per-block
             # cache is dead weight — dropping it halves the decoded-postings
             # memory a warm term pins in the serving LRU
             self._cache.clear()
@@ -217,108 +213,60 @@ def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.n
 
 def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
                        k: int, k1: float = 1.2, b: float = 0.75,
-                       mode: str = "auto",
                        conjunctive: bool = False,
                        intervals: list[tuple[int, int]] | None = None,
                        ) -> tuple[np.ndarray, np.ndarray]:
     """Local top-k for one segment over its query terms' ``TermPostings``
     (df global, for idf).  The warm-serving path reuses cached objects so
-    their lazily-decoded block caches survive across queries (repeated
-    terms never re-decode).
+    their decoded postings survive across queries (repeated terms never
+    re-decode).  MaxScore runs when every term is already decoded and the
+    shortest list is under half the longest, exhaustive otherwise (module
+    docstring).
 
     ``intervals`` (the builder's sites sidecar for one repo) scopes the
     search to a site: every candidate list is masked at generation, so θ
     comes from masked pass-1 scores (a subset of final candidates — still a
-    valid lower bound) and MaxScore/BMW pruning stays provably exact under
-    the mask (docs outside the essential union / dead intervals score below
-    θ whether masked or not)."""
-    idfs = [_idf(n_docs, t.df) for t in terms]
+    valid lower bound) and MaxScore pruning stays provably exact under the
+    mask (docs outside the essential union score below θ whether masked or
+    not)."""
     if not terms:
         z = np.zeros(0, dtype=np.int64)
         return z, np.zeros(0)
-
-    order = np.argsort([t.df for t in terms], kind="stable")  # rarest first (O1)
-    terms = [terms[i] for i in order]
-    idfs = [idfs[i] for i in order]
-
-    if mode == "auto":
-        # pruning pays when the rarest list is much shorter than the rest
-        # (pass-1 over it is cheap and its θ excludes the common terms);
-        # with near-uniform lists MaxScore degenerates to exhaustive PLUS a
-        # full pass-1 — measured ~1.4× exhaustive on 3-common-term queries.
-        # Segment-local df proxy: postings counts of the decoded directory.
-        sizes = [int(t.n.sum()) for t in terms]
-        mode = "exhaustive" if min(sizes) * 4 >= max(sizes) else "maxscore"
-
+    sizes = [int(t.n.sum()) for t in terms]  # segment-local list lengths
     if conjunctive:
-        ids = _mask_ids(terms[0].decode_all()[0], intervals)
-        for t in terms[1:]:
-            if ids.size == 0:
-                break  # early exit (SearchServiceImpl.java:136-138)
-            tf, _ = t.lookup(ids)
-            ids = ids[tf > 0]
-        return _topk(ids, _score_ids(ids, terms, idfs, k1, b, avgdl), k)
+        kernel = _conjunctive
+    elif 2 * min(sizes) < max(sizes) and all(t.decoded for t in terms):
+        kernel = _maxscore
+    else:
+        kernel = _exhaustive
+    return kernel(terms, n_docs, avgdl, k, k1, b, intervals)
 
-    if mode == "exhaustive" or len(terms) == 1:
-        all_ids = _mask_ids(
-            np.unique(np.concatenate([t.decode_all()[0] for t in terms])),
-            intervals)
-        return _topk(all_ids, _score_ids(all_ids, terms, idfs, k1, b, avgdl), k)
 
-    # pass 1 (shared by maxscore/bmw): rarest term's postings scored exactly
+def _rarest_first(terms: list[TermPostings], n_docs: int
+                  ) -> tuple[list[TermPostings], list[float]]:
+    """``terms`` by ascending df (stable) and their idfs, in the order
+    every kernel scores them (O1), so their float sums agree bit for bit."""
+    order = np.argsort([t.df for t in terms], kind="stable")
+    return ([terms[i] for i in order],
+            [_idf(n_docs, terms[i].df) for i in order])
+
+
+def _exhaustive(terms, n_docs, avgdl, k, k1, b, intervals):
+    """Decode every term and score the (masked) union of their ids."""
+    terms, idfs = _rarest_first(terms, n_docs)
+    ids = _mask_ids(
+        np.unique(np.concatenate([t.decode_all()[0] for t in terms])),
+        intervals)
+    return _topk(ids, _score_ids(ids, terms, idfs, k1, b, avgdl), k)
+
+
+def _maxscore(terms, n_docs, avgdl, k, k1, b, intervals):
+    """Pass 1 scores the rarest term's ids exactly; its kth score θ then
+    decides which terms are essential, and only their ids are scored."""
+    terms, idfs = _rarest_first(terms, n_docs)
     c1 = _mask_ids(terms[0].decode_all()[0], intervals)
     s1 = _score_ids(c1, terms, idfs, k1, b, avgdl)
-    if c1.size >= k:
-        theta = np.partition(s1, -k)[-k]
-    else:
-        theta = -np.inf
-
-    if mode == "bmw":
-        # ---- Block-Max WAND, vectorized interval form (Ding & Suel 2011) --
-        # Doc-id space is partitioned into elementary intervals at every
-        # block boundary of every query term; on one interval each term's
-        # contribution is bounded by the covering block's max weight, so
-        #   score(d) <= ub(interval(d)) = Σ_t idf_t·(k1+1)·blockmax_t(d)
-        # holds doc-wise.  Intervals with ub < θ (the pass-1 kth score)
-        # provably contain no top-k doc beyond pass-1's own: any such doc
-        # scores < θ <= final kth.  Candidate generation then decodes ONLY
-        # blocks overlapping a live interval — block-level pruning where
-        # MaxScore prunes whole terms — and filters ids to live intervals.
-        # Exact: property-tested bit-identical to the exhaustive path.
-        if not np.isfinite(theta):
-            cand = _mask_ids(
-                np.unique(np.concatenate([t.decode_all()[0] for t in terms])),
-                intervals)
-            return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
-        pts = np.unique(np.concatenate(
-            [np.concatenate([t.first, t.last + 1]) for t in terms]))
-        iv_start = pts[:-1]  # interval i = [pts[i], pts[i+1]-1]
-        ub = np.zeros(iv_start.size)
-        for t, idf in zip(terms, idfs):
-            if t.first.size == 0:
-                continue
-            bi = np.searchsorted(t.first, iv_start, side="right") - 1
-            cov = bi >= 0
-            cov[cov] &= iv_start[cov] <= t.last[bi[cov]]
-            w = np.zeros(iv_start.size)
-            w[cov] = t.max_w[bi[cov]]
-            ub += idf * (k1 + 1.0) * w
-        live = ub >= theta
-        pref = np.concatenate(([0], np.cumsum(live)))
-        parts = [c1]  # pass-1 ids (their exact scores seeded θ)
-        for t in terms:
-            if t.first.size == 0:
-                continue
-            lo = np.searchsorted(pts, t.first, side="right") - 1
-            hi = np.searchsorted(pts, t.last, side="right") - 1
-            blk_live = (pref[hi + 1] - pref[lo]) > 0
-            for i in np.flatnonzero(blk_live):
-                parts.append(t.block(int(i))[0])
-        cand = _mask_ids(np.unique(np.concatenate(parts)), intervals)
-        cand = cand[live[np.searchsorted(pts, cand, side="right") - 1]]
-        return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
-
-    # ---- MaxScore ----------------------------------------------------------
+    theta = np.partition(s1, -k)[-k] if c1.size >= k else -np.inf
     ubs = np.array([idf * (k1 + 1.0) * (t.max_w.max() if t.max_w.size else 0.0)
                     for t, idf in zip(terms, idfs)])
     # essential terms: take by UB desc until the EXCLUDED UB sum < theta;
@@ -340,8 +288,21 @@ def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
     return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
 
 
+def _conjunctive(terms, n_docs, avgdl, k, k1, b, intervals):
+    """Docs carrying every term: the rarest term's ids, narrowed by
+    block-skipping lookups into the others."""
+    terms, idfs = _rarest_first(terms, n_docs)
+    ids = _mask_ids(terms[0].decode_all()[0], intervals)
+    for t in terms[1:]:
+        if ids.size == 0:
+            break  # early exit (SearchServiceImpl.java:136-138)
+        tf, _ = t.lookup(ids)
+        ids = ids[tf > 0]
+    return _topk(ids, _score_ids(ids, terms, idfs, k1, b, avgdl), k)
+
+
 def bm25_segment(seg: int, tps: dict[str, TermPostings], queries: dict,
-                 meta: dict, mode: str, conjunctive: bool) -> list[tuple]:
+                 meta: dict, conjunctive: bool) -> list[tuple]:
     """The one per-segment BM25 scorer, run by Spark's segment groups and
     by :meth:`QueryEngine.topk_rows` alike: ``tps`` maps lemma -> this
     segment's ``TermPostings``, ``queries`` qid -> (sorted lemmas, AND
@@ -358,7 +319,7 @@ def bm25_segment(seg: int, tps: dict[str, TermPostings], queries: dict,
             continue
         ids, scores = segment_topk_terms(
             terms, meta["n_docs"], meta["avgdl"], kk, meta["k1"], meta["b"],
-            mode, conjunctive, intervals)
+            conjunctive, intervals)
         out.append((qid, ids, scores))
     return out
 
@@ -595,13 +556,12 @@ class QueryEngine:
         return scan_index(self.index_dir, self._files, lemmas,
                           self.meta["n_buckets"], columns)
 
-    def topk(self, query: str, k: int = 10, mode: str = "auto",
-             conjunctive: bool = False, site: str | None = None,
+    def topk(self, query: str, k: int = 10, conjunctive: bool = False, site: str | None = None,
              offset: int = 0) -> DataFrame:
         self._check_fresh()
         qlemmas = sorted(set(analyze(query, *self._ana)))
         self._scopes({"q": site})
-        return bm25_topk(self.spark, self.index_dir, query, k, mode=mode,
+        return bm25_topk(self.spark, self.index_dir, query, k,
                          conjunctive=conjunctive,
                          index_df=self._read(qlemmas),
                          gdf_override=self._gdf_for(qlemmas), site=site,
@@ -609,7 +569,7 @@ class QueryEngine:
                          site_intervals=self._site_cache.get(site))
 
     def topk_batch(self, queries: dict[str, str], k: int = 10,
-                   mode: str = "auto", conjunctive: bool = False,
+                   conjunctive: bool = False,
                    sites: dict[str, str] | None = None,
                    offsets: dict[str, int] | None = None) -> DataFrame:
         """Whole-workload scoring in one Spark job over the engine's pruned
@@ -623,7 +583,7 @@ class QueryEngine:
                          for t in analyze(q, *self._ana)})
         self._scopes(dict(sites or {}))
         return bm25_topk_batch(self.spark, self.index_dir, queries, k,
-                               mode=mode, conjunctive=conjunctive,
+                               conjunctive=conjunctive,
                                index_df=self._read(lemmas),
                                gdf_override=self._gdf_for(lemmas),
                                sites=sites, offsets=offsets,
@@ -869,8 +829,7 @@ class QueryEngine:
                         pfloor=len(forms))
         return len(terms) + len(pforms)
 
-    def topk_rows(self, query: str, k: int = 10, mode: str = "auto",
-                  conjunctive: bool = False,
+    def topk_rows(self, query: str, k: int = 10, conjunctive: bool = False,
                   local_threshold_bytes: int = 64 << 20,
                   site: str | None = None,
                   offset: int = 0) -> list[tuple[int, float]]:
@@ -897,7 +856,7 @@ class QueryEngine:
         if not self._warm(self._term_cache, qlemmas, self._bpp,
                           self._index_bytes, local_threshold_bytes,
                           lambda m: self._fetch(m, tfloor=len(qlemmas))):
-            out = self.topk(query, k, mode, conjunctive, site=site,
+            out = self.topk(query, k, conjunctive, site=site,
                             offset=offset).collect()
             return [(r["doc_id"], r["score"]) for r in out]
         entries = [e for t in qlemmas for e in self._term_cache.get(t)]
@@ -908,15 +867,15 @@ class QueryEngine:
         qs = {"q": (qlemmas, arity, k + offset, *scopes["q"])}
         merged = [(d, s) for seg, tps in by_seg.items()
                   for _, ids, scores in bm25_segment(
-                      seg, tps, qs, self.meta, mode, conjunctive)
+                      seg, tps, qs, self.meta, conjunctive)
                   for d, s in zip(ids.tolist(), scores.tolist())]
         merged.sort(key=lambda t: (-t[1], t[0]))
         return merged[offset:k + offset]
 
 
 def _bm25_segments(spark: SparkSession, index_dir: str,
-                   queries: dict[str, str], k: int, mode: str,
-                   conjunctive: bool, index_df: DataFrame | None,
+                   queries: dict[str, str], k: int, conjunctive: bool,
+                   index_df: DataFrame | None,
                    gdf_override: dict[str, int] | None,
                    sites: dict[str, str | None],
                    offsets: dict[str, int],
@@ -972,7 +931,7 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
                                      int(gdf[r.lemma]))
                for r in pdf.itertuples()}
         hits = bm25_segment(int(pdf["segment"].iloc[0]), tps, qs, meta,
-                            mode, conjunctive)
+                            conjunctive)
         return pd.DataFrame({
             "qid": [q for q, ids, _ in hits for _ in range(ids.size)],
             "doc_id": [d for _, ids, _ in hits for d in ids.tolist()],
@@ -984,7 +943,7 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
 
 def bm25_topk_batch(spark: SparkSession, index_dir: str,
                     queries: dict[str, str], k: int = 10,
-                    mode: str = "auto", conjunctive: bool = False,
+                    conjunctive: bool = False,
                     index_df: DataFrame | None = None,
                     gdf_override: dict[str, int] | None = None,
                     sites: dict[str, str] | None = None,
@@ -1008,8 +967,8 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
 
     :func:`bm25_topk` is this function's batch of one: both run the same
     front end and per-segment scorer (:func:`bm25_segment`), so a qid's
-    rows equal the single query's (parity-tested for every qid, both
-    modes, and against an independent BM25).
+    rows equal the single query's (parity-tested for every qid, and
+    against an independent BM25).
 
     ``sites``/``offsets`` (each ``qid -> value``, both optional per qid)
     complete the reference search API: a qid's site scope is a doc_id
@@ -1027,7 +986,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
     from pyspark.sql import functions as F
 
     offsets = {qid: int(v) for qid, v in (offsets or {}).items()}
-    local = _bm25_segments(spark, index_dir, queries, k, mode, conjunctive,
+    local = _bm25_segments(spark, index_dir, queries, k, conjunctive,
                            index_df, gdf_override, sites or {}, offsets,
                            site_intervals)
     if local is None:
@@ -1055,7 +1014,7 @@ def bm25_topk_batch(spark: SparkSession, index_dir: str,
 
 
 def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
-              mode: str = "auto", conjunctive: bool = False,
+              conjunctive: bool = False,
               index_df: DataFrame | None = None,
               gdf_override: dict[str, int] | None = None,
               site: str | None = None, offset: int = 0,
@@ -1080,7 +1039,7 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     from pyspark.sql import functions as F
 
     local = _bm25_segments(
-        spark, index_dir, {"q": query}, k, mode, conjunctive, index_df,
+        spark, index_dir, {"q": query}, k, conjunctive, index_df,
         gdf_override, {"q": site}, {"q": offset},
         None if site_intervals is None else {site: site_intervals})
     if local is None:

@@ -19,8 +19,9 @@ first 15 hex chars of md5(s) as a 60-bit integer; the k MinHash functions
 are the classic universal family h_i(x) = (a_i·(x mod P) + b_i) mod P with
 P = 2^31 - 1 and seeded (a_i, b_i) — one md5 per string plus k
 multiply-mods, cheaper than k string hashes and exactly expressible in
-ANSI SQL.  All of it is built-in-function DataFrame code — no Python UDFs,
-every expression whole-stage codegen.
+ANSI SQL.  MinHash signatures are one Arrow batch function
+(:func:`_minhash_wide_arrow`); everything else is built-in-function
+DataFrame code.
 """
 
 from __future__ import annotations
@@ -120,46 +121,19 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def _minhash_wide(docs: DataFrame, text_col: str, id_col: str, n: int,
-                  num_hashes: int) -> DataFrame:
-    """(id, _h0.._h{k-1}) — _hi = min over shingles of the portable
-    universal hash h_i (module docstring).  Deterministic, JVM-side.
-
-    Shape matters: higher-order functions (transform/array_min) are
-    INTERPRETED in Spark, so a nested seeds×shingles transform pays ~µs per
-    hash.  Instead the shingles are exploded, the 60-bit md5 base value is
-    computed ONCE per shingle row (a Project below the Aggregate — never
-    inlined into the agg expressions), and the signature is ``num_hashes``
-    plain ``min((a·x + b) % P)`` aggregates — whole-stage codegen with
-    map-side partial aggregation, one shuffle keyed on the doc id."""
-    # plain % (not pmod): every operand is non-negative, so dividend-sign %
-    # equals pmod at half the modulo ops — and matches DuckDB's % exactly
-    sh = (
-        docs.select(id_col, F.explode(_shingle_col(text_col, n)).alias("_shingle"))
-        .filter(F.col("_shingle") != "")
-        .select(id_col, (md5_60bit_col(F.col("_shingle")) % F.lit(MERSENNE_P)).alias("_x"))
-    )
-    aggs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("_x") + F.lit(MINHASH_B[i]))
-              % F.lit(MERSENNE_P)).alias(f"_h{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def _minhash_wide_arrow(docs: DataFrame, text_col: str, id_col: str, n: int,
                         num_hashes: int) -> DataFrame:
-    """Zero-shuffle Arrow twin of :func:`_minhash_wide` — the bench path.
+    """(id, _h0.._h{k-1}) — _hi = min over the doc's distinct word
+    n-grams (as :func:`_shingle_col` forms them) of the portable universal
+    hash h_i (module docstring); docs without an n-gram get no row.
 
     A doc's shingles all live in its own input row, so the whole signature
     is computable map-side inside one Arrow batch: tokenize, build word
     n-grams, md5→60-bit base value, and a (num_hashes × shingles) numpy
     broadcast of ``(a·x + b) % P`` min-reduced per doc.  No explode, no
-    shuffle, no interpreted higher-order functions (the JVM path pays
-    ~6.5 µs per shingle in `transform`'s interpreted slice+concat_ws —
-    measured 1.7 s of the sf0.1 signature pass).  Values are EXACTLY the
-    portable family of the module docstring: the JVM/DuckDB/Arrow paths
-    agree value-for-value (tests/test_dedup.py parity test).
+    shuffle, no interpreted higher-order functions.  Values are EXACTLY
+    the portable family, so the DuckDB gate oracle checks them value for
+    value, and tests/test_gate.py against a plain-Python evaluation.
 
     uint64 is overflow-safe: a,x < 2^31 so a·x + b < 2^62 + 2^31.
     """
@@ -186,10 +160,10 @@ def _minhash_wide_arrow(docs: DataFrame, text_col: str, id_col: str, n: int,
             for i, txt in enumerate(texts):
                 toks = (txt or "").split(" ")
                 if len(toks) < n:
-                    continue  # JVM: sequence(0, size-n) would descend
+                    continue  # too short for one n-gram
                 # set(): min is dup-invariant, and dedup halves the md5 calls
                 grams = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
-                grams.discard("")  # JVM: filter _shingle != ''
+                grams.discard("")  # as shingles() drops empty grams
                 if not grams:
                     continue
                 xs = np.fromiter(
@@ -211,42 +185,25 @@ def _minhash_wide_arrow(docs: DataFrame, text_col: str, id_col: str, n: int,
     return narrowed.mapInArrow(_batches, schema=schema)
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n: int = 3,
-                       num_hashes: int = 64, impl: str = "arrow") -> DataFrame:
-    """(id, sig: array<long>[num_hashes]) — packed view of the wide
-    signature table (``impl``: 'arrow' zero-shuffle default / 'jvm')."""
-    f = _minhash_wide_arrow if impl == "arrow" else _minhash_wide
-    wide = f(docs, text_col, id_col, n, num_hashes)
-    return wide.select(
-        id_col, F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       num_hashes: int = 64, bands: int = 16,
                       threshold: float = 0.5, verify: bool = True,
-                      impl: str = "arrow") -> DataFrame:
+                      ) -> DataFrame:
     """MinHash + LSH banding near-dup pairs.
 
     num_hashes/bands rows per band; two docs collide if any band signature
     matches (equi-join on (band, hash-of-rows)).  ``verify=True`` re-checks
     candidates with exact n-gram Jaccard (no false positives; recall is the
     usual LSH S-curve).  The band join is the scale path: shuffle keyed on
-    (band, bucket) — hot buckets are bounded by band width.
-
-    ``impl='arrow'`` (default) computes signatures map-side via
-    :func:`_minhash_wide_arrow` (zero shuffle, no interpreted HOFs);
-    ``impl='jvm'`` keeps the pure-Catalyst path — both produce identical
-    values (parity-tested), so the DuckDB gate oracle covers either.
+    (band, bucket) — hot buckets are bounded by band width.  Signatures
+    are computed map-side by :func:`_minhash_wide_arrow`.
     """
     rows_per_band = num_hashes // bands
     # materialize signatures before banding/self-join: projection collapse
     # would otherwise inline the 64-hash expression into every band column
     # on BOTH join sides (and the doubled tree falls out of codegen)
-    sig_f = _minhash_wide_arrow if impl == "arrow" else _minhash_wide
-    wide = sig_f(docs, text_col, id_col, n, num_hashes).cache()
+    wide = _minhash_wide_arrow(docs, text_col, id_col, n, num_hashes).cache()
     # band bucket = comma-joined signature slice (plain concat_ws over the
     # wide columns — no interpreted higher-order functions anywhere)
     band_structs = [

@@ -87,11 +87,6 @@ def doc_frequencies(tf: DataFrame) -> DataFrame:
     return tf.groupBy("repo", "lemma").agg(F.count("*").alias("df"))
 
 
-def global_doc_frequencies(tf: DataFrame) -> DataFrame:
-    """Corpus-wide df (used by BM25 idf when scoring globally)."""
-    return tf.groupBy("lemma").agg(F.count("*").alias("df"))
-
-
 def doc_lengths(tf: DataFrame) -> DataFrame:
     """Per-doc lemma-stream length (BM25 ``dl``): Σ tf per doc."""
     return tf.groupBy("repo", "doc_id").agg(F.sum("tf").alias("dl"))

@@ -75,12 +75,6 @@ def get_spark(
     return spark
 
 
-def stop_all() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 class MergeDicts(object):
     """AccumulatorParam over nested dicts, merged key by key: numbers add
     (keys named in ``xor`` combine with ``^`` instead), lists concatenate,

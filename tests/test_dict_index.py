@@ -15,7 +15,12 @@ import json
 
 import pytest
 
-from searchengine_spark.analyzer import MIN_TOKEN_LEN, STOP_WORDS, analyze
+from searchengine_spark.analyzer import (
+    MIN_TOKEN_LEN,
+    STOP_WORDS,
+    analyze,
+    dict_porter_table,
+)
 from searchengine_spark.corpus import ingest
 from searchengine_spark.functions.english import ENGLISH_FORMS
 from searchengine_spark.index.builder import build_index, index_analyzer
@@ -70,8 +75,8 @@ def test_meta_and_sidecar(spark, dict_idx):
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     assert meta["normalizer"] == "dict" and meta["dict_sha"]
-    norm, forms = index_analyzer(spark, idx, meta)
-    assert norm == "dict" and forms == ENGLISH_FORMS
+    norm, forms, table = index_analyzer(spark, idx, meta)
+    assert norm == "dict" and forms == ENGLISH_FORMS and table is None
     # process-wide cache: same object back, no second read
     assert index_analyzer(spark, idx, meta)[1] is forms
 
@@ -164,7 +169,7 @@ def test_pinned_default_unchanged(spark, tmp_path):
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     assert meta["normalizer"] == "pinned"
-    assert index_analyzer(spark, idx, meta) == ("pinned", None)
+    assert index_analyzer(spark, idx, meta) == ("pinned", None, None)
     # pinned analysis: 'went' stays 'went' — cross-inflection match is OFF
     got = sorted(r["doc_id"] for r in bm25_topk(spark, idx, "went", 10).collect())
     assert got == [0]
@@ -191,7 +196,7 @@ def test_porter_index_end_to_end(spark, tmp_path):
                 normalizer="porter")
     with open(f"{idx}/meta.json") as fh:
         assert json.load(fh)["normalizer"] == "porter"
-    assert index_analyzer(spark, idx) == ("porter", None)
+    assert index_analyzer(spark, idx) == ("porter", None, None)
     # connection / connected / connecting all stem to 'connect'
     for q in ("connection", "connected", "connecting"):
         got = sorted(r["doc_id"]
@@ -291,7 +296,8 @@ def test_dict_porter_index_end_to_end(spark, tmp_path):
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     assert meta["normalizer"] == "dict_porter" and meta["dict_sha"]
-    assert index_analyzer(spark, idx, meta) == ("dict_porter", ENGLISH_FORMS)
+    assert index_analyzer(spark, idx, meta) == (
+        "dict_porter", ENGLISH_FORMS, dict_porter_table(ENGLISH_FORMS))
     for q in ("went", "gone", "connection", "connected", "connecting"):
         got = sorted(r["doc_id"]
                      for r in bm25_topk(spark, idx, q, 10).collect())
@@ -312,6 +318,42 @@ def test_dict_porter_index_end_to_end(spark, tmp_path):
     assert got == want
     eng2 = QueryEngine(spark, idx)
     assert eng2.phrase_rows("went home", 10) == want
+
+
+def test_dict_porter_projects_the_dictionary_once(spark, tmp_path,
+                                                  monkeypatch):
+    """Query analysis on a dict_porter index projects the dictionary into
+    porter space once per index (index_analyzer's cache), not once per
+    call, and serves the rows a per-call projection serves."""
+    import searchengine_spark.analyzer as ana
+
+    rows = [
+        ("org/a", "s/a.py", "c1", "py",
+         "yesterday the team went home fixing the connection pool"),
+        ("org/a", "s/b.py", "c1", "py",
+         "people gone home once everything was connected cleanly"),
+    ]
+    docs = ingest(spark.createDataFrame(rows, DOCS_SCHEMA))
+    idx = str(tmp_path / "idx")
+    build_index(docs, idx, n_segments=2, salt=2, n_buckets=4, resume=False,
+                normalizer="dict_porter", forms=ENGLISH_FORMS)
+    calls = []
+    project = ana.dict_porter_table
+    monkeypatch.setattr(ana, "dict_porter_table",
+                        lambda forms: calls.append(1) or project(forms))
+
+    def serve(eng):
+        return ([eng.topk_rows(q, 10) for q in ("went home", "connecting")]
+                + [eng.phrase_rows(p, 10) for p in ("gone home", "went")])
+
+    eng = QueryEngine(spark, idx)
+    got = [serve(eng) for _ in range(3)]
+    assert len(calls) == 1  # the engine's load, none per call
+    per_call = QueryEngine(spark, idx)
+    per_call._ana = per_call._ana[:2] + (None,)  # derive it in every analyze
+    assert [serve(per_call) for _ in range(3)] == got
+    assert len(calls) >= 1 + 3 * 4  # the per-call path, counted too
+    assert got[0][0] and got[0][2]
 
 
 def _big_forms(n_lex: int = 5_000) -> dict[str, tuple[str, ...]]:
@@ -389,7 +431,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
         meta = json.load(fh)
     assert meta["normalizer"] == "dict_porter" and meta["dict_sha"]
     sha0 = meta["dict_sha"]
-    norm, forms_back = index_analyzer(spark, idx, meta)
+    norm, forms_back, _ = index_analyzer(spark, idx, meta)
     assert norm == "dict_porter" and forms_back == big
 
     # (b) cross-inflection search: any suffix of lemmo0000 reaches every

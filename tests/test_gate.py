@@ -106,12 +106,35 @@ def test_html_text_and_title_units(spark):
     ]
 
 
+def _minhash_reference(text, n=3, k=64):
+    """The portable md5 universal-hash family in plain Python: the
+    signature of ``text``'s distinct space-split word n-grams, or None
+    when it has none."""
+    import hashlib
+
+    from searchengine_spark.operators.dedup import (
+        MERSENNE_P,
+        MINHASH_A,
+        MINHASH_B,
+    )
+
+    toks = (text or "").split(" ")
+    grams = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)} - {""}
+    if not grams:
+        return None
+    xs = [int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15], 16)
+          % MERSENNE_P for g in grams]
+    return tuple(min((a * x + b) % MERSENNE_P for x in xs)
+                 for a, b in zip(MINHASH_A[:k], MINHASH_B[:k]))
+
+
 def test_minhash_arrow_jvm_signature_parity(spark):
     """The zero-shuffle Arrow signature path must agree VALUE-FOR-VALUE
-    with the pure-JVM Catalyst path (and hence with the DuckDB oracle's
-    portable md5 universal-hash family) — including on adversarial texts:
-    empty, null, multi-space runs, short docs, unicode, duplicate grams."""
-    from searchengine_spark.operators.dedup import _minhash_wide, _minhash_wide_arrow
+    with a plain-Python evaluation of the portable md5 universal-hash
+    family (the one the DuckDB oracle runs) — including on adversarial
+    texts: empty, null, multi-space runs, short docs, unicode, duplicate
+    grams."""
+    from searchengine_spark.operators.dedup import _minhash_wide_arrow
 
     adversarial = [
         (1000, ""), (1001, None), (1002, "one two"),            # too short
@@ -127,12 +150,12 @@ def test_minhash_arrow_jvm_signature_parity(spark):
     )
     rows = adversarial + [(r["doc_id"], r["text"]) for r in real]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = {r["doc_id"]: tuple(r[i] for i in range(1, 65))
-           for r in _minhash_wide(docs, "text", "doc_id", 3, 64).collect()}
+    want = {i: sig for i, t in rows
+            if (sig := _minhash_reference(t)) is not None}
     arrow = {r["doc_id"]: tuple(r[i] for i in range(1, 65))
              for r in _minhash_wide_arrow(docs, "text", "doc_id", 3, 64).collect()}
-    assert set(jvm) == set(arrow)
-    assert jvm == arrow
+    assert {1000, 1001, 1002}.isdisjoint(want) and 1003 in want
+    assert arrow == want
 
 
 def test_dedup_components_transitive_chain_and_collapse(spark):

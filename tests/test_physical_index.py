@@ -8,6 +8,7 @@ import pytest
 from searchengine_spark.index.builder import build_index, read_index
 from searchengine_spark.index.wand import (
     TermPostings,
+    _maxscore,
     bm25_topk,
     segment_topk_terms,
 )
@@ -73,14 +74,22 @@ def test_postings_roundtrip_vs_tf(spark, index_dir, logical_index, oracle):
     ("kw_rare_xyzzy", 10),
     ("норма tamok", 10),
 ])
-def test_maxscore_equals_exhaustive(spark, index_dir, query, k):
-    """SURVEY.md §5.4: WAND/MaxScore must return exactly the exhaustive
-    top-k (ids AND scores)."""
-    ex = bm25_topk(spark, index_dir, query, k, mode="exhaustive").collect()
-    ms = bm25_topk(spark, index_dir, query, k, mode="maxscore").collect()
-    assert [(r["doc_id"], r["score"]) for r in ex] == [
-        (r["doc_id"], r["score"]) for r in ms
-    ]
+def test_maxscore_equals_exhaustive(spark, index_dir, oracle, query, k):
+    """SURVEY.md §5.4: both kernels return the exhaustive top-k of an
+    independent BM25.  The distributed route scores fresh postings
+    (exhaustive); the engine's first call does too, and its repeat finds
+    every term decoded (MaxScore wherever the lists are skewed)."""
+    from searchengine_spark.index.wand import QueryEngine
+
+    want = oracle.bm25_topk(query, k)
+    got = bm25_topk(spark, index_dir, query, k).collect()
+    _assert_matches_reference([(r["doc_id"], r["score"]) for r in got], want)
+    eng = QueryEngine(spark, index_dir)
+    cold = eng.topk_rows(query, k)
+    assert all(tp.decoded for t in eng._term_cache
+               for _, _, tp, _ in eng._term_cache.get(t))
+    assert eng.topk_rows(query, k) == cold
+    _assert_matches_reference(cold, want)
 
 
 def test_no_hit_and_stop_only(spark, index_dir):
@@ -127,7 +136,7 @@ def _assert_matches_reference(got, want):
 def test_exhaustive_matches_numpy_reference(spark, index_dir, oracle):
     """Segment math cross-check: full-index disjunctive scores vs a direct
     BM25 over the oracle's tf table."""
-    got = bm25_topk(spark, index_dir, "tamok velsor", k=10, mode="exhaustive").collect()
+    got = bm25_topk(spark, index_dir, "tamok velsor", k=10).collect()
     _assert_matches_reference([(r["doc_id"], r["score"]) for r in got],
                               oracle.bm25_topk("tamok velsor", 10))
 
@@ -190,7 +199,10 @@ def test_dictionary_artifact(spark, index_dir, logical_index):
 
 
 def test_segment_topk_unit():
-    """Pure-numpy unit: two tiny terms, hand-checkable."""
+    """Pure-numpy unit: two tiny terms, hand-checkable, through the
+    serving kernel (cold and pre-decoded) and MaxScore alike."""
+    import math
+
     from searchengine_spark.index.codec import encode_postings
 
     avgdl = 10.0
@@ -198,20 +210,25 @@ def test_segment_topk_unit():
                          np.array([10, 10, 10]), avgdl)
     e2 = encode_postings(np.array([5, 9, 20]), np.array([1, 1, 1]),
                          np.array([10, 10, 10]), avgdl)
+    # dl == avgdl, so each term scores idf·tf·2.2/(tf + 1.2)
+    idf = math.log(1.0 + (30 - 3 + 0.5) / (3 + 0.5))
+    want = {9: idf * (4 * 2.2 / 5.2 + 2.2 / 2.2),
+            5: idf * (2.2 / 2.2 + 2.2 / 2.2)}
 
-    def run(mode):  # fresh TermPostings per mode, as each segment builds
+    for kernel in ("cold", "decoded", "maxscore"):
+        # fresh TermPostings per run, as each segment builds
         terms = [TermPostings(e.docs, e.tfs, e.dls,
                               [tuple(b) for b in e.blocks], 3)
                  for e in (e1, e2)]
-        return segment_topk_terms(terms, n_docs=30, avgdl=avgdl, k=2,
-                                  mode=mode)
-
-    ids_e, sc_e = run("exhaustive")
-    ids_m, sc_m = run("maxscore")
-    assert ids_e.tolist() == ids_m.tolist()
-    assert sc_e.tolist() == sc_m.tolist()
-    # doc 9 (tf 4 + both terms) must beat doc 5 (1+1) and doc 1 (2)
-    assert ids_e[0] == 9
+        if kernel == "decoded":
+            for t in terms:
+                t.decode_all()
+        ids, sc = (_maxscore(terms, 30, avgdl, 2, 1.2, 0.75, None)
+                   if kernel == "maxscore" else
+                   segment_topk_terms(terms, n_docs=30, avgdl=avgdl, k=2))
+        # doc 9 (tf 4 + both terms) must beat doc 5 (1+1) and doc 1 (2)
+        assert ids.tolist() == [9, 5], kernel
+        assert sc.tolist() == pytest.approx([want[9], want[5]], rel=1e-12)
 
 
 def test_query_engine_invalidates_on_rebuild(spark, docs, tmp_path):
@@ -272,44 +289,37 @@ def test_query_engine_prefetch_single_job_warms_suite(spark, index_dir):
 # ---- site scope + offset (reference GET /api/search?query&site&offset&limit)
 
 
-def _brute_site(spark, index_dir, docs, query, repo, k, offset=0,
-                conjunctive=False):
-    """Oracle: exhaustive full-corpus ranking -> filter to the repo's docs
-    via the ingested mapping -> page [offset, offset+k)."""
-    member = {r["doc_id"] for r in
-              docs.filter(docs.repo == repo).select("doc_id").collect()}
-    full = bm25_topk(spark, index_dir, query, k=docs.count(),
-                     mode="exhaustive", conjunctive=conjunctive).collect()
-    kept = [(r["doc_id"], r["score"]) for r in full if r["doc_id"] in member]
-    return kept[offset:offset + k]
+def test_site_filter_matches_brute_force(spark, index_dir, docs, oracle):
+    """site= must return EXACTLY the top-k among that repo's docs (the
+    oracle's full-corpus ranking kept to the repo), on the distributed
+    route and the engine's cold (exhaustive) and warm calls (MaxScore on
+    skewed lists): the interval mask keeps MaxScore's bounds valid."""
+    from searchengine_spark.index.wand import QueryEngine
 
-
-@pytest.mark.parametrize("mode", ["maxscore", "bmw", "exhaustive", "auto"])
-def test_site_filter_matches_brute_force(spark, index_dir, docs, mode):
-    """site= must return EXACTLY the top-k among that repo's docs, for every
-    pruning mode (the interval mask keeps MaxScore/BMW bounds valid)."""
     repos = [r["repo"] for r in
              docs.select("repo").distinct().limit(3).collect()]
+    eng = QueryEngine(spark, index_dir)
     for repo in repos:
         for q in ("tamok velsor", "parse index config", "xyzzy"):
-            want = _brute_site(spark, index_dir, docs, q, repo, 5)
+            want = oracle.bm25_topk(q, 5, site=repo)
             got = [(r["doc_id"], r["score"]) for r in
-                   bm25_topk(spark, index_dir, q, 5, mode=mode,
-                             site=repo).collect()]
-            assert got == want, (repo, q, mode)
+                   bm25_topk(spark, index_dir, q, 5, site=repo).collect()]
+            _assert_matches_reference(got, want)
+            for _ in ("cold", "warm"):
+                _assert_matches_reference(eng.topk_rows(q, 5, site=repo),
+                                          want)
 
 
-def test_site_filter_conjunctive_and_engine_fast_path(spark, index_dir, docs):
+def test_site_filter_conjunctive_and_engine_fast_path(spark, index_dir, docs,
+                                                      oracle):
     from searchengine_spark.index.wand import QueryEngine
 
     repo = docs.select("repo").distinct().collect()[0]["repo"]
     eng = QueryEngine(spark, index_dir)
     for q, conj in (("tamok velsor", True), ("tamok velsor", False)):
-        want = _brute_site(spark, index_dir, docs, q, repo, 5,
-                           conjunctive=conj)
+        want = oracle.bm25_topk(q, 5, site=repo, conjunctive=conj)
         got = eng.topk_rows(q, 5, site=repo, conjunctive=conj)
-        assert [(d, round(s, 9)) for d, s in got] == \
-               [(d, round(s, 9)) for d, s in want], (q, conj)
+        _assert_matches_reference(got, want)
     # unknown site owns no pages -> [] on both paths
     assert eng.topk_rows("tamok", 5, site="no/such-repo") == []
     assert bm25_topk(spark, index_dir, "tamok", 5,
@@ -317,12 +327,12 @@ def test_site_filter_conjunctive_and_engine_fast_path(spark, index_dir, docs):
 
 
 def test_offset_pagination_is_a_slice_of_the_full_ranking(spark, index_dir,
-                                                          docs):
+                                                          docs, oracle):
     from searchengine_spark.index.wand import QueryEngine
 
     q = "tamok velsor"
     full = [(r["doc_id"], r["score"]) for r in
-            bm25_topk(spark, index_dir, q, 20, mode="exhaustive").collect()]
+            bm25_topk(spark, index_dir, q, 20).collect()]
     eng = QueryEngine(spark, index_dir)
     for off, k in ((0, 5), (2, 3), (7, 10), (1000, 5)):
         want = full[off:off + k]
@@ -333,8 +343,8 @@ def test_offset_pagination_is_a_slice_of_the_full_ranking(spark, index_dir,
         assert got_w == want, ("warm", off, k)
     # site + offset compose
     repo = docs.select("repo").distinct().collect()[0]["repo"]
-    want = _brute_site(spark, index_dir, docs, q, repo, 3, offset=2)
-    assert eng.topk_rows(q, 3, site=repo, offset=2) == want
+    _assert_matches_reference(eng.topk_rows(q, 3, site=repo, offset=2),
+                              oracle.bm25_topk(q, 3, site=repo, offset=2))
 
 
 def test_sites_sidecar_is_islands_of_the_ingest(spark, index_dir, docs):
@@ -369,7 +379,8 @@ def test_build_rejects_sha_invariant_violation(spark, docs, tmp_path):
     assert not os.path.isdir(str(tmp_path / "badidx") + "/data")
 
 
-def test_site_scope_prunes_segment_partitions(spark, index_dir, docs):
+def test_site_scope_prunes_segment_partitions(spark, index_dir, docs,
+                                              oracle):
     """A site-scoped distributed query must SCAN only the segment= dirs its
     intervals overlap (partition pruning), and still return exactly the
     brute-force page."""
@@ -387,7 +398,8 @@ def test_site_scope_prunes_segment_partitions(spark, index_dir, docs):
 
     df = bm25_topk(spark, index_dir, "tamok velsor", 5, site=repo)
     got = [(r["doc_id"], r["score"]) for r in df.collect()]
-    assert got == _brute_site(spark, index_dir, docs, "tamok velsor", repo, 5)
+    _assert_matches_reference(got,
+                              oracle.bm25_topk("tamok velsor", 5, site=repo))
     # inputFiles() reports the pre-pruning listing; the proof of pruning is
     # the scan's PartitionFilters clause
     import re

@@ -87,9 +87,9 @@ def test_single_phrase_matches_engine(spark, env, monkeypatch, capsys):
     assert out[0]["hits"]
 
 
-def test_query_default_mode_matches_engine(spark, env, monkeypatch, capsys):
-    """``--query`` without ``--mode`` serves the engine's default: one query
-    (the distributed route) and several (the engine route) both print
+def test_query_matches_engine(spark, env, monkeypatch, capsys):
+    """``--query`` serves what the engine serves: one query (the
+    distributed route) and several (the engine route) both print
     ``topk_rows``'s rows."""
     _, _, idx = env
     eng = QueryEngine(spark, idx)
@@ -109,6 +109,7 @@ def test_query_default_mode_matches_engine(spark, env, monkeypatch, capsys):
     (["-k", "0"], "-k must be >= 1"),
     (["--offset", "-1"], "--offset must be >= 0"),
     (["--phrase", "--store", "unused"], "it takes no --store"),
+    (["--mode", "maxscore"], "unrecognized arguments: --mode"),
 ])
 def test_query_job_validated_before_spark(monkeypatch, capsys, argv, msg):
     import jobs.query as job
