@@ -289,25 +289,53 @@ def test_query_engine_prefetch_single_job_warms_suite(spark, index_dir):
 # ---- site scope + offset (reference GET /api/search?query&site&offset&limit)
 
 
-def test_site_filter_matches_brute_force(spark, index_dir, docs, oracle):
+def _site_topk(eng, q, k, repo, route):
+    """One site-scoped top-k on ``route``: "auto" is the distributed route
+    (each segment picks its own kernel), "exhaustive" the engine's cold
+    call (nothing decoded yet), "maxscore" MaxScore forced on every
+    segment of the engine's decoded postings under the repo's mask."""
+    from searchengine_spark.analyzer import analyze
+
+    if route == "auto":
+        return [(r["doc_id"], r["score"]) for r in
+                bm25_topk(eng.spark, eng.index_dir, q, k,
+                          site=repo).collect()]
+    if route == "exhaustive":
+        return eng.topk_rows(q, k, site=repo)
+    eng.topk_rows(q, k, site=repo)  # fetch the terms and the intervals
+    by_seg: dict[int, list] = {}
+    for t in sorted(set(analyze(q, *eng._ana))):
+        for _, seg, tp, _ in eng._term_cache.get(t):
+            tp.decode_all()
+            by_seg.setdefault(seg, []).append(tp)
+    m = eng.meta
+    merged = [(d, s) for terms in by_seg.values()
+              for ids, sc in [_maxscore(terms, m["n_docs"], m["avgdl"], k,
+                                        m["k1"], m["b"],
+                                        eng._site_cache[repo])]
+              for d, s in zip(ids.tolist(), sc.tolist())]
+    merged.sort(key=lambda t: (-t[1], t[0]))
+    return merged[:k]
+
+
+@pytest.mark.parametrize("route", ["maxscore", "exhaustive", "auto"])
+def test_site_filter_matches_brute_force(spark, index_dir, docs, oracle,
+                                         route):
     """site= must return EXACTLY the top-k among that repo's docs (the
-    oracle's full-corpus ranking kept to the repo), on the distributed
-    route and the engine's cold (exhaustive) and warm calls (MaxScore on
-    skewed lists): the interval mask keeps MaxScore's bounds valid."""
+    oracle's full-corpus ranking kept to the repo) on every route: the
+    interval mask keeps MaxScore's bounds valid."""
     from searchengine_spark.index.wand import QueryEngine
 
     repos = [r["repo"] for r in
              docs.select("repo").distinct().limit(3).collect()]
-    eng = QueryEngine(spark, index_dir)
     for repo in repos:
         for q in ("tamok velsor", "parse index config", "xyzzy"):
+            eng = QueryEngine(spark, index_dir)  # cold per query
             want = oracle.bm25_topk(q, 5, site=repo)
-            got = [(r["doc_id"], r["score"]) for r in
-                   bm25_topk(spark, index_dir, q, 5, site=repo).collect()]
-            _assert_matches_reference(got, want)
-            for _ in ("cold", "warm"):
-                _assert_matches_reference(eng.topk_rows(q, 5, site=repo),
-                                          want)
+            _assert_matches_reference(_site_topk(eng, q, 5, repo, route),
+                                      want)
+            # the warm repeat agrees (MaxScore on skewed decoded lists)
+            _assert_matches_reference(eng.topk_rows(q, 5, site=repo), want)
 
 
 def test_site_filter_conjunctive_and_engine_fast_path(spark, index_dir, docs,
