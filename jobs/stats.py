@@ -14,7 +14,8 @@ projection) and the sites sidecar (per-repo doc_id islands -> exact live
 page counts) — so the cheap form reads ZERO posting bytes.
 
 ``--detailed`` adds exact per-site lemma counts with one distributed pass:
-decode each index row's posting ids (numpy varbyte), map ids -> site via
+decode each term row's posting ids (one numpy varbyte + delta pass over
+its ``postings`` column alone), map ids -> site via
 the interval sidecar (searchsorted over the global interval bounds), emit
 per-batch-unique (site, lemma) pairs, then count distinct per site — the
 shuffle carries deduped narrow pairs, never postings.
@@ -40,6 +41,8 @@ def site_lemma_counts(spark, index_dir: str) -> dict[str, int]:
 
     from searchengine_spark.index.builder import SITES_SCHEMA, read_index
 
+    with open(f"{index_dir}/meta.json") as fh:
+        block_size = int(json.load(fh)["block_size"])
     if not _glob.glob(f"{index_dir}/sites/segment=*"):
         return {}  # pre-sidecar or emptied index: no per-site breakdown
     rows = (
@@ -56,14 +59,12 @@ def site_lemma_counts(spark, index_dir: str) -> dict[str, int]:
     def _pairs(batches):
         import pandas as pd
 
-        from searchengine_spark.index.wand import TermPostings
+        from searchengine_spark.index.codec import decode_ids
 
         for pdf in batches:
             out_site, out_lemma = [], []
             for r in pdf.itertuples():
-                tp = TermPostings(r.postings, r.tfs, r.dls,
-                                  list(r.blocks), 0)
-                ids = tp.decode_all()[0]
+                ids = decode_ids(r.postings, block_size)
                 pos = np.searchsorted(los, ids, side="right") - 1
                 ok = pos >= 0
                 ok[ok] &= ids[ok] <= his[pos[ok]]
@@ -73,8 +74,7 @@ def site_lemma_counts(spark, index_dir: str) -> dict[str, int]:
             yield pd.DataFrame({"site": out_site, "lemma": out_lemma})
 
     pairs = (
-        read_index(spark, index_dir)
-        .select("lemma", "postings", "tfs", "dls", "blocks")
+        read_index(spark, index_dir, columns=("lemma", "postings"))
         .mapInPandas(_pairs, schema="site string, lemma string")
         .groupBy("site")
         .agg(F.countDistinct("lemma").alias("lemmas"))

@@ -353,7 +353,8 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
     in the same Python pass — tf is a lemma's occurrence count per doc,
     dl the doc's occurrence total (multi-lemma expansions count once per
     form) — with each run's occurrence positions, so ONE scan feeds the
-    postings and their positional streams.
+    postings and their positional streams.  Each batch also emits one
+    norms run per segment (its docs' lengths, ``runs.form_runs``).
 
     ``stats`` (an accumulator over :class:`session.MergeDicts` with
     ``xor=("sha_xor",)``) also receives every batch's per-segment doc
@@ -392,7 +393,7 @@ def doc_term_runs_arrow(docs: DataFrame, seg_size: int, n_buckets: int,
             if got is None:
                 continue
             _, lemmas, pos = got
-            yield form_runs(ids[par], lemmas, dl[par], seg_size, n_buckets,
-                            pos)
+            yield from form_runs(ids, dl, par, lemmas, pos, seg_size,
+                                 n_buckets)
 
     return narrowed.mapInArrow(_batches, schema=RUN_DDL)

@@ -17,10 +17,22 @@ over all segments that still need building):
        untouched, no repartition)                [partition-pruned reads]
 
 That merge writes the WHOLE index: one ``data/`` row per (segment, lemma)
-carries the dictionary (lemma, df), the postings and the positional
-stream ``pstream`` (index/positions.py).  Readers take the columns they
-need by Parquet column projection, so no dictionary or positional
-dataset is written beside it (:func:`read_index`).
+carries the dictionary (lemma, df), the postings (doc ids and tfs) and
+the positional stream ``pstream`` (index/positions.py).  Readers take the
+columns they need by Parquet column projection, so no dictionary or
+positional dataset is written beside it (:func:`read_index`).
+
+Doc lengths are stored once per doc, not once per posting: each segment
+has one NORMS ROW in ``data/`` (per-segment norms, as Lucene keeps them),
+keyed by the reserved lemma :data:`NORMS_LEMMA` in its own partition
+``bucket=``:data:`NORMS_BUCKET`, in the same codec layout — ``postings``
+= the segment's doc ids with dl > 0, ``tfs`` = each doc's dl, ``pstream``
+null.  The analysis kernel emits its runs (index/runs.py) and the same
+merge writes it, so it costs no extra job; the block-max weights are
+computed from the runs' exact dls.  Serving reads a segment's norms row
+to score (index/wand.py); BM25 reads of a term's rows never touch it.
+``data/`` files keep min/max statistics on ``lemma`` only
+(:data:`DATA_WRITE_OPTIONS`), so no footer repeats a row's blobs.
 
 Build statistics ride those jobs instead of re-reading what they just
 computed: the analysis kernel tallies each segment's docs, sha256 lineage,
@@ -70,11 +82,26 @@ if TYPE_CHECKING:
 K1, B = 1.2, 0.75  # pinned BM25 params baked into block-max weights
 
 # meta["format"]: the layout this builder writes and reads — one data/
-# dataset whose every row carries its positional stream.  Any other
-# format is rebuilt whole on resume: format 2 could hold segments built
-# without positions, and indexes without the marker kept dict/ and
-# positions/ sidecars beside data/.
-INDEX_FORMAT = 3
+# dataset whose every term row carries its positional stream, and one
+# norms row per segment instead of a per-posting dl stream.  Any other
+# format is rebuilt whole on resume and refused by serving
+# (:func:`check_format`): format 3 stored dls per posting and no norms,
+# format 2 could hold segments built without positions, and indexes
+# without the marker kept dict/ and positions/ sidecars beside data/.
+INDEX_FORMAT = 4
+
+# the norms row's key: a lemma the analyzer never emits (the kernel
+# raises on it, build_index rejects a forms table producing it), in a
+# partition of its own so a pruned read of the norms reads no term bytes
+NORMS_LEMMA = ""
+NORMS_BUCKET = -1
+
+# min/max statistics on ``lemma`` only, the one column reads filter on:
+# parquet-mr stores a binary column's min/max up to four times in the
+# footer, so by default a one-row norms file carries its blobs several
+# times over, and every read of a file pays for its footer
+DATA_WRITE_OPTIONS = {"parquet.column.statistics.enabled": "false",
+                      "parquet.column.statistics.enabled#lemma": "true"}
 
 SITES_SCHEMA = T.StructType(
     [
@@ -92,7 +119,6 @@ INDEX_OUT_SCHEMA = T.StructType(
         T.StructField("df", T.LongType(), False),
         T.StructField("postings", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
         T.StructField(
             "blocks",
             T.ArrayType(
@@ -103,15 +129,13 @@ INDEX_OUT_SCHEMA = T.StructType(
                         T.StructField("n", T.IntegerType(), False),
                         T.StructField("doc_off", T.IntegerType(), False),
                         T.StructField("tf_off", T.IntegerType(), False),
-                        T.StructField("dl_off", T.IntegerType(), False),
                         T.StructField("max_weight", T.DoubleType(), False),
                     ]
                 )
             ),
             False,
         ),
-        # nullable as format 2 declared it, so the written files keep
-        # their bytes; every row of this format fills it
+        # null on the norms rows only
         T.StructField("pstream", T.BinaryType(), True),
         T.StructField("bucket", T.IntegerType(), False),
     ]
@@ -147,10 +171,13 @@ def seg_ranges_filter(missing: list[int], seg_size: int):
 
 def hash_bucket(lemma: str, n_buckets: int) -> int:
     """Deterministic bucket: first 4 bytes of md5, big endian (not Python's
-    salted builtin hash).  The build's run former and every bucket-pruned
-    read compute it the same way."""
+    salted builtin hash); :data:`NORMS_BUCKET` for :data:`NORMS_LEMMA`.
+    The build's run former and every bucket-pruned read compute it the
+    same way."""
     import hashlib
 
+    if lemma == NORMS_LEMMA:
+        return NORMS_BUCKET
     return int.from_bytes(hashlib.md5(lemma.encode()).digest()[:4], "big") % n_buckets
 
 
@@ -165,14 +192,18 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
 
     The runs' ``pos`` fill each row's ``pstream``
     (:func:`positions.encode_pstream`) in the same group, so the
-    positional streams cost no second exchange.
+    positional streams cost no second exchange.  A segment's norms runs
+    form a group of their own (:data:`NORMS_BUCKET`) and encode as its
+    norms row, with no ``pstream``.
 
     ``stats`` (an accumulator over :class:`session.MergeDicts`) receives
     each segment's ``{"terms", "postings", "bytes", "pos_bytes"}`` — its
-    manifest's written counts, ``pos_bytes`` being postings + tfs +
-    pstream (what a positional fetch moves) — from the groups as they
-    encode.  The encoder runs in the result stage of the job that writes
-    its output, so the counts are complete once that write returns."""
+    manifest's written counts of the term rows, ``bytes`` being postings
+    + tfs and ``pos_bytes`` postings + tfs + pstream (what a positional
+    fetch moves) — and the norms row's postings + tfs as ``norm_bytes``,
+    from the groups as they encode.  The encoder runs in the result stage
+    of the job that writes its output, so the counts are complete once
+    that write returns."""
 
     def _merge(pdf):
         import numpy as np
@@ -190,6 +221,9 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         # all lemmas in a single vectorized codec pass.
         seg = int(pdf["segment"].iloc[0])
         bucket = int(pdf["bucket"].iloc[0])
+        # the norms group encodes one row (tfs = dls = each doc's dl);
+        # no reader uses its block weights
+        norms = bucket == NORMS_BUCKET
         lens = np.fromiter((len(a) for a in pdf["docs"]), dtype=np.int64,
                            count=len(pdf))
         codes, lemmas = pd.factorize(pdf["lemma"], sort=True)
@@ -200,7 +234,7 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         order = np.lexsort((docs, rid))
         counts = np.bincount(rid, minlength=len(lemmas))
         offsets = np.concatenate([[0], np.cumsum(counts)])
-        pstream = encode_pstream(
+        pstream = [None] if norms else encode_pstream(
             np.concatenate(pdf["pos"].to_list()).astype(np.int64), tfs,
             order, offsets)
         docs, tfs, dls = docs[order], tfs[order], dls[order]
@@ -212,7 +246,6 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
                 "df": int(counts[t]),
                 "postings": enc.docs,
                 "tfs": enc.tfs,
-                "dls": enc.dls,
                 "blocks": [tuple(b) for b in enc.blocks],
                 "pstream": pstream[t],
                 "bucket": bucket,
@@ -220,12 +253,11 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
             for t, enc in enumerate(encs)
         ]
         if stats is not None:
-            stats.add({seg: {
+            nbytes = sum(len(e.docs) + len(e.tfs) for e in encs)
+            stats.add({seg: {"norm_bytes": nbytes} if norms else {
                 "terms": len(encs), "postings": int(counts.sum()),
-                "bytes": sum(len(e.docs) + len(e.tfs) + len(e.dls)
-                             for e in encs),
-                "pos_bytes": sum(len(e.docs) + len(e.tfs) + len(p)
-                                 for e, p in zip(encs, pstream))}})
+                "bytes": nbytes,
+                "pos_bytes": nbytes + sum(len(p) for p in pstream)}})
         return pd.DataFrame(out, columns=cols)
 
     return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls",
@@ -360,6 +392,10 @@ def build_index(
                 raise ValueError(
                     f"forms key {key!r} is not lowercase — the analyzer "
                     "lowercases tokens before lookup, so it can never fire")
+            if NORMS_LEMMA in vals:
+                raise ValueError(
+                    f"forms[{key!r}] maps to the reserved norms lemma "
+                    f"{NORMS_LEMMA!r}")
 
     def done(s: int) -> bool:
         """Segment ``s`` of the old index needs no rebuild."""
@@ -547,6 +583,7 @@ def build_index(
                               avgdl, block_size, stats)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")  # done segments untouched
+            .options(**DATA_WRITE_OPTIONS)
             .partitionBy("segment", "bucket")
             .parquet(f"{out_dir}/data")
         )
@@ -596,6 +633,7 @@ def build_index(
             "posting_bytes": st.get("bytes", 0),
             "input_sha_xor": st.get("sha_xor", 0),
             "pos_posting_bytes": st.get("pos_bytes", 0),
+            "norm_bytes": st.get("norm_bytes", 0),
             "status": "done",
         }
         write_manifest(out_dir, seg, m)
@@ -633,17 +671,35 @@ def _manifest_totals(manifests: list[dict]) -> dict:
             out[ratio] = round(nb / n, 3)
             if len(have) == len(manifests):
                 out[total] = nb
+    if manifests and all("norm_bytes" in m for m in manifests):
+        out["norm_bytes"] = sum(int(m["norm_bytes"]) for m in manifests)
     return out
+
+
+def check_format(meta: dict) -> None:
+    """Raise unless ``meta`` is of the current :data:`INDEX_FORMAT`: BM25
+    serving needs its norms rows and phrase serving its positions on
+    every row, and no older format has both.  Every serving front end
+    checks here; there is no fallback that reads an older layout."""
+    if meta.get("format") != INDEX_FORMAT:
+        raise ValueError(
+            f"index format {meta.get('format')} is not format "
+            f"{INDEX_FORMAT} (norms rows, positions on every row); rebuild "
+            "it before serving (a resumed build_index rebuilds an older "
+            "format whole)")
 
 
 def read_index(spark: SparkSession, out_dir: str,
                lemmas: list[str] | None = None,
-               columns: tuple[str, ...] = POSTING_COLS) -> DataFrame:
+               columns: tuple[str, ...] = POSTING_COLS,
+               norms: bool = False) -> DataFrame:
     """Read ``columns`` of the index (by default all but ``pstream``, so
     parquet never touches the positional bytes); with ``lemmas`` given,
     prune to their buckets (partition pruning on bucket=) and filter exact
-    terms.  An index built over an emptied corpus (no segment= dirs) reads
-    as empty."""
+    terms.  ``norms`` adds every segment's norms row (:data:`NORMS_LEMMA`)
+    to the read; without it an unfiltered read holds term rows only.  An
+    index built over an emptied corpus (no segment= dirs) reads as
+    empty."""
     import glob as _glob
 
     with open(f"{out_dir}/meta.json") as fh:
@@ -655,7 +711,11 @@ def read_index(spark: SparkSession, out_dir: str,
         # parquet footer sampling for schema inference (O(1) planning)
         df = spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{out_dir}/data")
     if lemmas is None:
+        if not norms:
+            df = df.filter(F.col("bucket") != NORMS_BUCKET)
         return df.select(*columns)
+    if norms:
+        lemmas = [NORMS_LEMMA, *lemmas]
     return prune_index(df, lemmas, meta["n_buckets"], columns)
 
 

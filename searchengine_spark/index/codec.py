@@ -12,10 +12,17 @@ Layout (per term):
   ``delta - 1`` gaps (strictly increasing ids → gaps >= 1, so the -1 buys a
   byte on dense runs); blocks restart absolute so a block is decodable
   without its predecessors (random access for skipping);
-- tf and dl streams are plain varbyte, also block-aligned;
+- the tf stream is plain varbyte, also block-aligned;
 - ``max_weight`` = max over the block of tf/(tf + k1·(1-b+b·dl/avgdl)) —
   the docID-independent part of BM25; multiplied by idf·(k1+1) at query
   time it upper-bounds any posting's contribution (the block-max bound).
+  The docs' lengths enter only here: they are not stored per posting.
+  Each segment keeps them once, in its NORMS ROW — one more row of this
+  same layout whose "tf" of a doc is its length (builder.NORMS_LEMMA).
+
+A whole term decodes in ONE varbyte + delta pass over each stream
+(:func:`decode_streams`, block starts from the directory's ``n``); a
+single block decodes from its byte range (:func:`decode_range`).
 
 Everything is vectorized numpy — no per-int Python loops (the fill loop is
 over BYTE POSITIONS within a varint, <= 10 iterations).
@@ -94,14 +101,12 @@ class Block(NamedTuple):
     n: int
     doc_off: int
     tf_off: int
-    dl_off: int
     max_weight: float
 
 
 class EncodedPostings(NamedTuple):
     docs: bytes
     tfs: bytes
-    dls: bytes
     blocks: list[Block]
 
 
@@ -117,18 +122,17 @@ def bm25_weight(tfs: np.ndarray, dls: np.ndarray, avgdl: float,
 def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
                     avgdl: float, k1: float = 1.2, b: float = 0.75,
                     block_size: int = DEFAULT_BLOCK) -> EncodedPostings:
-    """Sorted (doc_ids, tfs, dls) -> compressed streams + block directory."""
+    """Sorted (doc_ids, tfs) -> compressed streams + block directory; the
+    docs' lengths ``dls`` only enter the block-max weights."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     assert doc_ids.size and np.all(np.diff(doc_ids) > 0), "docIDs must be strictly increasing"
     tfs = np.asarray(tfs, dtype=np.int64)
-    dls = np.asarray(dls, dtype=np.int64)
-    weights = bm25_weight(tfs, dls, avgdl, k1, b)
+    weights = bm25_weight(tfs, np.asarray(dls, dtype=np.int64), avgdl, k1, b)
 
     doc_parts: list[np.ndarray] = []
     tf_parts: list[np.ndarray] = []
-    dl_parts: list[np.ndarray] = []
     blocks: list[Block] = []
-    doc_off = tf_off = dl_off = 0
+    doc_off = tf_off = 0
     for s in range(0, doc_ids.size, block_size):
         e = min(s + block_size, doc_ids.size)
         ids = doc_ids[s:e]
@@ -138,21 +142,17 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
             gaps[1:] = (np.diff(ids) - 1).astype(np.uint64)
         dpart = varbyte_encode(gaps)
         tpart = varbyte_encode(tfs[s:e].astype(np.uint64))
-        lpart = varbyte_encode(dls[s:e].astype(np.uint64))
         blocks.append(
-            Block(int(ids[0]), int(ids[-1]), int(e - s), doc_off, tf_off, dl_off,
+            Block(int(ids[0]), int(ids[-1]), int(e - s), doc_off, tf_off,
                   float(weights[s:e].max()))
         )
         doc_parts.append(dpart)
         tf_parts.append(tpart)
-        dl_parts.append(lpart)
         doc_off += dpart.size
         tf_off += tpart.size
-        dl_off += lpart.size
     return EncodedPostings(
         np.concatenate(doc_parts).tobytes(),
         np.concatenate(tf_parts).tobytes(),
-        np.concatenate(dl_parts).tobytes(),
         blocks,
     )
 
@@ -167,7 +167,7 @@ def encode_postings_many(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     ``[offsets[t], offsets[t+1])`` and its doc_ids must be strictly
     increasing.  The gap/varbyte/block math runs ONCE over the concatenated
     arrays (no per-term numpy calls); the only per-term Python is slicing the
-    three encoded streams.  Output is byte-identical to calling
+    two encoded streams.  Output is byte-identical to calling
     :func:`encode_postings` per term (tests/test_codec.py asserts it)."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
@@ -184,18 +184,11 @@ def encode_postings_many(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     block_start = (idx_in_term % block_size) == 0
 
     # gap stream: absolute docID at block starts, (delta - 1) elsewhere
-    gaps = np.empty(n, dtype=np.int64)
-    gaps[block_start] = doc_ids[block_start]
-    rest = ~block_start
-    gaps[rest] = doc_ids[rest] - doc_ids[np.flatnonzero(rest) - 1] - 1
-    assert np.all(gaps >= 0), "docIDs must be strictly increasing per term"
-
-    docs_b, doc_ends = varbyte_encode_with_ends(gaps.astype(np.uint64))
+    docs_b, doc_ends = varbyte_encode_with_ends(
+        delta_encode(doc_ids, block_start))
     tfs_b, tf_ends = varbyte_encode_with_ends(tfs.astype(np.uint64))
-    dls_b, dl_ends = varbyte_encode_with_ends(dls.astype(np.uint64))
     doc_starts = doc_ends - np.diff(np.concatenate([[0], doc_ends]))
     tf_starts = tf_ends - np.diff(np.concatenate([[0], tf_ends]))
-    dl_starts = dl_ends - np.diff(np.concatenate([[0], dl_ends]))
 
     weights = bm25_weight(tfs, dls, avgdl, k1, b)
     bs_rows = np.flatnonzero(block_start)  # global block start rows
@@ -209,52 +202,81 @@ def encode_postings_many(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     for t in range(n_terms):
         s, e = int(offsets[t]), int(offsets[t + 1])
         if s == e:
-            out.append(EncodedPostings(b"", b"", b"", []))
+            out.append(EncodedPostings(b"", b"", []))
             continue
-        d0, t0, l0 = int(doc_starts[s]), int(tf_starts[s]), int(dl_starts[s])
+        d0, t0 = int(doc_starts[s]), int(tf_starts[s])
         d1 = int(doc_ends[e - 1])
         t1 = int(tf_ends[e - 1])
-        l1 = int(dl_ends[e - 1])
         blocks = []
         for bi in range(int(term_first_block[t]), int(term_last_block[t])):
             r0, r1 = int(bs_rows[bi]), int(block_end_row[bi])
             blocks.append(Block(
                 int(doc_ids[r0]), int(doc_ids[r1]), r1 - r0 + 1,
                 int(doc_starts[r0]) - d0, int(tf_starts[r0]) - t0,
-                int(dl_starts[r0]) - l0, float(block_max[bi]),
+                float(block_max[bi]),
             ))
         out.append(EncodedPostings(
-            docs_b[d0:d1].tobytes(), tfs_b[t0:t1].tobytes(),
-            dls_b[l0:l1].tobytes(), blocks,
+            docs_b[d0:d1].tobytes(), tfs_b[t0:t1].tobytes(), blocks,
         ))
     return out
 
 
-def decode_block(enc: EncodedPostings | tuple, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode one block -> (doc_ids, tfs, dls); random access via offsets."""
-    docs_b, tfs_b, dls_b, blocks = enc[0], enc[1], enc[2], enc[3]
-    blk = blocks[bi]
-    first, _, n, doff, toff, loff = blk[0], blk[1], blk[2], blk[3], blk[4], blk[5]
-    gaps = varbyte_decode(docs_b, doff, n).astype(np.int64)
-    ids = np.empty(n, dtype=np.int64)
-    ids[0] = gaps[0]
-    if n > 1:
-        ids[1:] = gaps[1:] + 1
-        np.cumsum(ids, out=ids)
-    tfs = varbyte_decode(tfs_b, toff, n).astype(np.int64)
-    dls = varbyte_decode(dls_b, loff, n).astype(np.int64)
-    return ids, tfs, dls
+def delta_encode(vals: np.ndarray, firsts: np.ndarray) -> np.ndarray:
+    """Concatenated ascending runs -> varbyte-ready gaps: absolute at each
+    run start (``firsts`` boolean mask), (delta - 1) elsewhere."""
+    gaps = np.empty(vals.size, dtype=np.int64)
+    gaps[firsts] = vals[firsts]
+    rest = ~firsts
+    gaps[rest] = vals[rest] - vals[np.flatnonzero(rest) - 1] - 1
+    assert np.all(gaps >= 0), "runs must be strictly increasing"
+    return gaps.astype(np.uint64)
 
 
-def decode_all(enc: EncodedPostings | tuple) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode every block of a term's postings."""
-    blocks = enc[3]
-    parts = [decode_block(enc, i) for i in range(len(blocks))]
-    if not parts:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    return (
-        np.concatenate([p[0] for p in parts]),
-        np.concatenate([p[1] for p in parts]),
-        np.concatenate([p[2] for p in parts]),
-    )
+def delta_decode(raw: np.ndarray, firsts: np.ndarray) -> np.ndarray:
+    """Inverse of :func:`delta_encode` via one grouped cumsum."""
+    if raw.size == 0:
+        return raw.astype(np.int64)
+    adj = raw.astype(np.int64) + 1
+    adj[firsts] = raw[firsts]
+    c = np.cumsum(adj)
+    starts = np.flatnonzero(firsts)
+    run_id = np.cumsum(firsts) - 1
+    prefix = (c[starts] - adj[starts])[run_id]
+    return c - prefix
+
+
+def block_starts(ns: np.ndarray) -> np.ndarray:
+    """Boolean mask over a term's postings: True at each block's first
+    entry, for blocks of ``ns`` entries (the directory's ``n`` column)."""
+    ns = np.asarray(ns, dtype=np.int64)
+    firsts = np.zeros(int(ns.sum()), dtype=bool)
+    firsts[np.cumsum(ns) - ns] = True
+    return firsts
+
+
+def decode_streams(docs_b, tfs_b, firsts: np.ndarray
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """A term's whole (doc_ids, tfs) in ONE varbyte + delta pass;
+    ``firsts`` marks the block starts (:func:`block_starts`, or every
+    ``block_size``-th entry: blocks are full but the last)."""
+    ids = delta_decode(varbyte_decode(docs_b), firsts)
+    return ids, varbyte_decode(tfs_b).astype(np.int64)
+
+
+def decode_ids(docs_b, block_size: int) -> np.ndarray:
+    """A term's doc ids from its ``postings`` bytes alone: every block but
+    the last holds ``block_size`` entries, so no directory is needed."""
+    gaps = varbyte_decode(docs_b)
+    return delta_decode(gaps, np.arange(gaps.size) % block_size == 0)
+
+
+def decode_range(docs_b: np.ndarray, tfs_b: np.ndarray, n: int,
+                 doc_span: tuple[int, int], tf_span: tuple[int, int]
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """One block of ``n`` entries whose bytes are ``docs_b[doc_span]`` and
+    ``tfs_b[tf_span]`` (``(start, end)`` pairs) -> (doc_ids, tfs)."""
+    firsts = np.zeros(n, dtype=bool)
+    firsts[0] = True
+    return decode_streams(docs_b[doc_span[0]:doc_span[1]],
+                          tfs_b[tf_span[0]:tf_span[1]], firsts)
+

@@ -2,10 +2,10 @@
 
 Every build writes positions, on the index's own rows rather than in a
 second dataset: each ``data/`` row (one ``(segment, lemma)``) carries a
-``pstream`` column next to ``postings/tfs/dls/blocks`` —
+``pstream`` column next to ``postings/tfs/blocks`` —
 
     index_dir/data/segment=K/bucket=B/*.parquet
-        (segment, lemma, df, postings, tfs, dls, blocks, pstream, bucket)
+        (segment, lemma, df, postings, tfs, blocks, pstream, bucket)
 
 ``pstream`` is the varbyte per-doc position deltas (first position
 absolute per doc, rest delta-1), concatenated in doc order; the docs and
@@ -39,7 +39,7 @@ the stats (``index/runs.py``), and the build's one merge
 (``builder.encode_index_runs``) encodes ``pstream``
 (:func:`encode_pstream`) in the group that encodes the postings.  An
 index of an older format may hold rows without positions; phrase serving
-refuses it (:func:`check_phrase_format`) until a resume rebuilds it.
+refuses it (``builder.check_format``) until a resume rebuilds it.
 Reference analog: none — the reference's index stores no positions
 (`lemma`/`index` tables, SearchEngine schema); its proximity rule is a
 post-AND substring heuristic (SearchServiceImpl.java:231-264).
@@ -53,7 +53,13 @@ from typing import TYPE_CHECKING
 import numpy as np
 
 from ..analyzer import analyze_positions
-from .codec import varbyte_decode, varbyte_encode_with_ends
+from .codec import (
+    decode_ids,
+    delta_decode,
+    delta_encode,
+    varbyte_decode,
+    varbyte_encode_with_ends,
+)
 from .wand import _mask_ids, _site_scopes
 
 if TYPE_CHECKING:
@@ -61,45 +67,6 @@ if TYPE_CHECKING:
 
 # what a positional read moves: the docs/counts streams and the positions
 POS_COLS = ("segment", "lemma", "postings", "tfs", "pstream")
-
-
-def check_phrase_format(meta: dict) -> None:
-    """Raise unless ``meta`` is of the current ``builder.INDEX_FORMAT``,
-    the only one whose every row carries ``pstream``: format 2 could hold
-    segments built without positions, and older indexes kept them in a
-    sidecar.  The library front end and ``QueryEngine`` both check here
-    before serving a phrase."""
-    from .builder import INDEX_FORMAT
-
-    if meta.get("format") != INDEX_FORMAT:
-        raise ValueError(
-            f"index format {meta.get('format')} may lack positions; rebuild "
-            f"it to format {INDEX_FORMAT} before serving phrases (a resumed "
-            "build_index rebuilds an older format whole)")
-
-
-def _delta_encode(vals: np.ndarray, firsts: np.ndarray) -> np.ndarray:
-    """Concatenated ascending runs -> varbyte-ready gaps: absolute at each
-    run start (``firsts`` boolean mask), (delta - 1) elsewhere."""
-    gaps = np.empty(vals.size, dtype=np.int64)
-    gaps[firsts] = vals[firsts]
-    rest = ~firsts
-    gaps[rest] = vals[rest] - vals[np.flatnonzero(rest) - 1] - 1
-    assert np.all(gaps >= 0), "runs must be strictly increasing"
-    return gaps.astype(np.uint64)
-
-
-def _delta_decode(raw: np.ndarray, firsts: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`_delta_encode` via one grouped cumsum."""
-    if raw.size == 0:
-        return raw.astype(np.int64)
-    adj = raw.astype(np.int64) + 1
-    adj[firsts] = raw[firsts]
-    c = np.cumsum(adj)
-    starts = np.flatnonzero(firsts)
-    run_id = np.cumsum(firsts) - 1
-    prefix = (c[starts] - adj[starts])[run_id]
-    return c - prefix
 
 
 def encode_pstream(pos: np.ndarray, tfs: np.ndarray, order: np.ndarray,
@@ -121,7 +88,7 @@ def encode_pstream(pos: np.ndarray, tfs: np.ndarray, order: np.ndarray,
     first_pos[dst] = True
     # one vectorized varbyte pass; a lemma's bytes are the slice between
     # its first and last value's byte ends
-    buf, ends = varbyte_encode_with_ends(_delta_encode(flat, first_pos))
+    buf, ends = varbyte_encode_with_ends(delta_encode(flat, first_pos))
     at = np.append(0, ends)[np.append(dst, flat.size)[offsets]]
     return [buf[i:j].tobytes() for i, j in zip(at[:-1], at[1:])]
 
@@ -134,13 +101,12 @@ def decode_term_positions(postings: bytes, tfs: bytes, pstream: bytes,
     cumsum(counts) - counts``; each doc's sublist is strictly increasing.
     ``postings`` restarts absolute every ``block_size`` docs (the codec's
     block layout), so no block directory is needed to decode it."""
+    docs = decode_ids(postings, block_size)
     counts = varbyte_decode(tfs).astype(np.int64)
-    docs = _delta_decode(varbyte_decode(postings),
-                         np.arange(counts.size) % block_size == 0)
     firsts = np.zeros(int(counts.sum()), dtype=bool)
     if firsts.size:
         firsts[np.cumsum(counts) - counts] = True
-    flat = _delta_decode(varbyte_decode(pstream), firsts)
+    flat = delta_decode(varbyte_decode(pstream), firsts)
     return docs, counts, flat
 
 
@@ -235,11 +201,11 @@ def _phrase_segments(spark: SparkSession, index_dir: str,
     per qid, or None when no phrase can match."""
     import pandas as pd
 
-    from .builder import index_analyzer, isin_expr
+    from .builder import check_format, index_analyzer, isin_expr
 
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
-    check_phrase_format(meta)
+    check_format(meta)
     seg_size, block_size = int(meta["seg_size"]), int(meta["block_size"])
     ana = index_analyzer(spark, index_dir, meta)
     qpat = {qid: [frozenset(p) for p in analyze_positions(ph, *ana)]

@@ -10,6 +10,13 @@ by doc_id, shipped as aligned primitive lists::
     pos   array<int>      occurrence positions, (doc, pos)-ascending, aligned
                           with ``repeat(docs, tfs)``
 
+The runs' dls are exact, so the merge computes every block-max weight
+from them; the written index stores no per-posting dl.  Each batch also
+ships one NORMS run per segment (lemma ``builder.NORMS_LEMMA``, bucket
+``builder.NORMS_BUCKET``): the batch's docs with dl > 0, with ``tfs`` =
+``dls`` = their lengths and no positions.  The same merge writes a
+segment's norms runs as its one norms row, which serving reads for dl.
+
 The analysis kernel (``analyzer.doc_term_runs_arrow``) forms runs in the
 same Python pass that tokenized the batch — one numpy lexsort per batch —
 so each merge-encode is ONE exchange of pre-sorted runs into its
@@ -37,19 +44,29 @@ RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
            "tfs array<int>, dls array<bigint>, pos array<int>")
 
 
-def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
-              n_buckets: int, pos: np.ndarray):
-    """Lemma occurrences of one batch -> one run per ``(segment, lemma)``
-    (a ``pyarrow.RecordBatch`` in :data:`RUN_DDL` order).
+def form_runs(ids: np.ndarray, dl: np.ndarray, par: np.ndarray, lemma,
+              pos: np.ndarray, seg_size: int, n_buckets: int) -> list:
+    """One batch's lemma occurrences -> its runs, as two
+    ``pyarrow.RecordBatch`` in :data:`RUN_DDL` order: one run per
+    ``(segment, lemma)``, then one NORMS run per segment.
 
-    ``doc``/``dl`` are int64 per occurrence, ``lemma`` an Arrow string
-    array and ``pos`` the occurrence positions; a run's tf is its
-    occurrence count per doc."""
+    ``ids``/``dl`` are the batch's doc ids and lengths (int64 per doc);
+    occurrence i belongs to doc ``par[i]``, has lemma ``lemma[i]`` (an
+    Arrow string array) and position ``pos[i]``.  A run's tf is its
+    occurrence count per doc.  The norms run of a segment carries
+    ``builder.NORMS_LEMMA`` in ``builder.NORMS_BUCKET``: its docs are the
+    segment's docs with dl > 0, its tfs and dls both their lengths, and it
+    has no positions.  A lemma equal to the reserved one raises."""
     import pyarrow as pa
 
-    from .builder import hash_bucket
+    from .builder import NORMS_BUCKET, NORMS_LEMMA, hash_bucket
 
+    doc = ids[par]
     enc = lemma.dictionary_encode()
+    names = enc.dictionary.to_pylist()
+    if NORMS_LEMMA in names:
+        raise ValueError(f"the analyzer emitted the reserved norms lemma "
+                         f"{NORMS_LEMMA!r}")
     code = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     # lemma-major, then doc, then pos: a (segment, lemma) run is
     # contiguous because the segment is monotone in doc within a lemma
@@ -68,20 +85,40 @@ def form_runs(doc: np.ndarray, lemma, dl: np.ndarray, seg_size: int,
     doc_off = pa.array(np.append(run_doc_at, doc_at.size).astype(np.int32))
     run_code = c[run_at]
     # one md5 per DISTINCT lemma of the batch
-    bucket = np.fromiter(
-        (hash_bucket(lm, n_buckets) for lm in enc.dictionary.to_pylist()),
-        dtype=np.int32, count=len(enc.dictionary))[run_code]
+    bucket = np.fromiter((hash_bucket(lm, n_buckets) for lm in names),
+                         dtype=np.int32, count=len(names))[run_code]
     occ_off = pa.array(np.append(run_at, n).astype(np.int32))
-    return pa.record_batch([
+    names_out = ["segment", "bucket", "lemma", "docs", "tfs", "dls", "pos"]
+    terms = pa.record_batch([
         pa.array(s[run_at].astype(np.int32)),
         pa.array(bucket),
         enc.dictionary.take(pa.array(run_code)),
         pa.ListArray.from_arrays(doc_off, pa.array(d[doc_at])),
         pa.ListArray.from_arrays(doc_off, pa.array(tfs)),
-        pa.ListArray.from_arrays(doc_off, pa.array(dl[order][doc_at])),
+        pa.ListArray.from_arrays(doc_off, pa.array(dl[par[order[doc_at]]])),
         pa.ListArray.from_arrays(occ_off,
                                  pa.array(pos[order].astype(np.int32))),
-    ], names=["segment", "bucket", "lemma", "docs", "tfs", "dls", "pos"])
+    ], names=names_out)
+
+    # the occurrences name at least one doc, so some dl is > 0
+    has = np.flatnonzero(dl > 0)
+    o = has[np.argsort(ids[has])]
+    nd, nl = ids[o], dl[o]
+    ns = nd // seg_size
+    seg_at = np.flatnonzero(np.append(True, ns[1:] != ns[:-1]))
+    k = seg_at.size
+    norm_off = pa.array(np.append(seg_at, nd.size).astype(np.int32))
+    norms = pa.record_batch([
+        pa.array(ns[seg_at].astype(np.int32)),
+        pa.array(np.full(k, NORMS_BUCKET, dtype=np.int32)),
+        pa.array([NORMS_LEMMA] * k, type=terms.column(2).type),
+        pa.ListArray.from_arrays(norm_off, pa.array(nd)),
+        pa.ListArray.from_arrays(norm_off, pa.array(nl.astype(np.int32))),
+        pa.ListArray.from_arrays(norm_off, pa.array(nl)),
+        pa.ListArray.from_arrays(pa.array(np.zeros(k + 1, dtype=np.int32)),
+                                 pa.array([], type=pa.int32())),
+    ], names=names_out)
+    return [terms, norms]
 
 
 def doc_stats(doc: np.ndarray, dl: np.ndarray, repo, sha_prefix,

@@ -37,6 +37,12 @@ observe, the terms' decode state and list lengths:
 The timing this rule rests on (cold/warm x 4k/40k docs, perfbench's query
 stream) is recorded in ROADMAP.md, direction 1.
 
+Postings hold doc ids and tfs only.  A doc's length comes from its
+segment's norms row (:class:`SegmentNorms`), looked up once per candidate
+set by :func:`_score_ids` — not once per (term, candidate).  Spark's
+segment groups read the norms row with the query lemmas; ``QueryEngine``
+holds a segment's norms for its load.
+
 Conjunctive queries replicate the reference's AND semantics (docs must carry
 every term) with the same block-skipping lookups, rarest term driving.
 """
@@ -50,22 +56,23 @@ from typing import TYPE_CHECKING
 import numpy as np
 
 from ..analyzer import analyze
-from .codec import decode_block
+from .codec import block_starts, decode_range, decode_streams
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
 
 class TermPostings:
-    """Decoded-on-demand view over one term's compressed postings."""
+    """Decoded-on-demand view over one term's compressed postings: its
+    doc ids and tfs (a doc's length comes from its segment's
+    :class:`SegmentNorms`)."""
 
-    __slots__ = ("docs_b", "tfs_b", "dls_b", "first", "last", "n", "doc_off",
-                 "tf_off", "dl_off", "max_w", "df", "_cache", "_full")
+    __slots__ = ("docs_b", "tfs_b", "first", "last", "n", "doc_off",
+                 "tf_off", "max_w", "df", "_cache", "_full")
 
-    def __init__(self, postings: bytes, tfs: bytes, dls: bytes, blocks, df: int):
+    def __init__(self, postings: bytes, tfs: bytes, blocks, df: int):
         self.docs_b = np.frombuffer(postings, dtype=np.uint8)
         self.tfs_b = np.frombuffer(tfs, dtype=np.uint8)
-        self.dls_b = np.frombuffer(dls, dtype=np.uint8)
         bl = list(blocks)
         get = (lambda b, k, i: b[k]) if bl and isinstance(bl[0], dict) else (lambda b, k, i: b[i])
         self.first = np.array([get(b, "first_doc", 0) for b in bl], dtype=np.int64)
@@ -73,16 +80,10 @@ class TermPostings:
         self.n = np.array([get(b, "n", 2) for b in bl], dtype=np.int64)
         self.doc_off = np.array([get(b, "doc_off", 3) for b in bl], dtype=np.int64)
         self.tf_off = np.array([get(b, "tf_off", 4) for b in bl], dtype=np.int64)
-        self.dl_off = np.array([get(b, "dl_off", 5) for b in bl], dtype=np.int64)
-        self.max_w = np.array([get(b, "max_weight", 6) for b in bl], dtype=np.float64)
+        self.max_w = np.array([get(b, "max_weight", 5) for b in bl], dtype=np.float64)
         self.df = df
         self._cache: dict[int, tuple] = {}
         self._full: tuple | None = None  # memoized decode_all result
-
-    def _enc(self):
-        blocks = list(zip(self.first, self.last, self.n, self.doc_off,
-                          self.tf_off, self.dl_off))
-        return (self.docs_b, self.tfs_b, self.dls_b, blocks)
 
     @property
     def decoded(self) -> bool:
@@ -90,28 +91,30 @@ class TermPostings:
         return self._full is not None
 
     def block(self, i: int):
+        """Block ``i``'s (doc_ids, tfs), decoded from its byte ranges."""
         if i not in self._cache:
-            self._cache[i] = decode_block(self._enc(), i)
+            last = i + 1 == self.n.size
+            self._cache[i] = decode_range(
+                self.docs_b, self.tfs_b, int(self.n[i]),
+                (int(self.doc_off[i]),
+                 self.docs_b.size if last else int(self.doc_off[i + 1])),
+                (int(self.tf_off[i]),
+                 self.tfs_b.size if last else int(self.tf_off[i + 1])))
         return self._cache[i]
 
     def decode_all(self):
+        """Every (doc_id, tf), in one varbyte + delta pass per stream."""
         if self._full is None:
-            parts = [self.block(i) for i in range(self.first.size)]
-            if not parts:
-                z = np.zeros(0, dtype=np.int64)
-                self._full = (z, z, z)
-            else:
-                self._full = tuple(
-                    np.concatenate([p[j] for p in parts]) for j in range(3)
-                )
+            self._full = decode_streams(self.docs_b, self.tfs_b,
+                                        block_starts(self.n))
             # every lookup now takes the flat-array path, so the per-block
             # cache is dead weight — dropping it halves the decoded-postings
             # memory a warm term pins in the serving LRU
             self._cache.clear()
         return self._full
 
-    def lookup(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(tf, dl) aligned to sorted ``ids`` (0 where absent); decodes only
+    def lookup(self, ids: np.ndarray) -> np.ndarray:
+        """tf aligned to sorted ``ids`` (0 where absent); decodes only
         blocks whose [first_doc, last_doc] range intersects ``ids``.
 
         Fully-decoded fast path: once every block is cached (pass 1 of any
@@ -121,32 +124,46 @@ class TermPostings:
         per-block Python overhead (8+ numpy calls × blocks × terms)
         dominating repeated-query latency."""
         tf_out = np.zeros(ids.size, dtype=np.int64)
-        dl_out = np.zeros(ids.size, dtype=np.int64)
         if ids.size == 0 or self.first.size == 0:
-            return tf_out, dl_out
+            return tf_out
         if self._full is None and len(self._cache) == self.first.size:
             self.decode_all()  # all blocks cached: memoize the flat view
         if self._full is not None:
-            a_ids, a_tfs, a_dls = self._full
+            a_ids, a_tfs = self._full
             pos = np.searchsorted(a_ids, ids)
             pos[pos == a_ids.size] = 0  # any in-range index; masked below
             hit = a_ids[pos] == ids
             tf_out[hit] = a_tfs[pos[hit]]
-            dl_out[hit] = a_dls[pos[hit]]
-            return tf_out, dl_out
+            return tf_out
         # candidate block index for each id: rightmost block with first<=id
         bi = np.searchsorted(self.first, ids, side="right") - 1
         ok = (bi >= 0) & (ids <= self.last[np.clip(bi, 0, None)])
         for blk in np.unique(bi[ok]):
-            b_ids, b_tfs, b_dls = self.block(int(blk))
+            b_ids, b_tfs = self.block(int(blk))
             sel = ok & (bi == blk)
             pos = np.searchsorted(b_ids, ids[sel])
             pos = np.clip(pos, 0, b_ids.size - 1)
             hit = b_ids[pos] == ids[sel]
-            rows = np.flatnonzero(sel)[hit]
-            tf_out[rows] = b_tfs[pos[hit]]
-            dl_out[rows] = b_dls[pos[hit]]
-        return tf_out, dl_out
+            tf_out[np.flatnonzero(sel)[hit]] = b_tfs[pos[hit]]
+        return tf_out
+
+
+class SegmentNorms:
+    """One segment's doc lengths, decoded once from its norms row
+    (``builder.NORMS_LEMMA``): ``norms(ids)`` is each doc id's dl.  Held
+    dense over the row's id range, so a lookup is one gather."""
+
+    __slots__ = ("lo", "dl")
+
+    def __init__(self, postings: bytes, tfs: bytes, blocks):
+        ids, dls = TermPostings(postings, tfs, blocks, 0).decode_all()
+        self.lo = int(ids[0]) if ids.size else 0
+        self.dl = np.zeros(int(ids[-1]) - self.lo + 1 if ids.size else 0,
+                           dtype=np.int32)
+        self.dl[ids - self.lo] = dls
+
+    def __call__(self, ids: np.ndarray) -> np.ndarray:
+        return self.dl[ids - self.lo]
 
 
 def _idf(n_docs: int, df: int) -> float:
@@ -154,15 +171,19 @@ def _idf(n_docs: int, df: int) -> float:
 
 
 def _score_ids(ids: np.ndarray, terms: list[TermPostings], idfs: list[float],
-               k1: float, b: float, avgdl: float) -> np.ndarray:
-    """Exact BM25 scores for sorted candidate ids (block-skipping lookups)."""
+               norms: SegmentNorms, k1: float, b: float,
+               avgdl: float) -> np.ndarray:
+    """Exact BM25 scores for sorted candidate ids (block-skipping tf
+    lookups); each candidate's length norm is computed once, not once per
+    term."""
     scores = np.zeros(ids.size, dtype=np.float64)
+    norm = k1 * ((1.0 - b) + b * norms(ids) / avgdl)
     for t, idf in zip(terms, idfs):
-        tf, dl = t.lookup(ids)
+        tf = t.lookup(ids)
         nz = tf > 0
         w = np.zeros(ids.size)
         tff = tf[nz].astype(np.float64)
-        w[nz] = tff / (tff + k1 * ((1.0 - b) + b * dl[nz] / avgdl))
+        w[nz] = tff / (tff + norm[nz])
         scores += idf * (k1 + 1.0) * w
     return scores
 
@@ -211,15 +232,16 @@ def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.n
     return ids[order], scores[order]
 
 
-def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
+def segment_topk_terms(terms: list[TermPostings], norms: SegmentNorms,
+                       n_docs: int, avgdl: float,
                        k: int, k1: float = 1.2, b: float = 0.75,
                        conjunctive: bool = False,
                        intervals: list[tuple[int, int]] | None = None,
                        ) -> tuple[np.ndarray, np.ndarray]:
     """Local top-k for one segment over its query terms' ``TermPostings``
-    (df global, for idf).  The warm-serving path reuses cached objects so
-    their decoded postings survive across queries (repeated terms never
-    re-decode).  MaxScore runs when every term is already decoded and the
+    (df global, for idf) and the segment's ``norms``.  The warm-serving
+    path reuses cached objects so their decoded postings survive across
+    queries (repeated terms never re-decode).  MaxScore runs when every term is already decoded and the
     shortest list is under half the longest, exhaustive otherwise (module
     docstring).
 
@@ -239,7 +261,7 @@ def segment_topk_terms(terms: list[TermPostings], n_docs: int, avgdl: float,
         kernel = _maxscore
     else:
         kernel = _exhaustive
-    return kernel(terms, n_docs, avgdl, k, k1, b, intervals)
+    return kernel(terms, norms, n_docs, avgdl, k, k1, b, intervals)
 
 
 def _rarest_first(terms: list[TermPostings], n_docs: int
@@ -251,21 +273,21 @@ def _rarest_first(terms: list[TermPostings], n_docs: int
             [_idf(n_docs, terms[i].df) for i in order])
 
 
-def _exhaustive(terms, n_docs, avgdl, k, k1, b, intervals):
+def _exhaustive(terms, norms, n_docs, avgdl, k, k1, b, intervals):
     """Decode every term and score the (masked) union of their ids."""
     terms, idfs = _rarest_first(terms, n_docs)
     ids = _mask_ids(
         np.unique(np.concatenate([t.decode_all()[0] for t in terms])),
         intervals)
-    return _topk(ids, _score_ids(ids, terms, idfs, k1, b, avgdl), k)
+    return _topk(ids, _score_ids(ids, terms, idfs, norms, k1, b, avgdl), k)
 
 
-def _maxscore(terms, n_docs, avgdl, k, k1, b, intervals):
+def _maxscore(terms, norms, n_docs, avgdl, k, k1, b, intervals):
     """Pass 1 scores the rarest term's ids exactly; its kth score θ then
     decides which terms are essential, and only their ids are scored."""
     terms, idfs = _rarest_first(terms, n_docs)
     c1 = _mask_ids(terms[0].decode_all()[0], intervals)
-    s1 = _score_ids(c1, terms, idfs, k1, b, avgdl)
+    s1 = _score_ids(c1, terms, idfs, norms, k1, b, avgdl)
     theta = np.partition(s1, -k)[-k] if c1.size >= k else -np.inf
     ubs = np.array([idf * (k1 + 1.0) * (t.max_w.max() if t.max_w.size else 0.0)
                     for t, idf in zip(terms, idfs)])
@@ -285,10 +307,10 @@ def _maxscore(terms, n_docs, avgdl, k, k1, b, intervals):
     cand = _mask_ids(np.unique(np.concatenate(
         [terms[i].decode_all()[0] for i in sorted(essential)]
     )), intervals)
-    return _topk(cand, _score_ids(cand, terms, idfs, k1, b, avgdl), k)
+    return _topk(cand, _score_ids(cand, terms, idfs, norms, k1, b, avgdl), k)
 
 
-def _conjunctive(terms, n_docs, avgdl, k, k1, b, intervals):
+def _conjunctive(terms, norms, n_docs, avgdl, k, k1, b, intervals):
     """Docs carrying every term: the rarest term's ids, narrowed by
     block-skipping lookups into the others."""
     terms, idfs = _rarest_first(terms, n_docs)
@@ -296,17 +318,18 @@ def _conjunctive(terms, n_docs, avgdl, k, k1, b, intervals):
     for t in terms[1:]:
         if ids.size == 0:
             break  # early exit (SearchServiceImpl.java:136-138)
-        tf, _ = t.lookup(ids)
-        ids = ids[tf > 0]
-    return _topk(ids, _score_ids(ids, terms, idfs, k1, b, avgdl), k)
+        ids = ids[t.lookup(ids) > 0]
+    return _topk(ids, _score_ids(ids, terms, idfs, norms, k1, b, avgdl), k)
 
 
-def bm25_segment(seg: int, tps: dict[str, TermPostings], queries: dict,
-                 meta: dict, conjunctive: bool) -> list[tuple]:
+def bm25_segment(seg: int, tps: dict[str, TermPostings],
+                 norms: SegmentNorms, queries: dict, meta: dict,
+                 conjunctive: bool) -> list[tuple]:
     """The one per-segment BM25 scorer, run by Spark's segment groups and
     by :meth:`QueryEngine.topk_rows` alike: ``tps`` maps lemma -> this
-    segment's ``TermPostings``, ``queries`` qid -> (sorted lemmas, AND
-    arity, k + offset, site intervals, live segments).  Returns (qid, ids,
+    segment's ``TermPostings``, ``norms`` its doc lengths, ``queries``
+    qid -> (sorted lemmas, AND arity, k + offset, site intervals, live
+    segments).  Returns (qid, ids,
     scores) per query with hits here.  A query skips a segment its site
     cannot reach, and under ``conjunctive`` one that lacks a term found
     elsewhere in the index."""
@@ -318,8 +341,8 @@ def bm25_segment(seg: int, tps: dict[str, TermPostings], queries: dict,
         if not terms or (conjunctive and len(terms) < arity):
             continue
         ids, scores = segment_topk_terms(
-            terms, meta["n_docs"], meta["avgdl"], kk, meta["k1"], meta["b"],
-            conjunctive, intervals)
+            terms, norms, meta["n_docs"], meta["avgdl"], kk, meta["k1"],
+            meta["b"], conjunctive, intervals)
         out.append((qid, ids, scores))
     return out
 
@@ -448,10 +471,12 @@ class _ByteLRU:
 
 class QueryEngine:
     """Warm serving wrapper: caches meta, one listing of the index's
-    ``data/`` files and driver-side LRUs of decoded term and positional
-    rows.  The local route launches no Spark job: df lookups and posting
-    fetches are driver-side Arrow reads of the listed files of the lemmas'
-    buckets (:meth:`_scan`), and a repeated query reads nothing.
+    ``data/`` files, driver-side LRUs of decoded term and positional
+    rows, and the norms of every segment it has scored (held for the
+    load, outside the LRUs' byte budgets: 4 B per doc id).  The local
+    route launches no Spark job: df lookups and posting fetches are
+    driver-side Arrow reads of the listed files of the lemmas' buckets
+    (:meth:`_scan`), and a repeated query reads nothing.
 
     It pins no Spark cache.  Only the distributed routes run Spark, over
     one uncached frame of ``data/`` (:attr:`index_df`, built when a route
@@ -465,7 +490,7 @@ class QueryEngine:
     by entries and bytes.  Every query first checks
     :func:`index_fingerprint`: an incremental rebuild under a live engine
     re-lists the index and drops the warm rows instead of silently serving
-    stale postings."""
+    stale postings or norms."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  preload_dict: bool = False, term_cache_size: int = 4096,
@@ -513,40 +538,53 @@ class QueryEngine:
         self._pos_cache = _ByteLRU(*self._pos_bounds)
         self._gdf_cache: dict[str, int] = {}  # lemma -> global df (tiny rows)
         self._site_cache: dict[str, list[tuple[int, int]]] = {}
+        self._norms: dict[int, SegmentNorms] = {}
         self._gdf: dict[str, int] | None = None
         if self._preload_dict:
             from pyspark.sql import functions as F
 
+            from .builder import read_index
+
             self._gdf = {
                 r["lemma"]: int(r["gdf"])
-                for r in self.index_df.groupBy("lemma")
-                .agg(F.sum("df").alias("gdf")).collect()
+                for r in read_index(self.spark, self.index_dir,
+                                    columns=("lemma", "df"))
+                .groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()
             }
 
     @property
     def index_df(self) -> DataFrame:
-        """The index as one uncached Spark frame for the distributed routes,
-        built on first use per load.  Spark lists ``data/`` itself: past 32
-        root paths it would list the engine's files in a Spark job.  Never
-        cached: a cached relation is materialized whole by its first read,
-        and the driver LRUs already serve repeats."""
+        """The index, norms rows included, as one uncached Spark frame for
+        the distributed routes, built on first use per load.  Spark lists
+        ``data/`` itself: past 32 root paths it would list the engine's
+        files in a Spark job.  Never cached: a cached relation is
+        materialized whole by its first read, and the driver LRUs already
+        serve repeats."""
         if self._index_df is None:
             from .builder import INDEX_OUT_SCHEMA, read_index
 
             self._index_df = read_index(self.spark, self.index_dir,
-                                        columns=tuple(INDEX_OUT_SCHEMA.names))
+                                        columns=tuple(INDEX_OUT_SCHEMA.names),
+                                        norms=True)
         return self._index_df
 
     def _check_fresh(self) -> None:
+        """Every serving call starts here: reload after a rebuild, and
+        refuse an index of another format (``builder.check_format``)."""
+        from .builder import check_format
+
         if index_fingerprint(self.index_dir) != self._fp:
             self._load()
+        check_format(self.meta)
 
     def _read(self, lemmas: list[str]) -> DataFrame:
-        """The distributed routes' input: ``lemmas``' posting rows of
-        :attr:`index_df`, pruned as ``read_index(lemmas)`` prunes them."""
-        from .builder import prune_index
+        """The distributed routes' input: ``lemmas``' posting rows and the
+        norms rows of :attr:`index_df`, pruned as ``read_index(lemmas,
+        norms=True)`` prunes them."""
+        from .builder import NORMS_LEMMA, prune_index
 
-        return prune_index(self.index_df, lemmas, self.meta["n_buckets"])
+        return prune_index(self.index_df, [NORMS_LEMMA, *lemmas],
+                           self.meta["n_buckets"])
 
     def _scan(self, lemmas: list[str], columns):
         """``lemmas``' rows of the files listed at load, as Arrow record
@@ -620,7 +658,7 @@ class QueryEngine:
         ``forms``' positional rows (a lemma in both is one row).  A column
         that no cache wants for a lemma is dropped as its row arrives, so
         a topk-only term keeps no positional bytes on the driver and a
-        form-only lemma no dls or block directory.  Entries are cached
+        form-only lemma no block directory.  Entries are cached
         DECODED per (lemma, segment), global df baked in for idf, so a
         repeat costs neither a read nor a varbyte decode; bytes are
         counted compressed.  The floors keep each cache's current working
@@ -632,14 +670,14 @@ class QueryEngine:
         want = sorted(tset | fset)
         cols = ["segment", "lemma", "df", "postings", "tfs"]
         if tset:
-            cols += ["dls", "blocks"]
+            cols.append("blocks")
         if fset:
             cols.append("pstream")
         rows: dict[str, list] = {t: [] for t in want}
         for batch in self._scan(want, cols):
             for r in batch.to_pylist():
                 if r["lemma"] not in tset:
-                    r["dls"] = r["blocks"] = None
+                    r["blocks"] = None
                 if r["lemma"] not in fset:
                     r["pstream"] = None
                 rows[r["lemma"]].append(r)
@@ -647,9 +685,9 @@ class QueryEngine:
             self._gdf_cache[lemma] = sum(r["df"] for r in rs)
         for lemma in terms:
             entries = [(lemma, r["segment"],
-                        TermPostings(r["postings"], r["tfs"], r["dls"],
-                                     r["blocks"], self._gdf_cache[lemma]),
-                        len(r["postings"]) + len(r["tfs"]) + len(r["dls"]))
+                        TermPostings(r["postings"], r["tfs"], r["blocks"],
+                                     self._gdf_cache[lemma]),
+                        len(r["postings"]) + len(r["tfs"]))
                        for r in rows[lemma]]
             self._term_cache.put(lemma, entries, sum(e[3] for e in entries))
         seg_size = int(self.meta["seg_size"])
@@ -667,6 +705,26 @@ class QueryEngine:
             self._term_cache.evict(tfloor)
         if fset:
             self._pos_cache.evict(pfloor)
+
+    def _segment_norms(self, segs) -> dict[int, SegmentNorms]:
+        """The norms of ``segs``, read once per load: a segment not yet
+        held costs one driver-side Arrow read of its norms partition
+        (``builder.NORMS_BUCKET``), no term bucket and no Spark job."""
+        from .builder import NORMS_BUCKET, NORMS_LEMMA, scan_index
+
+        missing = set(segs) - self._norms.keys()
+        if missing:
+            files = {NORMS_BUCKET: [
+                f for f in self._files.get(NORMS_BUCKET, ())
+                if int(f.rsplit("/segment=", 1)[1].split("/", 1)[0])
+                in missing]}
+            for batch in scan_index(self.index_dir, files, [NORMS_LEMMA],
+                                    self.meta["n_buckets"],
+                                    ("segment", "postings", "tfs", "blocks")):
+                for r in batch.to_pylist():
+                    self._norms[r["segment"]] = SegmentNorms(
+                        r["postings"], r["tfs"], r["blocks"])
+        return self._norms
 
     def _warm(self, cache: _ByteLRU, keys: list[str], bpp: float,
               index_bytes: int | None, threshold: int, fetch) -> bool:
@@ -708,15 +766,9 @@ class QueryEngine:
         reads the engine's :attr:`index_df` and site cache (no listing)."""
         from ..analyzer import analyze_positions
         from .builder import prune_index
-        from .positions import (
-            POS_COLS,
-            check_phrase_format,
-            phrase_segment,
-            phrase_topk_positions,
-        )
+        from .positions import POS_COLS, phrase_segment, phrase_topk_positions
 
         self._check_fresh()
-        check_phrase_format(self.meta)
         qpat = [frozenset(p) for p in analyze_positions(phrase, *self._ana)]
         if not qpat:
             return []
@@ -797,14 +849,12 @@ class QueryEngine:
         working set.  ``sites`` additionally warms the site-interval cache
         so site-scoped queries skip their sidecar read."""
         from ..analyzer import analyze_positions
-        from .positions import check_phrase_format
 
         self._check_fresh()
         self._scopes({s: s for s in sites or ()})
         lemmas = sorted({t for q in queries for t in analyze(q, *self._ana)})
         forms = []
         if phrases:
-            check_phrase_format(self.meta)
             forms = sorted({f for ph in phrases
                             for fs in analyze_positions(ph, *self._ana)
                             for f in fs})
@@ -865,9 +915,10 @@ class QueryEngine:
             by_seg.setdefault(seg, {})[lemma] = tp
         arity = len({lemma for lemma, _, _, _ in entries})
         qs = {"q": (qlemmas, arity, k + offset, *scopes["q"])}
+        norms = self._segment_norms(by_seg)
         merged = [(d, s) for seg, tps in by_seg.items()
                   for _, ids, scores in bm25_segment(
-                      seg, tps, qs, self.meta, conjunctive)
+                      seg, tps, norms[seg], qs, self.meta, conjunctive)
                   for d, s in zip(ids.tolist(), scores.tolist())]
         merged.sort(key=lambda t: (-t[1], t[0]))
         return merged[offset:k + offset]
@@ -883,17 +934,25 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
                    ) -> DataFrame | None:
     """The one front end of :func:`bm25_topk` and :func:`bm25_topk_batch`:
     analyze every query, resolve its site scope, read the union of the
-    lemmas' rows bucket-pruned (pruned to the scopes' segments when every
-    query is scoped), take the global df, and score each segment with
-    :func:`bm25_segment` in one ``applyInPandas`` group.  Returns the
+    lemmas' rows and the norms rows bucket-pruned (pruned to the scopes'
+    segments when every query is scoped), take the global df, and score
+    each segment with :func:`bm25_segment` in one ``applyInPandas``
+    group.  Returns the
     (qid, doc_id, score) frame of every segment's top-(offset+k) per qid,
     or None when no query can match."""
-    from .builder import index_analyzer, isin_expr, read_index
+    from .builder import (
+        NORMS_LEMMA,
+        check_format,
+        index_analyzer,
+        isin_expr,
+        read_index,
+    )
 
     if any(v < 0 for v in offsets.values()):
         raise ValueError("offsets must be >= 0")
     with open(f"{index_dir}/meta.json") as fh:
         meta = json.load(fh)
+    check_format(meta)
     ana = index_analyzer(spark, index_dir, meta)
     qmap = {qid: sorted(set(analyze(q, *ana))) for qid, q in queries.items()}
     scopes, union = _site_scopes(
@@ -904,7 +963,7 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
         return None
     all_lemmas = sorted({t for qid in scopes for t in qmap[qid]})
     idx = (index_df if index_df is not None
-           else read_index(spark, index_dir, all_lemmas))
+           else read_index(spark, index_dir, all_lemmas, norms=True))
     if union is not None:
         # partition pruning on segment=: a site's docs live only in the
         # segments its intervals overlap
@@ -927,11 +986,17 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
     def _seg(pdf):
         import pandas as pd
 
-        tps = {r.lemma: TermPostings(r.postings, r.tfs, r.dls, r.blocks,
-                                     int(gdf[r.lemma]))
-               for r in pdf.itertuples()}
-        hits = bm25_segment(int(pdf["segment"].iloc[0]), tps, qs, meta,
-                            conjunctive)
+        tps, nr = {}, None
+        for r in pdf.itertuples():
+            if r.lemma == NORMS_LEMMA:
+                nr = r
+            else:
+                tps[r.lemma] = TermPostings(r.postings, r.tfs, r.blocks,
+                                            int(gdf[r.lemma]))
+        # a segment holding none of the lemmas is a norms row alone
+        hits = (bm25_segment(int(pdf["segment"].iloc[0]), tps,
+                             SegmentNorms(nr.postings, nr.tfs, nr.blocks),
+                             qs, meta, conjunctive) if tps else [])
         return pd.DataFrame({
             "qid": [q for q, ids, _ in hits for _ in range(ids.size)],
             "doc_id": [d for _, ids, _ in hits for d in ids.tolist()],
@@ -1025,9 +1090,10 @@ def bm25_topk(spark: SparkSession, index_dir: str, query: str, k: int = 10,
     ordered merge that compiles to TakeOrderedAndProject — no per-qid
     window exchange.
 
-    ``index_df``: the query lemmas' index rows, read instead of a fresh
-    ``read_index(spark, dir, lemmas)`` (QueryEngine passes its pruned read
-    of the one listing it keeps); it must hold no other lemma's rows.
+    ``index_df``: the query lemmas' index rows and the norms rows, read
+    instead of a fresh ``read_index(spark, dir, lemmas, norms=True)``
+    (QueryEngine passes its pruned read of the one listing it keeps); it
+    must hold no other lemma's rows.
 
     ``site``/``offset`` complete the reference search API
     (ApiController.java `GET /api/search?query&site&offset&limit`): the

@@ -3,6 +3,7 @@
 The reference's schema is four JPA-mapped MySQL tables (SURVEY.md §1.1:
 ``site`` / ``page`` / ``lemma`` / ``index_table``, see model/*.java); here the
 same logical star is declared as Spark StructTypes over columnar storage.
+The physical index's schema of record is ``index.builder.INDEX_OUT_SCHEMA``.
 """
 
 from __future__ import annotations
@@ -47,38 +48,6 @@ LEMMA_SCHEMA = T.StructType(
         T.StructField("repo", T.StringType(), False),
         T.StructField("lemma", T.StringType(), False),
         T.StructField("df", T.LongType(), False),
-    ]
-)
-
-# Physical compressed index: per (term, bucket) sorted postings as
-# delta+varbyte binary with a block-max directory (SURVEY.md §4 item 1).
-BLOCK_SCHEMA = T.StructType(
-    [
-        T.StructField("first_doc", T.LongType(), False),
-        T.StructField("last_doc", T.LongType(), False),
-        T.StructField("max_tf", T.IntegerType(), False),
-        T.StructField("n", T.IntegerType(), False),
-    ]
-)
-INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("lemma", T.StringType(), False),
-        T.StructField("df", T.LongType(), False),
-        T.StructField("postings", T.BinaryType(), False),  # delta+varbyte docIDs
-        T.StructField("tfs", T.BinaryType(), False),  # varbyte tfs, same order
-        T.StructField("blocks", T.ArrayType(BLOCK_SCHEMA), False),
-    ]
-)
-
-# Per-partition checkpoint manifest (resume/lineage, SURVEY.md §4 item 5).
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("term_count", T.LongType(), False),
-        T.StructField("posting_count", T.LongType(), False),
-        T.StructField("input_sha256", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
     ]
 )
 

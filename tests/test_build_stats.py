@@ -23,6 +23,8 @@ from searchengine_spark.analyzer import analyze
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import (
     INDEX_OUT_SCHEMA,
+    NORMS_BUCKET,
+    NORMS_LEMMA,
     SITES_SCHEMA,
     build_index,
 )
@@ -57,14 +59,23 @@ def _oracle(spark, docs, idx):
             F.count("*").alias("docs"),
             F.expr("bit_xor(cast(conv(substring(sha256, 1, 15), 16, 10) "
                    "as bigint))").alias("sha_xor")).collect()}
-    data = (spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{idx}/data")
+    rows = (spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{idx}/data")
             if _has(idx, "data") else None)
+    data = (rows.filter(F.col("bucket") != NORMS_BUCKET)
+            if rows is not None else None)
     written = {
         r["segment"]: r for r in data.groupBy("segment").agg(
             F.count("*").alias("terms"), F.sum("df").alias("postings"),
-            F.sum(F.length("postings") + F.length("tfs")
-                  + F.length("dls")).alias("bytes")).collect()
+            F.sum(F.length("postings")
+                  + F.length("tfs")).alias("bytes")).collect()
     } if data is not None else {}
+    # one norms row per segment, in its own bucket
+    norms = {
+        r["segment"]: r for r in rows.filter(F.col("bucket") == NORMS_BUCKET)
+        .select("segment", "lemma", "df", "pstream",
+                (F.length("postings") + F.length("tfs")).alias("bytes"))
+        .collect()
+    } if rows is not None else {}
     # a positional fetch moves postings + tfs + pstream
     pos = {
         r["segment"]: r for r in data.filter(F.col("pstream").isNotNull())
@@ -80,7 +91,7 @@ def _oracle(spark, docs, idx):
         .groupBy("segment", "repo", "island")
         .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
         .select("segment", "repo", "lo", "hi").collect())
-    return lineage, written, pos, sites
+    return lineage, written, pos, sites, norms
 
 
 def _has(idx, sub):
@@ -92,14 +103,15 @@ def _has(idx, sub):
 def _check(spark, docs, idx):
     """Every manifest field, the meta stats and the sites rows equal the
     oracle queries.  Returns meta."""
-    lineage, written, pos, sites = _oracle(spark, docs, idx)
+    lineage, written, pos, sites, norms = _oracle(spark, docs, idx)
     with open(f"{idx}/meta.json") as fh:
         meta = json.load(fh)
     manifests = all_manifests(idx)
     assert [m["segment"] for m in manifests] == list(range(meta["n_segments"]))
     for m in manifests:
         s = m["segment"]
-        lin, wrt, p = lineage.get(s), written.get(s), pos.get(s)
+        lin, wrt, p, nr = (lineage.get(s), written.get(s), pos.get(s),
+                           norms.get(s))
         want = {
             "segment": s,
             "doc_count": lin["docs"] if lin else 0,
@@ -108,8 +120,19 @@ def _check(spark, docs, idx):
             "posting_bytes": wrt["bytes"] if wrt else 0,
             "input_sha_xor": (lin["sha_xor"] or 0) if lin else 0,
             "pos_posting_bytes": p["b"] if p else 0,
+            "norm_bytes": nr["bytes"] if nr else 0,
             "status": "done",
         }
+        # a segment with postings has its norms row, keyed by the
+        # reserved lemma, without positions; its df counts the docs
+        # with dl > 0
+        assert (nr is not None) == (wrt is not None), s
+        if nr is not None:
+            assert nr["lemma"] == NORMS_LEMMA and nr["pstream"] is None
+            assert nr["df"] == sum(
+                1 for r in docs.filter(F.floor(F.col("doc_id")
+                                               / meta["seg_size"]) == s)
+                .select("content").collect() if analyze(r["content"]))
         # every written row carries positions
         assert (p["p"] if p else 0) == want["posting_count"], s
         assert m == want, s
@@ -124,6 +147,7 @@ def _check(spark, docs, idx):
         assert meta["pos_bytes_per_posting"] == round(pos_b / pos_p, 3)
         assert meta["pos_posting_bytes"] == pos_b
     assert meta["has_positions"] is True
+    assert meta["norm_bytes"] == sum(r["bytes"] for r in norms.values())
     got_sites = sorted(tuple(r) for r in spark.read.schema(SITES_SCHEMA)
                        .parquet(f"{idx}/sites")
                        .select("segment", "repo", "lo", "hi").collect()
@@ -151,7 +175,7 @@ def test_stats_match_the_queries_they_replace(spark, tmp_path):
     assert meta["timings"]["scan_s"] >= 0
     meta = _check(spark, docs, idx)
     assert meta["avgdl"] == _avgdl(docs, N_DOCS)
-    _, _, _, sites = _oracle(spark, docs, idx)
+    sites = _oracle(spark, docs, idx)[3]
     islands = {}
     for s, repo, _, _ in sites:
         islands[(s, repo)] = islands.get((s, repo), 0) + 1

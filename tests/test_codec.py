@@ -8,12 +8,12 @@ from hypothesis import strategies as st
 
 from searchengine_spark.index.codec import (
     bm25_weight,
-    decode_all,
-    decode_block,
+    decode_ids,
     encode_postings,
     varbyte_decode,
     varbyte_encode,
 )
+from searchengine_spark.index.wand import TermPostings
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
@@ -45,17 +45,19 @@ def test_postings_roundtrip(ids_set, block_size):
     tfs = rng.integers(1, 1000, ids.size)
     dls = rng.integers(1, 5000, ids.size)
     enc = encode_postings(ids, tfs, dls, avgdl=1000.0, block_size=block_size)
-    d_ids, d_tfs, d_dls = decode_all(enc)
+    d_ids, d_tfs = TermPostings(*enc, ids.size).decode_all()
     assert d_ids.tolist() == ids.tolist()
     assert d_tfs.tolist() == tfs.tolist()
-    assert d_dls.tolist() == dls.tolist()
+    # the postings bytes alone give the ids (no directory needed)
+    assert decode_ids(enc.docs, block_size).tolist() == ids.tolist()
     # block directory invariants
     total = 0
+    tp = TermPostings(*enc, ids.size)
     for i, blk in enumerate(enc.blocks):
-        b_ids, b_tfs, b_dls = decode_block(enc, i)
+        b_ids, b_tfs = tp.block(i)
         assert blk.first_doc == b_ids[0] and blk.last_doc == b_ids[-1]
         assert blk.n == b_ids.size <= block_size
-        w = bm25_weight(b_tfs, b_dls, 1000.0)
+        w = bm25_weight(b_tfs, dls[total:total + blk.n], 1000.0)
         assert np.isclose(blk.max_weight, w.max())
         assert blk.max_weight >= w.max() - 1e-12  # upper bound property
         total += blk.n
@@ -67,7 +69,7 @@ def test_block_random_access_independent():
     enc = encode_postings(ids, np.ones(ids.size), np.ones(ids.size) * 50,
                           avgdl=50.0, block_size=128)
     # decoding block 2 alone must not need blocks 0-1
-    b_ids, _, _ = decode_block(enc, 2)
+    b_ids, _ = TermPostings(*enc, ids.size).block(2)
     assert b_ids.tolist() == ids[256:384].tolist()
 
 
@@ -103,5 +105,4 @@ def test_batch_encoder_byte_identical(term_id_sets, block_size):
         single = encode_postings(ids, tf, dl, 57.3, block_size=block_size)
         assert batch[t].docs == single.docs
         assert batch[t].tfs == single.tfs
-        assert batch[t].dls == single.dls
         assert batch[t].blocks == single.blocks

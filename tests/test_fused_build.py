@@ -19,6 +19,8 @@ from searchengine_spark.analyzer import analyze_positions, doc_term_runs_arrow
 from searchengine_spark.corpus import gen_corpus_local
 from searchengine_spark.index.builder import (
     INDEX_OUT_SCHEMA,
+    NORMS_BUCKET,
+    NORMS_LEMMA,
     build_index,
     encode_index_runs,
     hash_bucket,
@@ -32,6 +34,7 @@ from searchengine_spark.index.positions import (
 from searchengine_spark.schema import DOCS_SCHEMA
 from searchengine_spark.streaming.incremental import rebuild_segments
 from searchengine_spark.streaming.store import init_store, read_store
+from tests.artifacts import assert_same_artifact
 
 # camelCase splits, punctuation strips, stopwords, short tokens, digits,
 # pinned multi-lemma keys (норма, geese), porter suspects, empties
@@ -65,12 +68,14 @@ def _texts_df(spark):
 
 
 def _explode(runs):
-    """Runs -> (flat stat rows, flat occurrence rows), asserting on the way
-    that every run is strictly ascending in doc (in (doc, pos) for its
-    occurrences) and aligned: len(docs) == len(tfs) == len(dls), len(pos)
-    == Σ tfs."""
+    """Term runs -> (flat stat rows, flat occurrence rows), asserting on
+    the way that every run is strictly ascending in doc (in (doc, pos) for
+    its occurrences) and aligned: len(docs) == len(tfs) == len(dls),
+    len(pos) == Σ tfs.  Norms runs are skipped (:func:`_norm_dls`)."""
     stats, occ = [], []
     for r in runs:
+        if r["lemma"] == NORMS_LEMMA:
+            continue
         docs, tfs, dls = r["docs"], r["tfs"], r["dls"]
         assert len(docs) == len(tfs) == len(dls) >= 1
         assert all(a < b for a, b in zip(docs, docs[1:]))
@@ -84,13 +89,31 @@ def _explode(runs):
     return sorted(stats), sorted(occ)
 
 
+def _norm_dls(runs, seg_size):
+    """Norms runs -> {doc: dl}, asserting that each is one segment's docs,
+    strictly ascending, with tfs == dls > 0, no positions, in the norms
+    bucket, and that no doc appears twice."""
+    out = {}
+    for r in runs:
+        if r["lemma"] != NORMS_LEMMA:
+            continue
+        docs = r["docs"]
+        assert r["bucket"] == NORMS_BUCKET and r["pos"] == []
+        assert list(r["tfs"]) == list(r["dls"]) and min(r["dls"]) > 0
+        assert all(a < b for a, b in zip(docs, docs[1:]))
+        assert {d // seg_size for d in docs} == {r["segment"]}
+        assert not out.keys() & set(docs)
+        out.update(zip(docs, r["dls"]))
+    return out
+
+
 @pytest.mark.parametrize("norm,forms", NORMALIZERS,
                          ids=[n for n, _ in NORMALIZERS])
 def test_fused_kernel_parity(spark, norm, forms):
     """Exploded, the fused kernel's runs must be exactly the flat rows they
     summarize: stat rows == the logical index's tf and dl, occurrence
-    rows == the pure-Python analyze_positions oracle — per normalizer
-    family."""
+    rows == the pure-Python analyze_positions oracle, norms runs == each
+    doc's dl — per normalizer family."""
     from searchengine_spark.operators.tf_df import (
         doc_lengths,
         term_frequencies,
@@ -111,6 +134,7 @@ def test_fused_kernel_parity(spark, norm, forms):
         for f in fs)
     assert stats == want_stats
     assert occ == want_occ
+    assert _norm_dls(runs, 1000) == dl
     # internal consistency: tf per (doc, lemma) == its occurrence count,
     # dl per doc == Σ tf (the invariant that makes the fusion sound)
     from collections import Counter
@@ -157,9 +181,8 @@ def test_merge_plans_one_exchange_no_collect_list(spark):
 def _artifact_snapshot(spark, idx):
     data = sorted(
         (r["segment"], r["lemma"], r["df"], bytes(r["postings"]),
-         bytes(r["tfs"]), bytes(r["dls"]), tuple(map(tuple, r["blocks"])),
-         r["bucket"])
-        for r in read_index(spark, idx).collect())
+         bytes(r["tfs"]), tuple(map(tuple, r["blocks"])), r["bucket"])
+        for r in read_index(spark, idx, norms=True).collect())
     pos = sorted(
         (r["segment"], r["lemma"], bytes(r["postings"]), bytes(r["tfs"]),
          bytes(r["pstream"]))
@@ -190,6 +213,7 @@ def test_fused_build_byte_identical(spark, tmp_path, norm, forms):
     build_index(docs, fused, n_segments=3, salt=4, n_buckets=8, resume=False,
                 normalizer=norm, forms=forms)
 
+    assert_same_artifact(rebuilt, fused)
     d1, p1, m1 = _artifact_snapshot(spark, rebuilt)
     d2, p2, m2 = _artifact_snapshot(spark, fused)
     assert d2 == d1
@@ -209,10 +233,11 @@ def test_fused_build_byte_identical(spark, tmp_path, norm, forms):
 
 
 def _positional_rows(spark, idx):
-    """(rows with pstream, rows without) over the whole data/ dataset."""
+    """(rows with pstream, rows without) over the term rows of data/."""
     from pyspark.sql import functions as F
 
-    df = spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{idx}/data")
+    df = (spark.read.schema(INDEX_OUT_SCHEMA).parquet(f"{idx}/data")
+          .filter(F.col("bucket") != NORMS_BUCKET))
     return (df.filter(F.col("pstream").isNotNull()).count(),
             df.filter(F.col("pstream").isNull()).count())
 
@@ -351,12 +376,33 @@ def _plant_format2_positionless(idx):
             json.dump(m, fh)
 
 
+def _plant_format3(idx):
+    """A format-3 index: a dls stream per posting and no norms rows."""
+    import glob as _glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with open(f"{idx}/meta.json") as fh:
+        meta = json.load(fh)
+    meta["format"] = 3
+    with open(f"{idx}/meta.json", "w") as fh:
+        json.dump(meta, fh)
+    for f in _glob.glob(f"{idx}/data/segment=*/bucket=*/*.parquet"):
+        if f"/bucket={NORMS_BUCKET}/" in f:
+            os.unlink(f)
+            continue
+        t = pq.ParquetFile(f).read()
+        pq.write_table(t.append_column("dls", t.column("tfs")), f)
+
+
 def test_resume_over_old_layout_rebuilds_everything(spark, tmp_path):
     """An index of an older format — the sidecar layout (no format
-    marker), or format 2 with a segment built without positions — is never
-    mixed with this one: phrase serving refuses it, naming the rebuild,
-    and a resume rebuilds every segment, deletes the stale sidecar dirs
-    and leaves the artifacts of a fresh build."""
+    marker), format 2 with a segment built without positions, or format 3
+    with per-posting dls and no norms rows — is never mixed with this
+    one: BM25 and phrase serving refuse it, naming the rebuild, and a
+    resume rebuilds every segment, deletes the stale sidecar dirs and
+    leaves the artifacts of a fresh build."""
     from searchengine_spark.index.builder import INDEX_FORMAT
     from searchengine_spark.index.wand import QueryEngine, bm25_topk
 
@@ -369,7 +415,8 @@ def test_resume_over_old_layout_rebuilds_everything(spark, tmp_path):
     d0, p0, m0 = _artifact_snapshot(spark, fresh)
     phrase = "kw_pair_alpha kw_pair_beta"
 
-    for plant in (_plant_sidecar_layout, _plant_format2_positionless):
+    for plant in (_plant_sidecar_layout, _plant_format2_positionless,
+                  _plant_format3):
         idx = str(tmp_path / plant.__name__)
         build_index(docs, idx, n_segments=2, salt=4, n_buckets=8,
                     resume=False)
@@ -384,6 +431,12 @@ def test_resume_over_old_layout_rebuilds_everything(spark, tmp_path):
             eng.phrase_rows(phrase)
         with pytest.raises(ValueError, match="rebuild"):
             eng.prefetch([], phrases=[phrase])
+        with pytest.raises(ValueError, match="rebuild"):
+            bm25_topk(spark, idx, "tamok velsor", 10)
+        with pytest.raises(ValueError, match="rebuild"):
+            eng.topk_rows("tamok velsor", 10)
+        with pytest.raises(ValueError, match="rebuild"):
+            eng.topk_batch({"a": "tamok velsor"}, 10)
 
         meta = build_index(docs, idx)  # resume
         assert meta["format"] == INDEX_FORMAT, plant.__name__

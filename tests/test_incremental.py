@@ -111,8 +111,8 @@ def _surface_by_key(spark, index_dir, id_to_key):
     out: dict[str, set] = {}
     for r in read_index(spark, index_dir).collect():
         tp = TermPostings(bytes(r["postings"]), bytes(r["tfs"]),
-                          bytes(r["dls"]), r["blocks"], r["df"])
-        ids, tfs, _ = tp.decode_all()
+                          r["blocks"], r["df"])
+        ids, tfs = tp.decode_all()
         out.setdefault(r["lemma"], set()).update(
             (id_to_key[i], t) for i, t in zip(ids.tolist(), tfs.tolist()))
     return out

@@ -47,7 +47,7 @@ def env(spark, tmp_path_factory):
 
 def test_codec_roundtrip_randomized():
     rng = np.random.default_rng(7)
-    from searchengine_spark.index.positions import _delta_decode, _delta_encode
+    from searchengine_spark.index.codec import delta_decode, delta_encode
 
     for _ in range(25):
         n_docs = int(rng.integers(1, 40))
@@ -58,8 +58,8 @@ def test_codec_roundtrip_randomized():
         ]).astype(np.int64)
         firsts = np.zeros(flat.size, dtype=bool)
         firsts[np.cumsum(counts) - counts] = True
-        enc = _delta_encode(flat, firsts)
-        assert np.array_equal(_delta_decode(enc, firsts), flat)
+        enc = delta_encode(flat, firsts)
+        assert np.array_equal(delta_decode(enc, firsts), flat)
 
 
 def test_decode_term_positions_block_restarts():
@@ -67,7 +67,7 @@ def test_decode_term_positions_block_restarts():
     restarts absolute at every block: randomized lists over several blocks
     round-trip through encode_postings + the pstream delta codec."""
     from searchengine_spark.index.codec import encode_postings, varbyte_encode
-    from searchengine_spark.index.positions import _delta_encode
+    from searchengine_spark.index.codec import delta_encode
 
     rng = np.random.default_rng(11)
     for block_size in (1, 3, 4, 128):
@@ -81,7 +81,7 @@ def test_decode_term_positions_block_restarts():
         firsts[np.cumsum(counts) - counts] = True
         enc = encode_postings(docs, counts, counts, 5.0,
                               block_size=block_size)
-        pstream = varbyte_encode(_delta_encode(flat, firsts)).tobytes()
+        pstream = varbyte_encode(delta_encode(flat, firsts)).tobytes()
         d, c, f = decode_term_positions(enc.docs, enc.tfs, pstream,
                                         block_size)
         assert np.array_equal(d, docs)

@@ -56,9 +56,9 @@ def test_postings_roundtrip_vs_tf(spark, index_dir, logical_index, oracle):
         rows = read_index(spark, index_dir, [lemma]).collect()
         got = {}
         for r in rows:
-            tp = TermPostings(r["postings"], r["tfs"], r["dls"],
+            tp = TermPostings(r["postings"], r["tfs"],
                               [b.asDict() for b in r["blocks"]], r["df"])
-            ids, tfs, _ = tp.decode_all()
+            ids, tfs = tp.decode_all()
             got.update(dict(zip(ids.tolist(), tfs.tolist())))
         want = {d: c[lemma] for d, c in oracle.tf.items() if lemma in c}
         assert got == want
@@ -142,8 +142,11 @@ def test_exhaustive_matches_numpy_reference(spark, index_dir, oracle):
 
 
 def test_resume_skips_done_segments_and_is_identical(spark, docs, tmp_path):
-    """Kill-after-partial + resume => byte-identical index (SURVEY.md §5.5)."""
+    """Kill-after-partial + resume => byte-identical index (SURVEY.md §5.5):
+    every parquet file of data/ (norms rows included) and sites/."""
     import pathlib
+
+    from tests.artifacts import assert_same_artifact
 
     out1 = str(tmp_path / "full")
     build_index(docs, out1, n_segments=3, salt=4, n_buckets=4, block_size=32)
@@ -157,14 +160,7 @@ def test_resume_skips_done_segments_and_is_identical(spark, docs, tmp_path):
     pathlib.Path(f"{out2}/manifests/segment=1.json").unlink()
     build_index(docs, out2, n_segments=3, salt=4, n_buckets=4, block_size=32, resume=True)
 
-    a = read_index(spark, out1).orderBy("segment", "lemma").collect()
-    b = read_index(spark, out2).orderBy("segment", "lemma").collect()
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert (ra["segment"], ra["lemma"], ra["df"]) == (rb["segment"], rb["lemma"], rb["df"])
-        assert bytes(ra["postings"]) == bytes(rb["postings"])
-        assert bytes(ra["tfs"]) == bytes(rb["tfs"])
-        assert bytes(ra["dls"]) == bytes(rb["dls"])
+    assert_same_artifact(out1, out2)
 
 
 def test_query_engine_fast_path_equals_distributed(spark, index_dir):
@@ -204,12 +200,16 @@ def test_segment_topk_unit():
     import math
 
     from searchengine_spark.index.codec import encode_postings
+    from searchengine_spark.index.wand import SegmentNorms
 
     avgdl = 10.0
     e1 = encode_postings(np.array([1, 5, 9]), np.array([2, 1, 4]),
                          np.array([10, 10, 10]), avgdl)
     e2 = encode_postings(np.array([5, 9, 20]), np.array([1, 1, 1]),
                          np.array([10, 10, 10]), avgdl)
+    ids = np.arange(21)
+    en = encode_postings(ids, np.full(21, 10), np.full(21, 10), avgdl)
+    norms = SegmentNorms(en.docs, en.tfs, en.blocks)
     # dl == avgdl, so each term scores idf·tf·2.2/(tf + 1.2)
     idf = math.log(1.0 + (30 - 3 + 0.5) / (3 + 0.5))
     want = {9: idf * (4 * 2.2 / 5.2 + 2.2 / 2.2),
@@ -217,15 +217,15 @@ def test_segment_topk_unit():
 
     for kernel in ("cold", "decoded", "maxscore"):
         # fresh TermPostings per run, as each segment builds
-        terms = [TermPostings(e.docs, e.tfs, e.dls,
-                              [tuple(b) for b in e.blocks], 3)
+        terms = [TermPostings(e.docs, e.tfs, [tuple(b) for b in e.blocks], 3)
                  for e in (e1, e2)]
         if kernel == "decoded":
             for t in terms:
                 t.decode_all()
-        ids, sc = (_maxscore(terms, 30, avgdl, 2, 1.2, 0.75, None)
+        ids, sc = (_maxscore(terms, norms, 30, avgdl, 2, 1.2, 0.75, None)
                    if kernel == "maxscore" else
-                   segment_topk_terms(terms, n_docs=30, avgdl=avgdl, k=2))
+                   segment_topk_terms(terms, norms, n_docs=30, avgdl=avgdl,
+                                      k=2))
         # doc 9 (tf 4 + both terms) must beat doc 5 (1+1) and doc 1 (2)
         assert ids.tolist() == [9, 5], kernel
         assert sc.tolist() == pytest.approx([want[9], want[5]], rel=1e-12)
@@ -309,9 +309,10 @@ def _site_topk(eng, q, k, repo, route):
             tp.decode_all()
             by_seg.setdefault(seg, []).append(tp)
     m = eng.meta
-    merged = [(d, s) for terms in by_seg.values()
-              for ids, sc in [_maxscore(terms, m["n_docs"], m["avgdl"], k,
-                                        m["k1"], m["b"],
+    norms = eng._segment_norms(by_seg)
+    merged = [(d, s) for seg, terms in by_seg.items()
+              for ids, sc in [_maxscore(terms, norms[seg], m["n_docs"],
+                                        m["avgdl"], k, m["k1"], m["b"],
                                         eng._site_cache[repo])]
               for d, s in zip(ids.tolist(), sc.tolist())]
     merged.sort(key=lambda t: (-t[1], t[0]))

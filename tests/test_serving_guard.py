@@ -143,7 +143,7 @@ def test_gdf_cache_avoids_repeat_dict_jobs(spark, idx):
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
 
 
-POSTING_READ = ("segment", "lemma", "df", "postings", "tfs", "dls", "blocks",
+POSTING_READ = ("segment", "lemma", "df", "postings", "tfs", "blocks",
                 "pstream")
 
 
@@ -155,8 +155,8 @@ def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
     posting read, which never names a term or form the guard skipped."""
     from searchengine_spark.index import builder
 
-    queries, phrases = ["sorvel jordro", "lixpex"], ["veltadrolix hazlixsor"]
-    lemmas = ["hazlixsor", "jordro", "lixpex", "sorvel", "veltadrolix"]
+    queries, phrases = ["sorvel jordro", "lixpex"], ["veltadrolix hazmok"]
+    lemmas = ["hazmok", "jordro", "lixpex", "sorvel", "veltadrolix"]
     gdf = gdf_lookup(spark, pidx, lemmas)
     assert len(gdf) == 5
     reads = []
@@ -196,13 +196,13 @@ def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
     thr = int(min(gdf["sorvel"] * eng._bpp,
                   gdf["veltadrolix"] * eng._pos_bpp)) - 1
     assert max(gdf["jordro"], gdf["lixpex"]) * eng._bpp <= thr
-    assert gdf["hazlixsor"] * eng._pos_bpp <= thr
+    assert gdf["hazmok"] * eng._pos_bpp <= thr
     eng, n, got = setup("prefetch-skips", local_threshold_bytes=thr)
     assert n == 3 and got == [(lemmas, ("lemma", "df")),
-                              (["hazlixsor", "jordro", "lixpex"],
+                              (["hazmok", "jordro", "lixpex"],
                                POSTING_READ)]
     assert sorted(eng._term_cache) == ["jordro", "lixpex"]
-    assert list(eng._pos_cache) == ["hazlixsor"]
+    assert list(eng._pos_cache) == ["hazmok"]
     eng._fetch = lambda *a, **kw: (_ for _ in ()).throw(
         AssertionError("fetched a term prefetch skipped"))
     assert eng.topk_rows(queries[0], 5, local_threshold_bytes=thr) == (
@@ -211,9 +211,9 @@ def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
 
 def _term_entry(lemma, seg, tp, nb):
     return (lemma, seg, tp.docs_b.tobytes(), tp.tfs_b.tobytes(),
-            tp.dls_b.tobytes(), tp.first.tolist(), tp.last.tolist(),
-            tp.n.tolist(), tp.doc_off.tolist(), tp.tf_off.tolist(),
-            tp.dl_off.tolist(), tp.max_w.tolist(), tp.df, nb)
+            tp.first.tolist(), tp.last.tolist(), tp.n.tolist(),
+            tp.doc_off.tolist(), tp.tf_off.tolist(), tp.max_w.tolist(),
+            tp.df, nb)
 
 
 def _pos_entry(lemma, seg, occ, flat, mx, nb):
@@ -237,9 +237,9 @@ def _spark_entries(spark, index_dir, terms, forms):
     gdf = gdf_lookup(spark, index_dir, terms + forms)
     want_t = [
         _term_entry(r["lemma"], r["segment"],
-                    TermPostings(r["postings"], r["tfs"], r["dls"],
-                                 r["blocks"], gdf[r["lemma"]]),
-                    len(r["postings"]) + len(r["tfs"]) + len(r["dls"]))
+                    TermPostings(r["postings"], r["tfs"], r["blocks"],
+                                 gdf[r["lemma"]]),
+                    len(r["postings"]) + len(r["tfs"]))
         for r in read_index(spark, index_dir, terms).collect()]
     want_p = []
     for r in read_positions(spark, index_dir, forms).collect():
