@@ -28,11 +28,6 @@ def main() -> None:
     ap.add_argument("--synthetic", type=int, default=0, help="generate N synthetic docs")
     ap.add_argument("--out", required=True)
     ap.add_argument("--segments", type=int, default=8)
-    ap.add_argument("--salt", type=int, default=8,
-                    help="compatibility only: recorded in meta.json, no "
-                         "effect on the build (posting runs are bounded "
-                         "by the Arrow batch, merge groups by (segment, "
-                         "bucket))")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--store", default=None,
@@ -113,7 +108,7 @@ def main() -> None:
     from searchengine_spark.index.builder import build_index
 
     meta = build_index(
-        docs, args.out, n_segments=args.segments, salt=args.salt,
+        docs, args.out, n_segments=args.segments,
         n_buckets=args.buckets, block_size=args.block_size,
         resume=not args.no_resume, normalizer=normalizer, forms=forms,
     )

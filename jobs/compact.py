@@ -51,7 +51,7 @@ def run_compact(spark, store_dir: str, index_dir: str) -> dict:
     n_segments = max(1, -(-n // seg_size))
     meta = build_index(
         docs, index_dir, n_segments=n_segments,
-        salt=int(imeta["salt"]), n_buckets=int(imeta["n_buckets"]),
+        n_buckets=int(imeta["n_buckets"]),
         block_size=int(imeta["block_size"]), resume=False,
         normalizer=normalizer, forms=forms,
     )

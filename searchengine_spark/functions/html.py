@@ -7,7 +7,7 @@ corpus treats content as identity (SURVEY.md C6), but an HTML corpus needs
 real extraction, so these pure-Catalyst column functions pin a
 deterministic, SQL-expressible subset of Jsoup's behavior:
 
-- ``html_text``: drop <script>/<style> blocks and comments, strip every
+- ``html_text``: drop <script>/<style> elements and comments, strip every
   remaining tag, decode the common entities, collapse whitespace, trim.
 - ``html_title``: first <title> element's text, entity-decoded, trimmed.
 

@@ -7,11 +7,11 @@ over all segments that still need building):
     -> count / max(doc_id) / sha256 check       [one agg; aborts on a bad row]
     -> fused Arrow analyzer + run former: each batch is tokenized,
        normalized and lexsorted into one sorted run per (segment, lemma)
-       — aligned doc/tf/dl lists, hash bucket — in ONE mapInArrow; a
+       — aligned doc/tf lists, hash bucket — in ONE mapInArrow; a
        doc's tokens never leave its partition    [narrow, localCheckpoint]
     -> merge: groupBy(segment, BUCKET), per-lemma merge of the lemma's
-       runs in numpy, delta+varbyte encode + block-max directory and the
-       lemma's position stream                        [the ONE shuffle]
+       runs in numpy, delta+varbyte encode of the lemma's docs, tfs and
+       position stream                                [the ONE shuffle]
     -> write as the groups leave the merge, partitionBy(segment,
        bucket(lemma)), dynamic partition overwrite (already-done segments
        untouched, no repartition)                [partition-pruned reads]
@@ -28,9 +28,9 @@ keyed by the reserved lemma :data:`NORMS_LEMMA` in its own partition
 ``bucket=``:data:`NORMS_BUCKET`, in the same codec layout — ``postings``
 = the segment's doc ids with dl > 0, ``tfs`` = each doc's dl, ``pstream``
 null.  The analysis kernel emits its runs (index/runs.py) and the same
-merge writes it, so it costs no extra job; the block-max weights are
-computed from the runs' exact dls.  Serving reads a segment's norms row
-to score (index/wand.py); BM25 reads of a term's rows never touch it.
+merge writes it, so it costs no extra job.  No weight is stored: serving
+reads a segment's norms row to score, and derives MaxScore's term bounds
+from it (index/wand.py); BM25 reads of a term's rows never touch it.
 ``data/`` files keep min/max statistics on ``lemma`` only
 (:data:`DATA_WRITE_OPTIONS`), so no footer repeats a row's blobs.
 
@@ -47,8 +47,8 @@ list through one reducer key.  Here no reducer key is a lemma: a run holds
 at most one Arrow batch of postings (``maxRecordsPerBatch`` docs, formed
 map-side), and the merge groups by (segment, bucket), so a hot term shares
 its group with every other lemma of its bucket and its doc range is cut by
-the segments.  ``salt`` is kept only for layout compatibility — accepted,
-pinned and recorded in meta.json, with no effect on the build.
+the segments.  ``salt`` has no effect on the build (see
+:func:`build_index`).
 
 Doc-range SEGMENTS are the 10^12-file story: doc_id space is range-cut into
 ``n_segments``; each segment owns complete posting lists for its doc range,
@@ -79,16 +79,17 @@ from .runs import merge_sites
 if TYPE_CHECKING:
     from pyspark.sql import Column, DataFrame, SparkSession
 
-K1, B = 1.2, 0.75  # pinned BM25 params baked into block-max weights
+K1, B = 1.2, 0.75  # pinned BM25 params, recorded in meta for serving
 
 # meta["format"]: the layout this builder writes and reads — one data/
-# dataset whose every term row carries its positional stream, and one
-# norms row per segment instead of a per-posting dl stream.  Any other
-# format is rebuilt whole on resume and refused by serving
-# (:func:`check_format`): format 3 stored dls per posting and no norms,
-# format 2 could hold segments built without positions, and indexes
-# without the marker kept dict/ and positions/ sidecars beside data/.
-INDEX_FORMAT = 4
+# dataset whose every term row carries its positional stream, one norms
+# row per segment instead of a per-posting dl stream, and no block
+# directory.  Any other format is rebuilt whole on resume and refused by
+# serving (:func:`check_format`): format 4 stored a per-block directory
+# on every row, format 3 stored dls per posting and no norms, format 2
+# could hold segments built without positions, and indexes without the
+# marker kept dict/ and positions/ sidecars beside data/.
+INDEX_FORMAT = 5
 
 # the norms row's key: a lemma the analyzer never emits (the kernel
 # raises on it, build_index rejects a forms table producing it), in a
@@ -119,22 +120,6 @@ INDEX_OUT_SCHEMA = T.StructType(
         T.StructField("df", T.LongType(), False),
         T.StructField("postings", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),
-        T.StructField(
-            "blocks",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("first_doc", T.LongType(), False),
-                        T.StructField("last_doc", T.LongType(), False),
-                        T.StructField("n", T.IntegerType(), False),
-                        T.StructField("doc_off", T.IntegerType(), False),
-                        T.StructField("tf_off", T.IntegerType(), False),
-                        T.StructField("max_weight", T.DoubleType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
         # null on the norms rows only
         T.StructField("pstream", T.BinaryType(), True),
         T.StructField("bucket", T.IntegerType(), False),
@@ -181,14 +166,14 @@ def hash_bucket(lemma: str, n_buckets: int) -> int:
     return int.from_bytes(hashlib.md5(lemma.encode()).digest()[:4], "big") % n_buckets
 
 
-def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
+def encode_index_runs(runs: DataFrame, block_size: int,
                       stats=None) -> DataFrame:
     """Sorted runs -> encoded posting rows (:data:`INDEX_OUT_SCHEMA`), in
     ONE exchange: runs group by (segment, BUCKET) — n_segments x n_buckets
     well-sized groups (grouping by (segment, lemma) would mean one
     applyInPandas invocation per term, measured to dominate the build) —
-    and the per-lemma merge + delta/varbyte encode + block-max directory
-    runs vectorized inside each group.
+    and the per-lemma merge + delta/varbyte encode runs vectorized inside
+    each group.
 
     The runs' ``pos`` fill each row's ``pstream``
     (:func:`positions.encode_pstream`) in the same group, so the
@@ -221,8 +206,7 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         # all lemmas in a single vectorized codec pass.
         seg = int(pdf["segment"].iloc[0])
         bucket = int(pdf["bucket"].iloc[0])
-        # the norms group encodes one row (tfs = dls = each doc's dl);
-        # no reader uses its block weights
+        # the norms group encodes one row (tfs = each doc's dl)
         norms = bucket == NORMS_BUCKET
         lens = np.fromiter((len(a) for a in pdf["docs"]), dtype=np.int64,
                            count=len(pdf))
@@ -230,15 +214,14 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
         rid = np.repeat(codes, lens)
         docs = np.concatenate(pdf["docs"].to_list()).astype(np.int64)
         tfs = np.concatenate(pdf["tfs"].to_list()).astype(np.int64)
-        dls = np.concatenate(pdf["dls"].to_list()).astype(np.int64)
         order = np.lexsort((docs, rid))
         counts = np.bincount(rid, minlength=len(lemmas))
         offsets = np.concatenate([[0], np.cumsum(counts)])
         pstream = [None] if norms else encode_pstream(
             np.concatenate(pdf["pos"].to_list()).astype(np.int64), tfs,
             order, offsets)
-        docs, tfs, dls = docs[order], tfs[order], dls[order]
-        encs = encode_postings_many(docs, tfs, dls, offsets, avgdl, K1, B, block_size)
+        encs = encode_postings_many(docs[order], tfs[order], offsets,
+                                    block_size)
         out = [
             {
                 "segment": seg,
@@ -246,7 +229,6 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
                 "df": int(counts[t]),
                 "postings": enc.docs,
                 "tfs": enc.tfs,
-                "blocks": [tuple(b) for b in enc.blocks],
                 "pstream": pstream[t],
                 "bucket": bucket,
             }
@@ -260,8 +242,7 @@ def encode_index_runs(runs: DataFrame, avgdl: float, block_size: int,
                 "pos_bytes": nbytes + sum(len(p) for p in pstream)}})
         return pd.DataFrame(out, columns=cols)
 
-    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "dls",
-                        "pos")
+    return (runs.select("segment", "bucket", "lemma", "docs", "tfs", "pos")
             .groupBy("segment", "bucket")
             .applyInPandas(_merge, schema=INDEX_OUT_SCHEMA))
 
@@ -336,9 +317,9 @@ def build_index(
     pass and the same merge (index/positions.py).  An index of another
     :data:`INDEX_FORMAT` is rebuilt whole on resume.
 
-    ``positions`` only accepts ``True``.  It is kept because
-    ``perfbench/workloads.py`` passes ``positions=True`` (debt: drop it
-    with the next benchmark change)."""
+    ``positions`` only accepts ``True``, and ``salt`` has no effect beyond
+    meta.json's ``salt``.  Both are kept because ``perfbench/workloads.py``
+    passes them (debt: drop them with the next benchmark change)."""
     import shutil
 
     from ..analyzer import check_normalizer
@@ -356,7 +337,7 @@ def build_index(
     # boundaries must never move under non-rebuilt segments (doc_ids are
     # global ranks; a grown corpus ADDS segments, it never resizes them).
     # n_buckets/block_size are pinned with it — codec layout must agree
-    # across segments (salt too, for layout compatibility only).  The
+    # across segments (salt too, which only meta records).  The
     # n_segments argument only shapes a FRESH build.
     old_meta: dict | None = None
     if resume and os.path.exists(f"{out_dir}/meta.json"):
@@ -473,9 +454,9 @@ def build_index(
     timings: dict[str, float] = {"scan_s": scan_s}
     _t = _time.perf_counter()
 
-    # The stored avgdl is reused on every PARTIAL rebuild: block-max upper
-    # bounds must share one avgdl with the untouched segments (MaxScore
-    # safety), and reusing it lets us prune the analyzer input to ONLY the
+    # The stored avgdl is reused on every PARTIAL rebuild: meta's one
+    # avgdl scores every segment, and only the analyzed docs' Σ dl is
+    # known, so reusing it lets us prune the analyzer input to ONLY the
     # doc ranges being rebuilt — the expensive stage then costs O(rebuilt
     # range), not O(corpus).  A full rebuild refreshes it.
     avgdl: float | None = float(fixed_avgdl) if fixed_avgdl is not None else None
@@ -580,7 +561,7 @@ def build_index(
         # The encoder adds each segment's written counts to `stats`.
         (
             encode_index_runs(runs.filter(isin_expr("segment", missing)),
-                              avgdl, block_size, stats)
+                              block_size, stats)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")  # done segments untouched
             .options(**DATA_WRITE_OPTIONS)
@@ -588,7 +569,7 @@ def build_index(
             .parquet(f"{out_dir}/data")
         )
     # (no unpersist: runs are localCheckpoint()'d, not persist()'d — their
-    # blocks are freed when the checkpointed RDD is driver-GC'd)
+    # cached partitions are freed when the checkpointed RDD is driver-GC'd)
     timings["merge_write_s"] = round(_time.perf_counter() - _t, 2)
     _t = _time.perf_counter()
     seg_stats = stats.value
@@ -678,15 +659,15 @@ def _manifest_totals(manifests: list[dict]) -> dict:
 
 def check_format(meta: dict) -> None:
     """Raise unless ``meta`` is of the current :data:`INDEX_FORMAT`: BM25
-    serving needs its norms rows and phrase serving its positions on
-    every row, and no older format has both.  Every serving front end
-    checks here; there is no fallback that reads an older layout."""
+    serving reads the current row schema and its norms rows, and phrase
+    serving its positions on every row.  Every serving front end checks
+    here; there is no fallback that reads an older layout."""
     if meta.get("format") != INDEX_FORMAT:
         raise ValueError(
             f"index format {meta.get('format')} is not format "
-            f"{INDEX_FORMAT} (norms rows, positions on every row); rebuild "
-            "it before serving (a resumed build_index rebuilds an older "
-            "format whole)")
+            f"{INDEX_FORMAT} (norms rows, positions on every row, no block "
+            "directory); rebuild it before serving (a resumed build_index "
+            "rebuilds an older format whole)")
 
 
 def read_index(spark: SparkSession, out_dir: str,

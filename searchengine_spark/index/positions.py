@@ -2,10 +2,10 @@
 
 Every build writes positions, on the index's own rows rather than in a
 second dataset: each ``data/`` row (one ``(segment, lemma)``) carries a
-``pstream`` column next to ``postings/tfs/blocks`` —
+``pstream`` column next to ``postings/tfs`` —
 
     index_dir/data/segment=K/bucket=B/*.parquet
-        (segment, lemma, df, postings, tfs, blocks, pstream, bucket)
+        (segment, lemma, df, postings, tfs, pstream, bucket)
 
 ``pstream`` is the varbyte per-doc position deltas (first position
 absolute per doc, rest delta-1), concatenated in doc order; the docs and
@@ -99,8 +99,8 @@ def decode_term_positions(postings: bytes, tfs: bytes, pstream: bytes,
     """(doc_ids, counts, flat_positions) of one index row: positions of
     doc i are ``flat[offs[i]:offs[i]+counts[i]]`` with ``offs =
     cumsum(counts) - counts``; each doc's sublist is strictly increasing.
-    ``postings`` restarts absolute every ``block_size`` docs (the codec's
-    block layout), so no block directory is needed to decode it."""
+    ``postings`` restarts absolute every ``block_size`` docs
+    (``codec.decode_ids``)."""
     docs = decode_ids(postings, block_size)
     counts = varbyte_decode(tfs).astype(np.int64)
     firsts = np.zeros(int(counts.sum()), dtype=bool)

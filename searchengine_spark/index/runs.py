@@ -6,16 +6,14 @@ by doc_id, shipped as aligned primitive lists::
     segment int, bucket int, lemma string,
     docs  array<bigint>   strictly ascending doc ids
     tfs   array<int>      per-doc term frequency (== occurrence count)
-    dls   array<bigint>   per-doc length (Σ tf over the doc's lemmas)
     pos   array<int>      occurrence positions, (doc, pos)-ascending, aligned
                           with ``repeat(docs, tfs)``
 
-The runs' dls are exact, so the merge computes every block-max weight
-from them; the written index stores no per-posting dl.  Each batch also
-ships one NORMS run per segment (lemma ``builder.NORMS_LEMMA``, bucket
+No run carries a doc's length: each batch ships one NORMS run per
+segment instead (lemma ``builder.NORMS_LEMMA``, bucket
 ``builder.NORMS_BUCKET``): the batch's docs with dl > 0, with ``tfs`` =
-``dls`` = their lengths and no positions.  The same merge writes a
-segment's norms runs as its one norms row, which serving reads for dl.
+their lengths and no positions.  The same merge writes a segment's norms
+runs as its one norms row, which serving reads for dl.
 
 The analysis kernel (``analyzer.doc_term_runs_arrow``) forms runs in the
 same Python pass that tokenized the batch — one numpy lexsort per batch —
@@ -41,7 +39,7 @@ import numpy as np
 # (the first 60 bits of the hex sha256), evaluated by the JVM
 SHA_PREFIX = "cast(conv(substring(sha256, 1, 15), 16, 10) as bigint)"
 RUN_DDL = ("segment int, bucket int, lemma string, docs array<bigint>, "
-           "tfs array<int>, dls array<bigint>, pos array<int>")
+           "tfs array<int>, pos array<int>")
 
 
 def form_runs(ids: np.ndarray, dl: np.ndarray, par: np.ndarray, lemma,
@@ -55,8 +53,8 @@ def form_runs(ids: np.ndarray, dl: np.ndarray, par: np.ndarray, lemma,
     Arrow string array) and position ``pos[i]``.  A run's tf is its
     occurrence count per doc.  The norms run of a segment carries
     ``builder.NORMS_LEMMA`` in ``builder.NORMS_BUCKET``: its docs are the
-    segment's docs with dl > 0, its tfs and dls both their lengths, and it
-    has no positions.  A lemma equal to the reserved one raises."""
+    segment's docs with dl > 0, its tfs their lengths, and it has no
+    positions.  A lemma equal to the reserved one raises."""
     import pyarrow as pa
 
     from .builder import NORMS_BUCKET, NORMS_LEMMA, hash_bucket
@@ -88,14 +86,13 @@ def form_runs(ids: np.ndarray, dl: np.ndarray, par: np.ndarray, lemma,
     bucket = np.fromiter((hash_bucket(lm, n_buckets) for lm in names),
                          dtype=np.int32, count=len(names))[run_code]
     occ_off = pa.array(np.append(run_at, n).astype(np.int32))
-    names_out = ["segment", "bucket", "lemma", "docs", "tfs", "dls", "pos"]
+    names_out = ["segment", "bucket", "lemma", "docs", "tfs", "pos"]
     terms = pa.record_batch([
         pa.array(s[run_at].astype(np.int32)),
         pa.array(bucket),
         enc.dictionary.take(pa.array(run_code)),
         pa.ListArray.from_arrays(doc_off, pa.array(d[doc_at])),
         pa.ListArray.from_arrays(doc_off, pa.array(tfs)),
-        pa.ListArray.from_arrays(doc_off, pa.array(dl[par[order[doc_at]]])),
         pa.ListArray.from_arrays(occ_off,
                                  pa.array(pos[order].astype(np.int32))),
     ], names=names_out)
@@ -114,7 +111,6 @@ def form_runs(ids: np.ndarray, dl: np.ndarray, par: np.ndarray, lemma,
         pa.array([NORMS_LEMMA] * k, type=terms.column(2).type),
         pa.ListArray.from_arrays(norm_off, pa.array(nd)),
         pa.ListArray.from_arrays(norm_off, pa.array(nl.astype(np.int32))),
-        pa.ListArray.from_arrays(norm_off, pa.array(nl)),
         pa.ListArray.from_arrays(pa.array(np.zeros(k + 1, dtype=np.int32)),
                                  pa.array([], type=pa.int32())),
     ], names=names_out)

@@ -1,4 +1,4 @@
-"""Top-k query over the physical index: MaxScore/block-max pruning + BM25.
+"""Top-k query over the physical index: MaxScore pruning + BM25.
 
 SURVEY.md §4 item 2.  The reference's retrieval is a rarest-first
 intersection loop (SearchServiceImpl.java:122-143), one query at a time.
@@ -23,28 +23,31 @@ observe, the terms' decode state and list lengths:
   other to): decode all postings of all query terms, score every doc in
   their union, top-k.  It runs whenever some term is still compressed
   (Spark's segment groups, a term's first local use): cold scoring is
-  decode-bound, and MaxScore's pass-1 lookups would decode nearly every
-  block of the common terms anyway.  It also runs on near-uniform lists
+  decode-bound, and MaxScore's pass-1 lookups decode every term anyway.
+  It also runs on near-uniform lists
   (the shortest at least half the longest, single terms included), where
   pruning has nothing to cut.
 - MaxScore (:func:`_maxscore`): safe dynamic pruning, run when every term
   is decoded (warm engine LRU entries) and the lists are skewed.  Pass 1
   scores the rarest term's postings exactly; with the pass-1 threshold θ,
-  terms whose upper bounds (idf·(k1+1)·max block weight) sum below θ are
-  non-essential: docs appearing only in them provably cannot enter the
-  top-k, so candidate generation takes the essential terms' ids only.
+  terms whose upper bounds (idf·(k1+1)·the term's max weight,
+  :meth:`TermPostings.upper_bound`) sum below θ are non-essential: docs
+  appearing only in them provably cannot enter the top-k, so candidate
+  generation takes the essential terms' ids only.
 
 The timing this rule rests on (cold/warm x 4k/40k docs, perfbench's query
 stream) is recorded in ROADMAP.md, direction 1.
 
-Postings hold doc ids and tfs only.  A doc's length comes from its
+Postings hold doc ids and tfs only, and a term always decodes whole (no
+block directory, no partial decode).  A doc's length comes from its
 segment's norms row (:class:`SegmentNorms`), looked up once per candidate
-set by :func:`_score_ids` — not once per (term, candidate).  Spark's
-segment groups read the norms row with the query lemmas; ``QueryEngine``
-holds a segment's norms for its load.
+set by :func:`_score_ids` — not once per (term, candidate); a term's
+upper bound is computed from the same norms when MaxScore first asks.
+Spark's segment groups read the norms row with the query lemmas;
+``QueryEngine`` holds a segment's norms for its load.
 
 Conjunctive queries replicate the reference's AND semantics (docs must carry
-every term) with the same block-skipping lookups, rarest term driving.
+every term): the rarest term's ids, narrowed by lookups into the others.
 """
 
 from __future__ import annotations
@@ -56,7 +59,7 @@ from typing import TYPE_CHECKING
 import numpy as np
 
 from ..analyzer import analyze
-from .codec import block_starts, decode_range, decode_streams
+from .codec import decode_ids, varbyte_decode
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -65,87 +68,57 @@ if TYPE_CHECKING:
 class TermPostings:
     """Decoded-on-demand view over one term's compressed postings: its
     doc ids and tfs (a doc's length comes from its segment's
-    :class:`SegmentNorms`)."""
+    :class:`SegmentNorms`).  The whole term decodes on first use, once;
+    ``postings`` restarts absolute every ``block_size`` entries."""
 
-    __slots__ = ("docs_b", "tfs_b", "first", "last", "n", "doc_off",
-                 "tf_off", "max_w", "df", "_cache", "_full")
+    __slots__ = ("docs_b", "tfs_b", "df", "block_size", "_full", "_ub")
 
-    def __init__(self, postings: bytes, tfs: bytes, blocks, df: int):
-        self.docs_b = np.frombuffer(postings, dtype=np.uint8)
-        self.tfs_b = np.frombuffer(tfs, dtype=np.uint8)
-        bl = list(blocks)
-        get = (lambda b, k, i: b[k]) if bl and isinstance(bl[0], dict) else (lambda b, k, i: b[i])
-        self.first = np.array([get(b, "first_doc", 0) for b in bl], dtype=np.int64)
-        self.last = np.array([get(b, "last_doc", 1) for b in bl], dtype=np.int64)
-        self.n = np.array([get(b, "n", 2) for b in bl], dtype=np.int64)
-        self.doc_off = np.array([get(b, "doc_off", 3) for b in bl], dtype=np.int64)
-        self.tf_off = np.array([get(b, "tf_off", 4) for b in bl], dtype=np.int64)
-        self.max_w = np.array([get(b, "max_weight", 5) for b in bl], dtype=np.float64)
+    def __init__(self, postings: bytes, tfs: bytes, df: int,
+                 block_size: int):
+        self.docs_b = postings
+        self.tfs_b = tfs
         self.df = df
-        self._cache: dict[int, tuple] = {}
+        self.block_size = block_size
         self._full: tuple | None = None  # memoized decode_all result
+        self._ub: float | None = None    # memoized upper_bound
 
     @property
     def decoded(self) -> bool:
         """True once :meth:`decode_all` has run (a warm cache entry)."""
         return self._full is not None
 
-    def block(self, i: int):
-        """Block ``i``'s (doc_ids, tfs), decoded from its byte ranges."""
-        if i not in self._cache:
-            last = i + 1 == self.n.size
-            self._cache[i] = decode_range(
-                self.docs_b, self.tfs_b, int(self.n[i]),
-                (int(self.doc_off[i]),
-                 self.docs_b.size if last else int(self.doc_off[i + 1])),
-                (int(self.tf_off[i]),
-                 self.tfs_b.size if last else int(self.tf_off[i + 1])))
-        return self._cache[i]
-
-    def decode_all(self):
+    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
         """Every (doc_id, tf), in one varbyte + delta pass per stream."""
         if self._full is None:
-            self._full = decode_streams(self.docs_b, self.tfs_b,
-                                        block_starts(self.n))
-            # every lookup now takes the flat-array path, so the per-block
-            # cache is dead weight — dropping it halves the decoded-postings
-            # memory a warm term pins in the serving LRU
-            self._cache.clear()
+            self._full = (decode_ids(self.docs_b, self.block_size),
+                          varbyte_decode(self.tfs_b).astype(np.int64))
         return self._full
 
     def lookup(self, ids: np.ndarray) -> np.ndarray:
-        """tf aligned to sorted ``ids`` (0 where absent); decodes only
-        blocks whose [first_doc, last_doc] range intersects ``ids``.
-
-        Fully-decoded fast path: once every block is cached (pass 1 of any
-        query decoded the term, or enough partial lookups accumulated), one
-        vectorized searchsorted over the memoized concatenated arrays
-        replaces the per-block loop — the warm-serving profile showed the
-        per-block Python overhead (8+ numpy calls × blocks × terms)
-        dominating repeated-query latency."""
+        """tf aligned to sorted ``ids`` (0 where absent): one searchsorted
+        over the decoded term (no decode for an empty ``ids``)."""
         tf_out = np.zeros(ids.size, dtype=np.int64)
-        if ids.size == 0 or self.first.size == 0:
+        if ids.size == 0:
             return tf_out
-        if self._full is None and len(self._cache) == self.first.size:
-            self.decode_all()  # all blocks cached: memoize the flat view
-        if self._full is not None:
-            a_ids, a_tfs = self._full
-            pos = np.searchsorted(a_ids, ids)
-            pos[pos == a_ids.size] = 0  # any in-range index; masked below
-            hit = a_ids[pos] == ids
-            tf_out[hit] = a_tfs[pos[hit]]
-            return tf_out
-        # candidate block index for each id: rightmost block with first<=id
-        bi = np.searchsorted(self.first, ids, side="right") - 1
-        ok = (bi >= 0) & (ids <= self.last[np.clip(bi, 0, None)])
-        for blk in np.unique(bi[ok]):
-            b_ids, b_tfs = self.block(int(blk))
-            sel = ok & (bi == blk)
-            pos = np.searchsorted(b_ids, ids[sel])
-            pos = np.clip(pos, 0, b_ids.size - 1)
-            hit = b_ids[pos] == ids[sel]
-            tf_out[np.flatnonzero(sel)[hit]] = b_tfs[pos[hit]]
+        a_ids, a_tfs = self.decode_all()
+        pos = np.searchsorted(a_ids, ids)
+        pos[pos == a_ids.size] = 0  # any in-range index; masked below
+        hit = a_ids[pos] == ids
+        tf_out[hit] = a_tfs[pos[hit]]
         return tf_out
+
+    def upper_bound(self, norms: SegmentNorms, k1: float, b: float,
+                    avgdl: float) -> float:
+        """Max idf-free BM25 weight over the term's postings (multiply by
+        idf·(k1+1) for a bound on any doc's contribution), from the same
+        expression :func:`_score_ids` scores with.  Memoized: a term's
+        rows belong to one segment, and an engine drops them with its
+        norms and meta when the index changes."""
+        if self._ub is None:
+            ids, tfs = self.decode_all()
+            self._ub = float(_weights(tfs, _length_norm(
+                norms(ids), k1, b, avgdl)).max())
+        return self._ub
 
 
 class SegmentNorms:
@@ -155,8 +128,8 @@ class SegmentNorms:
 
     __slots__ = ("lo", "dl")
 
-    def __init__(self, postings: bytes, tfs: bytes, blocks):
-        ids, dls = TermPostings(postings, tfs, blocks, 0).decode_all()
+    def __init__(self, postings: bytes, tfs: bytes, block_size: int):
+        ids, dls = TermPostings(postings, tfs, 0, block_size).decode_all()
         self.lo = int(ids[0]) if ids.size else 0
         self.dl = np.zeros(int(ids[-1]) - self.lo + 1 if ids.size else 0,
                            dtype=np.int32)
@@ -170,20 +143,30 @@ def _idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
+def _length_norm(dl: np.ndarray, k1: float, b: float,
+                 avgdl: float) -> np.ndarray:
+    """BM25's per-doc length term k1·(1-b+b·dl/avgdl)."""
+    return k1 * ((1.0 - b) + b * dl / avgdl)
+
+
+def _weights(tf: np.ndarray, norm: np.ndarray) -> np.ndarray:
+    """The idf-free BM25 factor tf/(tf + norm) of tfs > 0."""
+    tff = tf.astype(np.float64)
+    return tff / (tff + norm)
+
+
 def _score_ids(ids: np.ndarray, terms: list[TermPostings], idfs: list[float],
                norms: SegmentNorms, k1: float, b: float,
                avgdl: float) -> np.ndarray:
-    """Exact BM25 scores for sorted candidate ids (block-skipping tf
-    lookups); each candidate's length norm is computed once, not once per
-    term."""
+    """Exact BM25 scores for sorted candidate ids; each candidate's length
+    norm is computed once, not once per term."""
     scores = np.zeros(ids.size, dtype=np.float64)
-    norm = k1 * ((1.0 - b) + b * norms(ids) / avgdl)
+    norm = _length_norm(norms(ids), k1, b, avgdl)
     for t, idf in zip(terms, idfs):
         tf = t.lookup(ids)
         nz = tf > 0
         w = np.zeros(ids.size)
-        tff = tf[nz].astype(np.float64)
-        w[nz] = tff / (tff + norm[nz])
+        w[nz] = _weights(tf[nz], norm[nz])
         scores += idf * (k1 + 1.0) * w
     return scores
 
@@ -254,14 +237,20 @@ def segment_topk_terms(terms: list[TermPostings], norms: SegmentNorms,
     if not terms:
         z = np.zeros(0, dtype=np.int64)
         return z, np.zeros(0)
-    sizes = [int(t.n.sum()) for t in terms]  # segment-local list lengths
     if conjunctive:
         kernel = _conjunctive
-    elif 2 * min(sizes) < max(sizes) and all(t.decoded for t in terms):
+    elif all(t.decoded for t in terms) and _skewed(terms):
         kernel = _maxscore
     else:
         kernel = _exhaustive
     return kernel(terms, norms, n_docs, avgdl, k, k1, b, intervals)
+
+
+def _skewed(terms: list[TermPostings]) -> bool:
+    """The shortest decoded list is under half the longest (segment-local
+    lengths)."""
+    sizes = [t.decode_all()[0].size for t in terms]
+    return 2 * min(sizes) < max(sizes)
 
 
 def _rarest_first(terms: list[TermPostings], n_docs: int
@@ -289,7 +278,7 @@ def _maxscore(terms, norms, n_docs, avgdl, k, k1, b, intervals):
     c1 = _mask_ids(terms[0].decode_all()[0], intervals)
     s1 = _score_ids(c1, terms, idfs, norms, k1, b, avgdl)
     theta = np.partition(s1, -k)[-k] if c1.size >= k else -np.inf
-    ubs = np.array([idf * (k1 + 1.0) * (t.max_w.max() if t.max_w.size else 0.0)
+    ubs = np.array([idf * (k1 + 1.0) * t.upper_bound(norms, k1, b, avgdl)
                     for t, idf in zip(terms, idfs)])
     # essential terms: take by UB desc until the EXCLUDED UB sum < theta;
     # any doc outside the essential union then scores <= excluded_sum < theta
@@ -312,7 +301,7 @@ def _maxscore(terms, norms, n_docs, avgdl, k, k1, b, intervals):
 
 def _conjunctive(terms, norms, n_docs, avgdl, k, k1, b, intervals):
     """Docs carrying every term: the rarest term's ids, narrowed by
-    block-skipping lookups into the others."""
+    lookups into the others (a term left unread once no id remains)."""
     terms, idfs = _rarest_first(terms, n_docs)
     ids = _mask_ids(terms[0].decode_all()[0], intervals)
     for t in terms[1:]:
@@ -469,6 +458,10 @@ class _ByteLRU:
         self.evict()
 
 
+# entry bound of each QueryEngine LRU (the byte bounds are per engine)
+CACHE_ENTRIES = 4096
+
+
 class QueryEngine:
     """Warm serving wrapper: caches meta, one listing of the index's
     ``data/`` files, driver-side LRUs of decoded term and positional
@@ -484,24 +477,21 @@ class QueryEngine:
     column-projects (:meth:`_read`); executors hold nothing between
     queries.
 
-    Defaults are the 10^12-file-safe ones: ``preload_dict=False`` (the full
-    dictionary is O(vocabulary) — gdf comes free with the fetched term
-    rows, or from a lemma/df read of their buckets); both LRUs are bounded
-    by entries and bytes.  Every query first checks
+    No dictionary is preloaded (it is O(vocabulary)): gdf comes free with
+    the fetched term rows, or from a lemma/df read of their buckets.  Both
+    LRUs are bounded by entries (:data:`CACHE_ENTRIES`) and bytes
+    (``term_cache_bytes``/``pos_cache_bytes``).  Every query first checks
     :func:`index_fingerprint`: an incremental rebuild under a live engine
     re-lists the index and drops the warm rows instead of silently serving
     stale postings or norms."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 preload_dict: bool = False, term_cache_size: int = 4096,
                  term_cache_bytes: int = 256 << 20,
-                 pos_cache_size: int = 4096,
                  pos_cache_bytes: int = 256 << 20):
         self.spark = spark
         self.index_dir = index_dir
-        self._preload_dict = preload_dict
-        self._term_bounds = (term_cache_size, term_cache_bytes)
-        self._pos_bounds = (pos_cache_size, pos_cache_bytes)
+        self._term_bounds = (CACHE_ENTRIES, term_cache_bytes)
+        self._pos_bounds = (CACHE_ENTRIES, pos_cache_bytes)
         self._load()
 
     def _load(self) -> None:
@@ -539,18 +529,6 @@ class QueryEngine:
         self._gdf_cache: dict[str, int] = {}  # lemma -> global df (tiny rows)
         self._site_cache: dict[str, list[tuple[int, int]]] = {}
         self._norms: dict[int, SegmentNorms] = {}
-        self._gdf: dict[str, int] | None = None
-        if self._preload_dict:
-            from pyspark.sql import functions as F
-
-            from .builder import read_index
-
-            self._gdf = {
-                r["lemma"]: int(r["gdf"])
-                for r in read_index(self.spark, self.index_dir,
-                                    columns=("lemma", "df"))
-                .groupBy("lemma").agg(F.sum("df").alias("gdf")).collect()
-            }
 
     @property
     def index_df(self) -> DataFrame:
@@ -612,7 +590,7 @@ class QueryEngine:
                    offsets: dict[str, int] | None = None) -> DataFrame:
         """Whole-workload scoring in one Spark job over the engine's pruned
         read of the index (see :func:`bm25_topk_batch`).  Global df comes
-        from the engine's dict/gdf caches, so a warm suite skips the
+        from the engine's gdf cache, so a warm suite skips the
         batch's gdf-lookup job; per-qid ``sites`` resolve through the
         engine's interval cache, so repeated scoped suites skip the sidecar
         reads too."""
@@ -635,13 +613,10 @@ class QueryEngine:
                             sites, self._site_cache)[0]
 
     def _gdf_for(self, lemmas: list[str]) -> dict[str, int]:
-        """Global df per lemma WITHOUT touching posting bytes: preloaded
-        dict > per-engine gdf cache > one lemma/df-projected read of their
-        buckets (cached for the engine's lifetime — a term's df is a
-        handful of longs).  Lemmas absent from the index are absent from
-        the result."""
-        if self._gdf is not None:
-            return {t: self._gdf[t] for t in lemmas if t in self._gdf}
+        """Global df per lemma WITHOUT touching posting bytes: per-engine
+        gdf cache > one lemma/df-projected read of their buckets (cached
+        for the engine's lifetime — a term's df is a handful of longs).
+        Lemmas absent from the index are absent from the result."""
         missing = [t for t in lemmas if t not in self._gdf_cache]
         if missing:
             self._gdf_cache.update(dict.fromkeys(missing, 0))
@@ -655,10 +630,9 @@ class QueryEngine:
     def _fetch(self, terms: list[str], forms: list[str] = (),
                tfloor: int = 0, pfloor: int = 0) -> None:
         """ONE read warms both LRUs: ``terms``' posting rows and
-        ``forms``' positional rows (a lemma in both is one row).  A column
-        that no cache wants for a lemma is dropped as its row arrives, so
-        a topk-only term keeps no positional bytes on the driver and a
-        form-only lemma no block directory.  Entries are cached
+        ``forms``' positional rows (a lemma in both is one row).  The
+        positional column is dropped as a topk-only term's row arrives, so
+        it keeps no positional bytes on the driver.  Entries are cached
         DECODED per (lemma, segment), global df baked in for idf, so a
         repeat costs neither a read nor a varbyte decode; bytes are
         counted compressed.  The floors keep each cache's current working
@@ -669,29 +643,25 @@ class QueryEngine:
         tset, fset = set(terms), set(forms)
         want = sorted(tset | fset)
         cols = ["segment", "lemma", "df", "postings", "tfs"]
-        if tset:
-            cols.append("blocks")
         if fset:
             cols.append("pstream")
         rows: dict[str, list] = {t: [] for t in want}
         for batch in self._scan(want, cols):
             for r in batch.to_pylist():
-                if r["lemma"] not in tset:
-                    r["blocks"] = None
                 if r["lemma"] not in fset:
                     r["pstream"] = None
                 rows[r["lemma"]].append(r)
         for lemma, rs in rows.items():
             self._gdf_cache[lemma] = sum(r["df"] for r in rs)
+        seg_size = int(self.meta["seg_size"])
+        block_size = int(self.meta["block_size"])
         for lemma in terms:
             entries = [(lemma, r["segment"],
-                        TermPostings(r["postings"], r["tfs"], r["blocks"],
-                                     self._gdf_cache[lemma]),
+                        TermPostings(r["postings"], r["tfs"],
+                                     self._gdf_cache[lemma], block_size),
                         len(r["postings"]) + len(r["tfs"]))
                        for r in rows[lemma]]
             self._term_cache.put(lemma, entries, sum(e[3] for e in entries))
-        seg_size = int(self.meta["seg_size"])
-        block_size = int(self.meta["block_size"])
         for lemma in forms:
             entries = []
             for r in rows[lemma]:
@@ -720,10 +690,11 @@ class QueryEngine:
                 in missing]}
             for batch in scan_index(self.index_dir, files, [NORMS_LEMMA],
                                     self.meta["n_buckets"],
-                                    ("segment", "postings", "tfs", "blocks")):
+                                    ("segment", "postings", "tfs")):
                 for r in batch.to_pylist():
                     self._norms[r["segment"]] = SegmentNorms(
-                        r["postings"], r["tfs"], r["blocks"])
+                        r["postings"], r["tfs"],
+                        int(self.meta["block_size"]))
         return self._norms
 
     def _warm(self, cache: _ByteLRU, keys: list[str], bpp: float,
@@ -982,6 +953,7 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
     qs = {qid: (qmap[qid], sum(t in gdf for t in qmap[qid]),
                 k + offsets.get(qid, 0), *scopes[qid])
           for qid in scopes}
+    block_size = int(meta["block_size"])
 
     def _seg(pdf):
         import pandas as pd
@@ -991,11 +963,11 @@ def _bm25_segments(spark: SparkSession, index_dir: str,
             if r.lemma == NORMS_LEMMA:
                 nr = r
             else:
-                tps[r.lemma] = TermPostings(r.postings, r.tfs, r.blocks,
-                                            int(gdf[r.lemma]))
+                tps[r.lemma] = TermPostings(r.postings, r.tfs,
+                                            int(gdf[r.lemma]), block_size)
         # a segment holding none of the lemmas is a norms row alone
         hits = (bm25_segment(int(pdf["segment"].iloc[0]), tps,
-                             SegmentNorms(nr.postings, nr.tfs, nr.blocks),
+                             SegmentNorms(nr.postings, nr.tfs, block_size),
                              qs, meta, conjunctive) if tps else [])
         return pd.DataFrame({
             "qid": [q for q, ids, _ in hits for _ in range(ids.size)],

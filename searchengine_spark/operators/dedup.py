@@ -11,7 +11,7 @@ dedup; the rest are first-class scale extensions:
                  band buckets (equi-join on (band, bucket)) instead of an
                  all-pairs cross join — the 100 TB path.
 - simhash        60-bit SimHash fingerprints + hamming-distance candidate
-                 pairs bucketed by 15-bit blocks (index permutation trick).
+                 pairs bucketed by 15-bit slices (index permutation trick).
 
 Hash family (PORTABLE, engine-agnostic — lets the DuckDB gate oracle run
 the IDENTICAL pipeline value-for-value): base value of a string s is the
@@ -292,8 +292,8 @@ def simhash_near_pairs(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
     """Near-dup candidate pairs by SimHash hamming distance <= max_hamming.
 
-    Block trick: split the 60-bit fingerprint into 4 x 15-bit blocks; any
-    pair within hamming<=3 shares at least one exact block -> equi-join on
+    Block trick: split the 60-bit fingerprint into 4 x 15-bit slices; any
+    pair within hamming<=3 shares at least one exact slice -> equi-join on
     (block_idx, block_value), then verify the true hamming distance with
     bit_count.  Avoids the all-pairs cross join at scale.
     """

@@ -11,9 +11,9 @@ because a segment rebuild is one bounded, idempotent, checkpointed job.
 ``incremental_reindex``: invalidate the manifests of segments containing
 the changed doc_ids, then resume the build — only those segments recompute
 (builder filters the plan to missing segments).  The ORIGINAL corpus-level
-avgdl is kept (``fixed_avgdl``): block-max upper bounds and query scores
-must share one avgdl or MaxScore pruning would lose its safety proof;
-a full rebuild refreshes it.
+avgdl is kept (``fixed_avgdl``): meta's one avgdl scores every segment,
+rebuilt or not, so a partial rebuild cannot move the untouched segments'
+scores; a full rebuild refreshes it.
 
 Correctness under ADDS/REMOVES: doc_ids are global ranks of
 ``(repo, path, commit)``, so an insert shifts every later id.
@@ -107,8 +107,8 @@ def rebuild_segments(docs_ingested: DataFrame, index_dir: str,
                      segs: list[int]) -> list[int]:
     """THE segment-rebuild primitive: invalidate the given segments'
     manifests and resume the build over them under the pinned seg_size /
-    avgdl (MaxScore's block-max bounds and query scores must share one
-    avgdl; a full rebuild refreshes it).  Every incremental path — doc-id
+    avgdl (every segment scores with meta's one avgdl; a full rebuild
+    refreshes it).  Every incremental path — doc-id
     upserts, streaming micro-batches, store deletes — funnels through
     here so the rebuild contract lives in one place."""
     from ..index.builder import build_index
@@ -122,7 +122,7 @@ def rebuild_segments(docs_ingested: DataFrame, index_dir: str,
     build_index(
         docs_ingested,
         index_dir,
-        resume=True,  # seg_size/salt/buckets/block_size/avgdl pinned from meta
+        resume=True,  # seg_size/buckets/block_size/avgdl pinned from meta
         fixed_avgdl=meta["avgdl"],
     )
     return segs

@@ -415,7 +415,7 @@ def test_dict_mechanism_at_realistic_size(spark, tmp_path, monkeypatch,
     t0 = _time.perf_counter()
     monkeypatch.setattr("sys.argv", [
         "build_index.py", "--input", inp, "--out", idx, "--store", store,
-        "--segments", "3", "--salt", "2", "--buckets", "8", "--no-resume",
+        "--segments", "3", "--buckets", "8", "--no-resume",
         "--normalizer", "english-porter", "--forms-json", fj, "--cores", "8",
     ])
     build_job.main()

@@ -1,8 +1,9 @@
 """The single-scan positional build (builder.build_index): every document
 is analyzed once (analyzer.doc_term_runs_arrow, a kernel emitting sorted
-(segment, lemma) runs carrying both the (tf, dl) stats and the occurrence
-positions) and merged once (builder.encode_index_runs writes postings and
-``pstream`` on the same rows).  A rebuild of every segment under the
+(segment, lemma) runs carrying both the tf stats and the occurrence
+positions, and per-segment norms runs of the docs' lengths) and merged
+once (builder.encode_index_runs writes postings and ``pstream`` on the
+same rows).  A rebuild of every segment under the
 stored avgdl must be BYTE-IDENTICAL to the fresh build in every artifact.
 These tests pin that contract, the runs' value-parity with the flat
 analyzer contracts under every normalizer, the run invariants, the merge
@@ -70,16 +71,16 @@ def _texts_df(spark):
 def _explode(runs):
     """Term runs -> (flat stat rows, flat occurrence rows), asserting on
     the way that every run is strictly ascending in doc (in (doc, pos) for
-    its occurrences) and aligned: len(docs) == len(tfs) == len(dls),
-    len(pos) == Σ tfs.  Norms runs are skipped (:func:`_norm_dls`)."""
+    its occurrences) and aligned: len(docs) == len(tfs), len(pos) == Σ
+    tfs.  Norms runs are skipped (:func:`_norm_dls`)."""
     stats, occ = [], []
     for r in runs:
         if r["lemma"] == NORMS_LEMMA:
             continue
-        docs, tfs, dls = r["docs"], r["tfs"], r["dls"]
-        assert len(docs) == len(tfs) == len(dls) >= 1
+        docs, tfs = r["docs"], r["tfs"]
+        assert len(docs) == len(tfs) >= 1
         assert all(a < b for a, b in zip(docs, docs[1:]))
-        stats += [(d, r["lemma"], tf, dl) for d, tf, dl in zip(docs, tfs, dls)]
+        stats += [(d, r["lemma"], tf) for d, tf in zip(docs, tfs)]
         pos = r["pos"]
         assert len(pos) == sum(tfs)
         pairs = list(zip([d for d, n in zip(docs, tfs) for _ in range(n)],
@@ -91,19 +92,19 @@ def _explode(runs):
 
 def _norm_dls(runs, seg_size):
     """Norms runs -> {doc: dl}, asserting that each is one segment's docs,
-    strictly ascending, with tfs == dls > 0, no positions, in the norms
-    bucket, and that no doc appears twice."""
+    strictly ascending, with tfs (the dls) > 0, no positions, in the
+    norms bucket, and that no doc appears twice."""
     out = {}
     for r in runs:
         if r["lemma"] != NORMS_LEMMA:
             continue
         docs = r["docs"]
         assert r["bucket"] == NORMS_BUCKET and r["pos"] == []
-        assert list(r["tfs"]) == list(r["dls"]) and min(r["dls"]) > 0
+        assert min(r["tfs"]) > 0
         assert all(a < b for a, b in zip(docs, docs[1:]))
         assert {d // seg_size for d in docs} == {r["segment"]}
         assert not out.keys() & set(docs)
-        out.update(zip(docs, r["dls"]))
+        out.update(zip(docs, r["tfs"]))
     return out
 
 
@@ -111,7 +112,7 @@ def _norm_dls(runs, seg_size):
                          ids=[n for n, _ in NORMALIZERS])
 def test_fused_kernel_parity(spark, norm, forms):
     """Exploded, the fused kernel's runs must be exactly the flat rows they
-    summarize: stat rows == the logical index's tf and dl, occurrence
+    summarize: stat rows == the logical index's tf, occurrence
     rows == the pure-Python analyze_positions oracle, norms runs == each
     doc's dl — per normalizer family."""
     from searchengine_spark.operators.tf_df import (
@@ -126,7 +127,7 @@ def test_fused_kernel_parity(spark, norm, forms):
 
     tf = term_frequencies(docs, normalizer=norm, forms=forms)
     dl = {r["doc_id"]: r["dl"] for r in doc_lengths(tf).collect()}
-    want_stats = sorted((r["doc_id"], r["lemma"], r["tf"], dl[r["doc_id"]])
+    want_stats = sorted((r["doc_id"], r["lemma"], r["tf"])
                         for r in tf.collect())
     want_occ = sorted(
         (i, f, p) for i, t in enumerate(TEXTS)
@@ -136,13 +137,13 @@ def test_fused_kernel_parity(spark, norm, forms):
     assert occ == want_occ
     assert _norm_dls(runs, 1000) == dl
     # internal consistency: tf per (doc, lemma) == its occurrence count,
-    # dl per doc == Σ tf (the invariant that makes the fusion sound)
+    # dl per doc == its occurrence count (the invariant that makes the
+    # fusion sound)
     from collections import Counter
 
     occ_tf = Counter((d, lm) for d, lm, _ in occ)
-    assert {(d, lm): tf for d, lm, tf, _ in stats} == dict(occ_tf)
-    dl = Counter(d for d, _, _ in occ)
-    assert all(dl[d] == x for d, _, _, x in stats)
+    assert {(d, lm): tf for d, lm, tf in stats} == dict(occ_tf)
+    assert dict(Counter(d for d, _, _ in occ)) == dl
 
 
 @pytest.mark.parametrize("norm,forms", NORMALIZERS,
@@ -170,7 +171,7 @@ def test_merge_plans_one_exchange_no_collect_list(spark):
     of pre-sorted runs into its (segment, bucket) group: no salted
     hash-aggregate, no collect_list, no second shuffle."""
     runs = doc_term_runs_arrow(_texts_df(spark), 4, 8).localCheckpoint()
-    plan = (encode_index_runs(runs, 3.0, 128)
+    plan = (encode_index_runs(runs, 128)
             ._jdf.queryExecution().executedPlan().toString())
     assert plan.count("Exchange") == 1, plan
     assert "ObjectHashAggregate" not in plan
@@ -181,7 +182,7 @@ def test_merge_plans_one_exchange_no_collect_list(spark):
 def _artifact_snapshot(spark, idx):
     data = sorted(
         (r["segment"], r["lemma"], r["df"], bytes(r["postings"]),
-         bytes(r["tfs"]), tuple(map(tuple, r["blocks"])), r["bucket"])
+         bytes(r["tfs"]), r["bucket"])
         for r in read_index(spark, idx, norms=True).collect())
     pos = sorted(
         (r["segment"], r["lemma"], bytes(r["postings"]), bytes(r["tfs"]),
@@ -396,10 +397,36 @@ def _plant_format3(idx):
         pq.write_table(t.append_column("dls", t.column("tfs")), f)
 
 
+def _plant_format4(idx):
+    """A format-4 index: every row carries a block directory
+    (``blocks``)."""
+    import glob as _glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    with open(f"{idx}/meta.json") as fh:
+        meta = json.load(fh)
+    meta["format"] = 4
+    with open(f"{idx}/meta.json", "w") as fh:
+        json.dump(meta, fh)
+    block = pa.struct([("first_doc", pa.int64()), ("last_doc", pa.int64()),
+                       ("n", pa.int32()), ("doc_off", pa.int32()),
+                       ("tf_off", pa.int32()), ("max_weight", pa.float64())])
+    for f in _glob.glob(f"{idx}/data/segment=*/bucket=*/*.parquet"):
+        t = pq.ParquetFile(f).read()
+        blocks = pa.array([[{"first_doc": 0, "last_doc": 0, "n": 1,
+                             "doc_off": 0, "tf_off": 0, "max_weight": 1.0}]]
+                          * t.num_rows, type=pa.list_(block))
+        pq.write_table(t.add_column(t.schema.get_field_index("tfs") + 1,
+                                    "blocks", blocks), f)
+
+
 def test_resume_over_old_layout_rebuilds_everything(spark, tmp_path):
     """An index of an older format — the sidecar layout (no format
-    marker), format 2 with a segment built without positions, or format 3
-    with per-posting dls and no norms rows — is never mixed with this
+    marker), format 2 with a segment built without positions, format 3
+    with per-posting dls and no norms rows, or format 4 with a block
+    directory on every row — is never mixed with this
     one: BM25 and phrase serving refuse it, naming the rebuild, and a
     resume rebuilds every segment, deletes the stale sidecar dirs and
     leaves the artifacts of a fresh build."""
@@ -416,7 +443,7 @@ def test_resume_over_old_layout_rebuilds_everything(spark, tmp_path):
     phrase = "kw_pair_alpha kw_pair_beta"
 
     for plant in (_plant_sidecar_layout, _plant_format2_positionless,
-                  _plant_format3):
+                  _plant_format3, _plant_format4):
         idx = str(tmp_path / plant.__name__)
         build_index(docs, idx, n_segments=2, salt=4, n_buckets=8,
                     resume=False)

@@ -108,10 +108,12 @@ def _surface_by_key(spark, index_dir, id_to_key):
     mapping)."""
     from searchengine_spark.index.wand import TermPostings
 
+    with open(f"{index_dir}/meta.json") as fh:
+        block_size = json.load(fh)["block_size"]
     out: dict[str, set] = {}
     for r in read_index(spark, index_dir).collect():
-        tp = TermPostings(bytes(r["postings"]), bytes(r["tfs"]),
-                          r["blocks"], r["df"])
+        tp = TermPostings(bytes(r["postings"]), bytes(r["tfs"]), r["df"],
+                          block_size)
         ids, tfs = tp.decode_all()
         out.setdefault(r["lemma"], set()).update(
             (id_to_key[i], t) for i, t in zip(ids.tolist(), tfs.tolist()))

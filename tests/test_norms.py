@@ -36,10 +36,12 @@ from searchengine_spark.schema import DOCS_SCHEMA
 def _norms_rows(spark, idx) -> dict[int, dict]:
     """segment -> {doc_id: dl} decoded from its norms row."""
     rows = read_index(spark, idx, [NORMS_LEMMA], norms=True).collect()
+    with open(f"{idx}/meta.json") as fh:
+        block_size = json.load(fh)["block_size"]
     out = {}
     for r in rows:
         assert r["lemma"] == NORMS_LEMMA and r["bucket"] == NORMS_BUCKET
-        n = SegmentNorms(r["postings"], r["tfs"], r["blocks"])
+        n = SegmentNorms(r["postings"], r["tfs"], block_size)
         ids = np.flatnonzero(n.dl) + n.lo
         assert r["segment"] not in out
         out[r["segment"]] = dict(zip(ids.tolist(), n(ids).tolist()))
@@ -107,8 +109,6 @@ def test_reserved_lemma_rejected_and_never_counted(spark, tmp_path):
     postings = sum(m["posting_count"] for m in all_manifests(idx))
     gdf = gdf_lookup(spark, idx, lemmas)
     assert set(gdf) == set(lemmas) and sum(gdf.values()) == postings
-    eng = QueryEngine(spark, idx, preload_dict=True)
-    assert eng._gdf == gdf
     assert QueryEngine(spark, idx)._gdf_for(lemmas) == gdf
     assert statistics(spark, idx)["total"]["lemmas"] == len(lemmas)
 

@@ -79,8 +79,7 @@ def test_decode_term_positions_block_restarts():
                                for c in counts]).astype(np.int64)
         firsts = np.zeros(flat.size, dtype=bool)
         firsts[np.cumsum(counts) - counts] = True
-        enc = encode_postings(docs, counts, counts, 5.0,
-                              block_size=block_size)
+        enc = encode_postings(docs, counts, block_size=block_size)
         pstream = varbyte_encode(delta_encode(flat, firsts)).tobytes()
         d, c, f = decode_term_positions(enc.docs, enc.tfs, pstream,
                                         block_size)

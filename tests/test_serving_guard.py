@@ -143,8 +143,7 @@ def test_gdf_cache_avoids_repeat_dict_jobs(spark, idx):
     assert hits == _hits_distributed(spark, idx, QUERY, 5)
 
 
-POSTING_READ = ("segment", "lemma", "df", "postings", "tfs", "blocks",
-                "pstream")
+POSTING_READ = ("segment", "lemma", "df", "postings", "tfs", "pstream")
 
 
 def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
@@ -210,9 +209,7 @@ def test_prefetch_launches_no_spark_job(spark, pidx, monkeypatch):
 
 
 def _term_entry(lemma, seg, tp, nb):
-    return (lemma, seg, tp.docs_b.tobytes(), tp.tfs_b.tobytes(),
-            tp.first.tolist(), tp.last.tolist(), tp.n.tolist(),
-            tp.doc_off.tolist(), tp.tf_off.tolist(), tp.max_w.tolist(),
+    return (lemma, seg, bytes(tp.docs_b), bytes(tp.tfs_b), tp.block_size,
             tp.df, nb)
 
 
@@ -237,8 +234,8 @@ def _spark_entries(spark, index_dir, terms, forms):
     gdf = gdf_lookup(spark, index_dir, terms + forms)
     want_t = [
         _term_entry(r["lemma"], r["segment"],
-                    TermPostings(r["postings"], r["tfs"], r["blocks"],
-                                 gdf[r["lemma"]]),
+                    TermPostings(r["postings"], r["tfs"], gdf[r["lemma"]],
+                                 meta["block_size"]),
                     len(r["postings"]) + len(r["tfs"]))
         for r in read_index(spark, index_dir, terms).collect()]
     want_p = []

@@ -1,6 +1,7 @@
 """Property-based self-oracle: the serving kernel and MaxScore must equal
 the exhaustive reference bit for bit on arbitrary random posting sets —
-skewed list lengths, random site masks, cold and pre-decoded postings
+skewed list lengths, random site masks, cold and pre-decoded postings —
+and every term's MaxScore upper bound must equal its max BM25 weight
 (pure numpy, no Spark session)."""
 
 from __future__ import annotations
@@ -24,8 +25,8 @@ AVGDL = 100.0
 def _mk_norms(dl):
     """A segment's norms row over doc lengths ``dl`` (doc i has dl[i])."""
     ids = np.arange(dl.size, dtype=np.int64)
-    enc = encode_postings(ids, dl, dl, AVGDL, block_size=8)
-    return SegmentNorms(enc.docs, enc.tfs, enc.blocks)
+    enc = encode_postings(ids, dl, block_size=8)
+    return SegmentNorms(enc.docs, enc.tfs, 8)
 
 
 def _mk_term(rng, dl):
@@ -37,8 +38,7 @@ def _mk_term(rng, dl):
     n = int(np.clip(round(share * n_docs), 1, n_docs))
     ids = np.sort(rng.choice(n_docs, size=n, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 20, n)
-    enc = encode_postings(ids, tfs, dl[ids], AVGDL, block_size=8)
-    return (enc.docs, enc.tfs, [tuple(b) for b in enc.blocks]), ids
+    return encode_postings(ids, tfs, block_size=8), ids, tfs
 
 
 def _mk_intervals(rng, n_docs):
@@ -67,7 +67,7 @@ def test_maxscore_equals_exhaustive_random(seed, n_terms, k, conjunctive,
     def terms(decoded):
         # fresh TermPostings per call: one kernel's decode_all() must not
         # hand the next one decoded postings unless the case asks for it
-        tps = [TermPostings(*enc, ids.size) for enc, ids in made]
+        tps = [TermPostings(*enc, ids.size, 8) for enc, ids, _ in made]
         if decoded:
             for t in tps:
                 t.decode_all()
@@ -76,15 +76,16 @@ def test_maxscore_equals_exhaustive_random(seed, n_terms, k, conjunctive,
     def rows(got):
         return got[0].tolist(), got[1].tolist()
 
-    # the one-pass decode equals the block-by-block one, ids and tfs
-    for enc, ids in made:
-        tp = TermPostings(*enc, ids.size)
-        blocks = [tp.block(i) for i in range(tp.n.size)]
-        full = TermPostings(*enc, ids.size).decode_all()
-        for j in (0, 1):
-            assert np.array_equal(np.concatenate([b[j] for b in blocks]),
-                                  full[j])
-        assert np.array_equal(full[0], ids)
+    # each term decodes to its postings, and its upper bound is the max
+    # idf-free BM25 weight over them, from the oracle's own doc lengths
+    for enc, ids, tfs in made:
+        tp = TermPostings(*enc, ids.size, 8)
+        assert tp.upper_bound(norms, 1.2, 0.75, AVGDL) == max(
+            float(tf) / (float(tf) + 1.2 * ((1.0 - 0.75)
+                                            + 0.75 * float(dl[d]) / AVGDL))
+            for d, tf in zip(ids.tolist(), tfs.tolist()))
+        full = tp.decode_all()
+        assert np.array_equal(full[0], ids) and np.array_equal(full[1], tfs)
 
     if conjunctive:
         # reference: the exhaustive full ranking, kept to docs holding
@@ -92,7 +93,7 @@ def test_maxscore_equals_exhaustive_random(seed, n_terms, k, conjunctive,
         ids, sc = _exhaustive(terms(False), norms, n_docs, AVGDL, n_docs,
                               1.2, 0.75, intervals)
         both = made[0][1]
-        for _, t_ids in made[1:]:
+        for _, t_ids, _ in made[1:]:
             both = np.intersect1d(both, t_ids)
         keep = np.isin(ids, both)
         want = (ids[keep][:k].tolist(), sc[keep][:k].tolist())
@@ -125,10 +126,8 @@ def test_kernel_choice(monkeypatch):
         tps = []
         for n in lengths:
             ids = np.sort(rng.choice(400, n, replace=False))
-            enc = encode_postings(ids, np.ones(n, np.int64), np.full(n, 100),
-                                  AVGDL, block_size=8)
-            tps.append(TermPostings(enc.docs, enc.tfs,
-                                    [tuple(b) for b in enc.blocks], n))
+            enc = encode_postings(ids, np.ones(n, np.int64), block_size=8)
+            tps.append(TermPostings(enc.docs, enc.tfs, n, 8))
             if decoded:
                 tps[-1].decode_all()
         ran.clear()
