@@ -53,6 +53,17 @@ def test_postings_roundtrip(ids_set, block_size):
     assert decode_ids(enc.docs, block_size).tolist() == ids.tolist()
 
 
+def test_block_random_access_independent():
+    ids = np.arange(0, 1000, 3, dtype=np.int64)
+    enc = encode_postings(ids, np.ones(ids.size, dtype=np.int64), block_size=128)
+    # each block restarts with an absolute id: block 2's bytes, cut out at
+    # the varint boundary after entry 255, decode without blocks 0-1
+    raw = np.frombuffer(enc.docs, dtype=np.uint8)
+    ends = np.flatnonzero((raw & 0x80) == 0) + 1
+    b_ids = decode_ids(raw[ends[255]:], block_size=128)
+    assert b_ids.tolist() == ids[256:384].tolist()
+
+
 def _reference_encode(ids, tfs, block_size):
     """The layout spelled out block by block: the first id of every
     ``block_size`` entries absolute, (delta - 1) gaps after it."""
